@@ -801,7 +801,8 @@ def _q27_ngram_jaccard(spark, sf, max_pairs=100_000_000, sample_blocks=None):
 
 def _q28_cosine_topk(spark, sf):
     """Brute-force exact cosine top-5 neighbors for query vectors
-    (vec_id < 20): broadcast query side, JVM higher-order dot products."""
+    (vec_id < 20): the 20 queries sit in the closure of the blocked-GEMM
+    Arrow kernel and the corpus streams through it in one pass."""
     from polars_pipe_spark.functions.similarity import brute_force_topk
 
     emb = _t(spark, sf, "embeddings")
@@ -4474,8 +4475,10 @@ def _q176_knn_classify(spark, sf):
     out and classified by majority vote of its 5 exact cosine
     neighbors' labels (vote ties to the smaller label — deterministic).
     The label rides the top-k scan via carry_cols, no re-join. Scale:
-    brute-force per bounded query batch; the LSH/IVF/PQ paths (q29,
-    q137, q168) are the corpus-scale candidates generators."""
+    exact brute force through one blocked-GEMM kernel, with the smaller
+    side (queries, else a corpus that fits) in its closure; the
+    LSH/IVF/PQ paths (q29, q137, q168) are the corpus-scale candidate
+    generators."""
     from polars_pipe_spark.functions.similarity import knn_classify
 
     emb = _t_par(spark, sf, "embeddings")
@@ -5055,7 +5058,7 @@ def _q195_matryoshka_recall(spark, sf):
     overlap between exact cosine top-5 on the FIRST 8 dims and on the
     full vector — the measurement that justifies shipping truncated
     embeddings at 100 TB (8/16 of the scan bytes and FLOPs). Both
-    rankings reuse the broadcast brute-force kernel; overlap is an
+    rankings reuse the exact brute-force kernel; overlap is an
     integer join-count with zero-preserving left join."""
     from polars_pipe_spark.functions.similarity import brute_force_topk
 

@@ -45,9 +45,9 @@ class GeneralConfig:
     config_dst_stem: str = "config"
     desc_stats_stem: str = "desc_stats"
     select_cols: list | str = "*"
-    # scale_mode=True switches statistics to sketch algorithms
-    # (approx_percentile / approx_count_distinct) — the 100 TB path where
-    # exact percentiles would need a full sort per column.
+    # scale_mode=True switches the 25%/50%/75% statistics to
+    # percentile_approx — the 100 TB path where exact percentiles would
+    # need a full sort per column. n_unique stays an exact countDistinct.
     scale_mode: bool = False
 
     def __post_init__(self) -> None:

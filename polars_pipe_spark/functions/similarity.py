@@ -2,11 +2,11 @@
 
 Two paths, per the scale ladder:
 
-- **Brute-force cosine top-k** — the exact baseline: broadcast the query
-  set, one pass over the corpus, per-row cosine via ``F.zip_with`` +
-  ``F.aggregate`` (JVM higher-order functions — no Python UDF), top-k by
-  partitioned window. Cost O(corpus × queries); right when the query set
-  is small or as the verification pass.
+- **Brute-force cosine top-k** — the exact baseline: the smaller side
+  sits in the closure of one blocked-GEMM Arrow kernel, the larger
+  streams through it in one pass, and a partitioned window ranks the
+  candidates. Cost O(corpus × queries); right when one side is small or
+  as the verification pass.
 - **Hyperplane-LSH buckets** — the scale path: b deterministic pseudo-
   random hyperplanes hash each vector to a 2^b-bucket sign signature;
   neighbor search only compares within the (query's) bucket — O(corpus /
@@ -405,6 +405,178 @@ def _corpus_fits_closure(c: DataFrame, max_rows: int, max_bytes: int) -> bool:
     return rows * dim * 8 <= max_bytes
 
 
+# -- exact cosine top-k: one closure-side kernel ---------------------------
+# The GEMM tile is _QBATCH x _CHUNK float64 values, ~134 MB per task.
+_QBATCH = 2048
+_CHUNK = 8192
+# a FULL round-to-6 bucket + fold slop: a candidate whose raw cosine sits
+# up to one rounding bucket below the chunk k-th can still round EQUAL to
+# the global k-th and win the id tiebreak, so a half-step margin is not
+# lossless at 6-decimal ties
+_MARGIN = 1e-6 + 1e-9
+
+
+def _row_norms(M):
+    """Row L2 norms in the ``np.cumsum`` fold order of :func:`cosine_kernel`."""
+    import numpy as np  # noqa: PLC0415
+
+    return np.sqrt(np.cumsum(M * M, axis=1)[:, -1])
+
+
+def _topk_candidates(Q, q_norms, q_ids, C, c_norms, c_ids, k):
+    """Cosine top-k candidates of each query row of ``Q`` among the
+    corpus rows of ``C``: the one closure-side scorer of
+    :func:`brute_force_topk` and :func:`quantized_topk`.
+
+    A blocked GEMM selects each query's per-chunk top-k: a pair is kept
+    when its approximate cosine is within ``_MARGIN`` of the chunk's k-th
+    best, or is NaN. That is LOSSLESS for the ``round(6)`` +
+    ``neighbor_id`` ranking, because a global top-k member always makes
+    its chunk's cut; the same argument covers every Arrow batch a caller
+    streams through. Only the kept pairs get the exact ``np.cumsum`` fold
+    cosine, so the values stay bit-identical to :func:`cosine_kernel`.
+
+    Returns ``(qi, ci, cosine_raw)``: query row, corpus row, cosine.
+    """
+    import numpy as np  # noqa: PLC0415
+
+    sel_q, sel_c = [], []
+    for q0 in range(0, len(Q), _QBATCH):
+        qs = slice(q0, q0 + _QBATCH)
+        for c0 in range(0, len(C), _CHUNK):
+            cs = slice(c0, c0 + _CHUNK)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                approx = (Q[qs] @ C[cs].T) / (
+                    q_norms[qs, None] * c_norms[None, cs]
+                )
+            # self-matches can never be emitted
+            approx[q_ids[qs, None] == c_ids[None, cs]] = -np.inf
+            kk = min(k, approx.shape[1])
+            # Threshold over NaN-SUPPRESSED values: np.partition sorts NaN
+            # last, so a chunk with < kk non-NaN cosines (degenerate
+            # zero-norm vectors) would get a NaN threshold and drop every
+            # finite candidate.
+            finite = np.where(np.isnan(approx), -np.inf, approx)
+            thresh = -np.partition(-finite, kk - 1, axis=1)[:, kk - 1]
+            qi, ci = np.nonzero(
+                (finite >= thresh[:, None] - _MARGIN) | np.isnan(approx)
+            )
+            sel_q.append(qi + q0)
+            sel_c.append(ci + c0)
+    qi = np.concatenate(sel_q)
+    ci = np.concatenate(sel_c)
+    # the -inf self-mask can itself become the chunk threshold when a
+    # chunk has <= k columns, letting the self pair through the prefilter
+    # -- enforce the self-exclusion contract again on emission
+    keep = c_ids[ci] != q_ids[qi]
+    qi, ci = qi[keep], ci[keep]
+    dots = np.cumsum(Q[qi] * C[ci], axis=1)[:, -1]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return qi, ci, dots / (q_norms[qi] * c_norms[ci])
+
+
+def _scored_schema(c: DataFrame, q: DataFrame) -> str:
+    """Schema of the closure paths' output: ``c``'s columns except the
+    vector (neighbor_id, then the carry columns), query_id, cosine_raw."""
+    cols = [f"{name} {typ}, " for name, typ in c.dtypes if name != "cv"]
+    return "".join(cols) + f"query_id {dict(q.dtypes)['query_id']}, cosine_raw double"
+
+
+def _scored_frame(qi, ci, cos, q_ids, corpus_cols: pd.DataFrame) -> pd.DataFrame:
+    """One output batch of the closure paths from the kernel's triples;
+    ``corpus_cols`` holds neighbor_id and the carry columns by corpus row."""
+    out = corpus_cols.iloc[ci].reset_index(drop=True)
+    out["query_id"] = q_ids[qi]
+    out["cosine_raw"] = cos
+    return out
+
+
+def _queries_fit_closure(qrows, max_rows: int, max_bytes: int) -> bool:
+    """The collected query side fits the row cap and the float64 byte
+    budget ``rows × dim × 8``."""
+    n = len(qrows)
+    return n <= max_rows and n * _rows_dim(qrows, "qv") * 8 <= max_bytes
+
+
+def _queries_in_closure(c: DataFrame, q: DataFrame, qrows, k: int, prep=None):
+    """Small query side: the queries live in the kernel's closure and the
+    corpus Arrow batches stream through ``mapInPandas``, one kernel call
+    per batch. Lossless: each query's global top-k is a subset of the
+    union of its per-batch candidates. ``prep`` maps each batch's stacked
+    corpus vectors before scoring (the int8 round trip of
+    :func:`quantized_topk`)."""
+    import numpy as np  # noqa: PLC0415
+
+    schema = _scored_schema(c, q)
+    if not qrows:
+        return q.sparkSession.createDataFrame([], schema)
+    Q = _stack_vectors((r["qv"] for r in qrows), "qv")
+    qn = _row_norms(Q)
+    qids = np.array([r["query_id"] for r in qrows])
+    cols = [name for name in c.columns if name != "cv"]
+
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf):
+                C = _stack_vectors(pdf["cv"].to_numpy(), "cv")
+                if prep is not None:
+                    C = prep(C)
+                cids = pdf["neighbor_id"].to_numpy()
+                qi, ci, cos = _topk_candidates(Q, qn, qids, C, _row_norms(C), cids, k)
+                yield _scored_frame(qi, ci, cos, qids, pdf[cols])
+
+    return c.mapInPandas(gen, schema)
+
+
+def _corpus_in_closure(c: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Corpus fits: the corpus lives in the kernel's closure and the
+    repartitioned queries stream through ``mapInPandas``."""
+    crows = c.collect()
+    C = _stack_vectors((r["cv"] for r in crows), "cv")
+    cn = _row_norms(C)
+    cols = pd.DataFrame(
+        {name: [r[name] for r in crows] for name in c.columns if name != "cv"}
+    )
+    cids = cols["neighbor_id"].to_numpy()
+
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf):
+                Q = _stack_vectors(pdf["qv"].to_numpy(), "qv")
+                qids = pdf["query_id"].to_numpy()
+                qi, ci, cos = _topk_candidates(Q, _row_norms(Q), qids, C, cn, cids, k)
+                yield _scored_frame(qi, ci, cos, qids, cols)
+
+    # spread the GEMM across the cluster: a single-file queries input
+    # would otherwise run every tile on one task (the q61 lesson)
+    n_shuffle = shuffle_partitions(q.sparkSession)
+    return q.repartition(n_shuffle).mapInPandas(gen, _scored_schema(c, q))
+
+
+def _crossjoin_scored(c: DataFrame, q: DataFrame) -> DataFrame:
+    """Neither side fits a closure: broadcast the queries and score every
+    non-self pair with :func:`cosine_kernel`."""
+    return (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .withColumn("cosine_raw", cosine_kernel(F.col("cv"), F.col("qv")))
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int, carry_cols=()) -> DataFrame:
+    """The shared tail: ``round(cosine_raw, 6)``, then each query's top
+    ``k`` by cosine desc with ties to the smaller neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("cosine", F.round(F.col("cosine_raw"), 6))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rk", *carry_cols)
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -423,35 +595,23 @@ def brute_force_topk(
     ``carry_cols`` are corpus columns threaded through to the output
     (e.g. a label for kNN voting) — carried in the scan, not re-joined.
 
-    Execution (r8): when the query side is small (≤
-    ``max_collected_queries``, probed with one bounded ``limit+collect``
-    — the normal regime for an exact brute-force baseline), the queries
-    live in an Arrow kernel's closure and each corpus vector ships to
-    Python ONCE; the old broadcast-crossJoin shape shipped it once per
-    QUERY through the pair kernel (10× the Arrow traffic for q28's 10
-    queries). Cosines are bit-identical to :func:`cosine_kernel`
-    (float64 widen, ``np.cumsum`` fold, ``dots/(na·nb)``); round(6) and
-    the rank window are unchanged. Larger query sets keep the
-    broadcast-crossJoin + per-pair kernel path.
+    Execution: one blocked-GEMM kernel (:func:`_topk_candidates`)
+    scores every closure-side path, and cosines are bit-identical to
+    :func:`cosine_kernel`. The smaller side lives in the kernel's
+    closure and the larger streams through ``mapInPandas``:
 
-    Large-query path (r9, found by the sweep: q176 classified 20% of
-    the corpus, and the crossJoin fallback shipped 400M pairs for
-    243 s at sf1): when the query side exceeds
-    ``max_collected_queries`` but the CORPUS fits
-    ``max_collected_corpus`` rows AND ``max_corpus_bytes`` of float64
-    vector data — ``rows × dim × 8``, with ``dim`` probed from one corpus
-    row, so a 768-dim corpus can't silently collect gigabytes to the
-    driver the way a row-only bound would allow — the corpus matrix
-    lives in the kernel's closure and QUERIES stream through
-    ``mapInPandas`` — a blocked GEMM prefilter selects each query's
-    per-chunk top-k candidates (LOSSLESS: the global top-k is a subset
-    of every member's chunk top-k; the margin covers round-to-6 and
-    fold-order slop), and ONLY emitted candidates get the exact
-    ``np.cumsum`` fold cosine — so emitted values stay bit-identical to
-    :func:`cosine_kernel` while the pair volume drops from
-    |corpus|·|queries| to ~k·chunks per query. Corpora past the bound
-    keep the broadcast-crossJoin fallback (at that scale use the
-    LSH/IVF/PQ candidate generators instead).
+    - a small query side (≤ ``max_collected_queries`` rows and
+      ``max_queries_bytes`` of float64, probed with one bounded
+      ``limit+collect``) stays in the closure and corpus Arrow batches
+      stream, so each corpus vector ships to Python once;
+    - otherwise, a corpus within ``max_collected_corpus`` rows and
+      ``max_corpus_bytes`` (``rows × dim × 8``, ``dim`` probed from one
+      row, so a 768-dim corpus can't silently collect gigabytes) stays
+      in the closure and the repartitioned queries stream (r9: q176
+      classifies 20% of the corpus);
+    - when neither fits, the queries are broadcast into a crossJoin
+      scored per pair by :func:`cosine_kernel` (at that scale use the
+      LSH/IVF/PQ candidate generators instead).
 
     Eagerness note: the size probes run ``limit(max_collected_queries +
     1).collect()`` (and a corpus ``count()`` on the large-query path) at
@@ -468,150 +628,13 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), *carry_cols
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    if (
-        len(qrows) <= max_collected_queries
-        and len(qrows) * _rows_dim(qrows, "qv") * 8 <= max_queries_bytes
-    ):
-        import numpy as np  # noqa: PLC0415
-
-        qids = [r["query_id"] for r in qrows]
-        qvs = [np.asarray(r["qv"], dtype=np.float64) for r in qrows]
-        qns = [float(np.sqrt(np.cumsum(v * v)[-1])) if len(v) else 0.0 for v in qvs]
-        dtypes = dict(c.dtypes)
-        qid_type = dict(q.dtypes)["query_id"]
-        schema = (
-            f"neighbor_id {dtypes['neighbor_id']}, "
-            + "".join(f"{cc} {dtypes[cc]}, " for cc in carry_cols)
-            + f"query_id {qid_type}, cosine_raw double"
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                C = _stack_vectors(pdf["cv"].to_numpy(), "cv")
-                na = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
-                nb_ids = pdf["neighbor_id"].to_numpy()
-                frames = []
-                for qid, qv, qn in zip(qids, qvs, qns):
-                    dots = np.cumsum(C * qv, axis=1)[:, -1]
-                    cos = dots / (na * qn)
-                    keep = np.nonzero(nb_ids != qid)[0]
-                    out = pdf.iloc[keep][
-                        ["neighbor_id", *carry_cols]
-                    ].reset_index(drop=True)
-                    out["query_id"] = qid
-                    out["cosine_raw"] = cos[keep]
-                    frames.append(out)
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        scored = c.mapInPandas(gen, schema).withColumn(
-            "cosine", F.round(F.col("cosine_raw"), 6)
-        )
+    if _queries_fit_closure(qrows, max_collected_queries, max_queries_bytes):
+        scored = _queries_in_closure(c, q, qrows, k)
     elif _corpus_fits_closure(c, max_collected_corpus, max_corpus_bytes):
-        import numpy as np  # noqa: PLC0415
-
-        crows = c.collect()
-        C = _stack_vectors((r["cv"] for r in crows), "cv")
-        cn = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
-        cids = np.array([r["neighbor_id"] for r in crows])
-        carry_vals = {cc: [r[cc] for r in crows] for cc in carry_cols}
-        dtypes_c = dict(c.dtypes)
-        qid_type = dict(q.dtypes)["query_id"]
-        schema = (
-            f"neighbor_id {dtypes_c['neighbor_id']}, "
-            + "".join(f"{cc} {dtypes_c[cc]}, " for cc in carry_cols)
-            + f"query_id {qid_type}, cosine_raw double"
-        )
-        chunk = 8192
-        qbatch = 2048  # bounds the GEMM tile: 2048×8192 doubles ≈ 134 MB/task
-        # a FULL round-to-6 bucket + fold slop: a candidate whose raw
-        # cosine sits up to one rounding bucket below the chunk k-th can
-        # still round EQUAL to the global k-th and win the id tiebreak,
-        # so the half-step margin was not lossless at 6-decimal ties
-        margin = 1e-6 + 1e-9
-
-        def gen_q(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                Qa = _stack_vectors(pdf["qv"].to_numpy(), "qv")
-                qna = np.sqrt(np.cumsum(Qa * Qa, axis=1)[:, -1])
-                qids_a = pdf["query_id"].to_numpy()
-                sel_q, sel_c = [], []
-                for q0 in range(0, len(Qa), qbatch):
-                    Q = Qa[q0 : q0 + qbatch]
-                    qn = qna[q0 : q0 + qbatch]
-                    qids_b = qids_a[q0 : q0 + qbatch]
-                    for c0 in range(0, len(C), chunk):
-                        Cc = C[c0 : c0 + chunk]
-                        with np.errstate(invalid="ignore", divide="ignore"):
-                            approx = (Q @ Cc.T) / (
-                                qn[:, None] * cn[None, c0 : c0 + chunk]
-                            )
-                        # self-matches can never be emitted
-                        approx[
-                            qids_b[:, None] == cids[None, c0 : c0 + chunk]
-                        ] = -np.inf
-                        kk = min(k, approx.shape[1])
-                        # k-th best per query within this chunk; global
-                        # top-k members are always within chunk top-k.
-                        # Threshold over NaN-SUPPRESSED values: np.partition
-                        # sorts NaN last, so a chunk with < kk non-NaN
-                        # cosines (degenerate zero-norm vectors) would get a
-                        # NaN threshold and drop every finite candidate.
-                        finite = np.where(np.isnan(approx), -np.inf, approx)
-                        thresh = -np.partition(-finite, kk - 1, axis=1)[:, kk - 1]
-                        qi, ci = np.nonzero(
-                            (finite >= thresh[:, None] - margin)
-                            | np.isnan(approx)
-                        )
-                        sel_q.append(qi + q0)
-                        sel_c.append(ci + c0)
-                qi = np.concatenate(sel_q)
-                ci = np.concatenate(sel_c)
-                # the -inf self-mask can itself become the chunk threshold
-                # when a chunk has <= k columns, letting the self pair
-                # through the prefilter — enforce the self-exclusion
-                # contract on emission like every other branch
-                keep = cids[ci] != qids_a[qi]
-                qi, ci = qi[keep], ci[keep]
-                Q, qn, qids_b = Qa, qna, qids_a
-                # exact fold-order cosine ONLY for the emitted candidates
-                dots = np.cumsum(Q[qi] * C[ci], axis=1)[:, -1]
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    cos = dots / (qn[qi] * cn[ci])
-                out = pd.DataFrame({"neighbor_id": cids[ci]})
-                for cc in carry_cols:
-                    vals = carry_vals[cc]
-                    out[cc] = [vals[j] for j in ci]
-                out["query_id"] = qids_b[qi]
-                out["cosine_raw"] = cos
-                yield out
-
-        # spread the GEMM across the cluster: a single-file queries input
-        # would otherwise run every tile on one task (the q61 lesson)
-        n_shuffle = shuffle_partitions(q.sparkSession)
-        scored = q.repartition(n_shuffle).mapInPandas(gen_q, schema).withColumn(
-            "cosine", F.round(F.col("cosine_raw"), 6)
-        )
+        scored = _corpus_in_closure(c, q, k)
     else:
-        scored = (
-            c.crossJoin(F.broadcast(q))
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "cosine", F.round(cosine_kernel(F.col("cv"), F.col("qv")), 6)
-            )
-        )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk", *carry_cols)
-    )
+        scored = _crossjoin_scored(c, q)
+    return _rank_topk(scored, k, carry_cols)
 
 
 def knn_classify(
@@ -628,9 +651,9 @@ def knn_classify(
     prediction is deterministic). The label rides through the top-k scan
     via ``carry_cols`` — no second join against the corpus.
 
-    Scale: cost is the brute-force top-k (O(corpus × queries) with the
-    query side broadcast); swap in ``lsh_topk`` candidates upstream when
-    the query set is large."""
+    Scale: cost is the brute-force top-k (O(corpus × queries), the
+    smaller side in the kernel's closure); swap in ``lsh_topk``
+    candidates upstream when neither side is small."""
     nn = brute_force_topk(
         corpus, queries, vec_col, id_col, query_id_col, k=k, carry_cols=(label_col,)
     )
@@ -949,6 +972,18 @@ def quantize_codes_kernel(vecs, dims: int):
     return out
 
 
+def _int8_roundtrip(mat):
+    """Numpy twin of ``dequantize_vec(quantize_vec(...))`` on stacked
+    float64 vectors, in the expression's operation order: codes =
+    floor((x - mn)/rng*255 + 0.5), reconstruction = mn + (codes*rng)/255."""
+    import numpy as np  # noqa: PLC0415
+
+    mn = mat.min(axis=1)[:, None]
+    mx = mat.max(axis=1)[:, None]
+    rng = np.where(mx > mn, mx - mn, 1.0)
+    return mn + (np.floor((mat - mn) / rng * 255.0 + 0.5) * rng) / 255.0
+
+
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -965,19 +1000,14 @@ def quantized_topk(
     cosine is computed on reconstructed vectors, so ranking error is
     bounded by quantization error only.
 
-    Execution (r8, same bounded-query pattern as brute_force_topk): a
-    small query side lives in the Arrow kernel's closure and the whole
-    quantize → dequantize → cosine chain runs in ONE numpy pass per
-    corpus vector — the old shape paid the interpreted `transform`
-    quantizer per row AND shipped the reconstructed vector to Python
-    once per pair. Bit-parity: codes are `floor((x−mn)/rng·255+0.5)`
-    (input-dtype min/max widened), reconstruction is `mn + (c·rng)/255`
-    in the expression's operation order, cosine is the `np.cumsum` fold
-    of :func:`cosine_kernel`; round(6) and the rank window unchanged.
-    Large query sets — by ``max_collected_queries`` rows OR the
-    ``max_queries_bytes`` float64 budget (``rows × dim × 8``, so a
-    wide-embedding query side can't bloat every task closure) — keep
-    the expression + crossJoin path.
+    Execution: a small query side (≤ ``max_collected_queries`` rows and
+    ``max_queries_bytes`` of float64, ``rows × dim × 8``) lives in the
+    closure of :func:`brute_force_topk`'s kernel and corpus Arrow
+    batches stream through it. Each batch is quantized and reconstructed
+    in numpy (:func:`_int8_roundtrip`, bit-identical to the expression
+    form) before the kernel scores it, so the interpreted ``transform``
+    quantizer never runs per row. Larger query sets keep the expression
+    + broadcast-crossJoin path.
 
     Eagerness note: same contract as :func:`brute_force_topk` — the size
     probe collects at CALL time and the fallback path re-evaluates the
@@ -988,81 +1018,18 @@ def quantized_topk(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
     qrows = q.limit(max_collected_queries + 1).collect()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    if (
-        len(qrows) <= max_collected_queries
-        and len(qrows) * _rows_dim(qrows, "qv") * 8 <= max_queries_bytes
-    ):
-        import numpy as np  # noqa: PLC0415
-
-        qids = [r["query_id"] for r in qrows]
-        qvs = [np.asarray(r["qv"], dtype=np.float64) for r in qrows]
-        qns = [float(np.sqrt(np.cumsum(v * v)[-1])) if len(v) else 0.0 for v in qvs]
-        c_in = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
-        dtypes = dict(c_in.dtypes)
-        qid_type = dict(q.dtypes)["query_id"]
-        schema = (
-            f"neighbor_id {dtypes['neighbor_id']}, "
-            f"query_id {qid_type}, cosine_raw double"
+    if _queries_fit_closure(qrows, max_collected_queries, max_queries_bytes):
+        c = corpus.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
         )
-
-        def gen(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mat = _stack_vectors(pdf[vec_col].to_numpy(), vec_col)
-                # quantize + reconstruct, expression operation order:
-                # codes = floor((x - mn)/rng*255 + 0.5) (int-valued),
-                # cv = mn + (codes * rng)/255
-                mn = mat.min(axis=1).astype(np.float64)[:, None]
-                mx = mat.max(axis=1).astype(np.float64)[:, None]
-                rng = np.where(mx > mn, mx - mn, 1.0)
-                x = mat.astype(np.float64)
-                codes = np.floor((x - mn) / rng * 255.0 + 0.5)
-                CV = mn + (codes * rng) / 255.0
-                na = np.sqrt(np.cumsum(CV * CV, axis=1)[:, -1])
-                nb_ids = pdf["neighbor_id"].to_numpy()
-                frames = []
-                for qid, qv, qn in zip(qids, qvs, qns):
-                    dots = np.cumsum(CV * qv, axis=1)[:, -1]
-                    cos = dots / (na * qn)
-                    keep = np.nonzero(nb_ids != qid)[0]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "neighbor_id": nb_ids[keep],
-                                "query_id": qid,
-                                "cosine_raw": cos[keep],
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
-
-        scored = c_in.mapInPandas(gen, schema).withColumn(
-            "cosine", F.round(F.col("cosine_raw"), 6)
+        scored = _queries_in_closure(c, q, qrows, k, prep=_int8_roundtrip)
+    else:
+        c = corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            dequantize_vec(quantize_vec(vec_col)).alias("cv"),
         )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "neighbor_id", "cosine", "rk")
-        )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        dequantize_vec(quantize_vec(vec_col)).alias("cv"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cosine_kernel(F.col("cv"), F.col("qv")), 6))
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+        scored = _crossjoin_scored(c, q)
+    return _rank_topk(scored, k)
 
 
 # -- one-pass gram / covariance statistics ----------------------------------

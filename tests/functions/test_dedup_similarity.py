@@ -422,17 +422,20 @@ class TestNearestCentroidsNoKeepCols:
 
 
 class TestBruteTopkPaths:
-    """brute_force_topk has two execution paths (bounded-query Arrow
-    kernel vs broadcast-crossJoin fallback) — both must produce
-    identical results."""
+    """The exact top-k has three execution paths: queries in the
+    kernel's closure with corpus batches streamed, corpus in the closure
+    with queries streamed (both through the one blocked-GEMM kernel), and
+    the broadcast-crossJoin fallback. All must produce identical
+    results."""
 
-    def _mk(self, spark, n=40, d=8, nq=5):
+    def _mk(self, spark, n=40, d=8, nq=5, distinct=None):
         import numpy as np
 
         rng = np.random.RandomState(13)
+        vecs = rng.randn(distinct or n, d)
         corpus = spark.createDataFrame(
             [
-                (i, [float(x) for x in rng.randn(d)], f"lab{i % 3}")
+                (i, [float(x) for x in vecs[i % len(vecs)]], f"lab{i % 3}")
                 for i in range(n)
             ],
             "vec_id long, embedding array<float>, label string",
@@ -440,23 +443,47 @@ class TestBruteTopkPaths:
         queries = corpus.filter(F.col("vec_id") < nq)
         return corpus, queries
 
-    def test_kernel_path_matches_fallback(self, spark):
-        corpus, queries = self._mk(spark)
-        kw = dict(
-            vec_col="embedding", id_col="vec_id", query_id_col="vec_id",
-            k=4, carry_cols=("label",),
-        )
-        kern = sim.brute_force_topk(corpus, queries, **kw)  # 5 <= 1024
-        fall = sim.brute_force_topk(
-            corpus, queries, max_collected_queries=2,
-            max_collected_corpus=2, **kw  # 5 > 2, corpus > 2 -> crossJoin
-        )
+    @pytest.mark.parametrize(
+        "distinct, batch_rows, k",
+        [(None, None, 4), (2, 7, 2)],
+        ids=["distinct-vectors", "repeated-vectors-7-row-batches"],
+    )
+    def test_kernel_path_matches_fallback(self, spark, distinct, batch_rows, k):
+        """The repeated-vectors case streams the corpus in 7-row Arrow
+        batches: every query has 19 exact copies, more than k in one
+        batch, so the k-th place is a 6-decimal tie that the neighbor_id
+        tiebreak must settle across batches, in brute_force_topk and in
+        quantized_topk."""
+        corpus, queries = self._mk(spark, distinct=distinct)
+        kw = dict(vec_col="embedding", id_col="vec_id", query_id_col="vec_id", k=k)
         key = lambda r: (r.query_id, r.rk)  # noqa: E731
-        a = sorted(kern.collect(), key=key)
-        b = sorted(fall.collect(), key=key)
-        assert [tuple(r) for r in a] == [tuple(r) for r in b]
-        assert len(a) == 5 * 4
-        assert a[0].__fields__ == ["query_id", "neighbor_id", "cosine", "rk", "label"]
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        saved = spark.conf.get(conf)
+        if batch_rows:
+            spark.conf.set(conf, str(batch_rows))
+        try:
+            kern = sim.brute_force_topk(corpus, queries, carry_cols=("label",), **kw)
+            fall = sim.brute_force_topk(  # 5 > 2 queries, corpus > 2 -> crossJoin
+                corpus, queries, carry_cols=("label",), max_collected_queries=2,
+                max_collected_corpus=2, **kw
+            )
+            qkern = sim.quantized_topk(corpus, queries, **kw)
+            qfall = sim.quantized_topk(corpus, queries, max_collected_queries=0, **kw)
+            a, b, qa, qb = (
+                [tuple(r) for r in sorted(df.collect(), key=key)]
+                for df in (kern, fall, qkern, qfall)
+            )
+        finally:
+            spark.conf.set(conf, saved)
+        assert a == b
+        assert qa == qb
+        assert len(a) == len(qa) == 5 * k
+        assert kern.columns == ["query_id", "neighbor_id", "cosine", "rk", "label"]
+        if distinct:
+            # the k smallest-id copies of each query's vector, all at 1.0
+            assert {r[2] for r in a} == {1.0}
+            assert [r[1] for r in a if r[0] == 0] == [2, 4]
+            assert [r[1] for r in qa if r[0] == 0] == [2, 4]
 
     def test_gemm_path_matches_both(self, spark):
         """r9 large-query path: corpus-in-closure blocked GEMM must
@@ -478,6 +505,14 @@ class TestBruteTopkPaths:
         b = sorted(gemm.collect(), key=key)
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
         assert len(a) == 12 * 4
+
+    def test_empty_query_set_returns_empty(self, spark):
+        corpus, queries = self._mk(spark, nq=0)
+        kw = dict(vec_col="embedding", id_col="vec_id", query_id_col="vec_id", k=4)
+        out = sim.brute_force_topk(corpus, queries, carry_cols=("label",), **kw)
+        assert out.count() == 0
+        assert out.columns == ["query_id", "neighbor_id", "cosine", "rk", "label"]
+        assert sim.quantized_topk(corpus, queries, **kw).count() == 0
 
     def test_excludes_self_matches(self, spark):
         corpus, queries = self._mk(spark, n=10, nq=10)
