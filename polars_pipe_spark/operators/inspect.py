@@ -6,21 +6,32 @@ null_proportion, n_unique). Output shape: long-format — one row per
 statistic, one string column per data column, leading "statistic" column.
 
 Spark design:
-- One ``df.agg(...)`` pass computes EVERY (statistic, column) cell —
-  count/null_count/mean/std/min/max/percentiles/custom — in a single job
-  (the reference evaluates the plan once per custom statistic,
-  inspect.py:43-46; at 100 TB that's N full scans → we do 1).
-- Percentiles are EXACT (``F.percentile``) for oracle parity at test
+- Two aggregations over the input, collected in ONE action (the reference
+  evaluates the plan once per custom statistic, inspect.py:43-46):
+  1. the nine built-ins — count/null_count/mean/std/min/max and one
+     percentile call per column that answers all three quantiles (one
+     buffer per column, not per (column, quantile));
+  2. the custom statistics.
+  They are kept apart because a DISTINCT aggregate (the default
+  ``n_unique`` is ``countDistinct``) makes Catalyst rewrite its whole
+  aggregate into an ``Expand`` with one projection per distinct column;
+  the built-ins' object-buffer percentiles must not ride through it.
+  Each aggregation's one row is reshaped to long format in Spark, the two
+  are unioned and collected, and the ~11-row table is rebuilt locally
+  from Arrow (a JVM-side relation: jobs that read it start no Python
+  worker).
+- Percentiles are EXACT (``percentile``) for oracle parity at test
   scale; pass ``approx=True`` for the 100 TB path
-  (``F.percentile_approx``) — SURVEY.md §2.6 A1.
+  (``percentile_approx``) — SURVEY.md §2.6 A1.
 - Numeric stats on non-numeric columns are NULL-valued cells (Polars
-  describe shows null there too); everything is cast to string at the end.
+  describe shows null there too); every cell is cast to string in Spark.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,6 +56,84 @@ CUSTOM_STATISTICS: dict[str, Callable[[str], Column]] = {
 }
 
 
+_STATS = ["count", "null_count", "mean", "std", "min", "25%", "50%", "75%", "max"]
+_QUANTILES = ["25%", "50%", "75%"]
+_PERCENTAGES = "array(0.25D, 0.5D, 0.75D)"
+
+
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _long_stats(row: DataFrame, rows: list[list[str | None]], first: int) -> DataFrame:
+    """Reshape the one-row aggregate ``row`` to one row per statistic:
+    ``pos`` (``first`` + its index, the statistic's place in the table),
+    then positional cells ``c0``..``c{n-1}`` — positional so any input
+    column name works. ``rows[j][i]`` is a SQL expression over ``row``'s
+    columns, or None for a null cell.
+
+    Cells are cast to string here, after the aggregate has written them as
+    their own type: a decimal quantile indexed out of
+    ``percentile_approx``'s array is only rescaled to its column's type
+    there (cast inside the aggregate, ``0.00`` prints as ``0.0``)."""
+    args = []
+    for j, cells in enumerate(rows):
+        args.append(str(first + j))
+        args += [f"CAST({e or 'NULL'} AS STRING)" for e in cells]
+    names = ", ".join(["pos", *(f"c{i}" for i in range(len(rows[0])))])
+    return row.selectExpr(f"stack({len(rows)}, {', '.join(args)}) AS ({names})")
+
+
+def _builtin_stats(df: DataFrame, approx: bool) -> DataFrame:
+    """The nine built-in rows. No DISTINCT aggregate, hence no ``Expand``:
+    each column's percentiles are ONE call over the three quantiles,
+    indexed after the aggregation.
+
+    Written as SQL text in one ``selectExpr``: every Column-API call is a
+    py4j round trip (1-2 ms each on a 4-core host), and building these
+    ~10 cells per column through it took ~1.2 s per call for 18 columns."""
+
+    def pct(c: str) -> str:
+        if approx:  # 10000: the Column API's default accuracy
+            return f"percentile_approx({c}, {_PERCENTAGES}, 10000)"
+        return f"percentile({c}, {_PERCENTAGES})"
+
+    aggs: list[str] = []
+    rows: dict[str, list[str | None]] = {s: [] for s in _STATS}
+    for i, f in enumerate(df.schema.fields):
+        c = _quote(f.name)
+        num = isinstance(f.dataType, _NUMERIC)
+        orderable = not isinstance(f.dataType, (T.MapType, T.StructType, T.ArrayType))
+        exprs = {
+            "count": f"count({c})",
+            "null_count": f"sum(CAST(({c} IS NULL) AS BIGINT))",
+            "mean": f"avg({c})" if num else None,
+            "std": f"stddev_samp({c})" if num else None,
+            "min": f"min({c})" if orderable else None,
+            "max": f"max({c})" if orderable else None,
+            "pct": pct(c) if num else None,
+        }
+        aggs += [f"{e} AS {k}_{i}" for k, e in exprs.items() if e]
+        for s in _STATS:
+            if s in _QUANTILES:
+                rows[s].append(f"pct_{i}[{_QUANTILES.index(s)}]" if num else None)
+            else:
+                rows[s].append(f"{s}_{i}" if exprs[s] else None)
+    return _long_stats(df.selectExpr(*aggs), list(rows.values()), 0)
+
+
+def _custom_stats(
+    df: DataFrame, custom_statistics: dict[str, Callable[[str], Column]]
+) -> DataFrame:
+    """One row per custom statistic, placed after the built-ins."""
+    names = [
+        [f"_{j}_{i}" for i in range(len(df.columns))] for j in range(len(custom_statistics))
+    ]
+    # one toDF call names every cell (an alias per cell is a py4j call each)
+    row = df.agg(*[fn(c) for fn in custom_statistics.values() for c in df.columns])
+    return _long_stats(row.toDF(*[n for ns in names for n in ns]), names, len(_STATS))
+
+
 def describe_df(
     df: DataFrame,
     custom_statistics: dict[str, Callable[[str], Column]] = CUSTOM_STATISTICS,
@@ -54,64 +143,22 @@ def describe_df(
     25%, 50%, 75%, max, then one row per custom statistic; columns =
     "statistic" + every input column, all strings."""
     cols = df.columns
-    num = {
-        f.name for f in df.schema.fields if isinstance(f.dataType, _NUMERIC)
-    }
-    orderable = {
-        f.name
-        for f in df.schema.fields
-        if not isinstance(f.dataType, (T.MapType, T.StructType, T.ArrayType))
-    }
+    long = _builtin_stats(df, approx)
+    if custom_statistics:
+        long = long.unionAll(_custom_stats(df, custom_statistics))
+    rows = sorted(long.collect(), key=lambda r: r.pos)
 
-    def pct(c: str, p: float) -> Column:
-        if approx:
-            return F.percentile_approx(F.col(c), p)
-        return F.percentile(F.col(c), p)
-
-    null_str = F.lit(None).cast("string")
-
-    def cell(stat: str, c: str) -> Column:
-        if stat == "count":
-            e = F.count(F.col(c))
-        elif stat == "null_count":
-            e = F.sum(F.col(c).isNull().cast("long"))
-        elif stat == "mean":
-            e = F.mean(F.col(c)) if c in num else None
-        elif stat == "std":
-            e = F.stddev_samp(F.col(c)) if c in num else None
-        elif stat == "min":
-            e = F.min(F.col(c)) if c in orderable else None
-        elif stat == "25%":
-            e = pct(c, 0.25) if c in num else None
-        elif stat == "50%":
-            e = pct(c, 0.5) if c in num else None
-        elif stat == "75%":
-            e = pct(c, 0.75) if c in num else None
-        elif stat == "max":
-            e = F.max(F.col(c)) if c in orderable else None
-        else:
-            raise AssertionError(stat)
-        return (e.cast("string") if e is not None else null_str).alias(f"{stat}::{c}")
-
-    stats = ["count", "null_count", "mean", "std", "min", "25%", "50%", "75%", "max"]
-    aggs = [cell(s, c) for s in stats for c in cols]
-    aggs += [
-        fn(c).cast("string").alias(f"{name}::{c}")
-        for name, fn in custom_statistics.items()
-        for c in cols
-    ]
-    row = df.agg(*aggs).collect()[0].asDict()
-
-    all_stats = stats + list(custom_statistics)
-    out_rows = [
-        tuple([s] + [row[f"{s}::{c}"] for c in cols]) for s in all_stats
-    ]
+    table = pa.Table.from_arrays(
+        [pa.array(_STATS + list(custom_statistics), pa.string())]
+        + [pa.array([r[f"c{i}"] for r in rows], pa.string()) for i in range(len(cols))],
+        names=["statistic", *cols],
+    )
     schema = T.StructType(
         [T.StructField("statistic", T.StringType())]
         + [T.StructField(c, T.StringType()) for c in cols]
     )
     # A stats table has ~11 rows — one partition, one output file.
-    return df.sparkSession.createDataFrame(out_rows, schema).coalesce(1)
+    return df.sparkSession.createDataFrame(table, schema).coalesce(1)
 
 
 def k_anonymity_report(

@@ -112,11 +112,14 @@ def run_pipeline(
         valid_df, invalid_df = vl.validate_df(tagged, rules)
 
     dst = Path(parsed.dst_root) / parsed.guid
+    # The stats tables are ~11 rows in one partition: written unsized (no
+    # sample write + read-back to size ~1 GB part files).
     with run_log.stage("pre_transform_stats"):
         io_wrapper.write(
             ins.describe_df(valid_df, approx=parsed.scale_mode),
             dst / parsed.desc_stats_stem / "pre_transform",
             file_type=FileType.PARQUET,
+            target_size_gb=None,
         )
 
     tf_config = TransformConfig.from_dict(parsed.transformations)
@@ -158,6 +161,7 @@ def run_pipeline(
             ins.describe_df(transformed, approx=parsed.scale_mode),
             dst / parsed.desc_stats_stem / "post_transform",
             file_type=FileType.PARQUET,
+            target_size_gb=None,
         )
 
     run_log.note(guid=parsed.guid, process_name=parsed.process_name)

@@ -5,6 +5,7 @@ README claims."""
 from __future__ import annotations
 
 import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,21 +105,70 @@ class TestAggregation:
         # partial (map-side) + final aggregate pair around the exchange
         assert physical(g).count("HashAggregate") >= 2
 
-    def test_describe_is_single_job(self, spark, employees):
-        """describe_df computes every cell in ONE aggregation (the
-        reference re-evaluates per custom statistic)."""
+    @staticmethod
+    def _describe_jobs(spark, df, **kw):
+        """(Spark jobs describe_df ran, the one frame it collected)."""
         from polars_pipe_spark.operators.inspect import describe_df
 
+        collected = []
+        cls = type(df)
+        collect = cls.collect
+
+        def spy(self):
+            collected.append(self)
+            return collect(self)
+
         sc = spark.sparkContext
-        sc.setJobGroup("describe_test", "describe_df job-count check")
+        group = f"describe_test_{uuid.uuid4().hex}"  # the tracker keeps old jobs
+        sc.setJobGroup(group, "describe_df plan-shape check")
+        cls.collect = spy
         try:
-            describe_df(employees)
-            jobs = sc.statusTracker().getJobIdsForGroup("describe_test")
+            describe_df(df, **kw)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
         finally:
+            cls.collect = collect
             sc.setJobGroup(None, None)
-        # the whole stats table = one aggregation job (AQE may add a
-        # handful of tiny result-stage jobs, never one per statistic)
-        assert 1 <= len(jobs) <= 4
+        assert len(collected) == 1  # the whole table comes back in one action
+        return len(jobs), collected[0]
+
+    @staticmethod
+    def _aggregates(df) -> int:
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return len(re.findall(r"^[\s:+-]*Aggregate \[", plan, flags=re.M))
+
+    def test_describe_builtins_have_no_expand(self, employees):
+        """The nine built-in rows come from an aggregation with no DISTINCT,
+        so Catalyst adds no Expand under the object-buffer percentiles; one
+        percentile call per column answers all three quantiles."""
+        from polars_pipe_spark.operators import inspect as ins
+
+        p = physical(ins._builtin_stats(employees, approx=False))
+        assert "Expand" not in p
+        numeric = ["age", "salary", "bonus"]
+        partial = next(ln for ln in p.splitlines() if "partial_percentile(" in ln)
+        assert partial.count("partial_percentile(") == len(numeric)
+        # the probe sees an Expand where one exists: default n_unique
+        assert "Expand" in physical(ins._custom_stats(employees, ins.CUSTOM_STATISTICS))
+
+    @pytest.mark.parametrize("custom, n_aggs", [(None, 2), ({}, 1)], ids=["default", "none"])
+    def test_describe_aggregates_over_input(self, spark, employees, custom, n_aggs):
+        """Built-ins and custom statistics are two aggregations over the
+        input; with no custom statistic there is no second one."""
+        kw = {} if custom is None else {"custom_statistics": custom}
+        _, collected = self._describe_jobs(spark, employees, **kw)
+        assert self._aggregates(collected) == n_aggs
+
+    def test_describe_jobs_independent_of_width(self, spark):
+        """The job count is a property of the plan shape, not of the
+        number of columns (never one job per statistic or column)."""
+        base = spark.range(40).select(
+            (F.col("id") % 7).alias("k"), (F.col("id") / 3).alias("x"),
+            F.col("id").cast("string").alias("s"),
+        )
+        cols = [F.col(c).alias(f"{c}{i}") for i in range(4) for c in "kxs"]
+        narrow, wide = base.select(*cols[:5]), base.select(*cols)
+        assert (len(narrow.columns), len(wide.columns)) == (5, 12)
+        assert self._describe_jobs(spark, narrow)[0] == self._describe_jobs(spark, wide)[0]
 
 
 class TestValidationSingleScan:

@@ -6,6 +6,8 @@ error_reason join, exact percentiles)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from polars_pipe_spark.adapters.io import FakeIOWrapper
@@ -233,6 +235,36 @@ class TestLLMOpsInPipeline:
         assert texts[2] == "clean"
         err = io.files[f"{DST}/abc-123/error_records"]
         assert {r.doc_id for r in err.collect()} == {3}
+
+
+class TestRealWrites:
+    def test_only_data_writes_are_sized(self, spark, employees, tmp_path, monkeypatch):
+        """The two data writes size their part files from a sample; the
+        ~11-row stats tables are written unsized, one parquet file each."""
+        from polars_pipe_spark.adapters import io as io_mod
+
+        sized = []
+        estimate = io_mod.estimate_rows_per_file
+
+        def spy(df, target_size_gb=io_mod.DEFAULT_TARGET_FILE_GB, sample_path=None):
+            sized.append(Path(sample_path).name.split("__sizing_tmp_")[0])
+            return estimate(df, target_size_gb, sample_path=sample_path)
+
+        monkeypatch.setattr(io_mod, "estimate_rows_per_file", spy)
+        src = str(tmp_path / "employees.parquet")
+        employees.drop("projects").write.parquet(src)
+        parsed = run_pipeline(io_mod.IOWrapper(spark), {
+            "process_name": "sized",
+            "src_path": src,
+            "src_file_type": "parquet",
+            "dst_root": str(tmp_path / "out"),
+            "dst_file_type": "parquet",
+            "validation": {"salary gt 45000": ["salary", "gt", 45000]},
+        })
+        assert sorted(sized) == ["error_records", "transformed_data"]
+        run_dir = tmp_path / "out" / parsed.guid
+        for stem in ("pre_transform", "post_transform"):
+            assert len(list((run_dir / "desc_stats" / stem).glob("*.parquet"))) == 1
 
 
 class TestCli:
