@@ -34,12 +34,9 @@ from polars_pipe_spark.sources.tables import tz_normalise
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from polars_pipe_spark.sources import read_parquet_table
 
-    # the driver may hand us a session it built itself — pin the confs the
-    # oracle comparison depends on, and size shuffles for the testdata
-    # scale (all runtime-settable)
+    # the driver may hand us a session it built itself — pin the one conf
+    # the oracle comparison depends on; shuffle sizing stays the session's
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     return read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
 
 
@@ -1544,7 +1541,7 @@ def _q61_fuzzy_join(spark, sf):
     # keygen with JVM join work). The gated round-robin repartition
     # restores full parallelism at small scale and passes through
     # untouched once the scan has enough real splits (the 100 TB case).
-    # Measured sf10 full-query (tools/ab_q61.py, same window): shipped
+    # Measured sf10 full-query (a37cb25, same window): shipped
     # r14 form 285 s → 18.2 s; r13 pandas-UDF form 207 s.
     cust = _t_par(spark, sf, "customer").select(
         F.col("c_custkey").alias("cust_id"), F.lower(F.col("c_name")).alias("name")

@@ -606,7 +606,7 @@ def dedup_clusters(
     # materialise it inside one job and the whole upstream pair pipeline
     # (typically an expensive near-dup candidate generator behind an
     # unfilled persist) can run twice ("Block rdd_N already exists"
-    # warnings). Measured at sf10 (tools/ab_q63.py, paired, best-of-2):
+    # warnings). Measured at sf10 (3a89632, paired, best-of-2):
     # all-lazy 77.5 s vs edges-eager 58.8 s (0.76x) vs all-eager 59.3 s
     # — eager `edges` restores the r13 time; the per-round label
     # checkpoints below keep eager=False (single first consumer, the

@@ -1633,24 +1633,14 @@ def _jpeg_decode_ac_refine(reader, grid, ac_tab, ss, se, al, order, ri=0):
             eobrun -= 1
 
 
-def decode_image(payload: bytes) -> tuple[int, int, int, float]:
-    """Decode a BMP (24-bit BI_RGB), PPM (P6), PNG (complete spec
-    matrix — see :func:`decode_png`), or JPEG (baseline + progressive
-    Huffman, restart intervals — see :func:`decode_jpeg`) payload to
-    ``(width, height, n_channels, mean_luma)`` with numpy + stdlib only.
-
-    mean_luma = (Σ_pixels 299·R+587·G+114·B) / (1000·maxval · n_pixels)
-    — the integer-sum-then-one-division form, so the double is
-    deterministic. The remaining seams (arithmetic/lossless JPEG,
-    non-palette tRNS) raise a named ``NotImplementedError``."""
+def _decode_rgb(payload: bytes):
+    """Parse a BMP (24-bit BI_RGB, either row order) or PPM (P6, maxval
+    255) payload to ``(width, height, rgb)``, ``rgb`` an (height, width, 3)
+    uint8 array. Any other payload raises ``NotImplementedError``."""
     import struct
 
     import numpy as np
 
-    if payload[:8] == _PNG_SIG:
-        return decode_png(payload)
-    if payload[:2] == b"\xff\xd8":
-        return decode_jpeg(payload)
     if payload[:2] == b"BM":
         pixel_offset = struct.unpack_from("<I", payload, 10)[0]
         dib_size, width, height = struct.unpack_from("<Iii", payload, 14)
@@ -1667,18 +1657,15 @@ def decode_image(payload: bytes) -> tuple[int, int, int, float]:
         rows = np.frombuffer(
             payload, dtype="uint8", count=stride * height, offset=pixel_offset
         ).reshape(height, stride)[:, :row_bytes]
-        px = rows.reshape(height, width, 3)[:, :, ::-1]  # BGR→RGB
+        rgb = rows.reshape(height, width, 3)[:, :, ::-1]  # BGR→RGB
         if bottom_up:
-            px = px[::-1]
+            rgb = rgb[::-1]
     elif payload[:2] == b"P6":
-        # FORWARD header parse per the Netpbm P6 spec (r5 ADVICE fix —
-        # the old form located pixel data from the payload TAIL, so any
-        # trailing bytes silently shifted every pixel, and '#' comments
-        # crashed with a bare int-parse ValueError): after the magic,
-        # three whitespace-separated decimal tokens (width height
-        # maxval), '#'-to-end-of-line comments allowed anywhere
-        # whitespace is, then EXACTLY ONE whitespace byte before the raw
-        # RGB data.
+        # FORWARD header parse per the Netpbm P6 spec, so trailing bytes
+        # cannot shift the pixels: after the magic, three whitespace-
+        # separated decimal tokens (width height maxval), '#'-to-end-of-
+        # line comments allowed anywhere whitespace is, then EXACTLY ONE
+        # whitespace byte before the raw RGB data.
         off = 2
         fields = []
         while len(fields) < 3:
@@ -1711,15 +1698,34 @@ def decode_image(payload: bytes) -> tuple[int, int, int, float]:
                 f"PPM P6: truncated pixel data — need {n_bytes} bytes, "
                 f"have {len(payload) - off}"
             )
-        px = np.frombuffer(
+        rgb = np.frombuffer(
             payload, dtype="uint8", count=n_bytes, offset=off
         ).reshape(height, width, 3)
     else:
         raise NotImplementedError(
-            f"no dependency-free decoder for payload magic {payload[:2]!r} — "
-            "progressive JPEG and non-RGB/interlaced PNG variants remain "
-            "the codec-library seam"
+            f"no dependency-free pixel decoder for payload magic "
+            f"{payload[:2]!r} — the codec-library seam"
         )
+    return width, height, rgb
+
+
+def decode_image(payload: bytes) -> tuple[int, int, int, float]:
+    """Decode a BMP (24-bit BI_RGB), PPM (P6), PNG (complete spec
+    matrix — see :func:`decode_png`), or JPEG (baseline + progressive
+    Huffman, restart intervals — see :func:`decode_jpeg`) payload to
+    ``(width, height, n_channels, mean_luma)`` with numpy + stdlib only.
+
+    mean_luma = (Σ_pixels 299·R+587·G+114·B) / (1000·maxval · n_pixels)
+    — the integer-sum-then-one-division form, so the double is
+    deterministic. The remaining seams (arithmetic/lossless JPEG,
+    non-palette tRNS) raise a named ``NotImplementedError``."""
+    import numpy as np
+
+    if payload[:8] == _PNG_SIG:
+        return decode_png(payload)
+    if payload[:2] == b"\xff\xd8":
+        return decode_jpeg(payload)
+    width, height, px = _decode_rgb(payload)
     lum = px.astype("int64") @ np.array([299, 587, 114], dtype="int64")
     mean_luma = float(int(lum.sum()) / (_LUMA_SCALE * width * height))
     return width, height, 3, mean_luma
@@ -2196,7 +2202,6 @@ def extract_audio_features(
     media_col: str = "media",
     id_col: str = "doc_id",
     window_bytes: int = 64,
-    use_real_codec: bool = False,
 ) -> DataFrame:
     """Audio feature extraction over ``mapInPandas``: treats the payload
     as a raw PCM-ish byte stream and computes windowed energy statistics
@@ -2205,9 +2210,8 @@ def extract_audio_features(
     runs for real (the pattern for any byte-level featurizer: checksum,
     entropy, magic-byte sniffing). A real container format (wav/mp3)
     needs a decode step first — the REAL uncompressed-container path is
-    :func:`extract_wav_features` (dependency-free RIFF/PCM-16 parse);
-    ``use_real_codec=True`` here redirects there by raising with the
-    pointer (compressed formats — mp3/ogg — remain the codec seam).
+    :func:`extract_wav_features` (dependency-free RIFF/PCM-16 parse;
+    compressed formats — mp3/ogg — remain the codec seam).
 
     Scale: payload bytes DO flow through Arrow in this one (the features
     need them); keep upstream filters tight. All per-row work is numpy
@@ -2224,12 +2228,6 @@ def extract_audio_features(
         import numpy as np
 
         for pdf in it:
-            if use_real_codec:
-                raise NotImplementedError(
-                    "for real container decode use extract_wav_features "
-                    "(dependency-free RIFF/PCM-16); compressed formats "
-                    "(mp3/ogg) need an audio library — the codec seam"
-                )
             payloads = pdf["payload"]
             lens = payloads.str.len().fillna(0).astype("int64").to_numpy()
             buf = np.frombuffer(b"".join(payloads.fillna(b"")), dtype="uint8")
@@ -2312,36 +2310,10 @@ def resize_images(
         flat = df.select(*meta, F.col(f"{media_col}.payload").alias("payload"))
 
     def _resize_real(payload: bytes) -> bytes:
-        import struct
-
         import numpy as np
 
-        # decode (reusing the BMP/PPM parsers via decode dispatch), then
-        # nearest-neighbour index sampling, then 24-bit BMP re-encode
-        if payload[:2] == b"BM":
-            pixel_offset = struct.unpack_from("<I", payload, 10)[0]
-            _, w, h = struct.unpack_from("<Iii", payload, 14)
-            bottom_up = h > 0
-            h = abs(h)
-            row_bytes = w * 3
-            stride = row_bytes + ((-row_bytes) % 4)
-            rows = np.frombuffer(
-                payload, dtype="uint8", count=stride * h, offset=pixel_offset
-            ).reshape(h, stride)[:, :row_bytes]
-            px = rows.reshape(h, w, 3)[:, :, ::-1]
-            if bottom_up:
-                px = px[::-1]
-        elif payload[:2] == b"P6":
-            parts = payload.split(maxsplit=4)
-            w, h = int(parts[1]), int(parts[2])
-            off = len(payload) - w * h * 3
-            px = np.frombuffer(
-                payload, dtype="uint8", count=w * h * 3, offset=off
-            ).reshape(h, w, 3)
-        else:
-            raise NotImplementedError(
-                f"no dependency-free resize for magic {payload[:2]!r}"
-            )
+        # decode, nearest-neighbour index sampling, 24-bit BMP re-encode
+        w, h, px = _decode_rgb(payload)
         yi = (np.arange(target_h) * h) // target_h
         xi = (np.arange(target_w) * w) // target_w
         return encode_bmp(target_w, target_h, px[yi][:, xi])

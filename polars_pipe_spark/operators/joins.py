@@ -297,7 +297,7 @@ def deletion_keys_expr(col, max_dist: int):
     hashed keys anyway: ``array_distinct`` over STRINGS is the O(n²)
     pairwise-equality fallback (~15k UTF8String compares for the ~172
     lev-2 variants of an 18-char name), over longs the O(n) hashset
-    path — measured at sf10, 32-way (tools/ab_q61.py): keygen+explode
+    path — measured at sf10, 32-way (a37cb25): keygen+explode
     15.99 s strings vs 14.99 s longs (0.94×, a constant-factor win; the
     per-row cost is ~0.2 ms either way, so PARALLELISM of this stage is
     what matters — see q61's _t_par note).
@@ -316,7 +316,7 @@ def deletion_key_hashes_expr(col, max_dist: int):
     collapse to one array element here, but an equi-join probes the
     same hash VALUE set regardless). Dedup on LongType takes Spark's
     O(n) OpenHashSet fast path instead of the O(n²) string fallback;
-    measured at sf10, 32-way (tools/ab_q61.py): keygen 15.99 → 14.99 s
+    measured at sf10, 32-way (a37cb25): keygen 15.99 → 14.99 s
     (0.94×) and the array rows carry 8-byte longs instead of ~17-char
     strings into the explode.
     """

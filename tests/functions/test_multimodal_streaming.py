@@ -271,21 +271,6 @@ class TestAudioFeatures:
         # content hashes ride through
         assert out[0].content_hash == hashlib.md5(payloads[0]).hexdigest()
 
-    def test_real_codec_seam_raises(self, spark):
-        import pytest as _pytest
-
-        from polars_pipe_spark.functions.multimodal import (
-            extract_audio_features,
-            media_from_text_column,
-        )
-
-        df = media_from_text_column(
-            spark.createDataFrame([(1, "x")], "doc_id long, text string"), "text"
-        )
-        out = extract_audio_features(df, use_real_codec=True)
-        with _pytest.raises(Exception, match="NotImplementedError|audio library"):
-            out.collect()
-
 
 class TestResizeImages:
     def test_fake_resize_schema_and_determinism(self, spark):
@@ -916,6 +901,35 @@ class TestRealImageCodecs:
         gw, gh, _, luma = mm.decode_image(expect)
         assert (gw, gh) == (2, 2)
         assert luma == self.expected_luma(px[yi][:, yi])
+
+    def _resize(self, spark, payloads):
+        df = spark.createDataFrame(
+            [(i, bytearray(p), "image/x") for i, p in enumerate(payloads)],
+            "doc_id long, payload binary, mime string",
+        ).withColumn(
+            "media",
+            mm.pack_media(F.col("payload"), F.lit(None).cast("string"), F.col("mime")),
+        )
+        out = mm.resize_images(df, 2, 2, use_fake_decoder=False).collect()
+        return [r.resized_hash for r in sorted(out, key=lambda r: r.doc_id)]
+
+    def test_real_resize_ppm_comment_and_trailing_bytes(self, spark):
+        px = self.checker(4, 4)
+        plain = mm.encode_ppm(4, 4, px)
+        commented = b"P6\n# written by hand\n4 4\n255\n" + px.tobytes()
+        trailing = plain + b"\x00\x01trailing"
+        hashes = self._resize(spark, [plain, commented, trailing])
+        assert hashes == [hashes[0]] * 3
+        # and the plain PPM resizes like the same pixels as a BMP
+        assert hashes[0] == self._resize(spark, [mm.encode_bmp(4, 4, px)])[0]
+
+    def test_real_resize_rejects_32bit_bmp(self, spark):
+        import struct
+
+        payload = bytearray(mm.encode_bmp(4, 4, self.checker(4, 4)))
+        struct.pack_into("<H", payload, 28, 32)  # bits per pixel
+        with pytest.raises(Exception, match="NotImplementedError"):
+            self._resize(spark, [bytes(payload)])
 
 
 class TestBmpVariants:
