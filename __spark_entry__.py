@@ -2430,7 +2430,7 @@ def _q102_partitioned_layout(spark, sf):
 
     docs = _t(spark, sf, "documents")
     dst = tempfile.mkdtemp(prefix="pps_part_") + "/docs"
-    write_parquet_partitioned(docs, dst, ["lang"], target_size_gb=None)
+    write_parquet_partitioned(docs, dst, ["lang"])
     back = spark.read.parquet(dst).filter(F.col("lang") == "en")
     return back.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
 

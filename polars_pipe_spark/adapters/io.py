@@ -128,7 +128,6 @@ def write_parquet_partitioned(
     df: DataFrame,
     path: str | Path,
     partition_cols: list[str],
-    target_size_gb: float | None = None,
     mode: str = "overwrite",
 ) -> None:
     """Hive-partitioned parquet sink (``path/col=value/…``): the layout
@@ -143,13 +142,7 @@ def write_parquet_partitioned(
     many partitions × many tasks, repartition on the partition cols
     first so each directory is written by few tasks.
     """
-    writer = df.write.mode(mode).partitionBy(*partition_cols)
-    if target_size_gb:
-        rows_per_file = estimate_rows_per_file(
-            df, target_size_gb, sample_path=sizing_sample_path(path)
-        )
-        writer = writer.option("maxRecordsPerFile", rows_per_file)
-    writer.parquet(str(path))
+    df.write.mode(mode).partitionBy(*partition_cols).parquet(str(path))
 
 
 def compact_parquet(

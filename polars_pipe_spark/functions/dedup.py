@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from polars_pipe_spark.session import shuffle_partitions
 
-from polars_pipe_spark.functions.text import doc_fingerprint, shingles, tokens
+from polars_pipe_spark.functions.text import doc_fingerprint, let, shingles, tokens
 
 logger = logging.getLogger(__name__)
 
@@ -431,48 +431,51 @@ def simhash(col: str | Column, bits: int = 16) -> Column:
     of token-md5s have bit i set. Bits come from the first b/4 hex chars
     of each token's md5 (portable nibble arithmetic — no engine-specific
     hash needed)."""
-    from polars_pipe_spark.functions.text import tokens
-
     nib_count = bits // 4
-    t = tokens(col)
-    n = F.size(t)
-    # per-token integer from the first `nib_count` md5 nibbles.
-    # r14: ONE md5 + one conv(hex, 16, 10) per token — the previous
-    # nibble fold re-evaluated F.md5(x) on every of its `nib_count`
-    # iterations (HOF lambdas re-evaluate their body per element; the
-    # md5 was the expensive part). conv of the leading nibbles is the
-    # same integer by definition.
-    tok_val = F.transform(
-        t,
-        lambda x: F.conv(F.substring(F.md5(x), 1, nib_count), 16, 10).cast(
-            "long"
-        ),
-    )
-    # ONE fold over the token values accumulating all `bits` counters at
-    # once (array<int> acc, one zip_with per token) — the md5/nibble work
-    # in tok_val is evaluated once per token, not once per bit (Catalyst
-    # does not CSE the big transform expression across separate filters;
-    # the old 16-pass form re-hashed every token 16×).
-    masks = F.array(*[F.lit(1 << (bits - 1 - b)).cast("long") for b in range(bits)])
-    counts = F.aggregate(
-        tok_val,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, v: F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + F.when(v.bitwiseAND(m) != F.lit(0), 1).otherwise(0),
-        ),
-    )
-    # majority per bit → OR the mask in; sum of disjoint masks == bitwise OR
-    return F.aggregate(
-        F.zip_with(
-            counts,
-            masks,
-            lambda c, m: F.when(c * 2 > n, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+
+    def _simhash(t: Column) -> Column:
+        # ``t`` is let-bound: the majority lambda below captures its size,
+        # which would otherwise re-tokenize the text once per bit
+        n = F.size(t)
+        # per-token integer from the first `nib_count` md5 nibbles.
+        # r14: ONE md5 + one conv(hex, 16, 10) per token — the previous
+        # nibble fold re-evaluated F.md5(x) on every of its `nib_count`
+        # iterations (HOF lambdas re-evaluate their body per element; the
+        # md5 was the expensive part). conv of the leading nibbles is the
+        # same integer by definition.
+        tok_val = F.transform(
+            t,
+            lambda x: F.conv(F.substring(F.md5(x), 1, nib_count), 16, 10).cast(
+                "long"
+            ),
+        )
+        # ONE fold over the token values accumulating all `bits` counters at
+        # once (array<int> acc, one zip_with per token) — the md5/nibble work
+        # in tok_val is evaluated once per token, not once per bit (Catalyst
+        # does not CSE the big transform expression across separate filters;
+        # the old 16-pass form re-hashed every token 16×).
+        masks = F.array(*[F.lit(1 << (bits - 1 - b)).cast("long") for b in range(bits)])
+        counts = F.aggregate(
+            tok_val,
+            F.array_repeat(F.lit(0), bits),
+            lambda acc, v: F.zip_with(
+                acc,
+                masks,
+                lambda a, m: a + F.when(v.bitwiseAND(m) != F.lit(0), 1).otherwise(0),
+            ),
+        )
+        # majority per bit → OR the mask in; sum of disjoint masks == bitwise OR
+        return F.aggregate(
+            F.zip_with(
+                counts,
+                masks,
+                lambda c, m: F.when(c * 2 > n, m).otherwise(F.lit(0).cast("long")),
+            ),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+
+    return let(tokens(col), _simhash)
 
 
 def hamming_distance(a: Column, b: Column) -> Column:
@@ -891,13 +894,16 @@ def dup_span_stats(
 
     Output: (id, n_windows, n_dup_windows, dup_fraction).
     """
-    t = tokens(text_col)
-    idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
-    gram = F.when(
-        F.size(t) >= k,
-        F.transform(idx, lambda i: F.md5(F.array_join(F.slice(t, i, k), " "))),
-    ).otherwise(F.array().cast("array<string>"))
-    # Generate keeps the tokens expression materialised once per row
+
+    def _grams(t: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
+        return F.when(
+            F.size(t) >= k,
+            F.transform(idx, lambda i: F.md5(F.array_join(F.slice(t, i, k), " "))),
+        ).otherwise(F.array().cast("array<string>"))
+
+    gram = let(tokens(text_col), _grams)
+    # Generate keeps the gram array materialised once per row
     grams = df.select(F.col(id_col).alias("id"), F.explode(F.array(gram)).alias("__g"))
     pos = grams.select("id", F.explode("__g").alias("g"))
     # persist (r14): ``pos`` feeds BOTH the corpus-count aggregate and

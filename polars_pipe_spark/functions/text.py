@@ -12,6 +12,8 @@ expression forms, parity test-pinned.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,6 +42,18 @@ def _c(col: str | Column) -> Column:
 def normalize_text(col: str | Column) -> Column:
     """lower + strip edges + collapse inner whitespace runs to one space."""
     return F.regexp_replace(F.trim(F.lower(_c(col))), r"\s+", " ")
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Sub-expressions captured by a higher-order-function lambda are
+    re-evaluated for every array element (the lambda body is interpreted,
+    with no common-subexpression elimination), so a lambda that captures
+    ``tokens(col)`` re-runs the normalise + split once per element.
+    Passing the value in as a lambda variable of a one-element
+    ``transform`` evaluates it once, wherever the expression sits."""
+    return F.transform(F.array(value), body)[0]
 
 
 def tokens(col: str | Column) -> Column:
@@ -121,13 +135,13 @@ def quality_classifier(
     any comparison. Weights are binary-exact floats, additions mirror
     the oracle's left-associative order.
 
-    r14 (guide §1.2/§4.1): the token array is LET-BOUND once per row via
-    ``transform(array(tokens(col)), t -> struct(...))[0]``. The naive
-    inlined form repeated the split/regexp tokenization ~25 times inside
-    one expression tree; a PROJECT de-duplicates that via whole-stage
-    codegen subexpression elimination, but a FILTER does not, and the
-    higher-order sub-expressions are CodegenFallback (interpreted, no
-    CSE) — ``docs.filter(verdict == 'keep')`` alone measured 19.3 s at
+    r14 (guide §1.2/§4.1): the token array is LET-BOUND once per row by
+    :func:`let` (``transform(array(tokens(col)), t -> struct(...))[0]``).
+    The naive inlined form repeated the split/regexp tokenization ~25
+    times inside one expression tree; a PROJECT de-duplicates that via
+    whole-stage codegen subexpression elimination, but a FILTER does not,
+    and the higher-order sub-expressions are CodegenFallback (interpreted,
+    no CSE) — ``docs.filter(verdict == 'keep')`` alone measured 19.3 s at
     sf1 vs 1.9 s for the identical expression in a Project. Binding the
     array as a lambda argument makes the single tokenization structural
     (a lambda variable is evaluated once wherever the expression sits).
@@ -193,7 +207,7 @@ def quality_classifier(
             verdict.alias("verdict"),
         )
 
-    packed = F.transform(F.array(tokens(c)), _fields)[0]
+    packed = let(tokens(c), _fields)
     return {
         "quality_prob": packed.getField("quality_prob"),
         "reject_reason": packed.getField("reject_reason"),
@@ -265,12 +279,15 @@ def doc_fingerprint(col: str | Column) -> Column:
 def shingles(col: str | Column, k: int = 3) -> Column:
     """Word k-shingles of the normalised text (fewer than k words → one
     shingle of the whole text)."""
-    t = tokens(col)
-    n = F.size(t)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n <= k, F.array(F.array_join(t, " "))).otherwise(
-        F.transform(idx, lambda i: F.array_join(F.slice(t, i + 1, k), " "))
-    )
+
+    def _shingles(t: Column) -> Column:
+        n = F.size(t)
+        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+        return F.when(n <= k, F.array(F.array_join(t, " "))).otherwise(
+            F.transform(idx, lambda i: F.array_join(F.slice(t, i + 1, k), " "))
+        )
+
+    return let(tokens(col), _shingles)
 
 
 def text_stats(col: str | Column) -> dict[str, Column]:
@@ -342,12 +359,15 @@ def top_ngram_fraction(df, text_col: str, id_col: str, n: int = 2):
     n-grams once, two-level aggregate (count per (doc, gram) → max per
     doc), join the max back. Linear work, standard shuffles, AQE-skew
     safe. Returns (id_col, top_ngram_frac)."""
-    t = tokens(text_col)
-    sz = F.size(t)
-    idx = F.sequence(F.lit(0), F.greatest(sz - n, F.lit(0)))
-    grams = F.when(sz < n, F.array().cast("array<string>")).otherwise(
-        F.transform(idx, lambda i: F.array_join(F.slice(t, i + 1, n), " "))
-    )
+
+    def _grams(t: Column) -> Column:
+        sz = F.size(t)
+        idx = F.sequence(F.lit(0), F.greatest(sz - n, F.lit(0)))
+        return F.when(sz < n, F.array().cast("array<string>")).otherwise(
+            F.transform(idx, lambda i: F.array_join(F.slice(t, i + 1, n), " "))
+        )
+
+    grams = let(tokens(text_col), _grams)
     g = df.select(F.col(id_col), F.explode(grams).alias("gram"))
     per_gram = g.groupBy(id_col, "gram").agg(F.count(F.lit(1)).alias("c"))
     per_doc = per_gram.groupBy(id_col).agg(

@@ -3,15 +3,20 @@
 Reference parity: ``core/logger.py:1-38`` ships an env-gated stdlib
 logger (stream + rotating file, ``LOGGING_ENABLED``); this module keeps
 that surface and adds what a distributed run actually needs for
-observability — a **structured per-stage record** (name, wall seconds,
-row counts where already materialised) that ``run_pipeline`` writes next
-to the config artifact as ``run_log_*.yaml``.
+observability — a **structured per-stage record** (name, start offset
+from the start of the run, wall seconds, row counts where already
+materialised) that ``run_pipeline`` writes next to the config artifact as
+``run_log_*.yaml``. Stages may overlap (``run_pipeline`` runs its sinks
+concurrently), so stage seconds need not sum to the total; records are
+listed in start order.
 
 Scale notes:
 - The RunLog never forces extra Spark actions: row counts are taken only
   over frames the pipeline has already persisted (a count over a cache is
   one cheap job; a count over lineage would re-scan the source).
 - Pure driver-side bookkeeping — nothing here touches executors.
+- Stages may be entered from several threads: a record is
+  appended whole, in one (atomic) ``list.append``.
 """
 
 from __future__ import annotations
@@ -59,8 +64,8 @@ class RunLog:
 
     @contextmanager
     def stage(self, name: str, **fields: Any) -> Iterator[dict[str, Any]]:
-        rec: dict[str, Any] = {"stage": name, **fields}
         t = time.monotonic()
+        rec: dict[str, Any] = {"stage": name, "start_s": round(t - self._t0, 3), **fields}
         try:
             yield rec  # callers may add fields discovered inside the stage
         finally:
@@ -76,5 +81,5 @@ class RunLog:
         return {
             "total_seconds": round(time.monotonic() - self._t0, 3),
             **self.fields,
-            "stages": self.stages,
+            "stages": sorted(self.stages, key=lambda rec: rec["start_s"]),
         }

@@ -7,21 +7,41 @@ sys-cols last → name standardisation → plan capture → writes (config YAML,
 transformed data, error records if any, post-transform stats).
 
 Spark-specific changes (semantics-neutral, scale-critical — SURVEY.md §3.4):
-- The tagged (validated) frame and the transformed frame are ``persist()``ed:
-  the reference re-evaluates its lazy plan once per action (stats rows,
-  explain, chunk sizing, each chunk, error probe, writes — O(8) full
-  recomputes); here the source is scanned once per persist point.
-- Error-records existence probe is ``invalid.isEmpty()`` on the persisted
-  tagged frame (reference probes limit(1).collect(), basic_pipeline.py:98).
-- Plan capture stores the Catalyst optimized logical plan text.
+- Two persist points. The tagged (validated) frame is ``persist()``ed and
+  the valid and invalid frames are filters over it; the transformed frame
+  is ``persist()``ed on top of the valid one. The reference re-evaluates
+  its lazy plan once per action (stats rows, explain, chunk sizing, each
+  chunk, error probe, writes — O(8) full recomputes); here the source is
+  scanned once per persist point.
+- Plan capture stores the Catalyst optimized logical plan text; it and the
+  config YAML are written before any sink runs.
+- The four sinks run concurrently, one thread each:
+  ``pre_transform_stats`` (describe the valid frame), ``write_valid``
+  (write the transformed frame, then count it), ``write_errors`` (count
+  the invalid frame — the count doubles as the existence probe the
+  reference does with limit(1).collect(), basic_pipeline.py:98 — and
+  write it if non-empty) and ``post_transform_stats`` (describe the
+  transformed frame). They are safe to overlap: each only reads the two
+  persisted frames and writes its own destination, and a cache block that
+  two jobs need at once is computed by one task while the other waits for
+  it, so no sink recomputes another's work (a sink that plans before the
+  shared cache is filled may run an extra one-task job for its cache
+  stage). What overlapping buys is the gaps between jobs (planning,
+  codegen, class loading) and the task slots a small job leaves idle:
+  Spark's scheduler hands them to the other sinks' jobs. The caller's local properties (job
+  group, scheduler pool) carry into every sink thread, each sink tags its
+  jobs ``spark.job.description = run_pipeline:<stage>``, and the run
+  waits for every sink before raising the first failure in sink order.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 from polars_pipe_spark.adapters.io import FileType, IOBase
 from polars_pipe_spark.config import GeneralConfig, TransformConfig
@@ -65,6 +85,28 @@ def build_transform_chain(
         .transform(tf.select_with_sys_cols_last, select_cols=select_cols)
         .transform(tf.standardise_col_names_if_no_case_insensitive_dupes)
     )
+
+
+def _run_sinks(
+    spark: SparkSession, run_log: RunLog, sinks: list[Callable[[dict], None]]
+) -> None:
+    """Run each sink in its own thread as the ``run_log`` stage of
+    its name; wait for all of them, then raise the first failure in sink
+    order."""
+
+    def run(sink: Callable[[dict], None]) -> None:
+        spark.sparkContext.setJobDescription(f"run_pipeline:{sink.__name__}")
+        with run_log.stage(sink.__name__) as rec:
+            sink(rec)
+
+    with ThreadPoolExecutor(len(sinks)) as pool:
+        # one wrapper per sink: each copies the caller's local properties
+        # into its own thread (a shared copy would share the description)
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(run), sink) for sink in sinks
+        ]
+    for future in futures:
+        future.result()
 
 
 def run_pipeline(
@@ -112,16 +154,6 @@ def run_pipeline(
         valid_df, invalid_df = vl.validate_df(tagged, rules)
 
     dst = Path(parsed.dst_root) / parsed.guid
-    # The stats tables are ~11 rows in one partition: written unsized (no
-    # sample write + read-back to size ~1 GB part files).
-    with run_log.stage("pre_transform_stats"):
-        io_wrapper.write(
-            ins.describe_df(valid_df, approx=parsed.scale_mode),
-            dst / parsed.desc_stats_stem / "pre_transform",
-            file_type=FileType.PARQUET,
-            target_size_gb=None,
-        )
-
     tf_config = TransformConfig.from_dict(parsed.transformations)
     transformed = build_transform_chain(
         valid_df,
@@ -142,27 +174,43 @@ def run_pipeline(
     )
 
     dst_file_type = FileType.from_str(parsed.dst_file_type)
-    with run_log.stage("write_valid") as rec:
+
+    # The stats tables are ~11 rows in one partition: written unsized (no
+    # sample write + read-back to size ~1 GB part files).
+    def pre_transform_stats(rec: dict) -> None:
+        io_wrapper.write(
+            ins.describe_df(valid_df, approx=parsed.scale_mode),
+            dst / parsed.desc_stats_stem / "pre_transform",
+            file_type=FileType.PARQUET,
+            target_size_gb=None,
+        )
+
+    def write_valid(rec: dict) -> None:
         io_wrapper.write(transformed, dst / parsed.valid_dst_stem, file_type=dst_file_type)
         # count over the (now-filled) cache: one cheap job, no re-scan
         rec["rows"] = transformed.count()
 
-    with run_log.stage("write_errors") as rec:
+    def write_errors(rec: dict) -> None:
         # count doubles as the existence probe (over the cached tagged frame)
-        invalid_rows = invalid_df.count()
-        rec["rows"] = invalid_rows
+        rec["rows"] = invalid_rows = invalid_df.count()
         if invalid_rows:
             io_wrapper.write(
                 invalid_df, dst / parsed.invalid_dst_stem, file_type=dst_file_type
             )
 
-    with run_log.stage("post_transform_stats"):
+    def post_transform_stats(rec: dict) -> None:
         io_wrapper.write(
             ins.describe_df(transformed, approx=parsed.scale_mode),
             dst / parsed.desc_stats_stem / "post_transform",
             file_type=FileType.PARQUET,
             target_size_gb=None,
         )
+
+    _run_sinks(
+        transformed.sparkSession,
+        run_log,
+        [pre_transform_stats, write_valid, write_errors, post_transform_stats],
+    )
 
     run_log.note(guid=parsed.guid, process_name=parsed.process_name)
     io_wrapper.write(

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from polars_pipe_spark.functions import text as tx
 
@@ -91,6 +92,22 @@ class TestFingerprint:
         got = vals(df, tx.shingles("text", 3))
         assert got[1] == ["a b c", "b c d"]
         assert got[2] == ["a b"]
+
+    def test_shingles_tokenize_once(self, spark):
+        """The token array is let-bound: the shingle lambda reads a lambda
+        variable, so the expression holds tokens()' normalisation as often
+        as tokens() alone, not once more per captured use."""
+        per_tokens = str(tx.tokens("text")).count("regexp_replace")
+        assert per_tokens > 0
+        assert str(tx.shingles("text", 3)).count("regexp_replace") == per_tokens
+
+    def test_let_matches_inline(self, spark):
+        df = spark.createDataFrame(
+            [(1, "a b c"), (2, ""), (3, None)], "doc_id long, text string"
+        )
+        inline = vals(df, F.size(tx.tokens("text")) * 10)
+        assert vals(df, tx.let(tx.tokens("text"), lambda t: F.size(t) * 10)) == inline
+        assert inline[1] == 30 and inline[2] == 0
 
 
 class TestPII:

@@ -6,6 +6,7 @@ error_reason join, exact percentiles)."""
 
 from __future__ import annotations
 
+import threading
 from pathlib import Path
 
 import pytest
@@ -82,6 +83,9 @@ class TestFullRun:
             "post_transform_stats",
         }
         assert all(s["seconds"] >= 0 for s in log["stages"])
+        starts = [s["start_s"] for s in log["stages"]]
+        assert starts == sorted(starts) and starts[0] >= 0
+        assert log["stages"][0]["stage"] == "read"
         assert by_name["write_valid"]["rows"] == 3  # alice, charlie, eve
         assert by_name["write_errors"]["rows"] == 2  # bob, dave
 
@@ -195,6 +199,134 @@ class TestFullRun:
         cfg["validation"]["ghost rule"] = ["ghost_col", "is_not_null", None]
         with pytest.raises(ValueError, match="ghost_col"):
             run_pipeline(io, cfg)
+
+
+# sink destination (last path part) -> the RunLog stage that writes it
+SINK_STAGES = {
+    "pre_transform": "pre_transform_stats",
+    "transformed_data": "write_valid",
+    "error_records": "write_errors",
+    "post_transform": "post_transform_stats",
+}
+
+
+class SinkIO(FakeIOWrapper):
+    """Fake IO that records, per sink write, the writing thread's Spark
+    local properties, and runs ``on_write(dest)`` before storing."""
+
+    def __init__(self, spark, files, on_write=lambda dest: None):
+        super().__init__(spark, files)
+        self.on_write = on_write
+        self.props: dict[str, dict] = {}
+
+    def _fake_write(self, data, path, **kw):
+        dest = path.rsplit("/", 1)[-1]
+        if dest in SINK_STAGES:
+            sc = self.spark.sparkContext
+            self.props[dest] = {
+                k: sc.getLocalProperty(k)
+                for k in ("spark.job.description", "spark.jobGroup.id")
+            }
+            self.on_write(dest)
+        super()._fake_write(data, path, **kw)
+
+
+class TestConcurrentSinks:
+    """The four sinks run at once, one thread each."""
+
+    def test_sinks_overlap(self, spark, employees):
+        # each of the two writes waits for the other to arrive: run one
+        # after the other, the first breaks the barrier after 20 s
+        barrier = threading.Barrier(2, timeout=20)
+
+        def meet(dest):
+            if dest in ("pre_transform", "transformed_data"):
+                barrier.wait()
+
+        io = SinkIO(spark, {SRC: employees}, on_write=meet)
+        run_pipeline(io, full_config())
+        assert out_paths(io) >= {"/desc_stats/pre_transform", "/transformed_data"}
+
+    def test_failure_raised_after_every_sink_returns(self, spark, employees):
+        """The first failure in sink order is raised, once every other
+        sink has finished: ``pre_transform`` fails after ``error_records``
+        failed, and the other two sinks still write."""
+        errors_failed = threading.Event()
+
+        def fail(dest):
+            if dest == "error_records":
+                errors_failed.set()
+                raise ValueError("error sink failed")
+            if dest == "pre_transform":
+                errors_failed.wait(timeout=20)
+                raise RuntimeError("pre-transform sink failed")
+
+        io = SinkIO(spark, {SRC: employees}, on_write=fail)
+        with pytest.raises(RuntimeError, match="pre-transform sink failed"):
+            run_pipeline(io, full_config())
+        assert out_paths(io) == {
+            "/config/proc_20251016_1200.yaml",
+            "/transformed_data",
+            "/desc_stats/post_transform",
+        }
+
+    def test_each_sink_tags_its_jobs(self, spark, employees):
+        io = SinkIO(spark, {SRC: employees})
+        run_pipeline(io, full_config())
+        assert {d: p["spark.job.description"] for d, p in io.props.items()} == {
+            dest: f"run_pipeline:{stage}" for dest, stage in SINK_STAGES.items()
+        }
+        # the descriptions stay in the sink threads
+        assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+    def test_caller_job_group_reaches_sinks(self, spark, employees):
+        sc = spark.sparkContext
+        io = SinkIO(spark, {SRC: employees})
+        sc.setJobGroup("caller-group", "caller")
+        try:
+            run_pipeline(io, full_config())
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert set(io.props) == set(SINK_STAGES)
+        assert {p["spark.jobGroup.id"] for p in io.props.values()} == {"caller-group"}
+
+
+class TestRunLog:
+    def test_stages_from_many_threads(self):
+        """Stage records entered from more threads than cores all land, in
+        start order, each with its own fields."""
+        import sys
+
+        from polars_pipe_spark.logger import RunLog
+
+        log = RunLog()
+
+        def work(i):
+            for j in range(50):
+                with log.stage(f"s{i}", j=j) as rec:
+                    rec["i"] = i
+
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work, args=(i,)) for i in range(16)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=20)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        stages = log.to_dict()["stages"]
+        assert len(stages) == 16 * 50
+        assert all(s["stage"] == f"s{s['i']}" for s in stages)
+        assert sorted((s["i"], s["j"]) for s in stages) == [
+            (i, j) for i in range(16) for j in range(50)
+        ]
+        starts = [s["start_s"] for s in stages]
+        assert starts == sorted(starts)
 
 
 class TestLLMOpsInPipeline:
