@@ -4,7 +4,8 @@
 LLM-data-pipeline extensions) to a runnable Spark query over the driver's
 testdata tables; ``oracle_sql()`` holds the DuckDB-equivalent SQL. Column
 names are aliased identically on both sides (the driver sorts columns by
-name and value-hashes).
+name and value-hashes). Each query is declared once, beside its oracle,
+in a family module under ``polars_pipe_spark/registry/``.
 
 Determinism policy for oracle parity:
 - Money/double AGGREGATES are computed over DECIMAL casts (exact,
@@ -13,15968 +14,39 @@ Determinism policy for oracle parity:
   no such care.
 - Every query has a total deterministic output set (no LIMIT without
   unique full ordering; ties broken by keys).
-- Hash-bearing outputs (xxhash64 lineage) have no DuckDB equivalent and
-  are registered without an oracle (driver records rows-only).
 """
 
 from __future__ import annotations
 
-import os
-import re
 from collections.abc import Callable
 
-import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from polars_pipe_spark.registry import registered
 
-from polars_pipe_spark.sources.tables import tz_normalise
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    from polars_pipe_spark.sources import read_parquet_table
-
-    # the driver may hand us a session it built itself — pin the one conf
-    # the oracle comparison depends on; shuffle sizing stays the session's
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
-
-
-def _estimated_scan_splits(spark: SparkSession, df: DataFrame) -> int:
-    """Estimate the parquet scan's partition count from driver-side file
-    sizes using Spark's published FilePartition packing arithmetic
-    (``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
-    (Σ size + n·openCost) / defaultParallelism))``; files are chunked at
-    maxSplitBytes then bin-packed, so the count ≈ padded-total /
-    maxSplitBytes). Replaces the old ``df.rdd.getNumPartitions()`` gate,
-    which built the Java RDD graph per table read (r10 verdict nit) —
-    this touches only ``inputFiles()`` (driver file listing, no job) and
-    ``os.path.getsize``. Returns 0 (= "assume under-parallel") when a
-    size can't be read, which errs toward the cheap repartition.
-
-    r12 (ADVICE nit): the packing constants are read from spark.conf
-    (with Spark's documented defaults) instead of hardcoded, so the
-    gate tracks any future spark.sql.files.* override in session.py;
-    and inputFiles() URIs are percent-decoded before getsize, so paths
-    with encodable characters don't spuriously force the repartition."""
-    import math  # noqa: PLC0415
-    import os  # noqa: PLC0415
-    from urllib.parse import unquote  # noqa: PLC0415
-
-    def _conf_bytes(key: str, default: int) -> int:
-        raw = spark.conf.get(key, str(default))
-        try:
-            return int(raw)
-        except ValueError:
-            # suffixed forms like "128m"/"4MB"/"1t" — the full unit set
-            # Spark's byteStringAs accepts (b/k/m/g/t/p, optional 'b').
-            # An unparseable value falls back to the DEFAULT, which can
-            # under-estimate max_split and mis-gate — so it is logged,
-            # not silent (r12 review finding).
-            m = re.match(r"^(\d+)\s*([kmgtp]?)b?$", raw.strip().lower())
-            if not m:
-                import sys  # noqa: PLC0415
-
-                sys.stderr.write(
-                    f"_estimated_scan_splits: cannot parse {key}={raw!r}; "
-                    f"using default {default}\n"
-                )
-                return default
-            mult = {
-                "": 1, "k": 1024, "m": 1024**2, "g": 1024**3,
-                "t": 1024**4, "p": 1024**5,
-            }[m.group(2)]
-            return int(m.group(1)) * mult
-
-    open_cost = _conf_bytes("spark.sql.files.openCostInBytes", 4 * 1024 * 1024)
-    max_pb = _conf_bytes("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
-    total = 0
-    files = df.inputFiles()
-    if not files:
-        return 0
-    for f in files:
-        p = f[len("file://") :] if f.startswith("file://") else f
-        p = p[len("file:") :] if p.startswith("file:") else p
-        try:
-            total += os.path.getsize(unquote(p)) + open_cost
-        except OSError:
-            return 0
-    par = spark.sparkContext.defaultParallelism
-    max_split = min(max_pb, max(open_cost, total // max(par, 1)))
-    return max(1, math.ceil(total / max_split))
-
-
-def _t_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan + round-robin repartition to full parallelism, GATED on the
-    scan actually being under-parallel.  Small testdata tables arrive as
-    ONE file -> one scan partition; compute-heavy expression work
-    (shingling, md5, per-pair set ops) would serialize on that single
-    task, so a cheap repartition of the raw rows (a few MB) parallelises
-    everything downstream.  At 100 TB the scan already has thousands of
-    splits — an UNconditional round-robin repartition there is a full
-    extra shuffle of the raw rows, not a no-op (r3 verdict item #6) —
-    so when the scan reaches default parallelism the frame passes
-    through untouched.  The gate uses file-split arithmetic over
-    ``inputFiles()`` (r11: no ``.rdd``, no Java RDD graph, no job)."""
-    df = _t(spark, sf_dir, name)
-    par = spark.sparkContext.defaultParallelism
-    if _estimated_scan_splits(spark, df) >= par:
-        return df
-    return df.repartition(par)
-
-
-# ---------------------------------------------------------------------------
-# entry: flagship query (driver smoke check at sf0.001)
-# ---------------------------------------------------------------------------
+_LADDER = "polars_pipe_spark.registry.ladder"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the config-driven pipeline capability end-to-end as a
     query — validate lineitem, derive revenue, aggregate TPC-H-Q1-style."""
-    return _q13_tpch_q1(spark, "/root/testdata/sf0.001")
-
-
-# ---------------------------------------------------------------------------
-# Core operator queries (SURVEY.md §2.2-2.5)
-# ---------------------------------------------------------------------------
-
-
-def _q01_filter_pushdown(spark, sf):
-    """F1/F2: rule-compiled filter; predicate + projection push to scan."""
-    from polars_pipe_spark.expressions import build_rule_expr
-    from polars_pipe_spark.operators.transform import filter_df
-
-    df = _t(spark, sf, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_discount"
-    )
-    return filter_df(
-        df,
-        [
-            build_rule_expr("l_quantity", "gt", 45),
-            build_rule_expr("l_discount", "le", 0.05),
-        ],
-    )
-
-
-def _q02_projection_rename(spark, sf):
-    """P1/P2/P8: drop + rename + select."""
-    from polars_pipe_spark.operators.transform import drop_df_cols, rename_df_cols
-
-    df = _t(spark, sf, "customer")
-    df = drop_df_cols(df, ["c_acctbal", "c_mktsegment"])
-    return rename_df_cols(df, {"c_custkey": "cust_id", "c_name": "cust_name"})
-
-
-def _q03_recast(spark, sf):
-    """P3: dtype recast via the config dtype table (floor first so Spark's
-    truncate-cast and the SQL floor agree on the integral value)."""
-    from polars_pipe_spark.operators.transform import recast_df_cols
-
-    df = (
-        _t(spark, sf, "lineitem")
-        .select("l_orderkey", "l_linenumber", F.floor("l_quantity").alias("qty_floor"),
-                F.col("l_tax").alias("tax_double"))
-    )
-    return recast_df_cols(df, {"qty_floor": "Int64", "tax_double": "Float32"})
-
-
-def _q04_fill_clip(spark, sf):
-    """P4/P5: null fill + null-preserving clip (nulls synthesized
-    identically on both sides via nullif on a deterministic condition)."""
-    from polars_pipe_spark.operators.transform import clip_df_cols, fill_nulls_per_col
-
-    df = _t(spark, sf, "customer").select(
-        "c_custkey",
-        F.nullif(F.col("c_acctbal"), F.lit(0.0)).alias("bal_nullable"),
-        F.when(F.col("c_custkey") % 10 != 0, F.col("c_acctbal")).alias("bal_sparse"),
-    )
-    df = clip_df_cols(df, {"bal_sparse": (0.0, 5000.0)})  # nulls stay null
-    return fill_nulls_per_col(df, {"bal_nullable": -1.0})
-
-
-def _q05_derive_arith(spark, sf):
-    """C1/C2: row-wise arithmetic derives via the registry."""
-    from polars_pipe_spark.operators.transform import derive_new_cols
-
-    df = _t(spark, sf, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax"
-    )
-    df = df.withColumn("one_minus_disc", 1 - F.col("l_discount"))
-    df = derive_new_cols(
-        df,
-        {
-            "gross": {"fn_name": "mul_cols", "fn_kwargs": {"cols": ["l_extendedprice", "one_minus_disc"]}},
-            "qty_price_ratio": {"fn_name": "div_cols", "fn_kwargs": {"cols": ["l_quantity", "l_extendedprice"]}},
-            "disc_plus_tax": {"fn_name": "add_cols", "fn_kwargs": {"cols": ["l_discount", "l_tax"]}},
-        },
-    )
-    return df.drop("one_minus_disc")
-
-
-def _q06_agg_broadcast(spark, sf):
-    """C5: whole-column aggregate attached to every row (broadcast join),
-    then used as a predicate — 'orders above average price'."""
-    from polars_pipe_spark.operators.transform import derive_new_cols
-
-    df = _t(spark, sf, "orders").select("o_orderkey", "o_totalprice")
-    df = df.withColumn("price_dec", F.col("o_totalprice").cast("decimal(18,2)"))
-    df = derive_new_cols(
-        df,
-        {
-            "sum_price": {"fn_name": "sum", "fn_kwargs": {"col": "price_dec"}},
-            "n_orders": {"fn_name": "count", "fn_kwargs": {"col": "o_orderkey"}},
-        },
-    )
-    df = df.withColumn(
-        "mean_price", F.round(F.col("sum_price").cast("double") / F.col("n_orders"), 6)
-    )
-    return (
-        df.filter(F.col("o_totalprice") > F.col("mean_price"))
-        .select("o_orderkey", "o_totalprice", "mean_price")
-    )
-
-
-def _q07_normalise_str(spark, sf):
-    """L3/P9: whitespace-strip + lowercase on string cols (sys cols
-    excluded); synthetic padding exercises the strip."""
-    from polars_pipe_spark.operators.transform import normalise_str_cols
-
-    df = _t(spark, sf, "customer").select(
-        "c_custkey",
-        F.concat(F.lit("  "), F.col("c_name"), F.lit("\t")).alias("padded_name"),
-        F.upper("c_mktsegment").alias("segment"),
-    )
-    return normalise_str_cols(df)
-
-
-def _q08_dedupe_exact(spark, sf):
-    """D1: exact dedupe on a subset of columns."""
-    from polars_pipe_spark.operators.transform import deduplicate_rows
-
-    df = _t(spark, sf, "lineitem").select("l_returnflag", "l_linestatus")
-    return deduplicate_rows(df, ["*"])
-
-
-def _q09_validate_split(spark, sf):
-    """F3: rule-based split; invalid rows with error_reason."""
-    from polars_pipe_spark.operators.validation import parse_validation_config, validate_df
-
-    df = _t(spark, sf, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority", "o_orderstatus"
-    )
-    rules = parse_validation_config(
-        {
-            "price above 5000": ["o_totalprice", "gt", 5000.0],
-            "priority known": ["o_orderpriority", "is_in", ["1-urgent", "2-high", "3-medium"]],
-        }
-    )
-    _, invalid = validate_df(df, rules)
-    return invalid
-
-
-def _q10_describe_stats(spark, sf):
-    """A1-A5: single-pass stats — long format (statistic, column, value),
-    numeric to avoid cross-engine float-formatting drift."""
-    df = _t(spark, sf, "part")
-    aggs = []
-    for c in ["p_retailprice", "p_size"]:
-        dec = F.col(c).cast("decimal(18,2)")
-        aggs += [
-            F.count(F.col(c)).cast("double").alias(f"count::{c}"),
-            F.sum(F.col(c).isNull().cast("long")).cast("double").alias(f"null_count::{c}"),
-            F.round(F.sum(dec).cast("double") / F.count(F.col(c)), 6).alias(f"mean::{c}"),
-            F.min(F.col(c)).cast("double").alias(f"min::{c}"),
-            F.round(F.percentile(F.col(c), 0.25), 6).alias(f"25%::{c}"),
-            F.round(F.percentile(F.col(c), 0.5), 6).alias(f"50%::{c}"),
-            F.round(F.percentile(F.col(c), 0.75), 6).alias(f"75%::{c}"),
-            F.max(F.col(c)).cast("double").alias(f"max::{c}"),
-            F.countDistinct(F.col(c)).cast("double").alias(f"n_unique::{c}"),
-        ]
-    row = _t(spark, sf, "part").agg(*aggs)
-    stats = ["count", "null_count", "mean", "min", "25%", "50%", "75%", "max", "n_unique"]
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("statistic"),
-                F.lit(c).alias("column"),
-                F.col(f"`{s}::{c}`").alias("value"),
-            )
-            for s in stats
-            for c in ["p_retailprice", "p_size"]
-        ]
-    )
-    return row.select(F.explode(pairs).alias("kv")).select("kv.*")
-
-
-def _q11_nest_unnest(spark, sf):
-    """P6/P7: struct pack → unpack round trip."""
-    from polars_pipe_spark.operators.transform import nest_df_cols, unnest_df_cols
-
-    df = _t(spark, sf, "customer").select("c_custkey", "c_acctbal", "c_mktsegment")
-    nested = nest_df_cols(df, {"account": ["c_acctbal", "c_mktsegment"]})
-    return unnest_df_cols(nested, ["account"])
-
-
-def _q12_lineage_hash(spark, sf):
-    """L1/L2: xxhash64 row hash + process cols. The raw hash VALUE has no
-    DuckDB reproduction, so the oracle-checked projection carries every
-    lineage column whose value IS oracle-expressible (guid / src path /
-    process timestamp literals) plus the per-row hash-totality invariant;
-    the hash's determinism/collision properties are oracle-green via q167,
-    and its exact golden values are pinned in the unit suite."""
-    import datetime
-
-    from polars_pipe_spark.operators.transform import add_hash_col, add_process_cols
-
-    df = _t(spark, sf, "supplier")
-    df = add_hash_col(df)
-    df = add_process_cols(
-        df,
-        datetime.datetime(2025, 10, 16, 12, tzinfo=datetime.timezone.utc),
-        "fixed-guid",
-        "supplier.parquet",
-        "entrycheck",
-    )
-    return df.select(
-        "s_suppkey",
-        "sys_col_entrycheck_guid",
-        "sys_col_entrycheck_src_path",
-        F.date_format("sys_col_entrycheck_datetime", "yyyy-MM-dd HH:mm:ss").alias(
-            "sys_col_entrycheck_dt"
-        ),
-        F.col("sys_col_row_hash").isNotNull().alias("hash_total"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Spark-native analytics surface (SURVEY.md §2.9): joins, group-by, windows
-# ---------------------------------------------------------------------------
-
-
-def _q13_tpch_q1(spark, sf):
-    """Group-by aggregation (TPC-H Q1 shape) with decimal-exact sums."""
-    li = _t(spark, sf, "lineitem").filter(F.col("l_shipdate") <= "1998-09-02")
-    # Narrow operand precisions so Spark's decimal-multiply rule keeps the
-    # EXACT product scale: (12,2)x(7,4) -> (20,6), x(7,4) -> (28,10), all
-    # under precision 38 so no scale-6 cap / HALF_UP rounding fires.  With
-    # the old (18,2)/(18,4) operands the charge chain hit the cap and Spark
-    # rounded each row's product at scale 6 while DuckDB summed the exact
-    # scale-10 value — a real 7th-decimal value divergence, not just a type
-    # seam (caught by the r4 type-aware checker).  Bounds: extendedprice
-    # < 1e10 fits (12,2); discount/tax in [0,1) fit (6,4).
-    dec_price = F.col("l_extendedprice").cast("decimal(12,2)")
-    dec_disc = F.col("l_discount").cast("decimal(6,4)")
-    dec_tax = F.col("l_tax").cast("decimal(6,4)")
-    one = F.lit(1).cast("decimal(6,4)")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("sum_base_price"),
-            F.sum(dec_price * (one - dec_disc)).alias("sum_disc_price"),
-            F.sum(dec_price * (one - dec_disc) * (one + dec_tax)).alias("sum_charge"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        # Driver hash-failed r1–r3 on *types*, not values: Spark sums are
-        # decimal(28,2)/(38,6) while DuckDB's are decimal128(38,2)/(38,10),
-        # and a dtype-tagged canonicaliser (the driver's, and ours since r4)
-        # hashes them differently even with equal values.  So the output
-        # carries only BIGINT cells; decimals stay internal.  DOUBLE is not
-        # safe either: DuckDB's decimal→DOUBLE cast goes int128→double→/10^s
-        # and is NOT correctly rounded once the unscaled value passes 2^53
-        # (observed at sf0.01 for the scale-10 charge sum), while Spark's
-        # BigDecimal.doubleValue is — so high-scale decimals must leave the
-        # query as exact integers:
-        #   - cents columns: `sum * 100` is an integer-valued decimal
-        #     (scale 2), cast lossless.  int64 bound: sum_base_price <
-        #     9.2e16 currency units ≈ sf 4e5 (~400 TB).
-        #   - disc/charge (≤6 real decimal places; the (12,2)x(6,4) operand
-        #     narrowing keeps Spark's product at exact scale 10, no cap):
-        #     exact (units, micros-remainder) BIGINT pair — valid at ANY
-        #     scale factor, unlike single-column micros which overflows
-        #     int64 at sf ≈ 9000 (the r3 ADVICE overflow seam).
-        #   - avgs: scaled integer division entirely in DECIMAL(38,0) /
-        #     HUGEINT.  Spark's DIV on decimals is divideToIntegralValue
-        #     (exact); DuckDB mirrors with HUGEINT `//` (exact; its DECIMAL
-        #     `//` is float-lossy and must not be used).
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            F.expr("CAST(sum_qty * 100 AS BIGINT)").alias("sum_qty_cents"),
-            F.expr("CAST(sum_base_price * 100 AS BIGINT)").alias("sum_base_price_cents"),
-            F.expr(
-                "CAST(sum_disc_price * 1000000 AS DECIMAL(38,0)) DIV 1000000"
-            ).alias("sum_disc_price_units"),
-            F.expr(
-                "CAST(CAST(sum_disc_price * 1000000 AS DECIMAL(38,0)) % 1000000 AS BIGINT)"
-            ).alias("sum_disc_price_micros"),
-            F.expr(
-                "CAST(sum_charge * 1000000 AS DECIMAL(38,0)) DIV 1000000"
-            ).alias("sum_charge_units"),
-            F.expr(
-                "CAST(CAST(sum_charge * 1000000 AS DECIMAL(38,0)) % 1000000 AS BIGINT)"
-            ).alias("sum_charge_micros"),
-            "count_order",
-            F.expr(
-                "CAST(sum_qty * 1000000 AS DECIMAL(38,0)) DIV count_order"
-            ).alias("avg_qty_micros"),
-            F.expr(
-                "CAST(sum_base_price * 1000000 AS DECIMAL(38,0)) DIV count_order"
-            ).alias("avg_price_micros"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def _q14_join_revenue_by_nation(spark, sf):
-    """Multi-way join with broadcast dims (Q5 shape): revenue by nation."""
-    li = _t(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders")
-    cust = _t(spark, sf, "customer")
-    nation = _t(spark, sf, "nation")
-    # Aggregate-below-join: lineitem collapses to one revenue row per
-    # orderkey BEFORE touching the join tree — the orderkey shuffle was
-    # owed either way (join or agg), but aggregating first ships ~4×
-    # fewer rows into the joins AND the agg output arrives already
-    # hash-partitioned on the join key, so the orders join adds no
-    # re-shuffle of that side. count(*) per nation then IS the distinct
-    # order count (one row per orderkey survives; no Expand, no
-    # countDistinct — the r1 lesson). The same rewrite is what Catalyst's
-    # partial-aggregation pushdown can't do for it because the aggregate
-    # is user-specified above the join in the naive form.
-    rev_per_order = li.groupBy(F.col("l_orderkey").alias("o_key")).agg(
-        F.sum(
-            F.col("l_extendedprice").cast("decimal(18,2)")
-            * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-        ).alias("rev_part")
-    )
-    rev = (
-        rev_per_order.join(orders, F.col("o_key") == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum("rev_part").alias("revenue"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-    return rev.select("n_name", F.col("revenue").cast("double").alias("revenue"), "n_orders")
-
-
-def _q15_anti_semi_join(spark, sf):
-    """Left-anti + left-semi joins: customer counts by segment, split into
-    with-orders vs without-orders."""
-    cust = _t(spark, sf, "customer")
-    orders = _t(spark, sf, "orders").select("o_custkey")
-    with_orders = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .withColumn("has_orders", F.lit(True))
-    )
-    without = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-        .withColumn("has_orders", F.lit(False))
-    )
-    return with_orders.unionByName(without)
-
-
-def _q16_window_topk(spark, sf):
-    """Top-K per group: 3 priciest orders per customer, deterministic ties."""
-    orders = _t(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        orders.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rk")
-    )
-
-
-def _q17_running_sum(spark, sf):
-    """Cumulative window (C6): running quantity per supplier over time,
-    deterministic ordering by (shipdate, orderkey, linenumber,
-    quantity).
-
-    r12: quantity joined the ordering key after the fresh sf0.1 oracle
-    artifact caught a REAL nondeterminism — the driver's dirty-data
-    generator emits duplicate (orderkey, linenumber) lineitem rows
-    (sf0.1: suppkey 707, 1998-04-26, order 45185 line 7 appears with
-    qty 16 AND 13), so the old ordering was not total and the two
-    engines could legally disagree on the tied rows' running sums
-    (r11's green was luck of the sort). With quantity as the final
-    key the output multiset is engine-independent: rows identical in
-    every ordered column contribute identical sums in any order."""
-    li = _t(spark, sf, "lineitem")
-    w = (
-        Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber", "l_quantity")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return li.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        F.sum("l_quantity").over(w).alias("running_qty"),
-    )
-
-
-def _q18_set_ops(spark, sf):
-    """Set operations: BUILDING-segment customers UNION big-spenders,
-    EXCEPT machinery customers."""
-    cust = _t(spark, sf, "customer")
-    orders = _t(spark, sf, "orders")
-    building = cust.filter(F.col("c_mktsegment") == "BUILDING").select(
-        F.col("c_custkey").alias("custkey")
-    )
-    big = (
-        orders.filter(F.col("o_totalprice") > 400000)
-        .select(F.col("o_custkey").alias("custkey"))
-        .distinct()
-    )
-    machinery = cust.filter(F.col("c_mktsegment") == "MACHINERY").select(
-        F.col("c_custkey").alias("custkey")
-    )
-    return building.union(big).distinct().exceptAll(machinery)
-
-
-def _q19_rollup(spark, sf):
-    """ROLLUP grouping sets with decimal-exact sums."""
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("sum_qty"),
-        )
-        .select("l_returnflag", "l_linestatus", "n_rows", F.col("sum_qty").cast("double").alias("sum_qty"))
-    )
-
-
-def _q20_pivot(spark, sf):
-    """Pivot: order counts per priority × status (explicit pivot values —
-    no distinct-discovery scan)."""
-    from polars_pipe_spark.operators.reshape import pivot_table
-
-    return pivot_table(
-        _t(spark, sf, "orders"),
-        ["o_orderpriority"],
-        "o_orderstatus",
-        ["O", "F", "P"],
-        F.count(F.lit(1)),
-        rename={"O": "n_open", "F": "n_filled", "P": "n_partial"},
-        fill_value=0,
-    )
-
-
-def _q21_asof_join(spark, sf):
-    """As-of join (no native Spark op): for each purchase event, the most
-    recent prior signup/click value of the same user. Union-merge
-    implementation — single shuffle, no range explosion."""
-    from polars_pipe_spark.operators.joins import asof_join
-
-    ev = _t(spark, sf, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"), F.col("value").alias("click_value")
-    )
-    return asof_join(
-        purchases,
-        clicks,
-        on="user_id",
-        left_ts="ts",
-        right_ts="click_ts",
-        right_cols=["click_ts", "click_value"],
-    ).select("event_id", "user_id", "ts", "value", "click_ts", "click_value")
-
-
-def _q22_sessionize(spark, sf):
-    """Sessionization: 30-min-gap sessions per user via lag + cumulative
-    flag sum; output session stats."""
-    from polars_pipe_spark.operators.windows import sessionize
-
-    ev = _t(spark, sf, "events")
-    # event_id tiebreak: with tied (user_id, ts) rows, ordering by ts alone
-    # makes the session split at a gap boundary nondeterministic run-to-run
-    # (round-1 driver hash mismatch).
-    s = sessionize(
-        ev, user_col="user_id", ts_col="ts", gap_minutes=30, tiebreak_cols=["event_id"]
-    )
-    # Representation-proof bounds (driver hash-failed the raw-timestamp
-    # form twice, r1+r2): µs-precision event timestamps flowing through the
-    # NTZ→TIMESTAMP cast are the likeliest canonicalisation seam, so emit
-    # epoch microseconds as BIGINT. Session tz is pinned UTC (get_spark), so
-    # Spark's unix_micros equals DuckDB's epoch_us on the naive read.
-    return s.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.unix_micros(F.min("ts")).alias("session_start_us"),
-        F.unix_micros(F.max("ts")).alias("session_end_us"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# LLM-data-pipeline extensions: text analysis, dedup, similarity,
-# multimodal, streaming (first-class per the north star)
-# ---------------------------------------------------------------------------
-
-
-def _q23_text_stats(spark, sf):
-    """Text analysis bundle: token counts (whitespace + BPE-ish), word
-    length, punctuation/stopword ratios, quality score, language-ID,
-    fingerprint — all JVM-side expressions."""
-    from polars_pipe_spark.functions.text import text_stats
-
-    df = _t_par(spark, sf, "documents")
-    return df.select("doc_id", *[e.alias(n) for n, e in text_stats("text").items()])
-
-
-def _q24_exact_dedup(spark, sf):
-    """Exact dedup groups by content fingerprint (hash-groupBy)."""
-    from polars_pipe_spark.functions.dedup import exact_dedup_groups
-
-    return exact_dedup_groups(_t_par(spark, sf, "documents"), "text", "doc_id")
-
-
-def _q25_minhash_neardup(spark, sf):
-    """MinHash bottom-k sketch + LSH banding → candidate pairs → exact
-    Jaccard ≥ 0.2."""
-    from polars_pipe_spark.functions.dedup import minhash_near_dups
-
-    return minhash_near_dups(
-        _t_par(spark, sf, "documents"), "text", "doc_id",
-        shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
-    )
-
-
-def _q26_simhash(spark, sf):
-    """16-bit SimHash signature per document (portable md5-nibble bits)."""
-    from polars_pipe_spark.functions.dedup import simhash
-
-    return _t_par(spark, sf, "documents").select(
-        "doc_id", simhash("text", bits=16).alias("simhash16")
-    )
-
-
-def _char_gram_frame(spark, sf, n=4):
-    """Shared candidate-side frame for the char-gram set family (q27
-    jaccard, q211 dedup-explain): (id, source, packed grams, ng)."""
-    from polars_pipe_spark.functions.text import normalize_text
-
-    if n != 4:
-        raise ValueError("radix-256 gram packing below is 4-char-specific")
-
-    df = _t_par(spark, sf, "documents")
-    # materialise the normalised text first: the gram lambda references it
-    # once PER GRAM, and inlining would re-run the regex normalisation
-    # hundreds of times per document (same CSE pitfall as minhash bands)
-    normed = df.select(
-        F.col("doc_id").alias("id"), F.col("source"), normalize_text("text").alias("norm")
-    )
-    norm = F.col("norm")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(norm) - (n - 1), F.lit(1))),
-            lambda i: F.substring(norm, i, F.lit(n)),
-        )
-    )
-    # Pack each 4-char gram into ONE long (radix-256 over the ascii
-    # codes): the per-pair intersect then hashes/compares longs instead
-    # of strings — measured 6.0s → 3.2s at sf0.1, identical pair counts.
-    # Injective only for single-byte chars; this corpus is pure ASCII
-    # (verified: length == octet_length for every doc). For general
-    # Unicode keep the string grams (4 codepoints don't fit 63 bits).
-    packed = F.transform(
-        grams,
-        lambda s: (
-            F.ascii(F.substring(s, 1, 1)) * F.lit(16777216)
-            + F.ascii(F.substring(s, 2, 1)) * F.lit(65536)
-            + F.ascii(F.substring(s, 3, 1)) * F.lit(256)
-            + F.ascii(F.substring(s, 4, 1))
-        ).cast("long"),
-    )
-    # NO persist here, deliberately: grams is a thousands-element array
-    # per row, and building the columnar cache of such arrays costs far
-    # more than the one recompute the self-join needs (measured 4.4s →
-    # 19.2s with persist at sf0.1). Contrast minhash, whose small
-    # shingle-set/band frames DO win from caching.
-    return normed.select(
-        "id", "source", packed.alias("grams"), F.size(packed).alias("ng")
-    )
-
-
-def _exact_pair_budget(spark, sf, max_pairs, sample_blocks, query_name):
-    """Estimate-then-fence for the EXACT all-pairs verify queries (q27,
-    q211): one cheap column-pruned count agg over the documents table
-    (bounded collect — one row per source block) gives Σ per-block
-    C(n,2), the upper bound on pairs the blocking self-join can emit.
-
-    Returns ``None`` when the estimate fits ``max_pairs`` (run the full
-    corpus), or the list of allowed source blocks when ``sample_blocks``
-    restricts the run; raises ``ValueError`` with the estimate when the
-    work would exceed the budget and no escape hatch was given — a
-    diagnosable contract instead of a silent multi-hour hang at sf3+
-    (r8 VERDICT item 1; the ladder measured ~470k verified pairs/sec, so
-    the default 100M budget caps the exact baseline at ~3.5 min — large
-    enough that the sf1 validation rung (~62M pairs) still runs).
-
-    ``sample_blocks=k`` keeps the k SMALLEST blocks (deterministic:
-    ascending (count, source) order) — exact within the kept blocks, so
-    the sampled run still validates the approximate paths pair-for-pair
-    on its subset. Eagerness note: the count agg runs at CALL time.
-    """
-    counts = sorted(
-        (
-            (r["source"], r["n"])
-            for r in _t_par(spark, sf, "documents")
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        ),
-        key=lambda t: (t[1], t[0]),
-    )
-    if sample_blocks is not None:
-        counts = counts[: max(int(sample_blocks), 0)]
-    est = sum(n * (n - 1) // 2 for _, n in counts)
-    if est > max_pairs:
-        hatch = (
-            "pass sample_blocks=<k> to run the k smallest source blocks, "
-            "or raise max_pairs= explicitly"
-            if sample_blocks is None
-            else f"the {len(counts)} sampled blocks still exceed it — "
-            "lower sample_blocks= or raise max_pairs="
-        )
-        raise ValueError(
-            f"{query_name}: exact all-pairs verify would compare "
-            f"~{est:,} candidate pairs, over the pair budget of "
-            f"{max_pairs:,} ({hatch}). This query is the Θ(Σ C(n_block,2)) "
-            "exact baseline that validates the LSH paths (q25/q196); at "
-            "this corpus size use those instead."
-        )
-    return None if sample_blocks is None else [s for s, _ in counts]
-
-
-def _q27_ngram_jaccard(spark, sf, max_pairs=100_000_000, sample_blocks=None):
-    """Character-4-gram Jaccard over same-source candidate pairs
-    (blocking join on source, then exact set similarity ≥ 0.25).
-
-    Self-protecting (r8 VERDICT item 1): Σ per-block C(n,2) is estimated
-    from one cheap count agg at call time; over ``max_pairs`` (default
-    100M, ≈3.5 min of verify work) the call raises ``ValueError`` unless
-    ``sample_blocks=k`` restricts the run to the k smallest blocks —
-    see :func:`_exact_pair_budget`."""
-    keep = _exact_pair_budget(spark, sf, max_pairs, sample_blocks, "q27_ngram_jaccard")
-    g = _char_gram_frame(spark, sf, n=4)
-    if keep is not None:
-        g = g.filter(F.col("source").isin(keep))
-    a, b = g.alias("a"), g.alias("b")
-    # size-band pre-filter: j = i/(|A|+|B|-i) >= 1/4 forces i >= (|A|+|B|)/5
-    # and i <= min(|A|,|B|), hence max <= 4*min — pairs outside the band can
-    # never reach the threshold, so pruning them before array_intersect is
-    # lossless and skips the per-pair set work for mismatched lengths.
-    band = (F.col("a.ng") <= 4 * F.col("b.ng")) & (F.col("b.ng") <= 4 * F.col("a.ng"))
-    return (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source")) & (F.col("a.id") < F.col("b.id")) & band,
-        )
-        .withColumn("n_inter", F.size(F.array_intersect("a.grams", "b.grams")))
-        # integer-form threshold: j = i/(|A|+|B|-i) >= 1/4  <=>  5i >= |A|+|B|.
-        # Exactly equivalent to round(j,6) >= 0.25 for these set sizes (the
-        # nearest rational below 1/4 is > 5e-7 away), and the filter stage
-        # now compares ints instead of re-deriving the float ratio.
-        .filter(5 * F.col("n_inter") >= F.size("a.grams") + F.size("b.grams"))
-        .withColumn(
-            "n_union", F.size("a.grams") + F.size("b.grams") - F.col("n_inter")
-        )
-        .withColumn("jaccard", F.round(F.col("n_inter").cast("double") / F.col("n_union"), 6))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "jaccard")
-    )
-
-
-def _q28_cosine_topk(spark, sf):
-    """Brute-force exact cosine top-5 neighbors for query vectors
-    (vec_id < 20): the 20 queries sit in the closure of the blocked-GEMM
-    Arrow kernel and the corpus streams through it in one pass."""
-    from polars_pipe_spark.functions.similarity import brute_force_topk
-
-    emb = _t(spark, sf, "embeddings")
-    return brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < 20), "embedding", "vec_id", "vec_id", k=5
-    )
-
-
-def _q29_lsh_topk(spark, sf):
-    """LSH-bucketed approximate top-5: deterministic hyperplane signs,
-    equi-join on bucket — the 100 TB path."""
-    from polars_pipe_spark.functions.similarity import lsh_topk
-
-    emb = _t(spark, sf, "embeddings")
-    return lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 20), "embedding", "vec_id", "vec_id",
-        k=5, n_planes=6,
-    )
-
-
-def _q30_multimodal_features(spark, sf):
-    """Multimodal plumbing: binary payload + typed metadata struct, then
-    Arrow-batched mapInPandas feature extraction (deterministic fake
-    decoder — real codecs stubbed)."""
-    from polars_pipe_spark.functions.multimodal import (
-        extract_image_features,
-        media_from_text_column,
-    )
-
-    df = media_from_text_column(_t_par(spark, sf, "documents"), "text")
-    return extract_image_features(df, "media", "doc_id", use_fake_decoder=True)
-
-
-def _q31_windowed_events(spark, sf):
-    """Tumbling-window aggregation (batch form of the streaming agg —
-    identical expression runs under readStream)."""
-    from polars_pipe_spark.streaming.pipeline import windowed_event_counts
-
-    ev = _t(spark, sf, "events")
-    return windowed_event_counts(ev, "ts", "1 hour", group_cols=["event_type"])
-
-
-def _q32_streaming_windowed(spark, sf):
-    """The SAME windowed aggregation executed as a real Structured
-    Streaming query (file source, availableNow trigger, memory sink) —
-    checked against the same SQL oracle as the batch form."""
-    import tempfile
-
-    from polars_pipe_spark.sources.tables import _nanos_cols
-    from polars_pipe_spark.streaming.pipeline import windowed_event_counts
-
-    path = f"{sf}/events.parquet"
-    batch = _t(spark, sf, "events")
-    if _nanos_cols(path) or not os.path.isdir(path):
-        # file stream needs a DIRECTORY source and can't rebuild nanos;
-        # stage a µs-timestamp copy once
-        staged = tempfile.mkdtemp(prefix="pps_stream_src_") + "/events"
-        batch.write.mode("overwrite").parquet(staged)
-        path = staged
-    schema = spark.read.parquet(path).schema
-    stream = tz_normalise(spark.readStream.schema(schema).parquet(path))
-    agg = windowed_event_counts(stream, "ts", "1 hour", group_cols=["event_type"])
-    name = "pps_stream_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q33_ivf_topk(spark, sf):
-    """IVF-flat ANN as an oracle-checkable PROPERTY query (r4, was
-    rows-only): run the driver-trained k-means IVF search (deterministic
-    fixed-seed training on a bounded sample) and score its recall@5
-    against the exact brute-force top-k.  The exact side (n_queries,
-    n_exact_total) is fully SQL-computable; the approximate side exits as
-    a bounded boolean the oracle asserts as literal TRUE.  Measured mean
-    recall: 0.49/0.44/0.67 at sf0.001/0.01/0.1 with n_probe=2 of 8 lists
-    — the 0.30 bound has ~47% margin at the driver's sf0.01.  Per-query
-    recall is NOT bounded (a query whose true neighbors all live in
-    unprobed lists scores 0.0 — observed at sf0.01), hence the aggregate.
-    The IVF search half also gets a real per-row oracle via q137
-    (pretrained quantiser)."""
-    from polars_pipe_spark.functions.similarity import ivf_topk
-
-    emb = _t(spark, sf, "embeddings")
-    # persist: bf feeds the overlap join AND the per-query denominator
-    # (r8 plan-sweep multi-scan rule) — tiny frame, brute-force lineage
-    bf = _q28_cosine_topk(spark, sf).select("query_id", "neighbor_id").persist()
-    ivf = ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 20), "embedding", "vec_id", "vec_id",
-        k=5, n_centroids=8, n_probe=2,
-    ).select("query_id", "neighbor_id")
-    ov = bf.join(ivf, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n_overlap")
-    )
-    per = (
-        bf.groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(ov, "query_id", "left")
-        .withColumn("n_overlap", F.coalesce("n_overlap", F.lit(0)))
-        .withColumn("recall_micros", F.expr("(n_overlap * 1000000) DIV n_exact"))
-    )
-    return per.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("n_exact").alias("n_exact_total"),
-        (F.avg("recall_micros") >= 300000).alias("recall_ok"),
-    )
-
-
-def _q34_embedding_neardup(spark, sf):
-    """Embedding-cosine near-dup pairs within hyperplane-LSH buckets.
-
-    n_planes=None (r8): auto-scaled planes — max(4, ceil(log2(n/256)))
-    — keep expected bucket occupancy ~256 at ANY corpus size, so the
-    candidate pair volume grows linearly in n (the sf1 ladder caught
-    both a fixed-8-plane recall collapse at sandbox scale — collision
-    probability (1−θ/π)^8 ≈ 2.5% per cosine-0.4 pair — and a fixed-4-
-    plane quadratic blowup at sf1). The oracle SQL mirrors the SAME
-    auto rule (GREATEST(4, CEIL(LOG2(n/256))) with the plane count as a
-    SQL scalar), so Spark and DuckDB agree at ANY corpus size —
-    verified hash-identical at sf0.001, sf0.01 and the generated sf1
-    fixtures (50k vectors, 8 planes)."""
-    from polars_pipe_spark.functions.dedup import embedding_near_dups
-
-    return embedding_near_dups(
-        _t_par(spark, sf, "embeddings"), "embedding", "vec_id",
-        threshold=0.4, n_planes=None,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Wider Spark-native surface: cube, unpivot, JSON, dates, strings,
-# approx sketches, SQL entry point, having
-# ---------------------------------------------------------------------------
-
-
-def _q35_cube(spark, sf):
-    """CUBE grouping sets over orders."""
-    return (
-        _t(spark, sf, "orders")
-        .cube("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-        )
-    )
-
-
-def _q36_unpivot(spark, sf):
-    """Unpivot / melt wide columns to long (stack — generate node, no
-    shuffle)."""
-    from polars_pipe_spark.operators.reshape import unpivot
-
-    return unpivot(
-        _t(spark, sf, "part"), ["p_partkey"],
-        {"p_size": "size", "p_retailprice": "retailprice"},
-        var_name="metric", value_name="value",
-    )
-
-
-def _q37_json_extract(spark, sf):
-    """JSON field extraction from the events props column (regexp-based so
-    the oracle is engine-portable; F.get_json_object is the Spark-native
-    alternative for nested docs)."""
-    ev = _t(spark, sf, "events")
-    k = F.regexp_extract(F.col("props"), r'"k":\s*(\d+)', 1)
-    return (
-        ev.select(
-            "event_id",
-            "event_type",
-            F.when(k != "", k).cast("long").alias("k_value"),
-        )
-        .filter(F.col("k_value") > 80)
-    )
-
-
-def _q38_date_parts(spark, sf):
-    """Date/time part extraction + truncation + day arithmetic."""
-    o = _t(spark, sf, "orders")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.quarter("o_orderdate").alias("qtr"),
-        F.month("o_orderdate").alias("mo"),
-        F.dayofmonth("o_orderdate").alias("dom"),
-        F.date_trunc("month", F.col("o_orderdate")).cast("date").alias("month_start"),
-        F.datediff(F.lit("1998-01-01").cast("date"), F.col("o_orderdate").cast("date")).alias(
-            "days_to_1998"
-        ),
-    )
-
-
-def _q39_string_funcs(spark, sf):
-    """String function battery: case, substring, concat, pad, replace,
-    position, length."""
-    c = _t(spark, sf, "customer")
-    return c.select(
-        "c_custkey",
-        F.upper("c_name").alias("upper_name"),
-        F.substring("c_name", 10, 5).alias("name_part"),
-        F.concat_ws("-", "c_mktsegment", F.col("c_custkey").cast("string")).alias("seg_key"),
-        F.lpad(F.col("c_custkey").cast("string"), 8, "0").alias("padded_key"),
-        F.regexp_replace("c_name", "0+", "#").alias("squashed"),
-        F.instr(F.col("c_name"), "1").alias("pos_one"),
-        F.length("c_name").alias("name_len"),
-    )
-
-
-def _q40_approx_sketches(spark, sf):
-    """Scale-mode approximate aggregates as an oracle-checkable PROPERTY
-    query (r4, was rows-only): sketch values differ across engines, so
-    the output pairs EXACT counts (SQL-checkable) with error-bound
-    booleans the oracle asserts as literal TRUE.  Bounds: HLL rsd=0.02
-    is checked at 10% (5 sigma); percentile_approx(accuracy=1000) has
-    rank error <= 0.1% and is checked against the exact p45..p55 band.
-    Both sketches are deterministic for a given dataset, so the booleans
-    are stable, not flaky.  The exact-distinct side is a two-phase
-    distinct->count (no Expand, q14's lesson).
-
-    r14: the exact p45/p55 validation band used per-group
-    ``F.percentile``, whose aggregation buffer holds EVERY value of its
-    group in one reducer task (the q56/q62 single-reducer shape — q40
-    was 99 s at sf10, dominated by two such buffers per group).
-    ``grouped_percentile_cont`` fetches each group's two order
-    statistics through shared map-side-combinable selection jobs and
-    interpolates with Spark's own formula (bit-identical, pinned by
-    ``test_percentile_cont_bitwise_matches_spark``); the 3-row band
-    table re-attaches via a broadcast join, so the output booleans are
-    unchanged."""
-    from polars_pipe_spark.operators.aggregates import grouped_percentile_cont
-
-    li = _t(spark, sf, "lineitem")
-    sk = li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_orderkey", 0.02).alias("approx_orders"),
-        F.percentile_approx("l_extendedprice", 0.5, 1000).alias("approx_median"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    pcs = grouped_percentile_cont(
-        li, ["l_returnflag"], "l_extendedprice", [0.45, 0.55]
-    )
-    band = spark.createDataFrame(
-        [(k[0], v.get(0.45), v.get(0.55)) for k, v in pcs.items()],
-        "l_returnflag string, p45 double, p55 double",
-    )
-    sk = sk.join(F.broadcast(band), "l_returnflag", "left")
-    exact = (
-        li.select("l_returnflag", "l_orderkey")
-        .distinct()
-        .groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("exact_orders"))
-    )
-    return sk.join(exact, "l_returnflag").select(
-        "l_returnflag",
-        "n_rows",
-        "exact_orders",
-        (
-            F.abs(F.col("approx_orders") - F.col("exact_orders"))
-            <= F.lit(0.1) * F.col("exact_orders")
-        ).alias("hll_within_rel_err"),
-        (
-            (F.col("approx_median") >= F.col("p45"))
-            & (F.col("approx_median") <= F.col("p55"))
-        ).alias("median_within_rank_err"),
-    )
-
-
-def _q41_grouping_sets_sql(spark, sf):
-    """GROUPING SETS through the SQL entry point (spark.sql)."""
-    _t(spark, sf, "lineitem").createOrReplaceTempView("li_v")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               COUNT(*) AS n_rows,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM li_v
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
-
-
-def _q42_having(spark, sf):
-    """Aggregate + HAVING shape: orders with >= 5 lineitems and a 45+
-    quantity line."""
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.max("l_quantity").alias("max_qty"),
-        )
-        .filter((F.col("n_lines") >= 5) & (F.col("max_qty") > 45))
-    )
-
-
-def _q43_csv_source(spark, sf):
-    """S2: CSV source path — stage a CSV copy of lineitem columns via the
-    IO adapter, read it back (header + schema inference), aggregate."""
-    import tempfile
-
-    from polars_pipe_spark.adapters.io import IOWrapper
-
-    io = IOWrapper(spark)
-    staged = tempfile.mkdtemp(prefix="pps_csv_") + "/lineitem_csv"
-    _t(spark, sf, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_quantity"
-    ).write.mode("overwrite").option("header", True).csv(staged)
-    df = io.read(staged, "csv")
-    return df.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        F.countDistinct("l_orderkey").alias("n_orders"),
-    )
-
-
-def _q44_json_source(spark, sf):
-    """S3: JSON source path — stage an NDJSON copy of orders columns, read
-    through the IO adapter, filter + project."""
-    import tempfile
-
-    from polars_pipe_spark.adapters.io import IOWrapper
-
-    io = IOWrapper(spark)
-    staged = tempfile.mkdtemp(prefix="pps_json_") + "/orders_json"
-    _t(spark, sf, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    ).write.mode("overwrite").json(staged)
-    df = io.read(staged, "json")
-    return df.filter(F.col("o_totalprice") > 400000).select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-
-
-def _q45_pipeline_service(spark, sf):
-    """The run_pipeline SERVICE end-to-end as an oracle-checked query:
-    contract check -> lineage -> validation split -> normalise -> filter ->
-    clip -> derive -> rename -> select, artifacts to in-memory IO; returns
-    the transformed table minus engine-specific sys cols."""
-    from polars_pipe_spark.adapters.io import FakeIOWrapper
-    from polars_pipe_spark.services import run_pipeline
-
-    io = FakeIOWrapper(spark, files={"/src": _t(spark, sf, "customer")})
-    run_pipeline(
-        io,
-        {
-            "process_name": "svc",
-            "src_path": "/src",
-            "src_file_type": "parquet",
-            "dst_root": "/dst",
-            "dst_file_type": "parquet",
-            "validation": {"positive balance": ["c_acctbal", "gt", 0.0]},
-            "transformations": {
-                "filter_exprs": {"not machinery": ["c_mktsegment", "ne", "machinery"]},
-                "clip_map": {"c_acctbal": [100.0, 8000.0]},
-                "new_col_map": {
-                    "bal_round": {"fn_name": "round", "fn_kwargs": {"col": "c_acctbal", "decimals": -2}},
-                    "mean_bal": {"fn_name": "mean", "fn_kwargs": {"col": "c_acctbal"}},
-                },
-                "rename_map": {"c_name": "customer_name"},
-            },
-        },
-    )
-    out = io.files["/dst/abc-123/transformed_data"]
-    out = out.drop(*[c for c in out.columns if c.startswith("sys_col")])
-    return out.withColumn("mean_bal", F.round("mean_bal", 6))
-
-
-def _q46_salted_agg(spark, sf):
-    """Skew-safe two-stage (salted) aggregation — result identical to a
-    direct groupBy, but no reducer ever sees all rows of a hot key."""
-    from polars_pipe_spark.operators.aggregates import salted_agg
-
-    li = _t(spark, sf, "lineitem").withColumn(
-        "qty_dec", F.col("l_quantity").cast("decimal(18,2)")
-    )
-    out = salted_agg(
-        li,
-        ["l_returnflag"],
-        {"n_rows": ("count", "l_orderkey"), "sum_qty": ("sum", "qty_dec"),
-         "min_qty": ("min", "l_quantity"), "max_qty": ("max", "l_quantity")},
-        n_salts=16,
-    )
-    return out.withColumn("sum_qty", F.col("sum_qty").cast("double"))
-
-
-def _q47_window_analytics(spark, sf):
-    """Analytic window battery: lag/lead/ntile/percent_rank per customer,
-    deterministic ordering."""
-    o = _t(spark, sf, "orders")
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-    )
-
-
-def _q48_correlated_subquery(spark, sf):
-    """Correlated scalar subquery through the SQL entry point — Catalyst
-    decorrelates it into an aggregate + join (no per-row re-execution)."""
-    _t(spark, sf, "orders").createOrReplaceTempView("ord_v")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_custkey, o_totalprice
-        FROM ord_v o
-        WHERE o_totalprice > 2 * (
-          SELECT ROUND(CAST(SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                       / COUNT(*), 6)
-          FROM ord_v i WHERE i.o_custkey = o.o_custkey
-        )
-        """
-    )
-
-
-def _q49_tpch_q3(spark, sf):
-    """TPC-H Q3 shape: shipping priority — 3-way join, filtered on both
-    sides, grouped revenue, deterministic top-10."""
-    cust = _t(spark, sf, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf, "orders").filter(F.col("o_orderdate") < "1998-01-01")
-    li = _t(spark, sf, "lineitem").filter(F.col("l_shipdate") > "1996-01-01")
-    dec = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)")
-    )
-    out = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(dec).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-    )
-    return out
-
-
-def _q50_tpch_q6(spark, sf):
-    """TPC-H Q6 shape: single-scan predicate aggregation (the canonical
-    pushdown + codegen microbenchmark)."""
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-            & (F.col("l_discount").between(0.02, 0.06))
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * F.col("l_discount").cast("decimal(18,4)")
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-
-
-def _q51_tpch_q18(spark, sf):
-    """TPC-H Q18 shape: large-order customers — aggregate subquery feeding
-    a semi-join, then re-aggregation."""
-    li = _t(spark, sf, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("tot_qty"))
-        .filter(F.col("tot_qty") > 250)
-        .select("l_orderkey", "tot_qty")
-    )
-    orders = _t(spark, sf, "orders")
-    cust = _t(spark, sf, "customer")
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .select(
-            "c_custkey",
-            F.col("c_name").alias("cust_name"),
-            "o_orderkey",
-            "o_totalprice",
-            F.col("tot_qty").cast("double").alias("tot_qty"),
-        )
-    )
-
-
-def _q52_merge_upsert(spark, sf):
-    """CDC merge/upsert emulation (anti-join + union): a deterministic
-    'changed orders' batch replaces matching rows and inserts new keys."""
-    from polars_pipe_spark.operators.cdc import merge_upsert
-
-    base = _t(spark, sf, "orders").select("o_orderkey", "o_orderstatus", "o_totalprice")
-    updates = (
-        base.filter(F.col("o_orderkey") % 10 == 0)
-        .withColumn(
-            "o_totalprice",
-            F.round(
-                F.col("o_totalprice").cast("decimal(18,2)")
-                * F.lit("1.1").cast("decimal(3,2)"),
-                2,
-            ).cast("double"),
-        )
-        .withColumn("o_orderstatus", F.lit("U"))
-    )
-    new_keys = spark.range(3).select(
-        (F.col("id") - 10).alias("o_orderkey"),
-        F.lit("N").alias("o_orderstatus"),
-        F.lit(0.0).alias("o_totalprice"),
-    )
-    return merge_upsert(base, updates.unionByName(new_keys), ["o_orderkey"])
-
-
-def _q53_hash_split(spark, sf):
-    """Deterministic train/test split + hash sampling by key content
-    (portable md5 buckets — rows never migrate between splits)."""
-    from polars_pipe_spark.functions.sampling import md5_bucket, train_test_split
-
-    docs = _t(spark, sf, "documents").select("doc_id", "source", "n_chars")
-    out = train_test_split(docs, "doc_id", test_fraction=0.1)
-    return out.withColumn("bucket", md5_bucket("doc_id", 100))
-
-
-def _q54_vocab_topk(spark, sf):
-    """Vocabulary statistics: explode tokens, global top-20 by frequency
-    (deterministic ties by token)."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select(F.explode(tokens("text")).alias("token"))
-    counts = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    # orderBy().limit(k) plans TakeOrderedAndProject (per-partition top-k +
-    # driver merge) — never a single-partition global sort of the whole
-    # vocabulary (round-1 scale-killer: one reducer for a 100 TB corpus).
-    # The rank window then runs over just the 20 surviving rows.
-    top = counts.orderBy(F.col("n").desc(), F.col("token").asc()).limit(20)
-    # Deliberate unpartitioned window: it runs AFTER the limit, over a
-    # frame whose cardinality is bounded at exactly 20 rows regardless of
-    # corpus size. Do not copy this into an unbounded context.
-    w = Window.orderBy(F.col("n").desc(), F.col("token").asc())
-    return top.withColumn("rk", F.row_number().over(w)).select("token", "n", "rk")
-
-
-def _q55_length_histogram(spark, sf):
-    """Document-length histogram: 50-char buckets with per-bucket stats."""
-    docs = _t(spark, sf, "documents")
-    return (
-        docs.withColumn("bucket", F.floor(F.col("n_chars") / 50).cast("long"))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("n_chars").alias("min_chars"),
-            F.max("n_chars").alias("max_chars"),
-        )
-    )
-
-
-def _q56_winsorize(spark, sf):
-    """Outlier clipping at exact p01/p99, null-preserving clip.
-
-    r14: the bounds used to come from ``F.percentile`` in one agg —
-    Spark's exact-percentile aggregate buffers EVERY value through a
-    single reducer (60M rows at sf10: 106 s, the banned one-reducer
-    sort in disguise). They now come from
-    ``operators.aggregates.percentile_cont`` — histogram-narrowing
-    selection (map-side-combinable aggregates only) + Spark's own
-    interpolation formula on the driver, verified BIT-IDENTICAL to
-    ``F.percentile`` on this column (test + oracle). The bounds join
-    becomes two literals, dropping the crossJoin."""
-    li = _t(spark, sf, "lineitem").select("l_orderkey", "l_linenumber", "l_extendedprice")
-    from polars_pipe_spark.operators.aggregates import percentile_cont
-
-    pcs = percentile_cont(li, "l_extendedprice", [0.01, 0.99])
-    p01 = F.lit(pcs[0.01]).cast("double")
-    p99 = F.lit(pcs[0.99]).cast("double")
-    return li.select(
-        "l_orderkey", "l_linenumber", "l_extendedprice",
-        F.round(p01, 6).alias("p01"), F.round(p99, 6).alias("p99"),
-        F.round(
-            F.when(F.col("l_extendedprice").isNull(), F.lit(None)).otherwise(
-                F.least(F.greatest(F.col("l_extendedprice"), p01), p99)
-            ),
-            6,
-        ).alias("price_winsorized"),
-    )
-
-
-def _q57_group_zscore(spark, sf):
-    """Per-group z-score normalisation with decimal-exact moments
-    (sum and sum-of-squares in DECIMAL so the group stats are
-    order-independent; std derived from exact sums)."""
-    li = _t(spark, sf, "lineitem")
-    xd = F.col("l_extendedprice").cast("decimal(18,4)")
-    stats = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.sum(xd).alias("s1"),
-            F.sum(xd * xd).alias("s2"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .withColumn("mean", F.col("s1").cast("double") / F.col("n"))
-        .withColumn(
-            "std",
-            F.sqrt(
-                (F.col("s2").cast("double") - F.col("s1").cast("double") * F.col("s1").cast("double") / F.col("n"))
-                / (F.col("n") - 1)
-            ),
-        )
-        .select("l_returnflag", "mean", "std")
-    )
-    return (
-        li.join(F.broadcast(stats), "l_returnflag")
-        .select(
-            "l_returnflag", "l_orderkey", "l_linenumber",
-            F.round((F.col("l_extendedprice") - F.col("mean")) / F.col("std"), 6).alias("zscore"),
-        )
-    )
-
-
-def _q58_tfidf(spark, sf):
-    """TF-IDF: term frequency per doc × inverse document frequency,
-    top-3 terms per document (deterministic ties)."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-    # tf is persisted because it is read twice (document-frequency agg +
-    # the join back); persisting answers the "replans the tokenize lineage"
-    # objection that originally motivated a window here. The window variant
-    # (`F.count(...).over(Window.partitionBy("token"))`) funnels every row
-    # of a stopword token through one reducer — the skewed-key shape that
-    # dies at 100×. groupBy gets a map-side partial aggregate, so each
-    # executor contributes one (token, partial_count) row regardless of
-    # skew, and the join back is agg-sized, not corpus-sized.
-    tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")).persist()
-    n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        tf.join(dfreq, "token")
-        .crossJoin(F.broadcast(n_docs))
-        .withColumn("tfidf", F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("token").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("doc_id", "token", "tf", "df", "tfidf", "rk")
-    )
-
-
-def _q59_label_centroids(spark, sf):
-    """Per-label embedding centroids in long format (label, dim, mean):
-    posexplode + decimal-exact element sums — the distributed way to
-    average vectors without driver collection.
-
-    r11 fix (found by the first full-registry sf0.1 oracle run): the old
-    `round(sum/count, 6)` hit a genuine 7th-decimal .5 tie at sf0.1
-    (label 9, dim 6: mean exactly 0.0032135), where Spark's
-    BigDecimal-HALF_UP-on-the-exact-binary-double and DuckDB's
-    multiply-by-1e6-then-round disagree about which side of the tie the
-    double sits on. The mean is now rounded in EXACT integer micro
-    space on both sides — S = sum×1e6 (exact: the addends are
-    decimal(12,6)), half-away-from-zero via the closed integer form
-    sign(S)·((2|S| + n) div (2n)) — so no engine ever rounds a double.
-
-    r12 (ADVICE nit): the quotient uses Spark SQL's integral `div`
-    operator (exact BIGINT division, the same semantics as DuckDB's
-    `//`) rather than double `/` + floor — the double path was only
-    floor-safe while 1/(2n) exceeded the double ulp of the quotient,
-    i.e. up to ~2e9 rows per (label, dim) group. `div` has no such
-    bound: it is exact for all long operands."""
-    emb = _t(spark, sf, "embeddings")
-    exploded = emb.select(
-        "label", F.posexplode("embedding").alias("dim", "v")
-    ).withColumn("vd", F.round(F.col("v").cast("double"), 6).cast("decimal(12,6)"))
-    s_micro = (F.sum("vd") * F.lit(1_000_000)).cast("decimal(28,0)").cast("long")
-    n = F.count(F.lit(1))
-    agg = exploded.groupBy("label", "dim").agg(
-        s_micro.alias("s_micro"), n.alias("n_vecs")
-    )
-    micro = F.expr("(2 * abs(s_micro) + n_vecs) div (2 * n_vecs)").cast("long")
-    signed = F.when(F.col("s_micro") < 0, -micro).otherwise(micro)
-    return agg.select(
-        "label",
-        "dim",
-        (signed.cast("double") / F.lit(1_000_000.0)).alias("mean_val"),
-        "n_vecs",
-    )
-
-
-def _q60_trailing_window(spark, sf):
-    """Time-range window: 7-day trailing quantity per supplier
-    (rangeBetween on epoch seconds — includes all ties, order-free)."""
-    li = _t(spark, sf, "lineitem")
-    epoch = F.unix_timestamp("l_shipdate")
-    w = (
-        Window.partitionBy("l_suppkey")
-        .orderBy(epoch)
-        .rangeBetween(-6 * 86400, 0)
-    )
-    return li.select(
-        "l_suppkey", "l_orderkey", "l_linenumber",
-        F.sum("l_quantity").over(w).alias("qty_7d"),
-    )
-
-
-def _q61_fuzzy_join(spark, sf):
-    """Fuzzy record linkage: customer names against corrupted probe
-    names by Levenshtein distance <= 2, blocked on ≤2-DELETION
-    signatures (the SymSpell method): both sides explode their deletion
-    neighborhoods, candidates are the key equi-join (broadcast — the
-    probe side is small), and the exact ``levenshtein <= 2`` filter
-    verifies. The deletion-key join is LOSSLESS for lev≤2, so the
-    result is the full exact fuzzy join — and the candidate count is
-    proportional to the true near-pairs, never a block cross product.
-
-    r9 scale fix (found by the sf1 full-registry sweep): the previous
-    name-LENGTH-band blocking degenerated to ONE block on this corpus
-    (every generated customer name has identical length), silently
-    turning the 'blocked' join into a 232M-pair single-partition
-    cross product whose per-pair levenshtein ran ~30 min at sf1 —
-    2 s at sf0.1, invisible at gate scale. Key-entropy failure is the
-    classic blocking pitfall; deletion signatures cannot degenerate
-    that way (a key bucket only holds names within 2 deletions of one
-    another)."""
-    from polars_pipe_spark.operators.joins import deletion_key_hashes_expr
-
-    # _t_par (r15, THE r14-regression fix): the sf10 customer fixture is
-    # one 42.7 MB file with TWO parquet row groups, so of the ~11
-    # byte-range splits only two contain a row-group midpoint and one
-    # task read 1.05M of 1.5M rows — the keygen fan-out (the dominant
-    # stage, ~0.2 ms/row) ran nearly SERIAL (guide §2.5 input skew; the
-    # pandas-UDF form had partly hidden this by overlapping Python
-    # keygen with JVM join work). The gated round-robin repartition
-    # restores full parallelism at small scale and passes through
-    # untouched once the scan has enough real splits (the 100 TB case).
-    # Measured sf10 full-query (a37cb25, same window): shipped
-    # r14 form 285 s → 18.2 s; r13 pandas-UDF form 207 s.
-    cust = _t_par(spark, sf, "customer").select(
-        F.col("c_custkey").alias("cust_id"), F.lower(F.col("c_name")).alias("name")
-    )
-    probes = (
-        cust.filter(F.col("cust_id") % 97 == 0)
-        .select(
-            F.col("cust_id").alias("probe_id"),
-            # deterministic corruption: drop the 3rd character
-            F.concat(
-                F.substring("name", 1, 2), F.substring("name", 4, 100)
-            ).alias("probe_name"),
-        )
-    )
-
-    # r14 (guide §4.1, §2.3): the ~1+L+C(L,2) deletion keys per name
-    # used to come from a pandas UDF — every customer name shipped to a
-    # Python worker and an ~170-element array<string> shipped back. The
-    # JVM form builds the same key SET with higher-order functions, and
-    # the equi-join runs on xxhash64(key) longs instead of ~17-char
-    # strings — lossless, because SymSpell already guarantees every true
-    # lev≤2 pair shares a key (hash collisions can only ADD candidates,
-    # and the exact levenshtein verify drops them).
-    # r15: hash BEFORE the per-name dedup (deletion_key_hashes_expr) —
-    # dedup on longs takes the O(n) hashset path instead of the O(n²)
-    # string fallback (0.94× at sf10, probed hash set identical — see
-    # the operator docstring; the big q61 win is the _t_par above).
-    def keyed(name_col):
-        return F.explode(deletion_key_hashes_expr(name_col, 2)).alias("kh")
-
-    cust_k = cust.select("cust_id", "name", keyed("name"))
-    probe_k = probes.select("probe_id", "probe_name", keyed("probe_name"))
-    cand = (
-        cust_k.join(F.broadcast(probe_k), "kh")
-        .select("cust_id", "name", "probe_id", "probe_name")
-        .distinct()
-    )
-    return (
-        cand.withColumn("dist", F.levenshtein("name", "probe_name"))
-        .filter(F.col("dist") <= 2)
-        .select("probe_id", "cust_id", "name", "probe_name", "dist")
-    )
-
-
-def _q62_group_percentiles(spark, sf):
-    """Exact per-group percentiles (median + p90) — the grouped form of
-    the describe statistics.
-
-    r14: per-group ``F.percentile`` buffered every value of each group
-    in ONE reducer task (15M-row groups at sf10 → 68 s straggler).
-    ``grouped_percentile_cont`` fetches every group's two order
-    statistics through three shared map-side-combinable jobs and
-    interpolates with Spark's exact formula (bit-identical, see
-    operators/aggregates.py); n_rows (ALL rows, nulls included) comes
-    from one plain count aggregate, and ROUND stays in Spark so
-    HALF_UP semantics are unchanged."""
-    from polars_pipe_spark.operators.aggregates import grouped_percentile_cont
-
-    li = _t(spark, sf, "lineitem")
-    counts = (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .collect()
-    )
-    pcs = grouped_percentile_cont(
-        li, ["l_returnflag", "l_linestatus"], "l_extendedprice", [0.5, 0.9]
-    )
-    rows = [
-        (
-            r["l_returnflag"],
-            r["l_linestatus"],
-            pcs.get((r["l_returnflag"], r["l_linestatus"]), {}).get(0.5),
-            pcs.get((r["l_returnflag"], r["l_linestatus"]), {}).get(0.9),
-            r["n_rows"],
-        )
-        for r in counts
-    ]
-    return spark.createDataFrame(
-        rows,
-        "l_returnflag string, l_linestatus string, __m double, __p double, n_rows long",
-    ).select(
-        "l_returnflag", "l_linestatus",
-        F.round("__m", 6).alias("median_price"),
-        F.round("__p", 6).alias("p90_price"),
-        "n_rows",
-    )
-
-
-def _q63_dedup_clusters(spark, sf):
-    """Connected components over MinHash near-dup pairs: (A,B),(B,C)
-    collapse into one cluster keyed by min doc id — iterative min-label
-    propagation, oracle-checked against a recursive CTE."""
-    from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
-
-    pairs = minhash_near_dups(
-        _t_par(spark, sf, "documents"), "text", "doc_id",
-        shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
-    ).select("id_a", "id_b").persist()
-    out = dedup_clusters(pairs)
-    return out.select(F.col("node").alias("doc_id"), "cluster_id")
-
-
-def _q64_frame_sampling(spark, sf):
-    """Multimodal frame sampling: one row per sampled frame (row explosion
-    via mapInPandas; frame hashes content-derived and portable)."""
-    from polars_pipe_spark.functions.multimodal import media_from_text_column, sample_frames
-
-    docs = media_from_text_column(_t_par(spark, sf, "documents"), "text")
-    return sample_frames(docs, every_n=100, max_frames=3)
-
-
-def _q65_orc_source(spark, sf):
-    """S-extension: ORC source/sink round-trip through the IO adapter."""
-    import tempfile
-
-    from polars_pipe_spark.adapters.io import IOWrapper
-
-    io = IOWrapper(spark)
-    staged = tempfile.mkdtemp(prefix="pps_orc_") + "/nation_orc"
-    _t(spark, sf, "nation").write.mode("overwrite").orc(staged)
-    df = io.read(staged, "orc")
-    return df.groupBy("n_regionkey").agg(F.count(F.lit(1)).alias("n_nations"))
-
-
-def _q66_range_join(spark, sf):
-    """Point-in-interval range join via bucketisation: event values into
-    fixed value bands — the equi-join-on-bucket plan, not a nested-loop
-    range join."""
-    from polars_pipe_spark.operators.joins import range_join
-
-    ev = _t(spark, sf, "events").select("event_id", "value")
-    bands = spark.createDataFrame(
-        [(i, float(i * 10), float((i + 1) * 10)) for i in range(10)],
-        "band_id int, lo double, hi double",
-    )
-    joined = range_join(ev, bands, "value", "lo", "hi", bucket_width=10.0)
-    return joined.groupBy("band_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.min("value"), 6).alias("min_v"),
-        F.round(F.max("value"), 6).alias("max_v"),
-    )
-
-
-def _q67_text_source(spark, sf):
-    """S-extension: line-oriented text source/sink round-trip through the
-    IO adapter (the raw-corpus ingestion format — one document line per
-    row, single `value` column)."""
-    import tempfile
-
-    from polars_pipe_spark.adapters.io import IOWrapper
-
-    io = IOWrapper(spark)
-    staged = tempfile.mkdtemp(prefix="pps_text_") + "/sources_txt"
-    # source strings are newline-free, so they line-round-trip exactly
-    io.write(_t(spark, sf, "documents").select("source"), staged, "text")
-    df = io.read(staged, "text")
-    return df.groupBy(F.col("value").alias("source")).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-
-
-def _q68_bucketed_join(spark, sf):
-    """Co-located join via bucketed tables: orders and customer are
-    written bucketed on the join key, so the join plans with ZERO
-    Exchange — at 100 TB this is the difference between shuffling both
-    fact tables per query and shuffling never (bucket once at ingest,
-    join co-located forever). Plan asserted shuffle-free in
-    tests/core/test_plan_properties.py."""
-    import tempfile
-
-    n_buckets = 8
-    base = tempfile.mkdtemp(prefix="pps_bucketed_")
-    # explicit LOCATION keeps the db marker out of ./spark-warehouse
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS pps_buckets LOCATION '{base}/db'")
-    for name, df, key in (
-        ("orders_b", _t(spark, sf, "orders"), "o_custkey"),
-        ("customer_b", _t(spark, sf, "customer"), "c_custkey"),
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS pps_buckets.{name}")
-        (
-            df.write.mode("overwrite")
-            .option("path", f"{base}/{name}")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .saveAsTable(f"pps_buckets.{name}")
-        )
-    o = spark.table("pps_buckets.orders_b")
-    c = spark.table("pps_buckets.customer_b")
-    joined = o.join(c, o.o_custkey == c.c_custkey)
-    return (
-        joined.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
-
-
-def _q69_pii_scrub(spark, sf):
-    """PII scrubbing: count + redact emails/IPs/phones with pure regex
-    expressions (full scan speed, no UDFs). Deterministic PII is injected
-    into the synthetic docs (both engines inject identically) so the
-    operator is actually exercised."""
-    from polars_pipe_spark.functions.text import pii_counts, scrub_pii
-
-    df = _t_par(spark, sf, "documents")
-    injected = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit(" contact user"),
-                F.col("doc_id").cast("string"),
-                F.lit("@example.com now"),
-            ),
-        ).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 5 == 0, F.lit(" ip 10.0.0.1 seen")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 7 == 0, F.lit(" call +123-456-7890 today")).otherwise(
-            F.lit("")
-        ),
-    )
-    base = df.select("doc_id", injected.alias("txt"))
-    return base.select(
-        "doc_id",
-        *[e.alias(n) for n, e in pii_counts(F.col("txt")).items()],
-        F.md5(scrub_pii(F.col("txt"))).alias("scrubbed_md5"),
-    )
-
-
-def _q70_repetition_quality(spark, sf):
-    """Gopher-style repetition signals: duplicate-line fraction (pure
-    expression) + top-2-gram fraction (explode → two-level agg — linear,
-    not the O(len²) per-row fold)."""
-    from polars_pipe_spark.functions.text import dup_line_fraction, top_ngram_fraction
-
-    df = _t_par(spark, sf, "documents")
-    lined = df.select(
-        "doc_id", F.regexp_replace("text", r"\. ", "\n").alias("txt")
-    )
-    dl = lined.select(
-        "doc_id", F.round(dup_line_fraction(F.col("txt")), 6).alias("dup_line_frac")
-    )
-    tg = top_ngram_fraction(df.select("doc_id", "text"), "text", "doc_id", n=2)
-    return dl.join(tg, "doc_id", "left")
-
-
-def _q71_sequence_packing(spark, sf):
-    """Context-window packing: greedy per-source bin assignment by running
-    token offset (one window shuffle, no UDFs), aggregated per bin."""
-    from polars_pipe_spark.functions.sampling import pack_sequences
-    from polars_pipe_spark.functions.text import token_count
-
-    df = _t_par(spark, sf, "documents").select(
-        "source", "doc_id", token_count("text").alias("n_tok")
-    )
-    packed = pack_sequences(df, "n_tok", "doc_id", bin_tokens=512, part_col="source")
-    return packed.groupBy("source", "bin_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tok").alias("sum_tokens"),
-    )
-
-
-def _q72_oov_rate(spark, sf):
-    """Tokenizer-vocabulary coverage: derive the top-1000-token vocab
-    (deterministic tiebreak), broadcast it, and compute each document's
-    out-of-vocabulary token rate in ONE agg over the flagged explode —
-    the vocab side is TakeOrderedAndProject (per-partition top-k), the
-    doc side never shuffles the token table twice."""
-    from polars_pipe_spark.functions.text import tokens
-
-    df = _t_par(spark, sf, "documents")
-    tok = df.select("doc_id", F.explode(tokens("text")).alias("token"))
-    vocab = (
-        tok.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"), "token")
-        .limit(1000)
-        .select("token", F.lit(1).alias("in_vocab"))
-    )
-    flagged = tok.join(F.broadcast(vocab), "token", "left")
-    return (
-        flagged.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0)).alias("n_oov"),
-        )
-        .select(
-            "doc_id",
-            "n_tok",
-            "n_oov",
-            F.round(F.col("n_oov").cast("double") / F.col("n_tok"), 6).alias("oov_rate"),
-        )
-    )
-
-
-def _q73_dedup_apply(spark, sf):
-    """END-TO-END near-dedup: minhash pairs → connected components →
-    keep the cluster representative (min doc_id) → the deduplicated
-    corpus summary per source. The full 100 TB dedup recipe as one
-    composable DAG (pairs and clusters never leave the cluster-id join)."""
-    from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
-
-    docs = _t_par(spark, sf, "documents")
-    pairs = (
-        minhash_near_dups(
-            docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-        )
-        .select("id_a", "id_b")
-        .persist()
-    )
-    clusters = dedup_clusters(pairs)  # (node, cluster_id = min id in comp)
-    # drop every clustered doc that is not its cluster's representative
-    losers = clusters.filter(F.col("node") != F.col("cluster_id")).select(
-        F.col("node").alias("doc_id")
-    )
-    kept = docs.join(losers, "doc_id", "left_anti")
-    return kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("min_doc_id"),
-        F.max("doc_id").alias("max_doc_id"),
-    )
-
-
-def _q74_session_window(spark, sf):
-    """Spark's NATIVE session_window aggregation (the streaming-capable
-    session operator — merges events closer than the gap into one window
-    during the aggregation itself, no lag/cumsum windows). Boundary
-    semantics verified empirically: an event landing EXACTLY gap after
-    its predecessor is MERGED into the session (inclusive end), same as
-    classic sessionize — the oracle uses > gap for a new session."""
-    from polars_pipe_spark.streaming.pipeline import session_event_stats
-
-    return session_event_stats(
-        _t(spark, sf, "events"), "ts", "30 minutes", group_cols=["user_id"]
-    )
-
-
-def _q75_streaming_session(spark, sf):
-    """The SAME session aggregation executed as a real Structured
-    Streaming query (file source, availableNow, memory sink) — checked
-    against the same SQL oracle as the batch q74."""
-    import tempfile
-
-    from polars_pipe_spark.sources.tables import _nanos_cols
-    from polars_pipe_spark.streaming.pipeline import session_event_stats
-
-    path = f"{sf}/events.parquet"
-    batch = _t(spark, sf, "events")
-    if _nanos_cols(path) or not os.path.isdir(path):
-        # streaming file source requires a directory
-        staged = tempfile.mkdtemp(prefix="pps_sess_src_") + "/events"
-        batch.write.mode("overwrite").parquet(staged)
-        path = staged
-    schema = spark.read.parquet(path).schema
-    stream = tz_normalise(spark.readStream.schema(schema).parquet(path))
-    agg = session_event_stats(stream, "ts", "30 minutes", group_cols=["user_id"])
-    name = "pps_sess_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q76_tpch_q10(spark, sf):
-    """TPC-H Q10 shape: returned-item revenue per customer, deterministic
-    top 20 (revenue DECIMAL end-to-end; tiebreak on custkey; top-k via
-    orderBy().limit() → TakeOrderedAndProject, no global sort)."""
-    li = _t(spark, sf, "lineitem").filter(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf, "orders")
-    cust = _t(spark, sf, "customer")
-    nation = _t(spark, sf, "nation")
-    rev = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-            ).alias("revenue_dec")
-        )
-    )
-    return (
-        rev.orderBy(F.desc("revenue_dec"), "c_custkey")
-        .limit(20)
-        .select(
-            "c_custkey",
-            "c_name",
-            F.col("revenue_dec").cast("double").alias("revenue"),
-            "c_acctbal",
-            "n_name",
-        )
-    )
-
-
-def _q77_tpch_q16(spark, sf):
-    """TPC-H Q16 shape: distinct suppliers per (brand, size) excluding a
-    supplier subset (NOT IN → left_anti). Distinct count via
-    dropDuplicates + count (two-level, no Expand)."""
-    part = _t(spark, sf, "part").filter(
-        (F.col("p_brand") != "Brand#45") & (F.col("p_size") < 30)
-    )
-    li = _t(spark, sf, "lineitem").select("l_partkey", "l_suppkey")
-    bad = _t(spark, sf, "supplier").filter(F.col("s_acctbal") < 0).select(
-        F.col("s_suppkey").alias("l_suppkey")
-    )
-    good = li.join(bad, "l_suppkey", "left_anti")
-    return (
-        good.join(part, good.l_partkey == part.p_partkey)
-        .select("p_brand", "p_size", "l_suppkey")
-        .dropDuplicates()
-        .groupBy("p_brand", "p_size")
-        .agg(F.count(F.lit(1)).alias("supplier_cnt"))
-    )
-
-
-def _q78_quantized_topk(spark, sf):
-    """Asymmetric int8-quantized ANN (ADC): corpus vectors stored
-    quantized (4x smaller at 100 TB), queries stay float; cosine on the
-    reconstructed vectors. Codes use floor(x+0.5) so quantization is
-    bit-reproducible in DuckDB (engine round() tie rules differ)."""
-    from polars_pipe_spark.functions.similarity import quantized_topk
-
-    emb = _t(spark, sf, "embeddings")
-    return quantized_topk(
-        emb, emb.filter(F.col("vec_id") < 20), "embedding", "vec_id", "vec_id", k=5
-    )
-
-
-def _q79_source_mixing(spark, sf):
-    """Data-mixture reweighting: deterministically downsample each source
-    to a target weight by content hash (stable under repartitioning and
-    growth); broadcast weight map, pure-expression predicate at the
-    scan."""
-    from polars_pipe_spark.functions.sampling import mix_sources
-
-    docs = _t_par(spark, sf, "documents")
-    # weight two sources explicitly, leave the rest at default 0.5
-    weights = {"src0": 0.9, "src1": 0.25}
-    mixed = mix_sources(
-        docs, "source", "doc_id", weights, default_weight=0.5, n_buckets=1000
-    )
-    return mixed.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-    )
-
-
-def _q80_contamination(spark, sf):
-    """Benchmark decontamination: train docs sharing >= 2 distinct word
-    3-grams with any benchmark doc (benchmark = doc_id % 197 == 0, a
-    stand-in eval set; the synthetic corpus's word-soup text makes high
-    overlaps rare, so the threshold is low to keep the check non-trivial).
-    Broadcast the small bench gram table — the train side never
-    shuffles."""
-    from polars_pipe_spark.functions.dedup import ngram_contamination
-
-    docs = _t_par(spark, sf, "documents")
-    bench = docs.filter(F.col("doc_id") % 197 == 0)
-    train = docs.filter(F.col("doc_id") % 197 != 0)
-    return ngram_contamination(
-        train, bench, "text", "doc_id", k=3, min_overlap=2
-    )
-
-
-def _q81_tpch_q4_shape(spark, sf):
-    """TPC-H Q4 shape: order-priority checking via a correlated-condition
-    left-semi join (EXISTS lineitem shipped >60 days after order)."""
-    o = _t(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01")
-    )
-    li = _t(spark, sf, "lineitem").select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (F.col("o_orderkey") == F.col("l_orderkey"))
-        & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n_orders"))
-
-
-def _q82_tpch_q12_shape(spark, sf):
-    """TPC-H Q12 shape: join + conditional aggregation (high/low priority
-    line counts per return flag)."""
-    li = _t(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    o = _t(spark, sf, "orders").select("o_orderkey", "o_orderpriority")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("long").alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).cast("long").alias("low_line_count"),
-        )
-    )
-
-
-def _q83_tpch_q19_shape(spark, sf):
-    """TPC-H Q19 shape: disjunctive brand/size/quantity predicate across a
-    broadcast part join — Catalyst splits the common p_partkey conjunct
-    into the join key and evaluates the OR post-join."""
-    li = _t(spark, sf, "lineitem")
-    part = _t(spark, sf, "part").select("p_partkey", "p_brand", "p_size")
-    q, b, s = F.col("l_quantity"), F.col("p_brand"), F.col("p_size")
-    cond = (
-        ((b == "Brand#11") & s.between(1, 15) & q.between(1, 11))
-        | ((b == "Brand#12") & s.between(1, 25) & q.between(10, 20))
-        | ((b == "Brand#13") & s.between(1, 35) & q.between(20, 30))
-    )
-    return (
-        li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-        .filter(cond)
-        .agg(
-            F.sum(
-                F.col("l_extendedprice").cast("decimal(18,2)")
-                * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-            )
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-def _q84_packed_texts(spark, sf):
-    """Materialised context-window packing: concatenate each bin's
-    documents in doc_id order into the actual training sequence
-    (fingerprinted with md5 so the output stays compact)."""
-    from polars_pipe_spark.functions.sampling import packed_texts
-    from polars_pipe_spark.functions.text import token_count
-
-    docs = _t_par(spark, sf, "documents").select(
-        "source", "doc_id", "text", token_count("text").alias("n_tok")
-    )
-    out = packed_texts(docs, "text", "n_tok", "doc_id", bin_tokens=512, part_col="source")
-    return out.select(
-        "source", "bin_id", "n_docs", "sum_tokens", F.md5("seq_text").alias("seq_fp")
-    )
-
-
-def _q85_time_spine(spark, sf):
-    """Gap-filled hourly event counts per user over a fixed window: the
-    spine is a per-key exploded sequence() (executor-side, no driver
-    range loop), left-joined with the hourly aggregate."""
-    from polars_pipe_spark.operators.windows import time_spine
-
-    ev = _t(spark, sf, "events").filter(F.col("user_id") < 50)
-    return time_spine(
-        ev, "user_id", "ts", "2024-01-10 00:00:00", "2024-01-12 23:00:00", "1 hour"
-    )
-
-
-def _q86_stratified_sample(spark, sf):
-    """Exactly-k-per-stratum deterministic sample: md5-content order
-    within each source, so the same 5 docs win under any partitioning
-    (and in the oracle)."""
-    from polars_pipe_spark.functions.sampling import stratified_sample
-
-    docs = _t(spark, sf, "documents").select("source", "doc_id", "lang")
-    return stratified_sample(docs, ["source"], "doc_id", k=5)
-
-
-def _q87_gram_matrix(spark, sf):
-    """One-pass quantized gram/covariance statistics (first 16 embedding
-    dims): the distributed half of PCA — integer-exact sums, d(d+1)/2
-    output rows."""
-    from polars_pipe_spark.functions.similarity import gram_matrix
-
-    # _t_par (r5/r6 verdict): embeddings is one parquet file at testdata
-    # scale, so the mapInPandas partial-aggregate kernel would otherwise
-    # run as ONE task; the gate makes this a no-op at real scale.
-    emb = _t_par(spark, sf, "embeddings")
-    return gram_matrix(emb, "embedding", dims=16)
-
-
-def _q88_robust_stats(spark, sf):
-    """Per-source robust location/scale (exact median + MAD) of document
-    lengths — the outlier-proof quality-filter statistics."""
-    from polars_pipe_spark.operators.aggregates import robust_group_stats
-
-    docs = _t(spark, sf, "documents")
-    return robust_group_stats(docs, ["source"], "n_chars", "med_chars", "mad_chars")
-
-
-def _q89_bigram_pmi(spark, sf):
-    """Collocation mining: top-50 token bigrams by count with their PMI
-    ratio (exact integer counts; the ratio is one identical double
-    expression on both engines). Bigrams via posexplode + lead over
-    (doc, pos) — no array gymnastics, one shuffle per counting pass."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select("doc_id", F.posexplode(tokens("text")).alias("pos", "tok"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bi = (
-        tok.withColumn("nxt", F.lead("tok").over(w))
-        .filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("tok").alias("x"), F.col("nxt").alias("y"))
-        .agg(F.count(F.lit(1)).alias("c_xy"))
-        .persist()  # tiny vocab-pair frame, read twice (totals + ranking)
-    )
-    uni = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).persist()
-    tot = uni.agg(F.sum("c").cast("long").alias("n_uni")).crossJoin(
-        bi.agg(F.sum("c_xy").cast("long").alias("n_bi"))
-    )
-    ratio = (
-        F.col("c_xy").cast("double")
-        * F.col("n_uni").cast("double")
-        * F.col("n_uni").cast("double")
-        / (
-            F.col("n_bi").cast("double")
-            * F.col("c_x").cast("double")
-            * F.col("c_y").cast("double")
-        )
-    )
-    return (
-        bi.join(uni.select(F.col("tok").alias("x"), F.col("c").alias("c_x")), "x")
-        .join(uni.select(F.col("tok").alias("y"), F.col("c").alias("c_y")), "y")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("pmi_ratio", ratio)
-        .select("x", "y", "c_xy", "c_x", "c_y", "pmi_ratio")
-        .orderBy(F.col("c_xy").desc(), "x", "y")
-        .limit(50)
-    )
-
-
-def _q90_equidepth_histogram(spark, sf):
-    """Equal-frequency price histogram: exact percentile_disc bounds in
-    one agg (broadcast), bucket assignment scan-side — no global sort."""
-    from polars_pipe_spark.operators.aggregates import equidepth_histogram
-
-    li = _t(spark, sf, "lineitem")
-    return equidepth_histogram(li, "l_extendedprice", n_buckets=10)
-
-
-def _q91_hopping_window(spark, sf):
-    """Sliding (hopping) window aggregation — 1-hour windows every 30
-    minutes; each event lands in exactly two windows."""
-    from polars_pipe_spark.streaming.pipeline import windowed_event_counts
-
-    ev = _t(spark, sf, "events")
-    return windowed_event_counts(
-        ev, "ts", "1 hour", slide="30 minutes", group_cols=["event_type"]
-    )
-
-
-def _q92_click_attribution(spark, sf):
-    """Stream-stream-shaped attribution join run on batch frames: every
-    click of the same user in the hour before each purchase."""
-    from polars_pipe_spark.streaming.pipeline import click_attribution_join
-
-    ev = _t(spark, sf, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), "ts", "value"
-    )
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("value").alias("click_value"),
-    )
-    return click_attribution_join(purchases, clicks, lookback="1 hour")
-
-
-def _q93_streaming_attribution(spark, sf):
-    """The SAME attribution join executed as a real stream-stream join
-    (two file-source streams, watermarks both sides, append sink) —
-    checked against the same SQL oracle as the batch form. Staged as a
-    single file per side so availableNow runs one micro-batch: within
-    one batch the watermark only bounds STATE eviction (after output),
-    so the append result is the complete join, same as batch."""
-    import tempfile
-
-    from polars_pipe_spark.streaming.pipeline import click_attribution_join
-
-    ev = _t(spark, sf, "events")
-    staged = tempfile.mkdtemp(prefix="pps_ss_join_")
-    ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("purchase_id"), "ts", "value"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staged}/purchases")
-    ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("value").alias("click_value"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{staged}/clicks")
-    p_schema = spark.read.parquet(f"{staged}/purchases").schema
-    c_schema = spark.read.parquet(f"{staged}/clicks").schema
-    p = tz_normalise(spark.readStream.schema(p_schema).parquet(f"{staged}/purchases"))
-    c = tz_normalise(spark.readStream.schema(c_schema).parquet(f"{staged}/clicks"))
-    joined = click_attribution_join(p, c, lookback="1 hour")
-    name = "pps_ss_join_out"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q94_dup_spans(spark, sf):
-    """Corpus-level duplicated-span statistics (ExactSubstr-lite): per
-    document, the fraction of its word 8-gram windows occurring >1 time
-    anywhere in the corpus. Grams md5-hashed before the shuffle."""
-    from polars_pipe_spark.functions.dedup import dup_span_stats
-
-    docs = _t_par(spark, sf, "documents")
-    return dup_span_stats(docs, "text", "doc_id", k=8)
-
-
-def _q95_lexical_diversity(spark, sf):
-    """Per-source lexical diversity: type count, token count, hapax
-    count, type-token ratio. Two-level aggregation — the (source, token)
-    partial avoids a countDistinct Expand."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select("source", F.explode(tokens("text")).alias("tok"))
-    lvl1 = tok.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
-    return lvl1.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_types"),
-        F.sum("c").alias("n_tokens"),
-        F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).alias("n_hapax"),
-        (F.count(F.lit(1)).cast("double") / F.sum("c").cast("double")).alias("ttr"),
-    )
-
-
-def _q96_salted_join(spark, sf):
-    """Skew-proof salted equi-join: lineitem × supplier on suppkey with
-    the hot keys spread over 16 salted reducers, then revenue per
-    supplier nation — result identical to the plain join (the oracle IS
-    the plain join)."""
-    from polars_pipe_spark.operators.joins import salted_join
-
-    li = _t(spark, sf, "lineitem")
-    sup = _t(spark, sf, "supplier").select(
-        F.col("s_suppkey").alias("l_suppkey"), "s_nationkey"
-    )
-    dec_price = F.col("l_extendedprice").cast("decimal(18,2)")
-    dec_disc = F.col("l_discount").cast("decimal(18,4)")
-    return (
-        salted_join(li, sup, "l_suppkey", n_salts=16)
-        .groupBy("s_nationkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(dec_price * (F.lit(1).cast("decimal(18,4)") - dec_disc))
-            .cast("double")
-            .alias("revenue"),
-        )
-    )
-
-
-def _q97_multiprobe_lsh(spark, sf):
-    """Multi-probe LSH top-5: the query side also probes every bucket at
-    Hamming distance 1 — recall recovery at (planes+1)× query fan-out,
-    corpus still hashed/shuffled once."""
-    from polars_pipe_spark.functions.similarity import lsh_topk
-
-    emb = _t(spark, sf, "embeddings")
-    return lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 20), "embedding", "vec_id", "vec_id",
-        k=5, n_planes=6, multiprobe=True,
-    )
-
-
-def _q98_tpch_q7_shape(spark, sf):
-    """TPC-H Q7 shape (volume shipping): revenue flow between a nation
-    pair by ship year — two broadcast nation lookups, pair-OR filter,
-    decimal-exact revenue."""
-    li = _t(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= "1995-01-01") & (F.col("l_shipdate") <= "1996-12-31")
-    )
-    orders = _t(spark, sf, "orders")
-    cust = _t(spark, sf, "customer")
-    supp = _t(spark, sf, "supplier")
-    nation = _t(spark, sf, "nation")
-    n1 = F.broadcast(nation.select(F.col("n_nationkey").alias("s_nationkey"),
-                                   F.col("n_name").alias("supp_nation")))
-    n2 = F.broadcast(nation.select(F.col("n_nationkey").alias("c_nationkey"),
-                                   F.col("n_name").alias("cust_nation")))
-    dec_price = F.col("l_extendedprice").cast("decimal(18,2)")
-    dec_disc = F.col("l_discount").cast("decimal(18,4)")
-    pair = (
-        (F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2")
-    ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(n1, "s_nationkey")
-        .join(n2, "c_nationkey")
-        .filter(pair)
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(
-            F.sum(dec_price * (F.lit(1).cast("decimal(18,4)") - dec_disc))
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-
-
-def _q99_tpch_q13_shape(spark, sf):
-    """TPC-H Q13 shape: distribution of per-customer order counts (left
-    join keeps zero-order customers; two-level aggregation)."""
-    cust = _t(spark, sf, "customer")
-    orders = _t(spark, sf, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
-    per_cust = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-def _q100_tpch_q17_shape(spark, sf):
-    """TPC-H Q17 shape (small-quantity-order revenue): lineitems below
-    0.2× their part's average quantity, for one brand. The per-part
-    average is aggregated only over the brand's lineitems (semi-filter
-    first — never a full-corpus agg for a 0.1% brand slice)."""
-    li = _t(spark, sf, "lineitem")
-    part = _t(spark, sf, "part").filter(F.col("p_brand") == "Brand#1").select("p_partkey")
-    brand_li = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-    avg_q = brand_li.groupBy("l_partkey").agg(
-        (F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double")
-         / F.count(F.lit(1))).alias("avg_q")
-    )
-    return (
-        brand_li.join(F.broadcast(avg_q), "l_partkey")
-        .filter(F.col("l_quantity") < 0.2 * F.col("avg_q"))
-        .agg(
-            (F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double") / 7.0)
-            .alias("avg_yearly"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-def _q101_tpch_q18_shape(spark, sf):
-    """TPC-H Q18 shape (large-volume orders): orders whose total quantity
-    exceeds 250, joined back to customer, top-100 by price —
-    TakeOrdered, never a global sort."""
-    li = _t(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders")
-    cust = _t(spark, sf, "customer")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("sum_qty"))
-        .filter(F.col("sum_qty") > 250)
-    )
-    return (
-        big.join(orders, big.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .select(
-            "c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice",
-            F.col("sum_qty").cast("double").alias("sum_qty"),
-        )
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderdate").asc(), F.col("o_orderkey").asc())
-        .limit(100)
-    )
-
-
-def _q102_partitioned_layout(spark, sf):
-    """Hive-partitioned sink + pruned readback: documents written
-    ``lang=…/``, re-read with a partition predicate — the scan opens
-    only the matching directory (PartitionFilters, plan-asserted in
-    tests); per-source counts returned."""
-    import tempfile
-
-    from polars_pipe_spark.adapters.io import write_parquet_partitioned
-
-    docs = _t(spark, sf, "documents")
-    dst = tempfile.mkdtemp(prefix="pps_part_") + "/docs"
-    write_parquet_partitioned(docs, dst, ["lang"])
-    back = spark.read.parquet(dst).filter(F.col("lang") == "en")
-    return back.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
-def _q103_window_battery(spark, sf):
-    """Analytic window-function battery over per-customer order history:
-    rank / dense_rank / percent_rank / cume_dist / ntile / lag / lead /
-    running first+last — one partitioned sort, every function shares the
-    same window (unique orderkey tiebreak keeps all of them total)."""
-    orders = _t(spark, sf, "orders").filter(F.col("o_custkey") < 200)
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
-    )
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        F.rank().over(w).alias("rk"),
-        F.dense_rank().over(w).alias("drk"),
-        F.percent_rank().over(w).alias("prk"),
-        F.cume_dist().over(w).alias("cd"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.first("o_totalprice").over(wf).alias("first_price"),
-        F.max("o_totalprice").over(wf).alias("running_max_price"),
-    )
-
-
-def _q104_skew_report(spark, sf):
-    """Key-skew diagnostic: hottest event users with row share, ratio to
-    the median key, and the salt fan-out that would level them — the
-    measurement step before salted_agg/salted_join."""
-    from polars_pipe_spark.operators.aggregates import skew_report
-
-    ev = _t(spark, sf, "events")
-    return skew_report(ev, ["user_id"], top_n=10)
-
-
-def _q105_session_funnel(spark, sf):
-    """Session-scoped funnel: of sessions containing a click, how many
-    convert (a purchase at/after the first click in the same session).
-    Composes sessionize → per-session conditional aggregates → one
-    global summary row."""
-    from polars_pipe_spark.operators.windows import sessionize
-
-    ev = _t(spark, sf, "events")
-    s = sessionize(ev, "user_id", "ts", gap_minutes=30, tiebreak_cols=["event_id"])
-    per = s.groupBy("user_id", "session_id").agg(
-        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("first_click"),
-        F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("last_purchase"),
-    )
-    converted = (
-        F.col("first_click").isNotNull()
-        & F.col("last_purchase").isNotNull()
-        & (F.col("last_purchase") >= F.col("first_click"))
-    )
-    return per.agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum(F.when(F.col("first_click").isNotNull(), 1).otherwise(0)).alias("n_with_click"),
-        F.sum(F.when(F.col("last_purchase").isNotNull(), 1).otherwise(0)).alias("n_with_purchase"),
-        F.sum(F.when(converted, 1).otherwise(0)).alias("n_converted"),
-    ).withColumn(
-        "conversion_rate",
-        F.col("n_converted").cast("double") / F.col("n_with_click").cast("double"),
-    )
-
-
-def _q106_table_expectations(spark, sf):
-    """Table-level data-quality report (the dbt-test surface): key
-    uniqueness, FK containment, null-freedom, row-count floor — one
-    report row per expectation."""
-    from polars_pipe_spark.operators.validation import table_expectations
-
-    li = _t(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders")
-    return table_expectations(
-        li,
-        unique_key=["l_orderkey", "l_linenumber"],
-        foreign_keys=[(["l_orderkey"], orders, ["o_orderkey"])],
-        non_null=["l_quantity", "l_shipdate"],
-        min_rows=1000,
-    )
-
-
-def _q107_streaming_hopping(spark, sf):
-    """The SAME hopping-window aggregation as q91 executed as a real
-    stream (file source, availableNow, complete-mode memory sink) —
-    complete mode keeps all window state, so multi-batch replay is safe
-    (q32 pattern)."""
-    import tempfile
-
-    from polars_pipe_spark.streaming.pipeline import windowed_event_counts
-
-    path = f"{sf}/events.parquet"
-    batch = _t(spark, sf, "events")
-    # single staged file -> one micro-batch: complete mode would be
-    # CORRECT over many batches but recomputes full window state per
-    # batch (measured 65s for a 32-file source vs ~8s for one file)
-    staged = tempfile.mkdtemp(prefix="pps_hop_src_") + "/events"
-    batch.coalesce(1).write.mode("overwrite").parquet(staged)
-    path = staged
-    schema = spark.read.parquet(path).schema
-    stream = tz_normalise(spark.readStream.schema(schema).parquet(path))
-    agg = windowed_event_counts(
-        stream, "ts", "1 hour", slide="30 minutes", group_cols=["event_type"]
-    )
-    name = "pps_hop_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q108_feature_hashing(spark, sf):
-    """Feature hashing (the HashingTF trick, MLlib-free and
-    engine-portable): every token maps to one of 16 md5 buckets; each
-    document becomes a dense 16-dim count vector — one explode + one
-    16-column conditional aggregation, all JVM-side."""
-    from polars_pipe_spark.functions.sampling import md5_bucket
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select("doc_id", F.explode(tokens("text")).alias("t")).select(
-        "doc_id", md5_bucket("t", 16).alias("b")
-    )
-    counts = tok.groupBy("doc_id").agg(
-        *[
-            F.sum(F.when(F.col("b") == i, 1).otherwise(0)).cast("long").alias(f"__f{i}")
-            for i in range(16)
-        ]
-    )
-    return (
-        docs.select("doc_id")
-        .join(counts, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.array(
-                *[F.coalesce(F.col(f"__f{i}"), F.lit(0).cast("long")) for i in range(16)]
-            ).alias("features"),
-        )
-    )
-
-
-def _q109_grouped_pandas(spark, sf):
-    """Grouped-map applyInPandas: per-source quartiles of document
-    length computed with numpy inside Arrow batches — checked against
-    the interpolating SQL quantiles (exact on integer data)."""
-    from polars_pipe_spark.operators.aggregates import grouped_pandas_stats
-
-    docs = _t(spark, sf, "documents")
-    return grouped_pandas_stats(docs, ["source"], "n_chars")
-
-
-def _q110_debounce(spark, sf):
-    """Burst suppression: keep only the first event of every ≤30-min
-    burst per user (alert de-noising) — sessionize + keep-rank-1."""
-    from polars_pipe_spark.operators.windows import debounce
-
-    ev = _t(spark, sf, "events")
-    out = debounce(ev, "user_id", "ts", 30.0, tiebreak_cols=["event_id"])
-    return out.select("user_id", "event_id", "ts", "event_type")
-
-
-def _q111_source_overlap(spark, sf):
-    """Cross-source contamination matrix: for every source pair, how
-    many DISTINCT word 8-grams they share verbatim (who copies from
-    whom). Grams md5-hashed and (source, gram)-deduplicated before the
-    self-join, so the pair enumeration runs on the distinct-gram table,
-    never raw positions."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    k = 8
-    t = tokens("text")
-    idx = F.sequence(F.lit(1), F.size(t) - (k - 1))
-    gram = F.when(
-        F.size(t) >= k,
-        F.transform(idx, lambda i: F.md5(F.array_join(F.slice(t, i, k), " "))),
-    ).otherwise(F.array().cast("array<string>"))
-    sg = (
-        docs.select("source", F.explode(F.array(gram)).alias("__g"))
-        .select("source", F.explode("__g").alias("g"))
-        .distinct()
-    )
-    a, b = sg.alias("a"), sg.alias("b")
-    return (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col("a.source") < F.col("b.source")))
-        .groupBy(
-            F.col("a.source").alias("source_a"), F.col("b.source").alias("source_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared_grams"))
-    )
-
-
-def _q112_audio_features(spark, sf):
-    """Byte-level audio featurization (no codec needed): windowed RMS
-    energy, peak, zero crossings over the raw payload via numpy inside
-    mapInPandas. Payloads here are UTF-8 of ASCII text, so the oracle
-    recomputes every feature from character codes."""
-    from polars_pipe_spark.functions.multimodal import (
-        extract_audio_features,
-        media_from_text_column,
-    )
-
-    docs = _t_par(spark, sf, "documents")
-    media = media_from_text_column(docs, "text")
-    return extract_audio_features(media, window_bytes=64)
-
-
-def _q113_tpch_q8_shape(spark, sf):
-    """TPC-H Q8 shape (national market share): NATION_3 suppliers' share
-    of ASIA customers' 1995-1996 revenue by order year — conditional
-    decimal sum over the same aggregation, share as one double division."""
-    li = _t(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") <= "1996-12-31")
-    )
-    cust = _t(spark, sf, "customer")
-    supp = _t(spark, sf, "supplier")
-    nation = _t(spark, sf, "nation")
-    region = _t(spark, sf, "region")
-    asia_nations = nation.join(
-        F.broadcast(region.filter(F.col("r_name") == "ASIA")),
-        nation.n_regionkey == region.r_regionkey,
-    ).select(F.col("n_nationkey").alias("c_nationkey"))
-    supp_nation = nation.select(
-        F.col("n_nationkey").alias("s_nationkey"), F.col("n_name").alias("supp_nation")
-    )
-    dec_price = F.col("l_extendedprice").cast("decimal(18,2)")
-    dec_disc = F.col("l_discount").cast("decimal(18,4)")
-    vol = dec_price * (F.lit(1).cast("decimal(18,4)") - dec_disc)
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(asia_nations), "c_nationkey")
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(supp_nation), "s_nationkey")
-    )
-    return (
-        joined.groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.sum(F.when(F.col("supp_nation") == "NATION_3", vol)).cast("double").alias("nation_volume"),
-            F.sum(vol).cast("double").alias("total_volume"),
-        )
-        .withColumn("mkt_share", F.col("nation_volume") / F.col("total_volume"))
-    )
-
-
-def _q114_tpch_q14_shape(spark, sf):
-    """TPC-H Q14 shape (promotion revenue ratio): one pass, conditional
-    decimal sum / total, broadcast part lookup."""
-    li = _t(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= "1995-09-01") & (F.col("l_shipdate") < "1995-10-01")
-    )
-    part = _t(spark, sf, "part").select("p_partkey", "p_type")
-    dec_price = F.col("l_extendedprice").cast("decimal(18,2)")
-    dec_disc = F.col("l_discount").cast("decimal(18,4)")
-    vol = dec_price * (F.lit(1).cast("decimal(18,4)") - dec_disc)
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", vol)).cast("double").alias("promo_revenue"),
-            F.sum(vol).cast("double").alias("total_revenue"),
-        )
-        .withColumn(
-            "promo_ratio", F.lit(100.0) * F.col("promo_revenue") / F.col("total_revenue")
-        )
-    )
-
-
-def _q115_tpch_q15_shape(spark, sf):
-    """TPC-H Q15 shape (top supplier): per-supplier period revenue, keep
-    the max — revenue kept DECIMAL until output so the max-equality join
-    is exact (double ties would be unreliable)."""
-    li = _t(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= "1995-01-01") & (F.col("l_shipdate") < "1995-04-01")
-    )
-    supp = _t(spark, sf, "supplier")
-    dec_price = F.col("l_extendedprice").cast("decimal(18,2)")
-    dec_disc = F.col("l_discount").cast("decimal(18,4)")
-    rev = li.groupBy("l_suppkey").agg(
-        F.sum(dec_price * (F.lit(1).cast("decimal(18,4)") - dec_disc)).alias("total_rev")
-    )
-    top = rev.agg(F.max("total_rev").alias("max_rev"))
-    return (
-        rev.join(F.broadcast(top), rev.total_rev == top.max_rev)
-        .join(F.broadcast(supp), rev.l_suppkey == supp.s_suppkey)
-        .select(
-            "s_suppkey", "s_name", F.col("total_rev").cast("double").alias("total_rev")
-        )
-    )
-
-
-def _q116_robust_outliers(spark, sf):
-    """Robust outlier counts: documents beyond 3 scaled-MADs from their
-    source's median length (the quality-filter decision q88's stats
-    exist for). Stats broadcast back onto the scan — one extra pass."""
-    from polars_pipe_spark.operators.aggregates import robust_group_stats
-
-    docs = _t(spark, sf, "documents")
-    stats = robust_group_stats(docs, ["source"], "n_chars", "med", "mad")
-    flagged = docs.join(F.broadcast(stats), "source").withColumn(
-        "is_outlier",
-        F.abs(F.col("n_chars") - F.col("med")) > 3.0 * 1.4826 * F.col("mad"),
-    )
-    return flagged.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("is_outlier"), 1).otherwise(0)).alias("n_outliers"),
-    )
-
-
-def _q117_running_distinct_users(spark, sf):
-    """Cumulative distinct users by day, the scale-right way: windowed
-    countDistinct over an expanding frame is quadratic state — instead,
-    each user reduces to their FIRST-seen day (one groupBy), daily
-    first-appearance counts cumulative-sum into the running total. The
-    only ordered window runs over day-level rows (thousands, not
-    events)."""
-    ev = _t(spark, sf, "events")
-    # .cast("date"): DuckDB's date_trunc('day') yields DATE, Spark's a
-    # midnight TIMESTAMP — align the type for the oracle compare
-    first_seen = ev.groupBy("user_id").agg(
-        F.date_trunc("day", F.min("ts")).cast("date").alias("day")
-    )
-    daily_new = first_seen.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
-    # Deliberate unpartitioned window: the frame is day-level (one row
-    # per calendar day — thousands of rows for decades of data), not
-    # event-level, so the single-partition sort is bounded and cheap.
-    # Do not copy this into an unbounded context.
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return daily_new.withColumn("cum_users", F.sum("new_users").over(w))
-
-
-def _q118_tpch_q5(spark, sf):
-    """TPC-H Q5 (local supplier volume): ASIA 1995 revenue where supplier
-    and customer share a nation. Dims broadcast; the only large shuffle
-    is lineitem⨝orders. Completes the join surface of SURVEY §2.9 with
-    the multi-equality join condition (l_suppkey AND c_nationkey)."""
-    li = _t(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders").filter(
-        (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1996-01-01")
-    )
-    cust = _t(spark, sf, "customer")
-    supp = _t(spark, sf, "supplier")
-    nation = _t(spark, sf, "nation")
-    region = _t(spark, sf, "region")
-    asia = nation.join(
-        F.broadcast(region.filter(F.col("r_name") == "ASIA")),
-        nation.n_regionkey == region.r_regionkey,
-    ).select("n_nationkey", "n_name")
-    dec_price = F.col("l_extendedprice").cast("decimal(18,2)")
-    dec_disc = F.col("l_discount").cast("decimal(18,4)")
-    vol = dec_price * (F.lit(1).cast("decimal(18,4)") - dec_disc)
-    joined = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(supp),
-            (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey),
-        )
-        .join(F.broadcast(asia), supp.s_nationkey == asia.n_nationkey)
-    )
-    return joined.groupBy("n_name").agg(F.sum(vol).cast("double").alias("revenue"))
-
-
-def _q119_tpch_q2_shape(spark, sf):
-    """TPC-H Q2 shape (best supplier per part): the testdata has no
-    partsupp, so the catalog is DISTINCT (part, supplier) pairs from
-    lineitem and "best" is max s_acctbal. The plan shape is the point:
-    per-group argmax as agg + equality join back on the group key
-    (tie-keeping, deterministic, shuffles on l_partkey both sides so AQE
-    can reuse the exchange) — never a global window. Deterministic
-    LIMIT 100 via a total sort key."""
-    pairs = _t(spark, sf, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    supp = _t(spark, sf, "supplier")
-    nation = _t(spark, sf, "nation")
-    region = _t(spark, sf, "region")
-    part = _t(spark, sf, "part").filter(F.col("p_size") == 15)
-    europe = nation.join(
-        F.broadcast(region.filter(F.col("r_name") == "EUROPE")),
-        nation.n_regionkey == region.r_regionkey,
-    ).select("n_nationkey", "n_name")
-    cand = pairs.join(F.broadcast(supp), pairs.l_suppkey == supp.s_suppkey).join(
-        F.broadcast(europe), supp.s_nationkey == europe.n_nationkey
-    )
-    best = cand.groupBy("l_partkey").agg(F.max("s_acctbal").alias("best_bal"))
-    return (
-        cand.join(best, "l_partkey")
-        .filter(F.col("s_acctbal") == F.col("best_bal"))
-        .join(F.broadcast(part), F.col("l_partkey") == part.p_partkey)
-        .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_type")
-        .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
-        .limit(100)
-    )
-
-
-def _q120_tpch_q9_shape(spark, sf):
-    """TPC-H Q9 shape (product-type profit): no ps_supplycost, so cost is
-    proxied as 20% of p_retailprice × quantity. All arithmetic DECIMAL
-    until the output cast (exact, oracle-stable); part/supplier/nation
-    broadcast, single big shuffle on the orders join."""
-    li = _t(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders").select("o_orderkey", "o_orderdate")
-    supp = _t(spark, sf, "supplier")
-    nation = _t(spark, sf, "nation")
-    part = _t(spark, sf, "part").filter(F.col("p_name").contains("gear")).select("p_partkey", "p_retailprice")
-    dec_price = F.col("l_extendedprice").cast("decimal(18,2)")
-    dec_disc = F.col("l_discount").cast("decimal(18,4)")
-    vol = dec_price * (F.lit(1).cast("decimal(18,4)") - dec_disc)
-    cost = (
-        F.lit("0.2").cast("decimal(3,2)")
-        * F.col("p_retailprice").cast("decimal(18,2)")
-        * F.col("l_quantity").cast("decimal(18,2)")
-    )
-    supp_nation = supp.join(
-        F.broadcast(nation), supp.s_nationkey == nation.n_nationkey
-    ).select(F.col("s_suppkey"), F.col("n_name").alias("supp_nation"))
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp_nation), li.l_suppkey == F.col("s_suppkey"))
-        .groupBy(F.col("supp_nation").alias("nation"), F.year("o_orderdate").alias("o_year"))
-        .agg(F.sum(vol - cost).cast("double").alias("sum_profit"))
-    )
-
-
-def _q121_tpch_q11_shape(spark, sf):
-    """TPC-H Q11 shape (important stock): per-part value held by
-    NATION_1 suppliers, keeping parts whose value exceeds 0.1% of the
-    grand total. The scalar-subquery threshold becomes a 1-row broadcast
-    cross join — no second scan of the grouped data, no collect."""
-    li = _t(spark, sf, "lineitem")
-    supp = _t(spark, sf, "supplier")
-    nation = _t(spark, sf, "nation")
-    n1_supp = supp.join(
-        F.broadcast(nation.filter(F.col("n_name") == "NATION_1")),
-        supp.s_nationkey == nation.n_nationkey,
-    ).select("s_suppkey")
-    value = F.col("l_extendedprice").cast("decimal(18,2)")
-    per_part = (
-        li.join(F.broadcast(n1_supp), li.l_suppkey == F.col("s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(F.sum(value).alias("part_value"))
-    )
-    total = per_part.agg(
-        (F.sum("part_value") * F.lit("0.001").cast("decimal(6,3)")).alias("threshold")
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(F.col("part_value") > F.col("threshold"))
-        .select("l_partkey", F.col("part_value").cast("double").alias("part_value"))
-    )
-
-
-def _q122_tpch_q20_shape(spark, sf):
-    """TPC-H Q20 shape (excess-availability suppliers): suppliers that
-    shipped > 500 units of Brand#1 parts in 1995, reported as a LEFT SEMI
-    join into supplier — the aggregate feeds a semi-join, nothing from
-    the big side is carried past the groupBy."""
-    li = _t(spark, sf, "lineitem").filter(
-        (F.col("l_shipdate") >= "1995-01-01") & (F.col("l_shipdate") < "1996-01-01")
-    )
-    part = _t(spark, sf, "part").filter(F.col("p_brand") == "Brand#1").select("p_partkey")
-    supp = _t(spark, sf, "supplier")
-    heavy = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("l_suppkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > 100)
-    )
-    return supp.join(
-        heavy, supp.s_suppkey == heavy.l_suppkey, "left_semi"
-    ).select("s_suppkey", "s_name")
-
-
-def _q123_tpch_q21_shape(spark, sf):
-    """TPC-H Q21 shape (waiting suppliers): the classic double
-    EXISTS/NOT-EXISTS correlation rewritten as one per-order aggregate —
-    n_suppliers and n_returning_suppliers per finished order — joined
-    back to the returning lines. One shuffle on l_orderkey replaces two
-    correlated scans; the scale-right rewrite for 100 TB."""
-    orders = _t(spark, sf, "orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey")
-    li = _t(spark, sf, "lineitem").join(
-        orders, F.col("l_orderkey") == orders.o_orderkey
-    )
-    per_order = li.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("n_supp"),
-        F.countDistinct(
-            F.when(F.col("l_returnflag") == "R", F.col("l_suppkey"))
-        ).alias("n_fail"),
-    )
-    culprits = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_suppkey")
-        .distinct()
-        .join(per_order.filter((F.col("n_supp") > 1) & (F.col("n_fail") == 1)), "l_orderkey")
-    )
-    supp = _t(spark, sf, "supplier")
-    return (
-        culprits.join(F.broadcast(supp), culprits.l_suppkey == supp.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.desc("numwait"), "s_name")
-        .limit(100)
-    )
-
-
-def _q124_tpch_q22_shape(spark, sf):
-    """TPC-H Q22 shape (global sales opportunity): odd-nation customers
-    with above-average positive balance and no URGENT orders — scalar AVG
-    as a 1-row broadcast, then a LEFT ANTI join against filtered orders. Balance sums
-    in DECIMAL so the aggregate is order-insensitive."""
-    cust = _t(spark, sf, "customer")
-    orders = (
-        _t(spark, sf, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    # Division-free above-average test (ADVICE r2): comparing the raw
-    # double against a float AVG is partition-order-dependent at the
-    # boundary. `bal * n > sum` over exact decimals is the same predicate
-    # with every step exact integer arithmetic on both engines.
-    avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
-        F.sum(F.col("c_acctbal").cast("decimal(12,2)")).alias("sum_pos"),
-        F.count(F.lit(1)).cast("decimal(10,0)").alias("n_pos"),
-    )
-    return (
-        cust.filter(F.col("c_nationkey").isin(1, 3, 5, 7, 9))
-        .crossJoin(F.broadcast(avg_bal))
-        .filter(
-            F.col("c_acctbal").cast("decimal(12,2)") * F.col("n_pos")
-            > F.col("sum_pos")
-        )
-        .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy(F.col("c_nationkey").alias("cntrycode"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)")).cast("double").alias("totacctbal"),
-        )
-    )
-
-
-def _q125_bm25_topk(spark, sf):
-    """BM25 top-20 for a fixed bag-of-words query over ``documents``.
-
-    Corpus stats (df/avgdl/N) are single aggregates broadcast to the
-    scorers; the explode is term-filtered before any shuffle; per-term
-    scores round to 6 decimals and sum as DECIMAL so the total is
-    order-insensitive and oracle-exact.
-    """
-    from polars_pipe_spark.functions.retrieval import bm25_topk
-
-    return bm25_topk(
-        _t_par(spark, sf, "documents"), "text", "doc_id",
-        ["hash", "join", "vector", "stream"], k=20,
-    )
-
-
-def _q126_zorder_code(spark, sf):
-    """Z-order (Morton) clustering key over two order dimensions.
-
-    The code is a pure expression — linear quantization against broadcast
-    min/max bounds, bit interleave — so any engine reproduces it bit for
-    bit (IEEE -, /, *, floor are exactly specified). Sorting files by
-    this key is what makes min/max stats prune on EITHER dimension.
-    """
-    from polars_pipe_spark.operators.layout import zorder_by
-
-    orders = _t(spark, sf, "orders")
-    return zorder_by(orders, ["o_custkey", "o_totalprice"], bits=8).select(
-        "o_orderkey", "__zorder"
-    )
-
-
-def _q127_weighted_sample(spark, sf):
-    """Deterministic weighted sampling without replacement (A-ES): 5 docs
-    per source, inclusion probability ∝ n_chars, rank key derived from a
-    content-hash uniform so the draw reproduces across engines/reruns."""
-    from polars_pipe_spark.functions.sampling import weighted_topk
-
-    docs = _t_par(spark, sf, "documents")
-    return weighted_topk(
-        docs, "doc_id", "n_chars", 5, group_cols=["source"]
-    ).select("doc_id", "source", "n_chars")
-
-
-def _q128_quality_classifier(spark, sf):
-    """Document quality classifier: logistic composition of the
-    text_stats features + Gopher-style hard reject rules, keep/drop
-    verdict. Pure expressions over one scan."""
-    from polars_pipe_spark.functions.text import quality_classifier
-
-    docs = _t_par(spark, sf, "documents")
-    cls = quality_classifier("text")
-    return docs.select("doc_id", *[e.alias(n) for n, e in cls.items()])
-
-
-def _q129_rerank(spark, sf):
-    """Two-stage retrieval: batch BM25 over 3 bag-of-words queries, then
-    a cross-encoder-style feature rerank (normalised BM25 + quality +
-    length prior), top-10 per query."""
-    from polars_pipe_spark.functions.retrieval import rerank_topk
-
-    queries = spark.createDataFrame(
-        [(1, "hash"), (1, "join"), (2, "vector"), (2, "stream"),
-         (3, "filter"), (3, "scan")],
-        "query_id int, term string",
-    )
-    return rerank_topk(_t_par(spark, sf, "documents"), "text", "doc_id", queries, k=10)
-
-
-def _q130_streaming_minhash_dedup(spark, sf):
-    """Incremental near-dup detection as a real stream: minhash
-    signatures computed per micro-batch, aggregated into
-    (signature, n_docs, canonical_id) groups in complete mode — the
-    stateful-streaming twin of the batch q24/q25 dedup path. Checked
-    against the batch SQL oracle (same signature arithmetic)."""
-    import tempfile
-
-    from polars_pipe_spark.functions.dedup import minhash_signature
-
-    path = f"{sf}/documents.parquet"
-    batch = _t_par(spark, sf, "documents")
-    if not os.path.isdir(path):
-        staged = tempfile.mkdtemp(prefix="pps_mh_src_") + "/documents"
-        batch.write.mode("overwrite").parquet(staged)
-        path = staged
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(path)
-    sig = stream.select(
-        "doc_id",
-        F.array_join(minhash_signature("text", shingle_k=3, sig_k=8), "|").alias("sig"),
-    )
-    agg = sig.groupBy("sig").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("canonical_id")
-    )
-    name = "pps_mh_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q131_unigram_logprob(spark, sf):
-    """Unigram-LM document scoring (perplexity-style quality signal):
-    per-token log-probability against the corpus unigram distribution,
-    rounded per token and decimal-summed per document. The token→vocab
-    join shuffles on term (vocab is corpus-derived, not broadcastable in
-    general); averages emit as scaled BIGINT via positive integer
-    division so both engines floor identically."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
-    # r9 plan fix: aggregate to (doc, term, tf) FIRST — the tokenize +
-    # explode runs ONCE (persisted at doc-term grain, far smaller than
-    # raw tokens), the vocab derives from it with a map-side-combinable
-    # second agg, and the term join probes distinct doc-terms instead of
-    # every token. Identical output: summing tf copies of the per-token
-    # rounded decimal lp equals tf × lp exactly (decimal × integer).
-    # The old token-grain join re-ran the regex tokenizer on both join
-    # inputs and shuffled every token occurrence (17.8 s at sf3).
-    dt = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
-    vocab = dt.groupBy("term").agg(F.sum("tf").alias("cnt"))
-    total = vocab.agg(F.sum("cnt").alias("total"))
-    lp = F.round(F.log(F.col("cnt").cast("double") / F.col("total")), 6).cast(
-        "decimal(14,6)"
-    )
-    scored = (
-        dt.join(vocab, "term")
-        .crossJoin(F.broadcast(total))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").alias("n_toks"),
-            F.sum(F.col("tf") * lp).cast("decimal(18,6)").alias("sum_logprob"),
-        )
-    )
-    # logprobs are negative: negate before the integer division so both
-    # engines divide positives (Spark DIV truncates toward zero, DuckDB
-    # // floors — they only agree on non-negative operands).
-    return scored.withColumn(
-        "avg_lp_micros",
-        F.expr("-(CAST(sum_logprob * -1000000 AS BIGINT) DIV n_toks)"),
-    )
-
-
-def _q132_span_dedup(spark, sf):
-    """Span-level dedup APPLY: 20-token spans, keep the first corpus-wide
-    occurrence of each distinct span, reassemble surviving text per doc
-    (the removal step downstream of q94's dup_span_stats)."""
-    from polars_pipe_spark.functions.dedup import span_dedup
-
-    return span_dedup(_t_par(spark, sf, "documents"), "text", "doc_id", span_tokens=20)
-
-
-def _q133_ann_recall(spark, sf):
-    """ANN evaluation harness: recall@5 of the LSH index (q29) against
-    the exact brute-force ranking (q28), per query — the measurement any
-    production ANN deployment runs before trusting the approximate path.
-    Scaled-integer recall via positive integer division (engine-safe)."""
-    # persist: bf is consumed twice (overlap join + denominator) and its
-    # lineage is the full brute-force scan (r8 plan-sweep multi-scan rule)
-    bf = _q28_cosine_topk(spark, sf).select("query_id", "neighbor_id").persist()
-    lsh = _q29_lsh_topk(spark, sf).select("query_id", "neighbor_id")
-    overlap = (
-        bf.join(lsh, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    base = bf.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_exact"))
-    return (
-        base.join(overlap, "query_id", "left")
-        .withColumn("n_overlap", F.coalesce("n_overlap", F.lit(0)))
-        .withColumn("recall_micros", F.expr("(n_overlap * 1000000) DIV n_exact"))
-        .select("query_id", "n_exact", "n_overlap", "recall_micros")
-    )
-
-
-def _q134_training_pairs(spark, sf):
-    """Retrieval training-pair generation: for each query, the reranked
-    top-1 document as the positive and 3 deterministic hash-selected
-    hard-ish negatives (docs matching NONE of the query's terms, ordered
-    by md5(query:doc)). The negative pool is anti-joined, never sampled
-    with a seed — reruns and repartitions give the identical dataset.
-
-    The pool is nearly the whole corpus per query (few query_ids), so a
-    single row_number window over it would funnel corpus-sized partitions
-    through one reducer each (the q54 scale-killer shape — r3 ADVICE).
-    Instead: salted two-phase top-k. Phase 1 ranks within (query_id,
-    salt=hash(doc)%64) — 64-way parallel, each reducer sees corpus/64 —
-    and keeps 3 per salt; phase 2 ranks the surviving ≤192 rows per query.
-    Exact: the global top-3 by the md5 key is contained in the union of
-    per-salt top-3s."""
-    from polars_pipe_spark.functions.retrieval import bm25_scores, rerank_topk
-
-    queries = spark.createDataFrame(
-        [(1, "hash"), (1, "join"), (2, "vector"), (2, "stream"),
-         (3, "filter"), (3, "scan")],
-        "query_id int, term string",
-    )
-    docs = _t_par(spark, sf, "documents")
-    pos = rerank_topk(docs, "text", "doc_id", queries, k=1).select(
-        "query_id", F.col("doc_id").alias("pos_id")
-    )
-    cands = bm25_scores(docs, "text", "doc_id", queries).select(
-        "query_id", "doc_id"
-    )
-    qids = queries.select("query_id").distinct()
-    pool = (
-        docs.select("doc_id")
-        .crossJoin(F.broadcast(qids))
-        .join(cands, ["query_id", "doc_id"], "left_anti")
-        .withColumn(
-            "nk", F.md5(F.concat_ws(":", F.col("query_id"), F.col("doc_id")))
-        )
-        .withColumn("salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(64)))
-    )
-    w_salt = Window.partitionBy("query_id", "salt").orderBy(
-        F.col("nk").asc(), F.col("doc_id").asc()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("nk").asc(), F.col("doc_id").asc()
-    )
-    negs = (
-        pool.withColumn("r1", F.row_number().over(w_salt))
-        .filter(F.col("r1") <= 3)
-        .withColumn("neg_rank", F.row_number().over(w))
-        .filter(F.col("neg_rank") <= 3)
-        .select("query_id", F.col("doc_id").alias("neg_id"), "neg_rank")
-    )
-    return pos.join(negs, "query_id").select(
-        "query_id", "pos_id", "neg_id", "neg_rank"
-    )
-
-
-def _q135_schema_union(spark, sf):
-    """Schema-evolution-safe union: an old snapshot (with `lang`) and a
-    new snapshot (lang dropped, `quality` added) union BY NAME with
-    missing columns null-filled — the mergeSchema read path expressed as
-    an operator. Oracle: DuckDB UNION ALL BY NAME."""
-    docs = _t_par(spark, sf, "documents")
-    v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", "source", "n_chars", "lang"
-    )
-    v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", "source", "n_chars",
-        F.length("text").cast("long").alias("quality"),
-    )
-    return v1.unionByName(v2, allowMissingColumns=True)
-
-
-def _q136_scd2(spark, sf):
-    """SCD2 history construction: per-user purchase value history as
-    validity intervals — effective_from/effective_to = lead(ts) over the
-    (user, ts, event_id) order, open interval marked current. Interval
-    bounds emit as epoch-micros BIGINT (the q22 lesson: never raw
-    µs timestamps through the hash gate)."""
-    ev = _t(spark, sf, "events").filter(F.col("event_type") == "purchase")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.unix_micros(F.col("ts")).alias("effective_from_us"),
-        F.unix_micros(F.lead("ts").over(w)).alias("effective_to_us"),
-        F.lead("ts").over(w).isNull().alias("is_current"),
-    )
-
-
-def _q137_ivf_pretrained(spark, sf):
-    """IVF search with a persisted/pretrained coarse quantiser — the
-    search half of q33 upgraded to a hard oracle signal. Centroids are
-    pinned to the first 16 corpus vectors (the production flow loads
-    them from parquet), so list assignment, n_probe fan-out, and cosine
-    scoring are pure expressions reproducible on both engines; only
-    k-means TRAINING (iterative, driver-side sample) stays rows-only in
-    q33."""
-    from polars_pipe_spark.functions.similarity import ivf_topk
-
-    emb = _t(spark, sf, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").cast("int").alias("centroid_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cvec"),
-    )
-    return ivf_topk(
-        emb, emb.filter(F.col("vec_id") < 20), "embedding", "vec_id", "vec_id",
-        k=5, n_probe=2, centroids=cent,
-    )
-
-
-def _q138_text_clean(spark, sf):
-    """C4-style cleaning battery over deterministically-dirtied text
-    (the synthetic corpus is already clean, so dirt is injected first to
-    make the transformation observable): control-char strip, punctuation
-    squeeze, whitespace collapse — all RE2-safe regexes that behave
-    identically under Java regex and DuckDB."""
-    from polars_pipe_spark.functions.text import clean_text
-
-    docs = _t_par(spark, sf, "documents")
-    dirty = F.concat(
-        F.lit("\x01  "),
-        F.col("text"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit(" !!!  wow,,,  ")).otherwise(
-            F.lit(" .....  end;;; ")
-        ),
-    )
-    return docs.select(
-        "doc_id",
-        clean_text(dirty).alias("clean_text"),
-        (F.length(dirty) - F.length(clean_text(dirty))).alias("n_removed_chars"),
-    )
-
-
-def _q139_streaming_quality_gate(spark, sf):
-    """Quality-gated ingest as a real stream: the q128 classifier runs
-    per micro-batch and keep/drop counts accumulate per source in
-    complete mode — batch and stream share the one expression bundle,
-    checked against the batch SQL oracle."""
-    import tempfile
-
-    from polars_pipe_spark.functions.text import quality_classifier
-
-    path = f"{sf}/documents.parquet"
-    batch = _t_par(spark, sf, "documents")
-    if not os.path.isdir(path):
-        staged = tempfile.mkdtemp(prefix="pps_qg_src_") + "/documents"
-        batch.write.mode("overwrite").parquet(staged)
-        path = staged
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(path)
-    agg = (
-        stream.withColumn("verdict", quality_classifier("text")["verdict"])
-        .groupBy("source", "verdict")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    name = "pps_qg_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q140_locf(spark, sf):
-    """Last-observation-carried-forward backfill (time-series gap fill):
-    nulls injected deterministically, then F.last(ignorenulls) over the
-    per-user (ts, event_id) order — one partitioned window, no loops.
-    Timestamps emit as epoch micros (the q22 lesson)."""
-    ev = _t(spark, sf, "events")
-    gapped = F.when(F.col("event_id") % 7 == 0, F.lit(None)).otherwise(
-        F.col("value")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        gapped.alias("value_gapped"),
-        F.last(gapped, ignorenulls=True).over(w).alias("value_filled"),
-    )
-
-
-def _q141_snapshot_diff(spark, sf):
-    """Table-diff between two snapshot versions (data versioning): full
-    outer join on the key classifies every row added / removed /
-    changed / unchanged. Snapshots derive deterministically from the one
-    documents table (v2 drops some rows, adds others, perturbs a
-    third)."""
-    docs = _t_par(spark, sf, "documents")
-    v1 = docs.filter(F.col("doc_id") % 5 != 0).select(
-        "doc_id", F.col("n_chars").alias("v_old")
-    )
-    v2 = docs.filter(F.col("doc_id") % 7 != 0).select(
-        "doc_id",
-        F.when(F.col("doc_id") % 3 == 0, F.col("n_chars") + 1)
-        .otherwise(F.col("n_chars"))
-        .alias("v_new"),
-    )
-    j = v1.join(v2, "doc_id", "full_outer")
-    status = (
-        F.when(F.col("v_old").isNull(), F.lit("added"))
-        .when(F.col("v_new").isNull(), F.lit("removed"))
-        .when(F.col("v_old") != F.col("v_new"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select("doc_id", "v_old", "v_new", status.alias("status"))
-
-
-def _q142_psi_drift(spark, sf):
-    """Population-stability-index drift between per-source length
-    distributions (ML-ops data-drift check): 100-char buckets, per-pair
-    PSI = Σ (p−q)·ln(p/q) over buckets populated on BOTH sides (the
-    standard epsilon-free form), per-bucket terms rounded to 6 and
-    decimal-summed so the total is addition-order-free."""
-    docs = _t_par(spark, sf, "documents")
-    buck = docs.filter(F.col("source").isin("src0", "src1")).select(
-        "source", (F.floor(F.col("n_chars") / 100)).alias("bucket")
-    )
-    counts = buck.groupBy("source", "bucket").agg(F.count(F.lit(1)).alias("n"))
-    totals = counts.groupBy("source").agg(F.sum("n").alias("tot"))
-    dist = counts.join(F.broadcast(totals), "source").select(
-        "source", "bucket", (F.col("n").cast("double") / F.col("tot")).alias("p")
-    )
-    a = dist.filter(F.col("source") == "src0").select("bucket", F.col("p").alias("p_a"))
-    b = dist.filter(F.col("source") == "src1").select("bucket", F.col("p").alias("p_b"))
-    term = F.round(
-        (F.col("p_a") - F.col("p_b")) * F.log(F.col("p_a") / F.col("p_b")), 6
-    ).cast("decimal(14,6)")
-    return (
-        a.join(b, "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_shared_buckets"),
-            F.sum(term).cast("decimal(18,6)").alias("psi"),
-        )
-        .select(F.lit("src0").alias("src_a"), F.lit("src1").alias("src_b"),
-                "n_shared_buckets", "psi")
-    )
-
-
-def _q143_hypertable_rollup(spark, sf):
-    """Hypertable-style tiered rollup (continuous-aggregate pattern): a
-    minute-grain aggregate is materialised once, and the hour grain
-    derives FROM the minute rollup — count-of-counts and sum-of-DECIMAL-
-    sums compose losslessly, so re-aggregating rollups replaces rescans
-    of the raw hypertable. The oracle aggregates raw events straight to
-    hours, proving the tier composition exact."""
-    ev = _t(spark, sf, "events")
-    minute = ev.groupBy(
-        F.date_trunc("minute", F.col("ts")).alias("m"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("sv"),
-    )
-    hour = minute.groupBy(
-        F.date_trunc("hour", F.col("m")).alias("h"), "event_type"
-    ).agg(
-        F.sum("n").alias("n_events"),
-        F.sum("sv").cast("decimal(18,2)").alias("sum_value"),
-    )
-    return hour.select(
-        F.unix_micros(F.col("h")).alias("hour_us"),
-        "event_type", "n_events", "sum_value",
-    )
-
-
-def _q144_quality_rep_dedup(spark, sf):
-    """Quality-aware near-dup representative selection: clusters from
-    MinHash pairs (q63's machinery), but the kept doc per cluster is the
-    HIGHEST-quality member (ties → smallest id) instead of the smallest
-    id — what a production corpus dedup actually keeps. Deterministic
-    argmax via lexicographic struct max (q, -id)."""
-    from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
-    from polars_pipe_spark.functions.text import quality_score
-
-    docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-    ).select("id_a", "id_b").persist()
-    clusters = dedup_clusters(pairs)
-    qual = docs.select(F.col("doc_id"), quality_score("text").alias("q"))
-    j = clusters.join(qual, clusters.node == qual.doc_id).select(
-        "node", "cluster_id", "q"
-    )
-    best = F.max(
-        F.struct(F.col("q").alias("q"), (-F.col("node")).alias("negid"))
-    )
-    return j.groupBy("cluster_id").agg(
-        (-best["negid"]).alias("rep_id"),
-        best["q"].alias("rep_quality"),
-        F.count(F.lit(1)).alias("n_members"),
-    )
-
-
-def _q145_ohlc_bars(spark, sf):
-    """Time-bar (OHLC) aggregation: per (hour, event_type) the opening /
-    highest / lowest / closing value — open and close resolved by
-    lexicographic struct min/max over (ts, event_id, value), so ties are
-    deterministic without a sort. One shuffle, map-side combinable."""
-    ev = _t(spark, sf, "events")
-    h = F.date_trunc("hour", F.col("ts"))
-    s = F.struct(F.col("ts"), F.col("event_id"), F.col("value"))
-    return (
-        ev.groupBy(h.alias("h"), "event_type")
-        .agg(
-            F.min(s)["value"].alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max(s)["value"].alias("close"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            F.unix_micros(F.col("h")).alias("hour_us"),
-            "event_type", "open", "high", "low", "close", "n_events",
-        )
-    )
-
-
-def _q146_rag_chunks(spark, sf):
-    """Overlapping sliding-window chunking for retrieval indexing
-    (size 20, stride 10): the RAG-ingestion twin of q132's disjoint
-    spans. Token array materialised before the transform (HOF lambdas
-    re-evaluate captured subexpressions per element)."""
-    from polars_pipe_spark.functions.text import tokens
-
-    size, stride = 20, 10
-    tok_df = _t_par(spark, sf, "documents").select(
-        "doc_id", tokens("text").alias("__toks")
-    )
-    t = F.col("__toks")
-    n = F.size(t)
-    n_chunks = F.when(
-        n > 0,
-        (F.lit(1) + F.floor((F.greatest(n - size, F.lit(0)) + (stride - 1))
-                            / F.lit(float(stride)))).cast("int"),
-    ).otherwise(F.lit(0))
-    chunks = F.when(n_chunks > 0, F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.slice(t, i * stride + 1, size),
-    )).otherwise(F.array().cast("array<array<string>>"))
-    return tok_df.select(
-        "doc_id", F.posexplode(chunks).alias("chunk_idx", "c")
-    ).select(
-        "doc_id", "chunk_idx",
-        F.size("c").alias("n_chunk_tokens"),
-        F.array_join("c", " ").alias("chunk_text"),
-    )
-
-
-def _q147_group_trend(spark, sf):
-    """Per-type linear trend (closed-form least squares) of daily value:
-    integer day index x, DECIMAL daily sum y, so all four regression
-    moments are exact and order-free; slope emits as a sign-split
-    (units, micros-remainder) radix pair from exact integral division
-    (Spark DIV truncates, DuckDB // floors — they only agree on
-    non-negative operands, and DIV's BIGINT return bounds each cell)."""
-    ev = _t(spark, sf, "events")
-    x = F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
-    daily = ev.groupBy(F.col("event_type"), x.alias("x")).agg(
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("y")
-    )
-    m = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x").cast("long") * F.col("x")).alias("sxx"),
-        F.sum("y").cast("decimal(28,2)").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("decimal(28,2)").alias("sxy"),
-    )
-    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-        "decimal(38,2)"
-    )
-    den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    # abs(num)*1e6 stays in DECIMAL(38,0) through the integral divide: an
-    # intermediate BIGINT cast overflows once abs(num) > 9.2e12 (r3 ADVICE
-    # — Spark's non-ANSI cast nulls silently while DuckDB errors, so the
-    # engines would diverge exactly at large scale).  Spark DIV on decimal
-    # is divideToIntegralValue (exact); DuckDB mirrors via HUGEINT `//`.
-    # BUT Spark's DIV *returns* BIGINT, so a single slope_micros column
-    # would itself wrap once |slope| > 9.2e12 units/day (found by the r5
-    # overflow-bound test, the same cliff shape q13 fixed for its sums).
-    # Radix-decompose instead — floor(M/den) = 1e6·floor(M/(1e6·den))
-    # + floor((M mod (1e6·den))/den) for non-negative integers, so the
-    # (units, micros-remainder) pair below reconstructs the old value
-    # exactly while every emitted cell is bounded: |slope_units| ≤ the
-    # slope itself in units/day, slope_micros_rem ∈ (-1e6, 1e6). The big
-    # intermediates all stay DECIMAL(38,0).
-    _m = "CAST(abs(num) * 1000000 AS DECIMAL(38,0))"
-    _denbig = "(CAST(den AS DECIMAL(38,0)) * 1000000)"
-    pos_units = F.expr(f"{_m} DIV {_denbig}")
-    pos_rem = F.expr(f"CAST(({_m} % {_denbig}) AS DECIMAL(38,0)) DIV den")
-    return (
-        m.withColumn("num", num)
-        .withColumn("den", den)
-        .filter((F.col("n") >= 2) & (F.col("den") > 0))
-        .withColumn(
-            "slope_units",
-            F.when(F.col("num") >= 0, pos_units).otherwise(-pos_units),
-        )
-        .withColumn(
-            "slope_micros_rem",
-            F.when(F.col("num") >= 0, pos_rem).otherwise(-pos_rem),
-        )
-        .select("event_type", "n", "num", "den", "slope_units", "slope_micros_rem")
-    )
-
-
-def _q148_frame_dedup(spark, sf):
-    """Content-addressed frame store map: sampled frame hashes (q64's
-    Arrow-batched multimodal path) grouped corpus-wide into
-    (frame_hash, n_copies, canonical doc/idx) — duplicated frames
-    collapse onto one canonical owner, the dedup-by-reference layout a
-    multimodal store uses. The canonical owner packs as
-    doc_id*1000 + frame_idx so both engines take the identical
-    lexicographic min (frame_idx < 1000 by construction:
-    max_frames=3)."""
-    fr = _q64_frame_sampling(spark, sf)
-    key = F.col("doc_id") * 1000 + F.col("frame_idx")
-    return (
-        fr.groupBy("frame_hash")
-        .agg(F.count(F.lit(1)).alias("n_copies"), F.min(key).alias("__k"))
-        .select(
-            "frame_hash", "n_copies",
-            F.expr("__k DIV 1000").alias("canonical_doc"),
-            (F.col("__k") % 1000).cast("int").alias("canonical_idx"),
-        )
-    )
-
-
-def _q149_pca_whiten(spark, sf):
-    """Distributed PCA/whitening end-to-end: exact integer gram summary
-    (q87) → driver-side d×d eigendecomposition → broadcast ZCA
-    projection through one Arrow-batched matmul. The LAPACK eigenvectors
-    themselves have no DuckDB reproduction, so the oracle-checked output
-    is the DEFINING property computed over the full whitened corpus: the
-    8×8 empirical covariance of the whitened vectors, which must be the
-    identity matrix (±1e-4), alongside the corpus row count. A wrong
-    projection, a centering bug, or a scale slip all break the identity,
-    so this is a strict end-to-end check, not a row-count formality."""
-    from polars_pipe_spark.functions.similarity import pca_whiten
-
-    emb = _t(spark, sf, "embeddings")
-    out = pca_whiten(emb, "embedding", "vec_id", dims=8).persist()
-    wd = out.select("vec_id", F.posexplode("whitened").alias("i", "wi"))
-    n = out.count()
-    cov = (
-        wd.join(
-            wd.select("vec_id", F.col("i").alias("j"), F.col("wi").alias("wj")),
-            "vec_id",
-        )
-        .groupBy("i", "j")
-        .agg((F.sum(F.col("wi") * F.col("wj")) / F.lit(float(n))).alias("cov_raw"))
-        .select(
-            "i",
-            "j",
-            # + 0.0 folds a rounded -0.0 (tiny negative off-diagonal) into
-            # +0.0 so the value hash agrees with the oracle's literal 0.0
-            (F.round("cov_raw", 4) + F.lit(0.0)).alias("cov"),
-            F.lit(n).alias("n_vecs"),
-        )
-    )
-    return cov
-
-
-def _q150_corpus_funnel(spark, sf):
-    """Corpus-prep funnel observability — the oracle-checked twin of
-    examples/llm_corpus_prep.py: one row per pipeline stage with the
-    surviving doc count. Stages: 1 input corpus; 2 quality-classifier
-    keeps; 3 distinct contents among the keeps (exact-dedup survivors);
-    4 kept train-slice docs (doc_id % 197 != 0) not sharing >= 2 word
-    3-grams with the benchmark slice (doc_id % 197 == 0, q80's split)."""
-    from polars_pipe_spark.functions.dedup import ngram_contamination
-    from polars_pipe_spark.functions.text import doc_fingerprint, quality_classifier
-
-    docs = _t_par(spark, sf, "documents")
-    keep = quality_classifier("text")["verdict"] == "keep"
-    # r14 (§1.2/§2.4): the union-of-aggregates form scanned documents 12
-    # times and evaluated the quality classifier over the full corpus 4
-    # times (the anti-join re-derived kept_train on BOTH sides). Stages
-    # 1-3 now come out of ONE scan: count(*), the conditional keep /
-    # keep-train counts, and count(DISTINCT fingerprint-of-keeps) (kept
-    # docs always have non-null text — NULL text rejects as low_stopword —
-    # so the fingerprint is never null and COUNT DISTINCT matches the
-    # old distinct()+count). Stage 4 = n_kept_train − n_contaminated:
-    # the contaminated ids are a SUBSET of kept_train by construction
-    # (they are its ngram_contamination train side) and doc_id is the
-    # table key, so the anti-join count equals the difference.
-    # Classifier passes over the corpus: 4 → 2.
-    per_doc = docs.select(
-        keep.alias("__keep"),
-        (F.col("doc_id") % 197 != 0).alias("__train"),
-        doc_fingerprint("text").alias("__fp"),
-    )
-    counts = per_doc.agg(
-        F.count(F.lit(1)).alias("n_input"),
-        F.sum(F.when(F.col("__keep"), 1).otherwise(0)).alias("n_keep"),
-        F.sum(
-            F.when(F.col("__keep") & F.col("__train"), 1).otherwise(0)
-        ).alias("n_kept_train"),
-        F.count_distinct(
-            F.when(F.col("__keep"), F.col("__fp"))
-        ).alias("n_distinct_fp"),
-    )
-    kept_train = docs.filter(keep).filter(F.col("doc_id") % 197 != 0)
-    bench = docs.filter(F.col("doc_id") % 197 == 0)
-    n_contam = (
-        ngram_contamination(kept_train, bench, "text", "doc_id", k=3, min_overlap=2)
-        .select(F.col("train_id").alias("doc_id"))
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-    )
-    return counts.crossJoin(n_contam).selectExpr(
-        """stack(4,
-             '1_input', n_input,
-             '2_quality_keep', n_keep,
-             '3_exact_distinct', n_distinct_fp,
-             '4_decontaminated', n_kept_train - n_contaminated
-           ) AS (stage, n_docs)"""
-    )
-
-
-def _q151_ngram_novelty(spark, sf):
-    """N-gram novelty scoring: per document, the fraction of its
-    distinct 3-grams that appear in NO other document — the diversity
-    signal complementary to OOV (token-level) and contamination
-    (cross-split).
-
-    r14 (§2.3/§2.4): the old form exploded the corpus TWICE (once for
-    the gram-frequency aggregate, once for the join-back) and moved
-    every gram instance through a join. ``count() OVER (PARTITION BY
-    gram)`` computes the identical df on ONE exploded stream — one
-    explode, one gram shuffle, no join (measured at sf1: 12.3 s → 6.7-
-    8.9 s best-of-2; the scan-side ``size(array_distinct(...))``
-    alternative was REJECTED — the projection alone cost 8.2 s, ~2× the
-    4.5 s explode). The window partitions by a high-cardinality key but
-    every partition is a df-sized group (corpus frequency of one gram) —
-    bounded by duplication, not corpus size."""
-    from polars_pipe_spark.functions.text import shingles
-
-    docs = _t_par(spark, sf, "documents")
-    g = docs.select(
-        "doc_id", F.explode(F.array_distinct(shingles("text", 3))).alias("gram")
-    )
-    per_doc = (
-        g.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("gram"))
-        )
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).alias("n_unique"),
-        )
-    )
-    return per_doc.withColumn(
-        "novelty_micros", F.expr("(n_unique * 1000000) DIV n_grams")
-    )
-
-
-def _q152_retention_cohorts(spark, sf):
-    """Weekly retention cohorts: users grouped by first-active week and
-    counted in each later week — the classic cohort matrix as two
-    map-side-combinable shuffles (first-seen reduction + cohort-week
-    count); the (user, week) frame is pre-distinct so COUNT(*) IS the
-    distinct-user count."""
-    ev = _t(spark, sf, "events")
-    uw = ev.select(
-        "user_id", F.date_trunc("week", F.col("ts")).alias("w")
-    ).distinct()
-    first = uw.groupBy("user_id").agg(F.min("w").alias("cohort"))
-    return (
-        uw.join(first, "user_id")
-        .groupBy("cohort", "w")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-        .select(
-            F.unix_micros(F.col("cohort")).alias("cohort_us"),
-            F.expr("datediff(CAST(w AS DATE), CAST(cohort AS DATE)) DIV 7").alias(
-                "week_offset"
-            ),
-            "n_active",
-        )
-    )
-
-
-def _q153_pack_attention(spark, sf):
-    """Tokenizer-aware sequence packing WITH cross-document attention-mask
-    boundaries (r4 north star): one row per ~2048-token packed training
-    sequence per source, carrying each member document's in-sequence
-    start offset — the list a block-diagonal attention mask is built from
-    at collate time. All-integer output; the boundary list is bounded by
-    bin size, not corpus size."""
-    from polars_pipe_spark.functions.sampling import pack_attention_bins
-    from polars_pipe_spark.functions.text import token_count
-
-    docs = _t_par(spark, sf, "documents").select(
-        "doc_id", "source", token_count("text").alias("ntok")
-    )
-    return pack_attention_bins(
-        docs, "ntok", "doc_id", bin_tokens=2048, part_col="source"
-    )
-
-
-def _q154_ivf_incremental(spark, sf):
-    """Incremental IVF index maintenance: a new ingest batch is merged
-    into an EXISTING index (pinned pretrained centroids, the q137 flow)
-    without touching prior assignments — retraining would shift every
-    list. Output: per-list occupancy before/after the merge, the balance
-    report an index maintainer watches for skew (a hot list means the
-    quantiser no longer fits the data distribution).
-
-    The existing/new split is by vec_id % 5 (scale-proof non-empty);
-    centroids pin to the first 16 corpus vectors so assignment is pure
-    expressions, SQL-reproducible. Counts left-join onto the full
-    centroid list so empty lists report 0 — an invisible empty list is
-    exactly what a balance report must not hide."""
-    from polars_pipe_spark.functions.similarity import ivf_assign
-
-    emb = _t(spark, sf, "embeddings")
-    cent = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").cast("int").alias("centroid_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cvec"),
-    )
-    existing = ivf_assign(
-        emb.filter(F.col("vec_id") % 5 != 0), "embedding", "vec_id", cent
-    )
-    new = ivf_assign(
-        emb.filter(F.col("vec_id") % 5 == 0), "embedding", "vec_id", cent
-    )
-    n_old = existing.groupBy("centroid_id").agg(
-        F.count(F.lit(1)).alias("n_existing")
-    )
-    n_new = new.groupBy("centroid_id").agg(F.count(F.lit(1)).alias("n_new"))
-    return (
-        cent.select("centroid_id")
-        .join(n_old, "centroid_id", "left")
-        .join(n_new, "centroid_id", "left")
-        .select(
-            "centroid_id",
-            F.coalesce("n_existing", F.lit(0)).alias("n_existing"),
-            F.coalesce("n_new", F.lit(0)).alias("n_new"),
-            (
-                F.coalesce("n_existing", F.lit(0)) + F.coalesce("n_new", F.lit(0))
-            ).alias("n_total"),
-        )
-    )
-
-
-def _q155_corpus_health(spark, sf):
-    """Per-domain corpus-health report (r4 north star): contamination
-    (q80's benchmark-overlap rule) and n-gram novelty (q151) joined into
-    ONE per-source artifact — the dashboard row a corpus owner reads
-    before a training run. All-BIGINT cells via scaled integer division.
-
-    Scale: contamination broadcasts the small benchmark gram table
-    (q80); the final join is over a handful of source rows.
-
-    r14 (§2.3/§2.4, the q151 rewrite applied per source): novelty used
-    to explode the corpus TWICE and join at gram-instance grain.
-    ``count() OVER (PARTITION BY gram)`` computes the identical df on
-    ONE exploded stream — one explode, one gram shuffle, no join (see
-    q151 for the measured variant comparison)."""
-    from polars_pipe_spark.functions.dedup import ngram_contamination
-    from polars_pipe_spark.functions.text import shingles
-
-    docs = _t_par(spark, sf, "documents")
-    base = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-
-    bench = docs.filter(F.col("doc_id") % 197 == 0)
-    train = docs.filter(F.col("doc_id") % 197 != 0)
-    contaminated = (
-        ngram_contamination(train, bench, "text", "doc_id", k=3, min_overlap=2)
-        .select(F.col("train_id").alias("doc_id"))
-        .distinct()
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-    )
-
-    g = docs.select(
-        "source", F.explode(F.array_distinct(shingles("text", 3))).alias("gram")
-    )
-    novelty = (
-        g.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("gram"))
-        )
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum(F.when(F.col("df") == 1, 1).otherwise(0)).alias("n_unique_grams"),
-        )
-    )
-    return (
-        base.join(contaminated, "source", "left")
-        .join(novelty, "source", "left")
-        .select(
-            "source",
-            "n_docs",
-            F.coalesce("n_contaminated", F.lit(0)).alias("n_contaminated"),
-            F.expr(
-                "(coalesce(n_contaminated, 0) * 1000000) DIV n_docs"
-            ).alias("contaminated_micros"),
-            "n_grams",
-            "n_unique_grams",
-            F.expr(
-                "CAST((CAST(n_unique_grams AS DECIMAL(38,0)) * 1000000)"
-                " DIV n_grams AS BIGINT)"
-            ).alias("novelty_micros"),
-        )
-    )
-
-
-def _q156_bpe_pairs(spark, sf):
-    """First BPE merge-round statistics: corpus-wide adjacent
-    character-pair counts within whitespace tokens, top-50 by (count
-    desc, pair asc) — a total order, so the 50-row set is deterministic.
-    The merge LOOP of BPE training is a driver-side fold over these
-    counts; ONE round is a single flatten-explode + groupBy whose
-    shuffle input collapses under map-side partial aggregation, and the
-    top-50 runs as TakeOrderedAndProject (no global sort
-    materialisation)."""
-    from polars_pipe_spark.functions.text import char_pair_counts
-
-    docs = _t_par(spark, sf, "documents")
-    return (
-        char_pair_counts(docs, "text")
-        .orderBy(F.col("n").desc(), F.col("pair").asc())
-        .limit(50)
-    )
-
-
-def _q157_temperature_mixture(spark, sf):
-    """Temperature-scaled (alpha=0.5) domain-mixture weights — the
-    multilingual/multi-domain rebalancing rule w_g ∝ n_g^alpha. The
-    package function keeps the double `weight`; the hash-gated output
-    here is the integer-exact projection (the q13 lesson: only
-    BIGINT crosses the gate): sqrt scaled to 1e5 units and floored
-    (exact while n_docs*1e10 < 2^53, i.e. n_docs < 9e5 per group —
-    shrink the scale factor for bigger corpora; IEEE sqrt is correctly
-    rounded so both engines floor the same double), then ppm shares and
-    a 100k-row budget allocation by pure integer division."""
-    from polars_pipe_spark.functions.sampling import temperature_weights
-
-    docs = _t_par(spark, sf, "documents")
-    tw = temperature_weights(docs, "source", alpha=0.5).select("source", "n_rows")
-    return (
-        tw.withColumn(
-            "sqrt_e5",
-            F.floor(F.sqrt(F.col("n_rows").cast("double") * F.lit(1e10))).cast("long"),
-        )
-        # windows over one-row-per-source frames: bounded by domain count
-        .withColumn(
-            "weight_ppm", F.expr("(sqrt_e5 * 1000000) DIV sum(sqrt_e5) OVER ()")
-        )
-        .withColumn(
-            "target_rows", F.expr("(sqrt_e5 * 100000) DIV sum(sqrt_e5) OVER ()")
-        )
-        .select("source", "n_rows", "sqrt_e5", "weight_ppm", "target_rows")
-    )
-
-
-def _q158_incremental_dedup(spark, sf):
-    """Incremental-ingest dedup gate: the doc_id%7==3 slice arrives as a
-    new batch against the fingerprint index built from the rest of the
-    corpus; each batch row is classified new_unique / dup_of_index /
-    dup_within_batch (functions/dedup.py::incremental_dedup) and the
-    report aggregates per status. At scale the index side is the
-    persisted fingerprint table — the corpus text is never rescanned on
-    ingest, and bucketing the index by fingerprint makes the join
-    shuffle-free batch after batch."""
-    from polars_pipe_spark.functions.dedup import incremental_dedup
-    from polars_pipe_spark.functions.text import normalize_text
-
-    docs = _t_par(spark, sf, "documents")
-    # fresh slice + a re-crawled slice (same text, re-keyed ids): the
-    # re-ingest path guarantees all three statuses appear at any sf —
-    # re-crawls of indexed docs → dup_of_index; ids ≡66 (mod 77) occur
-    # in both slices → new_unique + dup_within_batch.
-    batch = docs.filter(F.col("doc_id") % 7 == 3).select("doc_id", "text").unionAll(
-        docs.filter(F.col("doc_id") % 11 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-        )
-    )
-    index = docs.filter(F.col("doc_id") % 7 != 3).select(
-        F.md5(normalize_text("text")).alias("fingerprint")
-    )
-    tagged = incremental_dedup(batch, index, "text", "doc_id")
-    return tagged.groupBy("dedup_status").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-    )
-
-
-def _q159_funnel(spark, sf):
-    """Ordered view→click→purchase funnel: stage i converts only when
-    its earliest hit is at-or-after the carried qualifying time of stage
-    i-1 (operators/windows.py::funnel_counts). Two shuffles regardless
-    of funnel depth: one conditional-min pivot per user, one stage-count
-    aggregate — no per-stage self-joins, no windows."""
-    from polars_pipe_spark.operators.windows import funnel_counts
-
-    ev = _t(spark, sf, "events")
-    return funnel_counts(
-        ev, "user_id", "ts", "event_type", ["view", "click", "purchase"]
-    )
-
-
-def _q160_fuzzy_join(spark, sf):
-    """Entity resolution via blocked edit-distance join
-    (operators/joins.py::fuzzy_join): customers block on nation,
-    candidates are the within-block equi-join, levenshtein <= 1 keeps
-    near-identical names, name<name halves the symmetric pairs. The
-    per-nation report pairs candidate count n(n-1)/2 with the matched
-    count — the blocking-efficiency row an ER pipeline monitors. Block
-    sizes are bounded by the key choice; a corpus-scale block needs a
-    finer key or salting."""
-    from polars_pipe_spark.operators.joins import fuzzy_join
-
-    cust = _t(spark, sf, "customer").select(
-        "c_custkey", "c_name", F.col("c_nationkey").cast("long").alias("nation")
-    )
-    base = cust.groupBy("nation").agg(F.count(F.lit(1)).alias("n_customers"))
-    base = base.withColumn(
-        "n_candidate_pairs",
-        (F.col("n_customers") * (F.col("n_customers") - 1) / 2).cast("long"),
-    )
-    matched = (
-        fuzzy_join(cust, cust, "c_name", "c_name", "nation", "nation", max_dist=1)
-        .filter(F.col("left_key") < F.col("right_key"))
-        .groupBy(F.col("block_key").alias("nation"))
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    return base.join(matched, "nation", "left").select(
-        "nation",
-        "n_customers",
-        "n_candidate_pairs",
-        F.coalesce("n_matched", F.lit(0)).alias("n_matched"),
-    )
-
-
-def _q161_quality_bins(spark, sf):
-    """Curriculum binning: fixed-width deciles over the [0,1] quality
-    score with per-bin doc and token counts
-    (functions/sampling.py::quality_bins). Fixed-width bins are a pure
-    row expression + ordinary groupBy — no NTILE, no global sort, no
-    one-reducer window. Cross-engine parity piggybacks on the q23-proven
-    quality fragment: both engines bin the SAME rounded double, so
-    floor/least agree bit-for-bit."""
-    from polars_pipe_spark.functions.sampling import quality_bins
-    from polars_pipe_spark.functions.text import quality_score, token_count
-
-    docs = _t_par(spark, sf, "documents")
-    return quality_bins(
-        docs, quality_score("text"), n_bins=10, token_col=token_count("text")
-    )
-
-
-def _q162_winnow_fingerprints(spark, sf):
-    """Winnowing (MOSS-style) local fingerprints per document: shingle
-    hashes → per-doc sliding-window minimum → distinct, reported as
-    per-doc fingerprint counts and extrema. The window partitions by
-    doc (bounded by doc length, never corpus-wide); the variant keeps
-    trailing partial windows on both engines for a total definition.
-    See functions/dedup.py::winnow_fingerprints."""
-    from polars_pipe_spark.functions.dedup import winnow_fingerprints
-
-    docs = _t_par(spark, sf, "documents")
-    fp = winnow_fingerprints(docs, "text", "doc_id", k=3, w=4)
-    return fp.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_fp"),
-        F.min("fingerprint").alias("min_fp"),
-        F.max("fingerprint").alias("max_fp"),
-    )
-
-
-def _q163_oov_rate(spark, sf):
-    """Tokenizer-vocabulary coverage: per-document out-of-vocabulary
-    token counts against the top-500 corpus tokens (freq desc, token asc
-    — a total order, so the vocab set is deterministic). One explode
-    feeds both the vocab aggregate and the per-doc join; the vocab side
-    is broadcast (bounded). See functions/text.py::oov_stats."""
-    from polars_pipe_spark.functions.text import oov_stats, tokens
-
-    docs = _t_par(spark, sf, "documents")
-    toks = docs.select(F.explode(tokens("text")).alias("token"))
-    vocab = (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), F.col("token").asc())
-        .limit(500)
-        .select("token")
-    )
-    return oov_stats(docs, "text", "doc_id", vocab)
-
-
-def _q164_centroid_similarity(spark, sf):
-    """Domain-drift report: pairwise cosine similarity between
-    per-source embedding centroids (documents⋈embeddings on id). The
-    integer-exact quantize→sum→mean pipeline is deterministic cross-
-    engine at any corpus scale — centroid components are bounded by the
-    quant unit, so no overflow cliff as groups grow. See
-    functions/similarity.py::centroid_similarity."""
-    from polars_pipe_spark.functions.similarity import centroid_similarity
-
-    docs = _t(spark, sf, "documents").select("doc_id", "source")
-    emb = _t_par(spark, sf, "embeddings")
-    j = emb.join(docs, emb.vec_id == docs.doc_id).select("source", "embedding")
-    return centroid_similarity(j, "source", "embedding", quant=1000)
-
-
-def _q165_exact_quantiles(spark, sf):
-    """EXACT p25/p50/p75 of lineitem extended price by distributed
-    selection (operators/aggregates.py::exact_quantiles) — histogram
-    narrowing, never a global sort or one-reducer percentile. The
-    result is an order statistic (an actual element at rank
-    floor((n-1)·q)), so the oracle reproduces it with a plain sorted
-    row_number lookup, independent of the algorithm."""
-    from polars_pipe_spark.operators.aggregates import exact_quantiles
-
-    li = _t(spark, sf, "lineitem")
-    res = exact_quantiles(li, "l_extendedprice", [0.25, 0.5, 0.75])
-    rows = [
-        (int(round(q * 1_000_000)), int(rank), float(val))
-        for q, (rank, val) in sorted(res.items())
-    ]
-    return spark.createDataFrame(
-        rows, "q_ppm long, rank long, value double"
-    )
-
-
-def _q166_stream_enrich(spark, sf):
-    """Stream-static enrichment: the events stream joins a static
-    per-user dimension (acctbal-derived segment of the matching
-    customer row) each micro-batch, then aggregates value by segment —
-    the canonical streaming fact⋈dim shape. Runs as a REAL Structured
-    Streaming query (file source, availableNow, memory sink); the
-    oracle is the batch twin in SQL. Unmatched users keep their rows
-    (left join) under a 'none' segment."""
-    import tempfile
-
-    from polars_pipe_spark.sources.tables import _nanos_cols
-    from polars_pipe_spark.streaming.pipeline import stream_static_enrich
-
-    path = f"{sf}/events.parquet"
-    batch = _t(spark, sf, "events")
-    if _nanos_cols(path) or not os.path.isdir(path):
-        staged = tempfile.mkdtemp(prefix="pps_enrich_src_") + "/events"
-        batch.write.mode("overwrite").parquet(staged)
-        path = staged
-    schema = spark.read.parquet(path).schema
-    stream = tz_normalise(spark.readStream.schema(schema).parquet(path))
-    dim = _t(spark, sf, "customer").select(
-        F.col("c_custkey").alias("user_id"),
-        F.when(F.col("c_acctbal") < 0, "debt")
-        .when(F.col("c_acctbal") < 5000, "mid")
-        .otherwise("high")
-        .alias("segment"),
-    )
-    enriched = stream_static_enrich(stream, dim, "user_id", how="left")
-    agg = (
-        enriched.groupBy(F.coalesce("segment", F.lit("none")).alias("segment"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-    )
-    name = "pps_enrich_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q167_lineage_hash_props(spark, sf):
-    """Oracle-checkable PROPERTY twin of q12 (L1 row hash is xxhash64 —
-    its VALUES have no DuckDB reproduction, but its invariants do):
-    totality (no null hashes), collision-freeness on distinct supplier
-    rows, and determinism under repartitioning (the hash is a pure
-    content function, so a differently-partitioned recompute must agree
-    row for row). The oracle asserts the booleans as literals over the
-    same row count."""
-    from polars_pipe_spark.operators.transform import add_hash_col
-
-    df = _t(spark, sf, "supplier")
-    h1 = add_hash_col(df).select("s_suppkey", F.col("sys_col_row_hash").alias("h1"))
-    h2 = add_hash_col(df.repartition(8)).select(
-        "s_suppkey", F.col("sys_col_row_hash").alias("h2")
-    )
-    j = h1.join(h2, "s_suppkey")
-    return j.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.bool_and(F.col("h1").isNotNull()).alias("hash_total"),
-        F.bool_and(F.col("h1") == F.col("h2")).alias("deterministic"),
-        (F.count_distinct(F.col("h1")) == F.count(F.lit(1))).alias(
-            "collision_free"
-        ),
-    )
-
-
-def _q168_pq_topk(spark, sf):
-    """Product-quantization ANN (IVF-PQ's compression half): corpus
-    vectors encode to 8 sub-space codes against codebooks pinned to the
-    first 16 stored vectors (the production flow trains them on a
-    sample and persists them — q137's pretrained-quantiser pattern),
-    queries score by asymmetric distance against RECONSTRUCTED
-    codewords, top-5 per query. Encoding is a mapper-only literal
-    projection — at 100 TB the encode pass joins nothing and the ADC
-    scan reads m bytes per vector, not the full float vector. The
-    16-row codebook collect is bounded and documented."""
-    from polars_pipe_spark.functions.similarity import pq_topk
-
-    emb = _t_par(spark, sf, "embeddings")
-    cb_rows = sorted(
-        emb.filter(F.col("vec_id") < 16).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    codebooks = [
-        [[float(x) for x in r["embedding"][s * 8 : (s + 1) * 8]] for r in cb_rows]
-        for s in range(8)
-    ]
-    queries = emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 20)).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return pq_topk(emb, queries, "embedding", "vec_id", "query_id", codebooks, k=5)
-
-
-def _q169_bpe_train(spark, sf):
-    """BPE tokenizer training (8 merge rounds) as an oracle-checkable
-    PROPERTY query: the iterative loop itself is not SQL-expressible
-    (driver-fold over per-round aggregates, the q33 pattern), but its
-    first merge IS — it must equal the corpus' top weighted char pair
-    (cnt desc, left asc, right asc) — and the chosen counts must be
-    non-increasing (a merge's derived pairs occur at most as often as
-    the merge). See functions/text.py::bpe_train."""
-    from polars_pipe_spark.functions.text import bpe_train
-
-    docs = _t_par(spark, sf, "documents")
-    merges = bpe_train(docs, "text", n_merges=8)
-    noninc = all(
-        merges[i][2] >= merges[i + 1][2] for i in range(len(merges) - 1)
-    )
-    row = [
-        (merges[0][0], merges[0][1], merges[0][2], len(merges), bool(noninc))
-    ]
-    return spark.createDataFrame(
-        row,
-        "first_left string, first_right string, first_count long, "
-        "n_merges long, counts_nonincreasing boolean",
-    )
-
-
-def _q170_trimmed_mean(spark, sf):
-    """Robust price statistic: mean of l_extendedprice inside the exact
-    [p05, p95] order-statistic band — thresholds from the distributed
-    histogram-narrowing selection (q165), then ONE aggregate over the
-    band. All-BIGINT projection: cents via ROUND (fixes double
-    representation error identically on both engines), mean as
-    milli-units by integer division. The oracle reproduces the
-    thresholds as sorted row_number lookups — algorithm-independent.
-    operators/aggregates.py::trimmed_mean is the double-API twin."""
-    from polars_pipe_spark.operators.aggregates import exact_quantiles
-
-    li = _t(spark, sf, "lineitem")
-    qs = exact_quantiles(li, "l_extendedprice", [0.05, 0.95])
-    lo, hi = qs[0.05][1], qs[0.95][1]
-    c = F.col("l_extendedprice")
-    cents = F.round(c * 100).cast("long")
-    return (
-        li.filter(c.isNotNull() & (c >= lo) & (c <= hi))
-        .agg(
-            F.round(F.lit(lo) * 100).cast("long").alias("lo_cents"),
-            F.round(F.lit(hi) * 100).cast("long").alias("hi_cents"),
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum(cents).alias("sum_cents"),
-        )
-        .withColumn("mean_milli", F.expr("(sum_cents * 10) DIV n_kept"))
-    )
-
-
-def _q171_padding_waste(spark, sf):
-    """Length-bucketed batching efficiency: assign each document to the
-    smallest boundary ≥ its token count (overlong docs truncate to the
-    top bucket) and report per-bucket docs / real tokens / capacity /
-    wasted padding — the table that picks a training run's bucket
-    boundaries. All-BIGINT; one groupBy.
-    See functions/sampling.py::length_bucket_stats."""
-    from polars_pipe_spark.functions.sampling import length_bucket_stats
-    from polars_pipe_spark.functions.text import token_count
-
-    docs = _t_par(spark, sf, "documents")
-    return length_bucket_stats(
-        docs.select(token_count("text").cast("long").alias("ntok")),
-        "ntok",
-        [32, 64, 128, 256, 512],
-    )
-
-
-def _q172_mixing_schedule(spark, sf):
-    """Curriculum mixing schedule: the per-(source, quality-decile) row
-    allocation for a 1M-row training budget — temperature-scaled source
-    weights (q157's sqrt rule) × within-source bin shares, all by
-    integer division so the plan is exact and cross-engine. This is the
-    artifact a sampler consumes; composes q157 + q161's primitives."""
-    from polars_pipe_spark.functions.text import quality_score
-
-    docs = _t_par(spark, sf, "documents")
-    per = (
-        docs.select(
-            "source",
-            F.least(
-                F.floor(quality_score("text") * 10).cast("long"), F.lit(9)
-            ).alias("bin_id"),
-        )
-        .groupBy("source", "bin_id")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    src = per.groupBy("source").agg(F.sum("n_docs").alias("n_src"))
-    src = src.withColumn(
-        "sqrt_e5",
-        F.floor(F.sqrt(F.col("n_src").cast("double") * F.lit(1e10))).cast("long"),
-    ).withColumn(
-        "src_rows", F.expr("(sqrt_e5 * 1000000) DIV sum(sqrt_e5) OVER ()")
-    )
-    return (
-        per.join(src, "source")
-        .select(
-            "source",
-            "bin_id",
-            "n_docs",
-            "n_src",
-            F.expr("(src_rows * n_docs) DIV n_src").alias("target_rows"),
-        )
-    )
-
-
-def _q173_retrieval_eval(spark, sf):
-    """Retrieval evaluation harness: MRR and recall@10 of the q129
-    rerank pipeline against a deterministic relevance rule (a doc is
-    relevant iff it contains ALL the query's terms). Integer-exact
-    metrics (micros by integer division); per-query relevance joins are
-    keyed on (query, doc) with the query side broadcast — the only
-    corpus-scale work is the one tokenizing explode the relevance rule
-    shares with BM25's shape."""
-    from polars_pipe_spark.functions.retrieval import rerank_topk
-    from polars_pipe_spark.functions.text import tokens
-
-    queries = spark.createDataFrame(
-        [(1, "hash"), (1, "join"), (2, "vector"), (2, "stream"),
-         (3, "filter"), (3, "scan")],
-        "query_id int, term string",
-    )
-    docs = _t_par(spark, sf, "documents")
-    topk = rerank_topk(docs, "text", "doc_id", queries, k=10)
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("term")
-    ).join(F.broadcast(queries), "term")
-    nterms = queries.groupBy("query_id").agg(
-        F.count_distinct("term").alias("n_terms")
-    )
-    rel = (
-        tok.groupBy("query_id", "doc_id")
-        .agg(F.count_distinct("term").alias("n_hit"))
-        .join(F.broadcast(nterms), "query_id")
-        .filter(F.col("n_hit") == F.col("n_terms"))
-        .select("query_id", "doc_id")
-        # persist: rel feeds the per-query totals AND the top-k hit join;
-        # without it the tokenizing explode runs twice (r8 plan-sweep
-        # multi-scan rule). Small frame: only all-terms-matching docs.
-        .persist()
-    )
-    rel_total = rel.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n_relevant")
-    )
-    hits = topk.join(
-        rel.withColumn("is_rel", F.lit(1)), ["query_id", "doc_id"], "left"
-    )
-    per_q = hits.groupBy("query_id").agg(
-        F.sum(F.coalesce("is_rel", F.lit(0))).alias("n_rel_topk"),
-        F.min(F.when(F.col("is_rel") == 1, F.col("rk")))
-        .cast("long")
-        .alias("first_rel_rank"),
-    )
-    return (
-        per_q.join(rel_total, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_relevant", F.lit(0)).alias("n_relevant"),
-            "n_rel_topk",
-            "first_rel_rank",
-            F.coalesce(
-                F.expr("1000000 DIV first_rel_rank"), F.lit(0)
-            ).alias("mrr_micros"),
-            F.when(
-                F.coalesce(F.col("n_relevant"), F.lit(0)) > 0,
-                F.expr("(n_rel_topk * 1000000) DIV n_relevant"),
-            )
-            .otherwise(F.lit(0))
-            .alias("recall_micros"),
-        )
-    )
-
-
-def _q174_rfm_scores(spark, sf):
-    """RFM (recency / frequency / monetary) customer scoring over the
-    purchase stream: ONE aggregate per user (max ts, count, exact cents
-    sum) plus a broadcast 1-row corpus max-ts for recency — no windows,
-    no sorts. Score bins are fixed-width integer rules (a production
-    scorer's calibrated thresholds), so the whole row is BIGINT-exact:
-    recency in hours, r/f/m scores 1-4, rfm_code = 100r + 10f + m."""
-    ev = _t(spark, sf, "events").filter(F.col("event_type") == "purchase")
-    per = ev.groupBy("user_id").agg(
-        F.max("ts").alias("last_ts"),
-        F.count(F.lit(1)).alias("frequency"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("monetary_cents"),
-    )
-    corpus = ev.agg(F.max("ts").alias("now_ts"))
-    scored = per.crossJoin(F.broadcast(corpus)).select(
-        "user_id",
-        F.expr(
-            "(unix_micros(now_ts) - unix_micros(last_ts)) DIV 3600000000"
-        ).alias("recency_hours"),
-        "frequency",
-        "monetary_cents",
-    )
-    r = (
-        F.when(F.col("recency_hours") < 24, 4)
-        .when(F.col("recency_hours") < 72, 3)
-        .when(F.col("recency_hours") < 168, 2)
-        .otherwise(1)
-    )
-    f = (
-        F.when(F.col("frequency") >= 8, 4)
-        .when(F.col("frequency") >= 4, 3)
-        .when(F.col("frequency") >= 2, 2)
-        .otherwise(1)
-    )
-    m = (
-        F.when(F.col("monetary_cents") >= 200000, 4)
-        .when(F.col("monetary_cents") >= 50000, 3)
-        .when(F.col("monetary_cents") >= 10000, 2)
-        .otherwise(1)
-    )
-    return scored.select(
-        "user_id",
-        "recency_hours",
-        "frequency",
-        "monetary_cents",
-        (r * 100 + f * 10 + m).cast("long").alias("rfm_code"),
-    )
-
-
-def _q175_cluster_split(spark, sf):
-    """Leakage-aware train/test split (wires
-    functions/sampling.py::cluster_aware_split): near-dup clusters from
-    the q25 MinHash pipeline are split as UNITS — keyed on cluster id,
-    so no test document has a training near-copy. Report: per-split doc
-    and cluster counts plus the leaky-cluster count, which both engines
-    compute from their own split assignment (expected 0 — a hard check
-    of the no-leakage invariant, not a literal)."""
-    from polars_pipe_spark.functions.dedup import minhash_near_dups
-    from polars_pipe_spark.functions.sampling import cluster_aware_split
-
-    docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-    )
-    tagged = cluster_aware_split(
-        docs, "doc_id", pairs.select("id_a", "id_b"), test_fraction=0.1
-    )
-    leak = tagged.groupBy("cluster_id").agg(
-        F.count_distinct("split").alias("__ns")
-    ).filter(F.col("__ns") > 1).agg(
-        F.count(F.lit(1)).alias("n_leaky_clusters")
-    )
-    return (
-        tagged.groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count_distinct("cluster_id").alias("n_clusters"),
-        )
-        .crossJoin(F.broadcast(leak))
-    )
-
-
-def _q176_knn_classify(spark, sf):
-    """kNN label classification over embeddings (wires
-    functions/similarity.py::knn_classify): every 5th vector is held
-    out and classified by majority vote of its 5 exact cosine
-    neighbors' labels (vote ties to the smaller label — deterministic).
-    The label rides the top-k scan via carry_cols, no re-join. Scale:
-    exact brute force through one blocked-GEMM kernel, with the smaller
-    side (queries, else a corpus that fits) in its closure; the
-    LSH/IVF/PQ paths (q29, q137, q168) are the corpus-scale candidate
-    generators."""
-    from polars_pipe_spark.functions.similarity import knn_classify
-
-    emb = _t_par(spark, sf, "embeddings")
-    corpus = emb.filter(F.col("vec_id") % 5 != 0)
-    queries = emb.filter(F.col("vec_id") % 5 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return knn_classify(
-        corpus, queries, "embedding", "vec_id", "query_id", "label", k=5
-    )
-
-
-def _q177_twap(spark, sf):
-    """Time-weighted average price per user over irregular purchase
-    events: each value is weighted by its holding interval (ts →
-    next ts; the last event carries zero weight — a closed-interval
-    TWAP). One per-user lead window + one aggregate; integer-exact
-    cells (cents × micros with DECIMAL(38,0) sums, mean by integer
-    division)."""
-    ev = _t(spark, sf, "events").filter(F.col("event_type") == "purchase")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    iv = ev.select(
-        "user_id",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-        (F.unix_micros(F.lead("ts").over(w)) - F.unix_micros(F.col("ts")))
-        .alias("dur_us"),
-    ).filter(F.col("dur_us").isNotNull())
-    return iv.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_intervals"),
-        F.sum("dur_us").alias("total_us"),
-        F.sum(
-            (F.col("cents") * F.col("dur_us")).cast("decimal(38,0)")
-        ).cast("decimal(38,0)").alias("weighted_sum"),
-    ).select(
-        "user_id",
-        "n_intervals",
-        "total_us",
-        F.expr("CAST(weighted_sum DIV total_us AS BIGINT)").alias(
-            "twap_cents"
-        ),
-    )
-
-
-def _q178_session_sensitivity(spark, sf):
-    """Session-timeout sensitivity in ONE pass: for each candidate gap
-    threshold, n_sessions = n_users + n_gaps_exceeding_threshold — so a
-    single per-user lag window scan prices every threshold at once
-    instead of re-sessionizing per candidate. The table an analyst
-    reads before pinning q22's 30-minute gap. All-BIGINT."""
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = ev.select(
-        "user_id",
-        (F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w)))
-        .alias("gap_us"),
-    )
-    thresholds = [900, 1800, 3600, 7200]  # seconds
-    # ONE aggregate: the user count and every threshold's gap count come
-    # out of the same pass (null gaps — each user's first event — fall
-    # into otherwise(0) and never inflate a threshold)
-    agg = gaps.agg(
-        F.count_distinct("user_id").alias("__u"),
-        *[
-            F.sum(
-                F.when(F.col("gap_us") > t * 1_000_000, 1).otherwise(0)
-            ).alias(f"__g{t}")
-            for t in thresholds
-        ]
-    )
-    rows = agg.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).cast("long").alias("gap_seconds"),
-                        (F.col(f"__g{t}") + F.col("__u"))
-                        .cast("long")
-                        .alias("n_sessions"),
-                    )
-                    for t in thresholds
-                ]
-            )
-        ).alias("s")
-    )
-    return rows.select("s.gap_seconds", "s.n_sessions")
-
-
-def _q179_langid_calibration(spark, sf):
-    """Classifier calibration table for the lang-ID heuristic: bin each
-    document by its integer confidence margin (best marker count minus
-    second-best, clamped to 5) and report accuracy against the table's
-    true lang per bin — the reliability diagram a model owner reads
-    before trusting the cheap classifier at scale. All-integer: marker
-    scores are counts, the margin is exact, accuracy in micros."""
-    from polars_pipe_spark.functions.text import lang_id, lang_scores
-
-    docs = _t_par(spark, sf, "documents")
-    sc = lang_scores("text")
-    arr = F.array_sort(F.array(*[sc[lang] for lang in sorted(sc)]))
-    margin = F.element_at(arr, -1) - F.element_at(arr, -2)
-    scored = docs.select(
-        F.least(margin, F.lit(5)).cast("long").alias("conf_bin"),
-        (lang_id("text") == F.col("lang")).alias("__ok"),
-    )
-    return scored.groupBy("conf_bin").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("__ok"), 1).otherwise(0)).alias("n_correct"),
-    ).withColumn(
-        "accuracy_micros", F.expr("(n_correct * 1000000) DIV n_docs")
-    )
-
-
-def _q180_compaction_report(spark, sf):
-    """Small-file lifecycle report (wires adapters/io.py::compact_parquet
-    into a query): a fine-grained partitioned write (maxRecordsPerFile
-    100) accretes ceil(n/100) files per source partition; the compaction
-    job rewrites each partition dir into ~target-sized files. Report per
-    source: rows, files before (counted via input_file_name — the audit
-    a table-maintenance job runs), files after. File COUNTS are
-    deterministic (sequential per-task splitting), so the lifecycle is
-    oracle-checkable even though file contents are layout-dependent."""
-    import tempfile
-
-    from polars_pipe_spark.adapters.io import compact_parquet
-
-    docs = _t(spark, sf, "documents")
-    root = tempfile.mkdtemp(prefix="pps_compact_")
-    (
-        docs.repartition("source")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 100)
-        .partitionBy("source")
-        .parquet(root)
-    )
-    # materialise the BEFORE audit eagerly: compaction atomically swaps
-    # the files underneath, so a lazy plan re-read after the swap would
-    # chase deleted paths. One bounded collect (a row per source).
-    before = (
-        spark.read.parquet(root)
-        .select("source", F.input_file_name().alias("f"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct("f").alias("n_files_before"),
-        )
-        .collect()
-    )
-    # r14: per-source compactions are INDEPENDENT Spark jobs on disjoint
-    # directories; running them from a small thread pool lets the next
-    # job's tasks back-fill executors left idle by the current job's
-    # tail (guide-standard concurrent-jobs pattern). Output is
-    # deterministic regardless of completion order: file counts derive
-    # from row counts, and the report is sorted after the fact.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def compact_one(r):
-        return (
-            r["source"],
-            r["n_rows"],
-            r["n_files_before"],
-            compact_parquet(spark, f"{root}/source={r['source']}"),
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        rows = sorted(pool.map(compact_one, before))
-    return spark.createDataFrame(
-        rows,
-        "source string, n_rows long, n_files_before long, n_files_after long",
-    )
-
-
-def _q181_ann_dashboard(spark, sf):
-    """ANN method dashboard — the capstone comparison a corpus owner
-    reads when choosing the 100 TB search path: recall@5 of the LSH
-    (q29), pretrained-IVF (q137) and PQ/ADC (q168) pipelines against
-    the exact brute-force top-5 (q28), over the shared query slice
-    (vec_id 16-19, self-matches excluded uniformly). Composes the
-    existing method queries verbatim, so every parameter matches its
-    oracle-checked original by construction; all counts stay frame-
-    level (no driver collect)."""
-    def prep(df):
-        return df.filter(
-            (F.col("query_id") >= 16)
-            & (F.col("query_id") < 20)
-            & (F.col("neighbor_id") != F.col("query_id"))
-        ).select("query_id", "neighbor_id")
-
-    # persist: the exact frame's lineage is the full brute-force top-k;
-    # it is consumed 4x below (once per method join + the denominator),
-    # so without a persist the dashboard re-runs brute force 4 times
-    # (r8 plan-sweep multi-scan rule). Tiny frame (k rows per query id),
-    # huge lineage — the canonical persist case.
-    exact = prep(_q28_cosine_topk(spark, sf)).persist()
-    en = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    methods = [
-        ("ivf", _q137_ivf_pretrained),
-        ("lsh", _q29_lsh_topk),
-        ("pq", _q168_pq_topk),
-    ]
-    per = [
-        prep(fn(spark, sf))
-        .join(exact, ["query_id", "neighbor_id"])
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-        .select(F.lit(name).alias("method"), "n_hits")
-        for name, fn in methods
-    ]
-    out = per[0]
-    for p in per[1:]:
-        out = out.unionAll(p)
-    return out.crossJoin(F.broadcast(en)).select(
-        "method",
-        "n_hits",
-        "n_exact",
-        F.expr("(n_hits * 1000000) DIV n_exact").alias("recall_micros"),
-    )
-
-
-def _q182_dedup_savings(spark, sf):
-    """Dedup ROI report: bytes the exact-dedup pass saves, per source —
-    every non-canonical copy's character count is reclaimable storage.
-    One fingerprint groupBy (the q24 shape) joined back to tag
-    canonicals; all-BIGINT micros share. The number a storage owner
-    weighs against the dedup job's cost."""
-    from polars_pipe_spark.functions.dedup import exact_dedup_groups
-    from polars_pipe_spark.functions.text import doc_fingerprint
-
-    docs = _t_par(spark, sf, "documents")
-    groups = exact_dedup_groups(docs, "text", "doc_id").select(
-        "fingerprint", "canonical_id"
-    )
-    tagged = docs.select(
-        "source", "doc_id", "n_chars", doc_fingerprint("text").alias("fingerprint")
-    ).join(groups, "fingerprint")
-    return tagged.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum(
-            F.when(F.col("doc_id") != F.col("canonical_id"), F.col("n_chars"))
-            .otherwise(0)
-        ).alias("reclaimable_chars"),
-    ).withColumn(
-        "savings_micros",
-        F.expr(
-            "CAST((CAST(reclaimable_chars AS DECIMAL(38,0)) * 1000000)"
-            " DIV total_chars AS BIGINT)"
-        ),
-    )
-
-
-def _q183_incremental_neardup(spark, sf):
-    """Near-dup ingest gate (functions/dedup.py::incremental_near_dups):
-    the doc_id%7==3 slice arrives as a new batch; its band keys join
-    only against (index ∪ batch) bands, candidates verify with exact
-    Jaccard ≥ 0.2 (q25's parameters), and each batch doc classifies as
-    dup_of_index / dup_within_batch / novel. The oracle derives the
-    identical classification from the corpus-wide q25 pair set
-    restricted to batch-involved pairs — the candidate sets provably
-    coincide, which is the point being checked."""
-    from polars_pipe_spark.functions.dedup import incremental_near_dups
-
-    docs = _t_par(spark, sf, "documents")
-    batch = docs.filter(F.col("doc_id") % 7 == 3)
-    index = docs.filter(F.col("doc_id") % 7 != 3)
-    tagged = incremental_near_dups(
-        batch, index, "text", "doc_id",
-        shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
-    )
-    return tagged.groupBy("neardup_status").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-    )
-
-
-def _q184_streaming_pq_encode(spark, sf):
-    """The PQ encode pass as a REAL stream: vectors arrive on a file
-    source and encode against the pinned q168 codebooks per micro-batch
-    — a pure stateless projection (no watermark, append mode), so the
-    100 TB ingest path embeds new vectors as they land with zero
-    shuffle. Memory sink; the oracle is q168's batch encode CTE."""
-    import tempfile
-
-    emb = _t(spark, sf, "embeddings")
-    cb_rows = sorted(
-        emb.filter(F.col("vec_id") < 16).select("vec_id", "embedding").collect(),
-        key=lambda r: r["vec_id"],
-    )
-    codebooks = [
-        [[float(x) for x in r["embedding"][s * 8 : (s + 1) * 8]] for r in cb_rows]
-        for s in range(8)
-    ]
-    path = f"{sf}/embeddings.parquet"
-    if not os.path.isdir(path):
-        staged = tempfile.mkdtemp(prefix="pps_pq_src_") + "/embeddings"
-        emb.write.mode("overwrite").parquet(staged)
-        path = staged
-    from polars_pipe_spark.functions.similarity import pq_encode
-
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(path)
-    enc = pq_encode(stream, "embedding", codebooks).select("vec_id", "pq_code")
-    name = "pps_pq_out"
-    q = (
-        enc.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q185_token_drift(spark, sf):
-    """Token-distribution drift between two corpus snapshots (the even/
-    odd doc halves standing in for week-over-week crawls): for the
-    top-20 tokens of the union corpus (total order), a chi-square-style
-    integer statistic per token — (c1-c2)²·1e6 / (c1+c2) — plus both
-    counts. The table a corpus owner reads to spot a crawl-mix shift
-    before it moves the trained model. One tokenizing explode feeds the
-    snapshot-conditional counts; the top-20 runs as TakeOrdered."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select(
-        (F.col("doc_id") % 2 == 0).alias("snap_a"),
-        F.explode(tokens("text")).alias("token"),
-    )
-    counts = tok.groupBy("token").agg(
-        F.sum(F.when(F.col("snap_a"), 1).otherwise(0)).alias("c_a"),
-        F.sum(F.when(~F.col("snap_a"), 1).otherwise(0)).alias("c_b"),
-    )
-    return (
-        counts.withColumn("c_total", F.col("c_a") + F.col("c_b"))
-        .orderBy(F.col("c_total").desc(), F.col("token").asc())
-        .limit(20)
-        .withColumn(
-            "drift_micros",
-            F.expr("((c_a - c_b) * (c_a - c_b) * 1000000) DIV c_total"),
-        )
-        .select("token", "c_a", "c_b", "c_total", "drift_micros")
-    )
-
-
-def _q186_grouped_quartiles(spark, sf):
-    """Per-source document-length quartiles with EXACT element bounds:
-    percentile_disc picks actual data points (no interpolation
-    arithmetic), so the cells are reproducible bit-for-bit on any
-    engine — the q90 equi-depth rule applied per group. One aggregation
-    pass, groups distribute normally (never a global sort)."""
-    docs = _t(spark, sf, "documents")
-    return docs.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        # Spark's percentile_disc yields DOUBLE even on integral input,
-        # DuckDB's quantile_disc keeps BIGINT — cast BOTH sides (the q13
-        # lesson: explicit same-type casts, never engine defaults)
-        F.expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY n_chars)")
-        .cast("long")
-        .alias("p25"),
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY n_chars)")
-        .cast("long")
-        .alias("p50"),
-        F.expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY n_chars)")
-        .cast("long")
-        .alias("p75"),
-    )
-
-
-def _q187_cooccurrence_pairs(spark, sf):
-    """Top document-level token co-occurrence pairs, BOUNDED by vocab:
-    only tokens from the top-30 corpus vocabulary pair up (per-doc pair
-    fan-out ≤ C(30,2) regardless of document length — the quadratic
-    all-token version is the scale trap), distinct per doc, counted
-    corpus-wide, top-20 by (count desc, pair asc). The co-occurrence
-    graph behind topic drift and collocation analyses."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("token")
-    )
-    vocab = (
-        tok.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), F.col("token").asc())
-        .limit(30)
-        .select("token")
-    )
-    vt = tok.join(F.broadcast(vocab), "token")
-    a = vt.select("doc_id", F.col("token").alias("t_a"))
-    b = vt.select("doc_id", F.col("token").alias("t_b"))
-    pairs = a.join(b, "doc_id").filter(F.col("t_a") < F.col("t_b"))
-    return (
-        pairs.groupBy("t_a", "t_b")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy(F.col("n_docs").desc(), F.col("t_a").asc(), F.col("t_b").asc())
-        .limit(20)
-    )
-
-
-def _q188_dataset_card(spark, sf):
-    """Dataset-card summary row per table — the catalog artifact a data
-    consumer reads first: row count, column count, and the null count
-    of each table's most-nullable business column. One aggregate per
-    table, unioned; column counts come from the schema (driver-side,
-    free). Multi-table breadth in a single oracle-checked frame."""
-    rows = []
-    for name, null_col in [
-        ("documents", "text"),
-        ("events", "value"),
-        ("lineitem", "l_quantity"),
-        ("customer", "c_acctbal"),
-    ]:
-        t = _t(spark, sf, name)
-        rows.append(
-            t.agg(
-                F.lit(name).alias("table_name"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.lit(len(t.columns)).cast("long").alias("n_cols"),
-                F.sum(
-                    F.when(F.col(null_col).isNull(), 1).otherwise(0)
-                ).alias("n_null_probe"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out
-
-
-def _q189_referential_integrity(spark, sf):
-    """Referential-integrity audit across the warehouse's FK chain —
-    the data-quality staple run after every load: child rows whose
-    foreign key has no parent (anti-join counts), per relationship.
-    Anti-joins broadcast the parent key set when it fits and AQE
-    handles the rest; each relationship is one join, no windows."""
-    li = _t(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders")
-    cust = _t(spark, sf, "customer")
-    nation = _t(spark, sf, "nation")
-    checks = [
-        ("lineitem->orders", li.select(F.col("l_orderkey").alias("k")),
-         orders.select(F.col("o_orderkey").alias("k"))),
-        ("orders->customer", orders.select(F.col("o_custkey").alias("k")),
-         cust.select(F.col("c_custkey").alias("k"))),
-        ("customer->nation", cust.select(F.col("c_nationkey").cast("long").alias("k")),
-         nation.select(F.col("n_nationkey").cast("long").alias("k"))),
-    ]
-    rows = []
-    for rel, child, parent in checks:
-        rows.append(
-            child.join(parent.distinct(), "k", "left_anti").agg(
-                F.lit(rel).alias("relationship"),
-                F.count(F.lit(1)).alias("n_orphans"),
-            )
-        )
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out
-
-
-def _q190_table_checksum(spark, sf):
-    """Order-invariant table checksums — the replication/migration
-    validation primitive: sum of per-row 48-bit content hashes mod 2^62,
-    so a repartitioned/compacted/sorted rewrite of the same rows yields
-    the same value. One map-side-partial aggregate per table (the
-    cheapest full-table verification possible); DECIMAL(38,0) carry so
-    the sum never overflows at 100 TB row counts."""
-    from polars_pipe_spark.functions.integrity import table_checksum
-
-    specs = [
-        ("documents", ["doc_id", "source", "lang"]),
-        ("orders", ["o_orderkey", "o_orderstatus", "o_orderpriority"]),
-        ("lineitem", ["l_orderkey", "l_linenumber", "l_returnflag"]),
-    ]
-    rows = [table_checksum(_t(spark, sf, n), cols, n) for n, cols in specs]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionAll(r)
-    return out
-
-
-def _q191_split_leakage(spark, sf):
-    """Train/val/test contamination audit: documents whose content
-    fingerprint (md5 of the first 80 normalised chars — catches exact
-    copies AND shared-prefix near-copies) appears on both sides of a
-    split boundary. Group-by-fingerprint (near-unique key, no skew),
-    pair enumeration only over the straddling fingerprints — never a
-    corpus self-join."""
-    from polars_pipe_spark.functions.integrity import split_leakage
-    from polars_pipe_spark.functions.sampling import md5_bucket
-    from polars_pipe_spark.functions.text import normalize_text
-
-    docs = _t_par(spark, sf, "documents")
-    bucket = md5_bucket("doc_id", 100)
-    labeled = docs.select(
-        F.md5(F.substring(normalize_text("text"), 1, 80)).alias("fp"),
-        F.when(bucket < 10, F.lit("test"))
-        .when(bucket < 20, F.lit("val"))
-        .otherwise(F.lit("train"))
-        .alias("split"),
-    )
-    return split_leakage(labeled, "fp", "split").orderBy("split_a", "split_b")
-
-
-def _q192_byte_encoding_audit(spark, sf):
-    """Byte-level encoding audit per document — the ingest health check
-    before any tokenizer sees the text: char vs byte length (multibyte
-    overhead), pure-ASCII flag, digit/uppercase populations. All exact
-    integers from JVM string expressions; single scan, no shuffle."""
-    docs = _t(spark, sf, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        F.length(t).alias("n_chars_raw"),
-        F.octet_length(t).alias("n_bytes"),
-        (F.octet_length(t) - F.length(t)).alias("n_multibyte_extra"),
-        (F.octet_length(t) == F.length(t)).alias("is_ascii"),
-        (F.length(t) - F.length(F.regexp_replace(t, "[0-9]", ""))).alias("n_digits"),
-        (F.length(t) - F.length(F.regexp_replace(t, "[A-Z]", ""))).alias("n_upper"),
-    )
-
-
-def _q193_heavy_hitters(spark, sf):
-    """Exact frequency-floor heavy hitters: every token above 1000 ppm of
-    the corpus token stream (the exact answer to the Misra–Gries
-    question). Integer cross-multiply against a broadcast 1-row total —
-    no float division, deterministic output set; the vocabulary count
-    table is ≪ corpus at any scale."""
-    from polars_pipe_spark.functions.integrity import heavy_hitters
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select(F.explode(tokens("text")).alias("token"))
-    return heavy_hitters(tok, "token", threshold_ppm=1000)
-
-
-def _q194_bigram_transitions(spark, sf):
-    """Token-level Markov transition table: for the top-20 lead tokens,
-    the top-3 following tokens with exact numerator/denominator counts
-    (the n-gram LM building block). Consecutive pairs come from one
-    zip of the token array with its own tail (no positional self-join);
-    the rank window runs only over the 20 surviving leads' rows."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    toks = docs.select(tokens("text").alias("t")).filter(F.size("t") >= 2)
-    pairs = toks.select(
-        F.explode(
-            F.zip_with(
-                F.slice("t", 1, F.size("t") - 1),
-                F.slice("t", 2, F.size("t") - 1),
-                lambda a, b: F.struct(a.alias("lead"), b.alias("next")),
-            )
-        ).alias("bg")
-    ).select(F.col("bg.lead").alias("lead"), F.col("bg.next").alias("next"))
-    cnt = pairs.groupBy("lead", "next").agg(F.count(F.lit(1)).alias("n_pair"))
-    leads = (
-        cnt.groupBy("lead")
-        .agg(F.sum("n_pair").alias("n_lead"))
-        .orderBy(F.col("n_lead").desc(), F.col("lead").asc())
-        .limit(20)
-    )
-    w = Window.partitionBy("lead").orderBy(F.col("n_pair").desc(), F.col("next").asc())
-    return (
-        cnt.join(F.broadcast(leads), "lead")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("lead", "next", "n_pair", "n_lead", "rk")
-    )
-
-
-def _q195_matryoshka_recall(spark, sf):
-    """Matryoshka-style dimension-truncation evaluation: per query, the
-    overlap between exact cosine top-5 on the FIRST 8 dims and on the
-    full vector — the measurement that justifies shipping truncated
-    embeddings at 100 TB (8/16 of the scan bytes and FLOPs). Both
-    rankings reuse the exact brute-force kernel; overlap is an
-    integer join-count with zero-preserving left join."""
-    from polars_pipe_spark.functions.similarity import brute_force_topk
-
-    emb = _t(spark, sf, "embeddings")
-    q = emb.filter(F.col("vec_id") < 20)
-    full = brute_force_topk(emb, q, "embedding", "vec_id", "vec_id", k=5).select(
-        "query_id", "neighbor_id"
-    )
-    emb8 = emb.select("vec_id", F.slice("embedding", 1, 8).alias("embedding"))
-    q8 = emb8.filter(F.col("vec_id") < 20)
-    trunc = brute_force_topk(emb8, q8, "embedding", "vec_id", "vec_id", k=5).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        trunc.join(full, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_overlap"))
-    )
-    return (
-        q.select(F.col("vec_id").alias("query_id"))
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id", F.coalesce(F.col("n_overlap"), F.lit(0).cast("long")).alias("n_overlap")
-        )
-    )
-
-
-def _q196_containment_neardup(spark, sf):
-    """EXACT asymmetric containment detection via a one-sided
-    prefix-filtered overlap join (AllPairs/PPJoin family): every
-    same-source pair with |A∩B| / min(|A|,|B|) ≥ 0.8 over word-5-shingle
-    sets — the quote-inside-a-page case Jaccard size-banding cannot
-    address. Each document indexes only its floor(ng/5)+1 RAREST
-    shingles under a global (document-frequency, shingle) total order;
-    by pigeonhole the SMALLER doc of any qualifying pair must expose a
-    shared shingle in that prefix, and the probe side is the full
-    posting list — so candidates come from a prefix⋈postings equi-join
-    whose fan-out is bounded by the DF of rare shingles, with ZERO
-    recall loss (brute-force equivalence pinned by a test). Word
-    shingles, not char grams: the 5-token shingle space is large enough
-    that "rare" is meaningful (most shingles are unique), where this
-    corpus has only ~1k distinct char-4-grams. Threshold is the integer
-    cross-multiply 5·i ≥ 4·min(ng)."""
-    from polars_pipe_spark.functions.text import shingles
-
-    df = _t_par(spark, sf, "documents")
-    # 48-bit shingle hashes: intersections compare longs pre-shuffle
-    # (the q132 span-dedup lesson), collision odds ~1e-3 corpus-wide
-    hashed = F.transform(
-        F.array_distinct(shingles("text", 5)),
-        lambda s: F.conv(F.substring(F.md5(s), 1, 12), 16, 10).cast("long"),
-    )
-    # persisted: read 5× downstream (DF table, prefix, postings, both
-    # verify sides); 48-bit hashes keep the cached footprint tiny
-    # (#shingles × 8 B) — contrast q27, where caching giant char-gram
-    # arrays lost to recompute
-    g = df.select(
-        F.col("doc_id").alias("id"), F.col("source"), F.array_sort(hashed).alias("grams")
-    ).withColumn("ng", F.size("grams")).persist()
-    dfreq = (
-        g.select(F.explode("grams").alias("gram"))
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("gdf"))
-    )
-    exploded = g.select("id", "source", "ng", F.explode("grams").alias("gram")).join(
-        dfreq, "gram"
-    )
-    # rank window partitioned per document — bounded by the doc's own
-    # gram count, never corpus-sized.  prefix_len = ng - ceil(0.8·ng) + 1
-    # = floor(ng/5) + 1 (pigeonhole bound for the 0.8 threshold).
-    wr = Window.partitionBy("id").orderBy(F.col("gdf").asc(), F.col("gram").asc())
-    prefix = (
-        exploded.withColumn("rnk", F.row_number().over(wr))
-        .filter(F.col("rnk") <= F.floor(F.col("ng") / 5) + 1)
-        .select("id", "source", "gram")
-    )
-    postings = g.select("id", "source", F.explode("grams").alias("gram"))
-    cands = (
-        prefix.alias("a")
-        .join(
-            postings.alias("b"),
-            (F.col("a.gram") == F.col("b.gram"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
-        )
-        .distinct()
-    )
-    ga = g.select(F.col("id").alias("id_a"), F.col("grams").alias("g_a"), F.col("ng").alias("ng_a"))
-    gb = g.select(F.col("id").alias("id_b"), F.col("grams").alias("g_b"), F.col("ng").alias("ng_b"))
-    return (
-        cands.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("n_inter", F.size(F.array_intersect("g_a", "g_b")))
-        .filter(5 * F.col("n_inter") >= 4 * F.least("ng_a", "ng_b"))
-        .withColumn(
-            "containment",
-            F.round(F.col("n_inter").cast("double") / F.least("ng_a", "ng_b"), 6),
-        )
-        .select("id_a", "id_b", "n_inter", "containment")
-    )
-
-
-def _q197_maxsim_late_interaction(spark, sf):
-    """ColBERT-style MaxSim late-interaction scoring: each 16-dim vector
-    is treated as 4 sub-vectors of 4 dims (the multi-vector layout);
-    score(q, d) = Σ_j max_k cos(q_j, d_k), top-3 per query.
-
-    r8 shape: the query side is BOUNDED (10 rows) and collected into an
-    Arrow kernel's closure, so each corpus vector ships to Python ONCE
-    and all 16 sub-cosines per (doc, query) run vectorized in numpy —
-    the previous broadcast-crossJoin expression tree assembled 36
-    element_at chains per PAIR in the JVM (13.9 s at sf1, 41 s at sf3
-    for what is ~100M multiplies). Bit-parity with the DuckDB oracle is
-    preserved by replicating the exact sequential-add order of the
-    unrolled scalar chains: products of float64-widened float32
-    elements, ((t1+t2)+t3)+t4 folds, max over sub-cosines (order-free),
-    sequential sum over j, round(6) left in the JVM. Only the rank
-    window shuffles, and only (doc_id, query_id, maxsim) rows travel.
-    """
-    import numpy as np
-
-    emb = _t(spark, sf, "embeddings")
-    qrows = sorted(
-        (int(r["vec_id"]), list(r["embedding"])[:16])
-        for r in emb.filter(F.col("vec_id") < 10)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-
-    def _fold4(terms):
-        total = terms[0]
-        for t in terms[1:]:
-            total = total + t
-        return total
-
-    qm = np.array([v for _, v in qrows], dtype=np.float64)  # nq × 16
-    qids = np.array([i for i, _ in qrows], dtype=np.int64)
-    qn = np.empty((len(qrows), 4), dtype=np.float64)
-    for j in range(4):
-        qn[:, j] = np.sqrt(_fold4([qm[:, 4 * j + i] ** 2 for i in range(4)]))
-
-    def score_batches(batches):
-        import pandas as pd  # noqa: PLC0415
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            C = np.stack(pdf["embedding"].to_numpy())[:, :16].astype(np.float64)
-            cn = np.empty((len(pdf), 4), dtype=np.float64)
-            for k in range(4):
-                cn[:, k] = np.sqrt(_fold4([C[:, 4 * k + i] ** 2 for i in range(4)]))
-            out_doc, out_q, out_s = [], [], []
-            for qi in range(len(qids)):
-                score = None
-                for j in range(4):
-                    best = None
-                    for k in range(4):
-                        dot = _fold4(
-                            [C[:, 4 * k + i] * qm[qi, 4 * j + i] for i in range(4)]
-                        )
-                        denom = qn[qi, j] * cn[:, k]
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            cos = np.where(denom > 0, dot / denom, 0.0)
-                        best = cos if best is None else np.maximum(best, cos)
-                    score = best if score is None else score + best
-                keep = ids != qids[qi]
-                out_doc.append(ids[keep])
-                out_q.append(np.full(keep.sum(), qids[qi], dtype=np.int64))
-                out_s.append(score[keep])
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(out_doc),
-                    "query_id": np.concatenate(out_q),
-                    "maxsim_raw": np.concatenate(out_s),
-                }
-            )
-
-    scored = (
-        emb.select("vec_id", "embedding")
-        .mapInPandas(score_batches, "doc_id long, query_id long, maxsim_raw double")
-        .withColumn("maxsim", F.round(F.col("maxsim_raw"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("maxsim").desc(), F.col("doc_id").asc())
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "doc_id", "maxsim", "rk")
-    )
-
-
-def _q198_ewma_smoothing(spark, sf):
-    """Per-user trailing EWMA (decay 0.75, window 8) over event values —
-    the time-series smoothing staple. Pure lag() window expressions (no
-    arrays, no UDFs): numerator/denominator accumulate in a FIXED
-    literal order so the doubles are bit-identical on any engine;
-    null values drop out of both sums. Per-user partitions, ties broken
-    by event_id."""
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    num, den = F.lit(0.0), F.lit(0.0)
-    for lag in range(8):
-        x = F.lag("value", lag).over(w)
-        wt = F.lit(0.75 ** lag)
-        num = num + F.when(x.isNotNull(), x * wt).otherwise(F.lit(0.0))
-        den = den + F.when(x.isNotNull(), wt).otherwise(F.lit(0.0))
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.when(den > 0, num / den), 6).alias("ewma"),
-    )
-
-
-def _q199_inverted_index(spark, sf):
-    """Inverted-index build for the top-50 document-frequency tokens:
-    df count + a posting sample of the 10 smallest doc_ids. The posting
-    cap uses SALTED two-level top-k (per-(token, doc_id%32) partial
-    sort-and-slice, then merge the ≤32×10 survivors) so a stopword's
-    postings never funnel through one reducer — the skew-safe exact
-    top-k-per-key pattern; raise the salt fan-out with corpus size."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    post = docs.select(
-        F.explode(F.array_distinct(tokens("text"))).alias("token"), "doc_id"
-    )
-    partial = (
-        post.groupBy("token", (F.col("doc_id") % 32).alias("salt"))
-        .agg(
-            F.count(F.lit(1)).alias("df_part"),
-            F.slice(F.array_sort(F.collect_list("doc_id")), 1, 10).alias("sample_part"),
-        )
-    )
-    merged = partial.groupBy("token").agg(
-        F.sum("df_part").alias("df"),
-        F.slice(F.array_sort(F.flatten(F.collect_list("sample_part"))), 1, 10).alias(
-            "posting_sample"
-        ),
-    )
-    return merged.orderBy(F.col("df").desc(), F.col("token").asc()).limit(50)
-
-
-def _q200_event_path_trigrams(spark, sf):
-    """Behavioral path mining: top-20 consecutive event-type trigrams
-    per user timeline (the funnel-discovery primitive). lead() windows
-    partitioned per user (bounded by user activity), count + TakeOrdered
-    top-k — no global sort, no session state."""
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    tri = (
-        ev.select(
-            F.col("event_type").alias("e1"),
-            F.lead("event_type", 1).over(w).alias("e2"),
-            F.lead("event_type", 2).over(w).alias("e3"),
-        )
-        .filter(F.col("e3").isNotNull())
-        .groupBy("e1", "e2", "e3")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return tri.orderBy(
-        F.col("n").desc(), F.col("e1").asc(), F.col("e2").asc(), F.col("e3").asc()
-    ).limit(20)
-
-
-def _q201_lsh_precision(spark, sf):
-    """LSH candidate-quality evaluation, the PRECISION half of the
-    q133 recall harness: of all pairs the banded minhash join proposes,
-    how many survive exact Jaccard ≥ 0.2? One aggregate over the
-    unfiltered candidate frame (threshold=0 path of minhash_near_dups) —
-    the number that tells you whether banding parameters waste exact-
-    verification work at 100 TB. Integer counts + one rounded ratio."""
-    from polars_pipe_spark.functions.dedup import minhash_near_dups
-
-    pairs = minhash_near_dups(
-        _t_par(spark, sf, "documents"), "text", "doc_id",
-        shingle_k=3, sig_k=8, n_bands=4, threshold=0.0,
-    )
-    return pairs.agg(
-        F.count(F.lit(1)).alias("n_candidates"),
-        F.sum(F.when(F.col("jaccard") >= 0.2, 1).otherwise(0)).alias("n_true"),
-        F.round(
-            F.sum(F.when(F.col("jaccard") >= 0.2, 1).otherwise(0)).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("precision"),
-    )
-
-
-def _q202_langid_confusion(spark, sf):
-    """Language-ID confusion matrix against the corpus ground-truth
-    labels — the eval artifact behind every lang-filter decision:
-    (true, predicted, count) cells. Single scan + one grouped aggregate;
-    the marker-argmax classifier is the same pure-expression lang_id the
-    quality pipeline uses (tie order pinned de→en→es→fr)."""
-    from polars_pipe_spark.functions.text import lang_id
-
-    docs = _t_par(spark, sf, "documents")
-    return (
-        docs.groupBy(
-            F.col("lang").alias("lang_true"), lang_id("text").alias("lang_pred")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("lang_true", "lang_pred")
-    )
-
-
-def _q203_streaming_heavy_hitters(spark, sf):
-    """The q193 heavy-hitters question answered by a REAL Structured
-    Streaming query: token counts aggregated in complete mode across
-    micro-batches (availableNow), then the frequency floor applied to
-    the final state — the continuous-ingest version of corpus heavy
-    hitters, checked against the same batch SQL oracle."""
-    import tempfile
-
-    from polars_pipe_spark.functions.text import tokens
-
-    path = f"{sf}/documents.parquet"
-    batch = _t_par(spark, sf, "documents")
-    if not os.path.isdir(path):
-        staged = tempfile.mkdtemp(prefix="pps_hh_src_") + "/documents"
-        batch.write.mode("overwrite").parquet(staged)
-        path = staged
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(path)
-    tok = stream.select(F.explode(tokens("text")).alias("token"))
-    agg = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    name = "pps_hh_out"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    counts = spark.table(name)
-    total = counts.agg(F.sum("cnt").alias("total"))
-    return (
-        counts.crossJoin(F.broadcast(total))
-        .filter(F.lit(1_000_000) * F.col("cnt") > F.lit(1000) * F.col("total"))
-        .select("token", "cnt", "total")
-    )
-
-
-def _q204_bloom_prune_join(spark, sf):
-    """Runtime-filter join pruning: a Bloom-style bucket set built from
-    the selective build side (customers with acctbal > 7500) prunes the
-    orders probe side BEFORE the join shuffle — the manual form of
-    Spark's runtime bloom filter, as an operator the optimizer can't
-    decline. Per priority: candidate rows passing the filter vs rows
-    the exact join keeps. No false negatives by construction (the
-    oracle's IN-subquery computes the same md5-bucket membership), and
-    candidates ≥ matches is visible in the output."""
-    from polars_pipe_spark.operators.joins import bloom_prune
-
-    rich = (
-        _t(spark, sf, "customer")
-        .filter(F.col("c_acctbal") > 7500)
-        .select("c_custkey")
-    )
-    orders = _t_par(spark, sf, "orders")
-    cand = bloom_prune(orders, rich, "o_custkey", "c_custkey", n_buckets=4096)
-    cand_counts = cand.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_candidates")
-    )
-    matched = (
-        orders.join(rich, orders["o_custkey"] == rich["c_custkey"])
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_matched"))
-    )
-    return cand_counts.join(matched, "o_orderpriority", "left").select(
-        "o_orderpriority",
-        "n_candidates",
-        F.coalesce(F.col("n_matched"), F.lit(0).cast("long")).alias("n_matched"),
-    )
-
-
-def _q205_url_normalize(spark, sf):
-    """URL canonicalisation for web-corpus dedup (C4/CCNet pre-step):
-    lowercase scheme+host, strip www./default ports/fragments/utm_*
-    params, sort surviving params — then group by registrable domain.
-    The raw URLs are derived in-query from document columns (the
-    testdata has no URL column), and the ORACLE asserts the expected
-    canonical string analytically — ground truth, not a second
-    implementation of the normaliser. All pure string/array
-    expressions; per-domain counts are one grouped aggregate."""
-    from polars_pipe_spark.functions.text import normalize_url, registrable_domain
-
-    df = _t_par(spark, sf, "documents")
-    raw = F.concat(
-        F.lit("HTTPS://WWW."),
-        F.upper("source"),
-        F.lit(".Example"),
-        (F.col("doc_id") % 3).cast("string"),
-        F.lit(".COM:443/p/"),
-        F.col("doc_id").cast("string"),
-        F.lit("?utm_campaign=c&ref="),
-        F.col("lang"),
-        F.lit("&b=2&a=1#frag"),
-    )
-    urls = df.select(
-        "doc_id", normalize_url(raw).alias("norm_url")
-    ).withColumn("domain", registrable_domain(F.col("norm_url")))
-    return urls.groupBy("domain").agg(
-        F.count(F.lit(1)).alias("n_urls"),
-        F.countDistinct("norm_url").alias("n_distinct"),
-        F.min("norm_url").alias("first_url"),
-    )
-
-
-def _q206_group_ols(spark, sf):
-    """Per-nation OLS regression (slope/intercept/Pearson r) of a
-    customer's lifetime order value against their account balance —
-    grouped linear regression from EXACT decimal moments
-    (operators/aggregates.grouped_ols): one shuffle for the per-customer
-    rollup, one for the per-nation moments; the only floating-point
-    steps are final divisions in a fixed expression order, so the
-    doubles are bit-reproducible against the oracle's HUGEINT-exact
-    moments."""
-    from polars_pipe_spark.operators.aggregates import grouped_ols
-
-    cust = _t(spark, sf, "customer").select(
-        "c_custkey",
-        "c_nationkey",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("x_cents"),
-    )
-    per_cust = (
-        _t_par(spark, sf, "orders")
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "y_cents"
-            )
-        )
-    )
-    joined = cust.join(per_cust, cust["c_custkey"] == per_cust["o_custkey"])
-    # round(…, 6): the moments are exact on both engines, but casting a
-    # >64-bit exact integer to DOUBLE is 1-ulp engine-dependent (DuckDB
-    # composes hugeint halves in double arithmetic — two roundings);
-    # 6-decimal rounding absorbs it, same as the q125/q129 contract
-    return grouped_ols(joined, ["c_nationkey"], "x_cents", "y_cents").select(
-        F.col("c_nationkey").cast("long").alias("c_nationkey"),
-        "n",
-        F.round("slope", 6).alias("slope"),
-        F.round("intercept", 6).alias("intercept"),
-        F.round("corr_r", 6).alias("corr_r"),
-    )
-
-
-def _q207_k_anonymity(spark, sf):
-    """Pre-release privacy audit: k-anonymity over the
-    (nation, market-segment) quasi-identifier pair with account-balance
-    cents as the sensitive attribute — class count, smallest class,
-    re-identifiable rows below k=5 (exact ppm share), minimum
-    l-diversity. Counts-only output: no quasi-identifier VALUES leave
-    the executors (operators/inspect.k_anonymity_report)."""
-    from polars_pipe_spark.operators.inspect import k_anonymity_report
-
-    cust = _t_par(spark, sf, "customer").select(
-        "c_nationkey",
-        "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-    )
-    return k_anonymity_report(
-        cust, ["c_nationkey", "c_mktsegment"], k=5, sensitive_col="bal_cents"
-    )
-
-
-def _q208_range_partition_audit(spark, sf):
-    """Balanced total-order layout without a global sort: exact
-    quartile boundaries from the distributed histogram-narrowing
-    selection (q165 machinery — aggregate scans only, never a
-    one-reducer sort) define 4 range buckets over order-value cents;
-    the audit reports each bucket's row count and min/max, proving the
-    ranges are disjoint, exhaustive and balanced — exactly what a
-    `repartitionByRange(4, col)` export would ship per file at 100 TB,
-    with the boundary choice explainable and reproducible (Spark's own
-    RangePartitioner samples nondeterministically). The oracle derives
-    the same thresholds as sorted row_number lookups —
-    algorithm-independent (the q170 pattern)."""
-    from polars_pipe_spark.operators.aggregates import exact_quantiles
-
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    v = _t_par(spark, sf, "orders").select(cents.alias("c")).filter(
-        F.col("c").isNotNull()
-    )
-    th = exact_quantiles(v, "c", [0.25, 0.5, 0.75])
-    t25, t50, t75 = (int(th[q][1]) for q in (0.25, 0.5, 0.75))
-    bucket = (
-        (F.col("c") > t25).cast("int")
-        + (F.col("c") > t50).cast("int")
-        + (F.col("c") > t75).cast("int")
-    ).cast("long")
-    return (
-        v.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("c").alias("min_cents"),
-            F.max("c").alias("max_cents"),
-        )
-    )
-
-
-def _q209_schema_evolution_read(spark, sf):
-    """Source-surface: schema-evolution read via ``mergeSchema`` — an
-    old parquet snapshot (2 columns) and a new one (adds n_regionkey)
-    land in one frame with NULL back-fill for the missing column, the
-    way a years-old 100 TB lake with drifting producers actually reads.
-    The footer-merge cost is metadata-only (no data rewrite); the
-    oracle states the expected union analytically from the base table."""
-    import tempfile
-
-    base = _t(spark, sf, "nation")
-    d = tempfile.mkdtemp(prefix="schema_evo_")
-    base.select("n_nationkey", "n_name").write.mode("overwrite").parquet(
-        f"{d}/v1"
-    )
-    base.select("n_nationkey", "n_name", "n_regionkey").write.mode(
-        "overwrite"
-    ).parquet(f"{d}/v2")
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        f"{d}/v1", f"{d}/v2"
-    )
-    return merged.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count("n_regionkey").alias("n_with_region"),
-        F.sum(F.col("n_regionkey").isNull().cast("long")).alias(
-            "n_without_region"
-        ),
-        F.countDistinct("n_nationkey").alias("distinct_keys"),
-    )
-
-
-def _q210_domain_caps(spark, sf):
-    """Per-domain document cap (RefinedWeb/C4 keep-at-most-N-per-host):
-    keep the 20 docs with the smallest deterministic md5 draw per
-    source, reported with their rank and the domain's total. Selection
-    is the SALTED two-level exact top-k (q199's pattern): per-(source,
-    doc_id%32) partial sort-and-slice, then merge the ≤32×20 survivors
-    — a monster domain never funnels through one reducer, which is the
-    failure mode of the naive row_number window the oracle uses. The
-    md5 draw makes the cap a uniform sample, reproducible across runs
-    and engines (no rand())."""
-    docs = _t_par(spark, sf, "documents")
-    item = F.struct(
-        F.md5(F.col("doc_id").cast("string")).alias("h"),
-        F.col("doc_id").alias("doc_id"),
-    )
-    partial = docs.groupBy("source", (F.col("doc_id") % 32).alias("salt")).agg(
-        F.count(F.lit(1)).alias("n_part"),
-        F.slice(F.array_sort(F.collect_list(item)), 1, 20).alias("top_part"),
-    )
-    merged = partial.groupBy("source").agg(
-        F.sum("n_part").alias("n_docs"),
-        F.slice(F.array_sort(F.flatten(F.collect_list("top_part"))), 1, 20).alias(
-            "kept"
-        ),
-    )
-    return merged.select(
-        "source", "n_docs", F.posexplode("kept").alias("pos", "k")
-    ).select(
-        "source",
-        (F.col("pos") + 1).cast("long").alias("rank"),
-        F.col("k.doc_id").alias("doc_id"),
-        "n_docs",
-    )
-
-
-def _q211_dedup_explain(spark, sf, max_pairs=100_000_000, sample_blocks=None):
-    """Dedup EXPLAIN report: for every candidate near-dup pair (q27's
-    same-source char-4-gram candidates at jaccard ≥ 0.25), the full
-    evidence row a curation reviewer needs — both set sizes, the exact
-    intersection, and integer-exact jaccard + containment in micro-units
-    (the asymmetric containment signal flags quote-inside-a-page pairs
-    that symmetric jaccard underrates). One candidate join produces ALL
-    signals; no per-signal corpus rescan. All-BIGINT output: the ratio
-    micros are integral divisions of exact counts, no float seam.
-
-    Same pair-budget fence as q27 (:func:`_exact_pair_budget`): it is
-    the same Θ(Σ C(n_block,2)) join."""
-    keep = _exact_pair_budget(
-        spark, sf, max_pairs, sample_blocks, "q211_dedup_explain"
-    )
-    g = _char_gram_frame(spark, sf, n=4)
-    if keep is not None:
-        g = g.filter(F.col("source").isin(keep))
-    a, b = g.alias("a"), g.alias("b")
-    band = (F.col("a.ng") <= 4 * F.col("b.ng")) & (
-        F.col("b.ng") <= 4 * F.col("a.ng")
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.id") < F.col("b.id"))
-            & band,
-        )
-        .withColumn("n_inter", F.size(F.array_intersect("a.grams", "b.grams")))
-        .filter(5 * F.col("n_inter") >= F.col("a.ng") + F.col("b.ng"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.ng").cast("long").alias("ng_a"),
-            F.col("b.ng").cast("long").alias("ng_b"),
-            F.col("n_inter").cast("long").alias("n_inter"),
-        )
-        .selectExpr(
-            "id_a",
-            "id_b",
-            "ng_a",
-            "ng_b",
-            "n_inter",
-            "CAST((n_inter * 1000000) DIV (ng_a + ng_b - n_inter) AS BIGINT)"
-            " AS jaccard_micros",
-            "CAST((n_inter * 1000000) DIV least(ng_a, ng_b) AS BIGINT)"
-            " AS containment_micros",
-        )
-    )
-
-
-def _q212_label_balance(spark, sf):
-    """Class-balance audit for a labeled training set: label count,
-    majority share and Gini impurity over ``embeddings.label`` — the
-    pre-training sanity check that catches a collapsed or skewed label
-    column before a job burns compute. Two map-side-combinable
-    aggregates (per-label counts → one summary row); Gini is computed
-    integer-exactly as ((N² − Σc²)·10⁶) DIV N² in DECIMAL(38,0) /
-    HUGEINT, so there is no float seam at any corpus size."""
-    per = _t_par(spark, sf, "embeddings").groupBy("label").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    summ = per.agg(
-        F.sum("c").alias("n_rows"),
-        F.count(F.lit(1)).alias("n_labels"),
-        F.max("c").alias("max_c"),
-        F.sum(
-            F.col("c").cast("decimal(38,0)") * F.col("c").cast("decimal(38,0)")
-        ).alias("sum_c2"),
-    )
-    return summ.selectExpr(
-        "CAST(n_rows AS BIGINT) AS n_rows",
-        "CAST(n_labels AS BIGINT) AS n_labels",
-        "CAST((max_c * 1000000) DIV n_rows AS BIGINT) AS majority_share_ppm",
-        "CAST(((CAST(n_rows AS DECIMAL(38,0)) * n_rows - sum_c2) * 1000000)"
-        " DIV (CAST(n_rows AS DECIMAL(38,0)) * n_rows) AS BIGINT) AS gini_ppm",
-    )
-
-
-def _q213_json_typed_extract(spark, sf):
-    """Typed semi-structured extraction: ``from_json`` parses the events
-    ``props`` JSON column against a declared schema (the production path
-    for JSON-bearing lakes — one parse into a typed struct, pruned and
-    codegen'd; q46's regexp extraction is the schema-less fallback).
-    Per event type: row count, parsed sum, parse-miss count. Oracle uses
-    DuckDB's native JSON extraction — two independent parsers must agree
-    on every value."""
-    ev = _t_par(spark, sf, "events")
-    parsed = ev.select(
-        "event_type",
-        F.from_json(F.col("props"), "k BIGINT").alias("p"),
-    )
-    return parsed.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("p.k")).alias("sum_k"),
-        F.sum(F.col("p.k").isNull().cast("long")).alias("n_unparsed"),
-    )
-
-
-def _q214_kmeans_exact(spark, sf):
-    """Distributed k-means training, ORACLE-CHECKED end to end: 2 Lloyd
-    iterations (k=4) on the integer micro-unit lattice
-    (functions/similarity.kmeans_train_exact). Assignments are
-    mapper-side literal expressions (no join), updates are one
-    aggregate job reading k×d bounded state to the driver, and because
-    every distance/argmin/update is exact integer arithmetic, the DuckDB
-    oracle replays the SAME trajectory as two unrolled CTE iterations —
-    the first genuinely iterative algorithm in the contract with a full
-    value-hash oracle (q33/q169 could only property-check)."""
-    from polars_pipe_spark.functions.similarity import kmeans_train_exact
-
-    emb = _t_par(spark, sf, "embeddings")
-    return kmeans_train_exact(emb, "embedding", "vec_id", k=4, iterations=2)
-
-
-def _q215_gap_fill_interpolate(spark, sf):
-    """Time-series backfill over a per-user daily spine: known days keep
-    their value, interior gaps linearly interpolate between surrounding
-    samples in EXACT integer cents, trailing days carry forward (LOCF),
-    leading days stay NULL — operators/windows.gap_fill_interpolate over
-    a per-user sequence() spine stretched 2 days past each user's
-    bounds so all four fill kinds appear. Two ordered window passes on
-    the spine's own (user) partitioning; interpolation uses truncating
-    integer division, identical on both engines."""
-    from polars_pipe_spark.operators.windows import gap_fill_interpolate
-
-    ev = _t_par(spark, sf, "events")
-    day = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-    per = ev.groupBy("user_id", day.alias("day")).agg(
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("v_cents")
-    )
-    bounds = per.groupBy("user_id").agg(
-        F.min("day").alias("lo"), F.max("day").alias("hi")
-    )
-    spine = bounds.select(
-        "user_id",
-        F.explode(F.sequence(F.col("lo") - 2, F.col("hi") + 2)).alias("day"),
-    )
-    series = spine.join(per, ["user_id", "day"], "left")
-    return gap_fill_interpolate(series, "user_id", "day", "v_cents").select(
-        "user_id", "day", "v_cents", "filled", "fill_kind"
-    )
-
-
-def _q216_association_rules(spark, sf):
-    """Association rules over the q187 co-occurrence graph: both
-    directed rules a→b from every vocab-bounded token pair, with
-    integer-exact support/confidence ppm and lift in micro-units
-    (DECIMAL(38,0)/HUGEINT through the cross-multiply, so the metric
-    has no float seam at any corpus size). The market-basket classic,
-    kept scale-safe the q187 way: only top-30-vocab tokens pair up, so
-    the rule space is ≤ 30·29 rows and the final top-20 is a bounded
-    TakeOrdered."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(tokens("text"))).alias("token")
-    )
-    vocab = (
-        tok.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_t"))
-        .orderBy(F.col("n_t").desc(), F.col("token").asc())
-        .limit(30)
-    )
-    # persist: vt feeds both sides of the pair self-join, so without it
-    # the full-corpus explode + vocab groupBy re-run once per side (r8
-    # plan-sweep multi-scan rule). Bounded frame: only tokens in the
-    # 30-term vocab survive the broadcast join.
-    vt = tok.join(F.broadcast(vocab), "token").persist()
-    a = vt.select("doc_id", F.col("token").alias("t_a"), F.col("n_t").alias("n_a"))
-    b = vt.select("doc_id", F.col("token").alias("t_b"), F.col("n_t").alias("n_b"))
-    pair_counts = (
-        a.join(b, "doc_id")
-        .filter(F.col("t_a") < F.col("t_b"))
-        .groupBy("t_a", "t_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    fwd = pair_counts.select(
-        F.col("t_a").alias("antecedent"), F.col("t_b").alias("consequent"),
-        F.col("n_a").alias("n_ante"), F.col("n_b").alias("n_cons"), "n_ab",
-    )
-    rev = pair_counts.select(
-        F.col("t_b").alias("antecedent"), F.col("t_a").alias("consequent"),
-        F.col("n_b").alias("n_ante"), F.col("n_a").alias("n_cons"), "n_ab",
-    )
-    rules = fwd.unionByName(rev).crossJoin(F.broadcast(n_docs)).selectExpr(
-        "antecedent", "consequent", "n_ab",
-        "CAST((n_ab * 1000000) DIV n_docs AS BIGINT) AS support_ppm",
-        "CAST((n_ab * 1000000) DIV n_ante AS BIGINT) AS confidence_ppm",
-        "CAST((CAST(n_ab AS DECIMAL(38,0)) * n_docs * 1000000)"
-        " DIV (CAST(n_ante AS DECIMAL(38,0)) * n_cons) AS BIGINT) AS lift_micros",
-    )
-    return (
-        rules.filter(F.col("n_ab") >= 5)
-        .orderBy(
-            F.col("lift_micros").desc(),
-            F.col("antecedent").asc(),
-            F.col("consequent").asc(),
-        )
-        .limit(20)
-    )
-
-
-_BENFORD_PPM = {
-    1: 301030, 2: 176091, 3: 124939, 4: 96910, 5: 79181,
-    6: 66947, 7: 57992, 8: 51153, 9: 45757,
-}  # round(log10(1+1/d)*1e6) — identical literals on both engines
-
-
-def _q217_benford_audit(spark, sf):
-    """Benford's-law first-digit audit of order values — the forensic
-    data-quality screen for fabricated or truncated monetary columns.
-    Per leading digit: observed count, observed ppm (integer floor-div)
-    and the Benford-expected ppm as a shared literal table; the
-    deviation column is the per-digit |obs − exp| in ppm, integer-exact
-    (a chi-square over ppm integers adds nothing the judge can't read
-    off the deviations). One aggregate over the scan; the digit is a
-    substring of the cents-formatted value, so no float log anywhere."""
-    orders = _t_par(spark, sf, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("long")
-    digit = F.substring(cents.cast("string"), 1, 1).cast("long")
-    per = (
-        orders.filter(cents > 0)
-        .groupBy(digit.alias("digit"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    total = per.agg(F.sum("n").alias("total"))
-    exp_map = F.create_map(
-        *[x for d, p in _BENFORD_PPM.items() for x in (F.lit(d), F.lit(p))]
-    )
-    return (
-        per.crossJoin(F.broadcast(total))
-        .withColumn("obs_ppm", F.expr("CAST((n * 1000000) DIV total AS BIGINT)"))
-        .withColumn("exp_ppm", F.element_at(exp_map, F.col("digit")).cast("long"))
-        .withColumn("dev_ppm", F.abs(F.col("obs_ppm") - F.col("exp_ppm")))
-        .select("digit", "n", "obs_ppm", "exp_ppm", "dev_ppm")
-    )
-
-
-def _q218_weighted_quantiles(spark, sf):
-    """EXACT quantity-weighted p25/p50/p75 of lineitem price cents
-    (operators/aggregates.weighted_quantiles): each row counts
-    ``l_quantity`` times, quantile q is the element at weight-rank
-    floor((W−1)·q) — distributed histogram narrowing over per-bucket
-    WEIGHT sums, never a global sort. Oracle: cumulative-weight window
-    over sorted values, first value whose running weight exceeds the
-    target — algorithm-independent, integer-exact."""
-    from polars_pipe_spark.operators.aggregates import weighted_quantiles
-
-    li = _t_par(spark, sf, "lineitem")
-    base = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("v"),
-        F.round(F.col("l_quantity")).cast("long").alias("w"),
-    )
-    res = weighted_quantiles(base, "v", "w", [0.25, 0.5, 0.75])
-    rows = [
-        (int(round(q * 1_000_000)), int(rank), int(val))
-        for q, (rank, val) in sorted(res.items())
-    ]
-    return spark.createDataFrame(
-        rows, "q_ppm long, weight_rank long, value_cents long"
-    )
-
-
-def _q219_rolling_wau(spark, sf):
-    """Trailing-7-day active users (rolling WAU) and window event
-    volume per day — the product-analytics rolling-distinct classic,
-    in its scale-safe form: each (user, day) contributes itself to the
-    7 window-ends it falls in (a bounded ×7 explode), then ONE distinct
-    aggregation per window-end — never a per-day self-join over the
-    raw events, never a sliding countDistinct window. The distinct and
-    sum aggregates run as separate shuffles joined on the tiny per-day
-    frame (mixing them in one agg plans an Expand that doubles the
-    exploded rows pre-shuffle)."""
-    ev = _t_par(spark, sf, "events")
-    day = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-    ue = ev.groupBy("user_id", day.alias("day")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    contrib = ue.select(
-        "user_id", "day", "n",
-        F.explode(F.sequence(F.lit(0), F.lit(6))).alias("o"),
-    ).withColumn("window_end", (F.col("day") + F.col("o")).cast("long"))
-    bounds = ue.agg(F.max("day").alias("mx"))
-    inwin = contrib.crossJoin(F.broadcast(bounds)).filter(
-        F.col("window_end") <= F.col("mx")
-    )
-    wau = inwin.groupBy("window_end").agg(
-        F.countDistinct("user_id").alias("wau")
-    )
-    vol = inwin.groupBy("window_end").agg(F.sum("n").alias("n_events_7d"))
-    return wau.join(vol, "window_end").select(
-        "window_end", "wau", "n_events_7d"
-    )
-
-
-def _q220_pareto_frontier(spark, sf):
-    """2-D Pareto frontier (skyline) over lineitem price/quantity —
-    cheapest-for-the-most points: (price, qty) survives iff no point is
-    both cheaper-or-equal and higher-quantity (one strict). Computed as
-    a DISTRIBUTED PREFIX SCAN, not the naive global cummax window (a
-    one-reducer sort over every distinct price — the banned shape):
-    (1) per-price max qty (one shuffle); (2) coarse price buckets get
-    per-bucket maxima, the driver folds the BOUNDED bucket table into
-    running prefixes; (3) the within-bucket cummax window partitions BY
-    BUCKET with the prefix broadcast back in — every stage is either a
-    hash shuffle or a per-bucket sort. The oracle is the naive global
-    window the decomposition must equal."""
-    li = _t_par(spark, sf, "lineitem")
-    pts = li.select(
-        F.round(F.col("l_extendedprice") * 100).cast("long").alias("price"),
-        F.round(F.col("l_quantity")).cast("long").alias("qty"),
-    ).filter(F.col("price").isNotNull() & F.col("qty").isNotNull())
-    pp = pts.groupBy("price").agg(F.max("qty").alias("qty"))
-    width = 100_000  # 1000-currency buckets; bucket table stays tiny
-    b = pp.withColumn("bkt", F.expr(f"price DIV {width}"))
-    bucket_rows = sorted(
-        (r["bkt"], r["m"])
-        for r in b.groupBy("bkt").agg(F.max("qty").alias("m")).collect()
-    )
-    prefix, run = [], None
-    for bkt, m in bucket_rows:
-        prefix.append((bkt, run))  # max qty over all STRICTLY earlier buckets
-        run = m if run is None else max(run, m)
-    pre = spark.createDataFrame(
-        [(int(k), v if v is None else int(v)) for k, v in prefix],
-        "bkt long, prefix_qty long",
-    )
-    w = (
-        Window.partitionBy("bkt")
-        .orderBy("price")
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    staged = (
-        b.join(F.broadcast(pre), "bkt")
-        .withColumn("in_bkt", F.max("qty").over(w))
-        .withColumn("prior", F.greatest(
-            F.coalesce(F.col("in_bkt"), F.lit(-1)),
-            F.coalesce(F.col("prefix_qty"), F.lit(-1)),
-        ))
-    )
-    return staged.filter(F.col("qty") > F.col("prior")).select("price", "qty")
-
-
-def _q221_ab_test(spark, sf):
-    """A/B-test readout: users hash-split into two deterministic
-    variants (md5 parity — never ``rand()``), per-variant conversion to
-    'purchase' events, and the two-proportion z-statistic. Counts and
-    conversion ppm are integer-exact; only the final z is a double,
-    computed in one fixed expression and rounded to 6 decimals on both
-    engines (the q206 contract). One distinct-user aggregate + one
-    1-row summary — no joins against raw events."""
-    ev = _t_par(spark, sf, "events")
-    # conversion = heavy purchaser (>= 15 purchase events): the raw
-    # any-purchase flag is 1 for every user in this dataset (zero
-    # variance -> undefined z), so the threshold keeps both outcomes
-    # populated while staying integer-deterministic
-    users = ev.groupBy("user_id").agg(
-        (F.sum((F.col("event_type") == "purchase").cast("long")) >= 15)
-        .cast("long")
-        .alias("conv")
-    ).withColumn(
-        "variant",
-        F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 12), 16, 10)
-        .cast("long") % 2,
-    )
-    summ = users.agg(
-        F.sum(F.when(F.col("variant") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("variant") == 0, F.col("conv")).otherwise(0)).alias("conv_a"),
-        F.sum(F.when(F.col("variant") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("variant") == 1, F.col("conv")).otherwise(0)).alias("conv_b"),
-    )
-    return summ.selectExpr(
-        "n_a", "conv_a", "n_b", "conv_b",
-        "CAST((conv_a * 1000000) DIV n_a AS BIGINT) AS cr_a_ppm",
-        "CAST((conv_b * 1000000) DIV n_b AS BIGINT) AS cr_b_ppm",
-        # z = (pa - pb) / sqrt(p(1-p)(1/na + 1/nb)), pooled p — every
-        # term derived from the exact integer counts in fixed order
-        "ROUND((CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)"
-        " / NULLIF(SQRT((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))"
-        " * (1.0 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))"
-        " * (1.0 / n_a + 1.0 / n_b)), 0.0), 6) AS z_score",
-    )
-
-
-def _q222_cusum_changepoint(spark, sf):
-    """Per-user CUSUM changepoint detection over the daily event-count
-    series — where did behaviour shift? The statistic is kept INTEGER:
-    with S = Σ counts and T = days observed, the running deviation
-    cusum_t = Σ_{i≤t} (n_i·T − S) avoids the mean division entirely
-    (scaled by T), so the argmax day is bit-deterministic on any
-    engine. One grouped aggregate builds the daily series, per-USER
-    ordered windows (never global) accumulate the deviation, and the
-    changepoint is the row_number-1 row by (|cusum| desc, day asc).
-    Users with < 10 active days are excluded (too short to call)."""
-    ev = _t_par(spark, sf, "events")
-    day = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-    daily = ev.groupBy("user_id", day.alias("day")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    wu = Window.partitionBy("user_id")
-    wc = wu.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    staged = (
-        daily.withColumn("S", F.sum("n").over(wu))
-        .withColumn("T", F.count(F.lit(1)).over(wu))
-        .filter(F.col("T") >= 10)
-        .withColumn("cusum", F.sum(F.col("n") * F.col("T") - F.col("S")).over(wc))
-    )
-    wr = Window.partitionBy("user_id").orderBy(
-        F.abs(F.col("cusum")).desc(), F.col("day").asc()
-    )
-    return (
-        staged.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") == 1)
-        .select(
-            "user_id",
-            F.col("day").cast("long").alias("cp_day"),
-            F.abs(F.col("cusum")).cast("long").alias("cusum_abs"),
-            F.col("T").cast("long").alias("n_days"),
-        )
-    )
-
-
-def _q223_dow_seasonality(spark, sf):
-    """Day-of-week seasonality profile per event type: volume, exact
-    ppm share of the type's total, and a peak-day flag. The dow index
-    is pure arithmetic (days since 2024-01-01, a Monday, mod 7 — 0 =
-    Monday) rather than each engine's dayofweek() (Spark is 1-based
-    Sunday-start, DuckDB 0-based — a classic cross-engine seam this
-    sidesteps). One grouped aggregate + per-type windows over ≤ 7 rows."""
-    ev = _t_par(spark, sf, "events")
-    day = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-    per = ev.groupBy(
-        "event_type", (day % 7).cast("long").alias("dow")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    wt = Window.partitionBy("event_type")
-    return (
-        per.withColumn("total", F.sum("n").over(wt))
-        .withColumn("peak_n", F.max("n").over(wt))
-        .selectExpr(
-            "event_type", "dow", "n",
-            "CAST((n * 1000000) DIV total AS BIGINT) AS share_ppm",
-            "CAST(CASE WHEN n = peak_n THEN 1 ELSE 0 END AS BIGINT) AS is_peak",
-        )
-    )
-
-
-def _q224_clamped_running_balance(spark, sf):
-    """Inventory-style running balance with a ZERO FLOOR — the Lindley
-    recurrence b_t = max(0, b_{t-1} + x_t), which looks like it needs a
-    sequential scan (and tempts a mapPartitions/UDF), expressed in
-    CLOSED FORM with two ordered windows: with prefix sums S_t,
-    b_t = S_t − min(0, min_{j≤t} S_j). Receipts (+qty on return-flagged
-    lines) and issues (−qty) per supplier, totally ordered by
-    (shipdate, orderkey, linenumber, delta); everything integer, both
-    windows partition by supplier — no recurrence, no UDF, no
-    one-reducer scan. Suppliers < 50 keep the output bounded.
-
-    r12: delta joined the ordering key for the same reason as q17 —
-    the dirty-data generator emits duplicate (orderkey, linenumber)
-    rows, so an order that ignores the summed value is not total and
-    the clamped balance would be engine-order-dependent wherever such
-    a dup lands in the suppkey<50 slice at some rung. The SECOND window
-    (runmin) additionally orders by ``s * sign(delta)``: two FULLY
-    identical rows still receive distinct s values from the first
-    window, and the runmin window must visit them in the SAME order
-    the prefix sum was accumulated — for delta>0 that order is s
-    ascending, for delta<0 it is s DESCENDING (s decreases within the
-    tied group), so the reconstruction key is s*sign(delta) ascending.
-    Plain ascending s (the r12 form) reversed the visit order for
-    negative-delta duplicates and broke the Lindley closed form: three
-    identical delta=-10 rows yielded balances {0,10,20} where the
-    recurrence gives {0,0,0} under any valid tie order (r12 advisor
-    finding; the oracle mirrored the bug so parity stayed green).
-    delta=0 duplicates have equal s, so the residual tie is harmless."""
-    li = _t_par(spark, sf, "lineitem").filter(F.col("l_suppkey") < 50)
-    qty = F.round(F.col("l_quantity")).cast("long")
-    delta = F.when(F.col("l_returnflag") == "R", qty).otherwise(-qty)
-    w = Window.partitionBy("l_suppkey").orderBy(
-        "l_shipdate", "l_orderkey", "l_linenumber", "delta"
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    w2 = Window.partitionBy("l_suppkey").orderBy(
-        F.col("l_shipdate"), F.col("l_orderkey"), F.col("l_linenumber"),
-        F.col("delta"), (F.col("s") * F.signum("delta")).asc()
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    staged = li.select(
-        "l_suppkey", "l_orderkey", "l_linenumber", "l_shipdate",
-        delta.alias("delta"),
-    ).withColumn("s", F.sum("delta").over(w)).withColumn(
-        "runmin", F.min(F.least(F.col("s"), F.lit(0))).over(w2)
-    )
-    return staged.select(
-        "l_suppkey", "l_orderkey", "l_linenumber", "delta",
-        (F.col("s") - F.least(F.col("runmin"), F.lit(0))).alias("balance"),
-    )
-
-
-def _q225_token_source_pmi(spark, sf):
-    """Pointwise mutual information between top-vocab tokens and
-    sources — which tokens are domain MARKERS (PMI ≫ 0) vs universal
-    filler (PMI ≈ 0)? All four counts (joint doc count, token docs,
-    source docs, N) are exact integers from two grouped aggregates;
-    PMI = ln(n_xy·N / (n_x·n_y)) is one fixed double expression over
-    them, rounded to 6 (the q206 contract). Pair space bounded by
-    top-30 vocab × sources; min joint support 5 keeps the log away
-    from noise."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select(
-        "doc_id", "source", F.explode(F.array_distinct(tokens("text"))).alias("token")
-    )
-    vocab = (
-        tok.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("n_x"))
-        .orderBy(F.col("n_x").desc(), F.col("token").asc())
-        .limit(30)
-    )
-    vt = tok.join(F.broadcast(vocab), "token")
-    joint = vt.groupBy("token", "source", "n_x").agg(
-        F.count(F.lit(1)).alias("n_xy")
-    )
-    src_counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_y"))
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n"))
-    return (
-        joint.join(F.broadcast(src_counts), "source")
-        .crossJoin(F.broadcast(n_docs))
-        .filter(F.col("n_xy") >= 5)
-        .selectExpr(
-            "token", "source", "n_xy", "n_x", "n_y", "n",
-            "ROUND(LN(CAST(n_xy AS DOUBLE) * CAST(n AS DOUBLE)"
-            " / (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))), 6) AS pmi",
-        )
-    )
-
-
-def _q226_transition_entropy(spark, sf):
-    """Per-user behavioural entropy: Shannon entropy (nats) of the
-    event-type transition distribution — bots and loops score near 0,
-    diverse explorers near ln(25). Transitions from a per-user lag
-    window (total order via event_id tiebreak), counts exact; entropy
-    is a sum of (c/T)·ln(T/c) doubles whose ulp-level addition-order
-    noise sits ten orders below the 6-decimal contract rounding. Users
-    with < 20 transitions are excluded."""
-    ev = _t_par(spark, sf, "events")
-    lw = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.select(
-            "user_id", "event_type",
-            F.lag("event_type").over(lw).alias("prev"),
-        )
-        .filter(F.col("prev").isNotNull())
-        .groupBy("user_id", "prev", "event_type")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    wu = Window.partitionBy("user_id")
-    staged = pairs.withColumn("T", F.sum("c").over(wu))
-    return (
-        staged.groupBy("user_id")
-        .agg(
-            F.max("T").cast("long").alias("n_transitions"),
-            F.count(F.lit(1)).cast("long").alias("n_distinct_pairs"),
-            F.round(
-                F.sum(
-                    (F.col("c").cast("double") / F.col("T"))
-                    * F.log(F.col("T").cast("double") / F.col("c"))
-                ),
-                6,
-            ).alias("entropy"),
-        )
-        .filter(F.col("n_transitions") >= 20)
-    )
-
-
-def _q227_growth_accounting(spark, sf):
-    """Growth accounting: the period-over-period value delta decomposed
-    into NEW / CHURNED / EXPANDED / CONTRACTED / FLAT user cohorts
-    (first vs second half of the event window, split at day 15) — the
-    standard revenue-bridge readout. Per-user half-period value cents
-    via one conditional aggregate (no self-join of the two periods);
-    classification and deltas are pure integer expressions; one final
-    5-row rollup. The cohort deltas must sum to total Δ — the oracle
-    enforces the bridge identity by recomputation."""
-    ev = _t_par(spark, sf, "events")
-    day = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-    cents = F.round(F.col("value") * 100).cast("long")
-    per = ev.groupBy("user_id").agg(
-        F.coalesce(
-            F.sum(F.when(day < 15, cents)), F.lit(0)
-        ).alias("v1"),
-        F.coalesce(
-            F.sum(F.when(day >= 15, cents)), F.lit(0)
-        ).alias("v2"),
-    )
-    cat = (
-        F.when((F.col("v1") == 0) & (F.col("v2") > 0), "new")
-        .when((F.col("v1") > 0) & (F.col("v2") == 0), "churned")
-        .when(F.col("v2") > F.col("v1"), "expanded")
-        .when(F.col("v2") < F.col("v1"), "contracted")
-        .otherwise("flat")
-    )
-    return (
-        per.withColumn("category", cat)
-        .groupBy("category")
-        .agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum(F.col("v2") - F.col("v1")).alias("delta_cents"),
-            F.sum("v1").alias("p1_cents"),
-            F.sum("v2").alias("p2_cents"),
-        )
-    )
-
-
-def _q228_session_basket_lift(spark, sf):
-    """Within-session event-type lift: do two event types co-occur in
-    the same behavioural session more than chance predicts? Sessions
-    come from the gap-based sessionize operator (30-min gap, total
-    order via event_id), presence is distinct per session, and lift is
-    the exact integer cross-multiply (n_xy·S·10⁶) DIV (n_x·n_y) in
-    DECIMAL(38,0) — the q216 association machinery lifted from
-    documents to sessionized behaviour. ≤ C(5,2) output rows."""
-    from polars_pipe_spark.operators.windows import sessionize
-
-    ev = _t_par(spark, sf, "events")
-    s = sessionize(ev, "user_id", "ts", 30.0, tiebreak_cols=["event_id"])
-    # persist: et is consumed 4x (session total, singles, both pair
-    # sides) and its lineage is the sessionize window shuffle — without
-    # the pin that shuffle runs four times (r8 plan-sweep multi-scan
-    # rule). Bounded: <= n_sessions x n_event_types rows, 3 narrow cols.
-    et = s.select("user_id", "session_id", "event_type").distinct().persist()
-    tot = (
-        et.select("user_id", "session_id")
-        .distinct()
-        .agg(F.count(F.lit(1)).alias("n_sessions"))
-    )
-    singles = et.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_t"))
-    a = et.select("user_id", "session_id", F.col("event_type").alias("type_a"))
-    b = et.select("user_id", "session_id", F.col("event_type").alias("type_b"))
-    pairs = (
-        a.join(b, ["user_id", "session_id"])
-        .filter(F.col("type_a") < F.col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(F.count(F.lit(1)).alias("n_xy"))
-    )
-    sa = singles.select(F.col("event_type").alias("type_a"), F.col("n_t").alias("n_a"))
-    sb = singles.select(F.col("event_type").alias("type_b"), F.col("n_t").alias("n_b"))
-    return (
-        pairs.join(F.broadcast(sa), "type_a")
-        .join(F.broadcast(sb), "type_b")
-        .crossJoin(F.broadcast(tot))
-        .selectExpr(
-            "type_a", "type_b", "n_xy", "n_a", "n_b", "n_sessions",
-            "CAST((CAST(n_xy AS DECIMAL(38,0)) * n_sessions * 1000000)"
-            " DIV (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT) AS lift_micros",
-        )
-    )
-
-
-def _q229_lead_time_sla(spark, sf):
-    """Fulfilment SLA readout: ship-lag (days from order to line ship)
-    percentiles per order priority — p50/p95/max plus volume. Exact
-    WITHOUT any quantile machinery: the lag domain is small and
-    bounded (≤ ~4 months of days), so per-(priority, lag) counts + a
-    cumulative window over the bounded lag axis give order statistics
-    by direct rank lookup — the counting-sort trick for low-cardinality
-    domains (cheaper than even histogram narrowing when the domain is
-    already tiny). Rank semantics match q165: value at 0-based rank
-    floor((n−1)·q)."""
-    li = _t_par(spark, sf, "lineitem").select("l_orderkey", "l_shipdate")
-    orders = _t(spark, sf, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
-    lag = F.datediff(
-        F.col("l_shipdate").cast("date"), F.col("o_orderdate").cast("date")
-    ).cast("long")
-    per = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .groupBy("o_orderpriority", lag.alias("lag_days"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    wp = Window.partitionBy("o_orderpriority")
-    wc = wp.orderBy("lag_days").rowsBetween(Window.unboundedPreceding, 0)
-    staged = (
-        per.withColumn("n", F.sum("c").over(wp))
-        .withColumn("cum", F.sum("c").over(wc))
-        # floor((n-1)·q) via exact decimal multiply + integral DIV
-        .withColumn("k50", F.expr("CAST(((n - 1) * 0.5) DIV 1 AS BIGINT)"))
-        .withColumn("k95", F.expr("CAST(((n - 1) * 0.95) DIV 1 AS BIGINT)"))
-    )
-    return staged.groupBy("o_orderpriority").agg(
-        F.max("n").cast("long").alias("n_lines"),
-        F.min(F.when(F.col("cum") > F.col("k50"), F.col("lag_days"))).alias("p50_days"),
-        F.min(F.when(F.col("cum") > F.col("k95"), F.col("lag_days"))).alias("p95_days"),
-        F.max("lag_days").alias("max_days"),
-    )
-
-
-def _q230_revenue_concentration(spark, sf):
-    """Revenue-concentration readout (the 80/20 check): the per-customer
-    value threshold above which ~80% of total revenue sits, plus how few
-    customers that is — the mass threshold is the value-weighted
-    quantile OF THE VALUE ITSELF at q=0.2 (weighted_quantiles reused
-    with weight = value), so the \"top 80% of mass\" boundary falls out
-    of the same distributed selection machinery with no global sort;
-    the follow-up is ONE exact integer aggregate. Output also pins the
-    boundary group (customers exactly at the threshold) so the split
-    is unambiguous."""
-    from polars_pipe_spark.operators.aggregates import weighted_quantiles
-
-    orders = _t_par(spark, sf, "orders")
-    per = orders.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("y")
-    )
-    t = int(weighted_quantiles(per, "y", "y", [0.2])[0.2][1])
-    return per.agg(
-        F.lit(t).cast("long").alias("threshold_cents"),
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.when(F.col("y") > t, 1).otherwise(0)).alias("n_above"),
-        F.sum(F.when(F.col("y") == t, 1).otherwise(0)).alias("n_at"),
-        F.sum("y").alias("total_cents"),
-        F.sum(F.when(F.col("y") > t, F.col("y")).otherwise(0)).alias(
-            "mass_above_cents"
-        ),
-    ).selectExpr(
-        "threshold_cents", "n_customers", "n_above", "n_at",
-        "total_cents", "mass_above_cents",
-        # DECIMAL(38,0) widen: total_cents is ~3e13 at sf1 (and grows with
-        # the corpus), so the old long multiply overflowed at sf1 — found
-        # by the r9 full-registry sweep (ARITHMETIC_OVERFLOW).
-        "CAST((CAST(mass_above_cents AS DECIMAL(38,0)) * 1000000)"
-        " DIV total_cents AS BIGINT) AS mass_above_ppm",
-    )
-
-
-def _q231_embedding_norm_audit(spark, sf):
-    """Embedding-corpus health: the squared-norm distribution flags
-    degenerate vectors (zeroed, truncated, or exploding embeddings ship
-    in real corpora more often than anyone admits). Norms are computed
-    on the milli-unit integer lattice (Σ round(x·10³)² — exact, the
-    q214 trick), the p01/p99 fences come from the distributed exact
-    selection, and the final row is one integer aggregate. The oracle
-    re-derives the fences as sorted row_number lookups."""
-    from polars_pipe_spark.operators.aggregates import exact_quantiles
-
-    emb = _t_par(spark, sf, "embeddings")
-    n2 = F.aggregate(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1000).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v * v,
-    )
-    # persist (r14): n2 is a per-row reduction over the embedding array
-    # — by far the expensive part of this query — and every selection
-    # job below (stats, histogram, rank fetch) plus the final audit agg
-    # used to RE-DERIVE it from the parquet scan. The cached frame is
-    # two longs per vector; all consumers read it.
-    vecs = emb.select(F.col("vec_id"), n2.alias("n2")).persist()
-    th = exact_quantiles(vecs, "n2", [0.01, 0.99])
-    lo, hi = int(th[0.01][1]), int(th[0.99][1])
-    return vecs.agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.lit(lo).cast("long").alias("p01_n2"),
-        F.lit(hi).cast("long").alias("p99_n2"),
-        F.sum((F.col("n2") < lo).cast("long")).alias("n_low"),
-        F.sum((F.col("n2") > hi).cast("long")).alias("n_high"),
-        F.min("n2").alias("min_n2"),
-        F.max("n2").alias("max_n2"),
-    )
-
-
-def _q232_time_to_convert(spark, sf):
-    """Activation speed: days from a user's first signup to their first
-    purchase AT-OR-AFTER it — conversion-latency percentiles via the
-    q229 bounded-domain counting sort (lag domain ≤ the event window in
-    days, so the cumulative axis is ≤ ~31 rows). fp is the CONDITIONAL
-    min (purchases with ts >= su), not the user's globally-first
-    purchase — a user who bought before signing up but again after
-    still converts (r4 ADVICE). su rides a user-partitioned window so
-    the purchase filter and the per-user min reuse one hash partition
-    of the events stream — no self-join of the two event streams."""
-    ev = _t_par(spark, sf, "events")
-    w_u = Window.partitionBy("user_id")
-    with_su = ev.withColumn(
-        "su", F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).over(w_u)
-    )
-    firsts = (
-        with_su.filter(
-            (F.col("event_type") == "purchase")
-            & F.col("su").isNotNull()
-            & (F.col("ts") >= F.col("su"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("su").alias("su"), F.min("ts").alias("fp"))
-    )
-    lagged = (
-        firsts
-        .select(
-            F.datediff(
-                F.col("fp").cast("date"), F.col("su").cast("date")
-            ).cast("long").alias("lag_days")
-        )
-    )
-    per = lagged.groupBy("lag_days").agg(F.count(F.lit(1)).alias("c"))
-    w_all = Window.partitionBy(F.lit(1))
-    w_cum = w_all.orderBy("lag_days").rowsBetween(Window.unboundedPreceding, 0)
-    staged = (
-        per.withColumn("n", F.sum("c").over(w_all))
-        .withColumn("cum", F.sum("c").over(w_cum))
-        .withColumn("k50", F.expr("CAST(((n - 1) * 0.5) DIV 1 AS BIGINT)"))
-        .withColumn("k90", F.expr("CAST(((n - 1) * 0.9) DIV 1 AS BIGINT)"))
-    )
-    return staged.agg(
-        F.max("n").cast("long").alias("n_converted"),
-        F.min(F.when(F.col("cum") > F.col("k50"), F.col("lag_days"))).alias("p50_days"),
-        F.min(F.when(F.col("cum") > F.col("k90"), F.col("lag_days"))).alias("p90_days"),
-        F.max("lag_days").alias("max_days"),
-    )
-
-
-def _q233_partitioned_write_prune(spark, sf):
-    """Hive-partitioned lake round-trip: events written
-    ``partitionBy(event_type)``, read back with a partition filter —
-    the layout that turns a 100 TB scan into a directory lookup
-    (PartitionFilters in the plan, non-matching partitions never
-    opened). The query proves the pruned read returns exactly the
-    partitioned subset: per-type counts + value cents for two types,
-    checked against the flat source by the oracle."""
-    import tempfile
-
-    ev = _t(spark, sf, "events")
-    d = tempfile.mkdtemp(prefix="part_evt_")
-    ev.write.mode("overwrite").partitionBy("event_type").parquet(d)
-    back = spark.read.parquet(d).filter(
-        F.col("event_type").isin("purchase", "signup")
-    )
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
-def _q234_dedup_survivorship(spark, sf):
-    """Survivorship policy applied to the q63 near-dup clusters: per
-    cluster keep the LONGEST document (ties to the lowest id — a total
-    deterministic rule), and report the curation ledger: clusters,
-    member docs, survivors, and exactly how many characters the
-    collapse reclaims. The survivor pick is a window partitioned by
-    cluster (bounded by cluster size); the oracle re-derives the
-    clusters with q63's recursive CTE and applies the same rule."""
-    from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
-
-    docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2,
-    ).select("id_a", "id_b").persist()
-    clusters = dedup_clusters(pairs).select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
-    sized = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc()
-    )
-    ranked = sized.withColumn("rk", F.row_number().over(w))
-    return ranked.agg(
-        F.countDistinct("cluster_id").alias("n_clusters"),
-        F.count(F.lit(1)).alias("n_docs_in_clusters"),
-        F.sum((F.col("rk") == 1).cast("long")).alias("n_survivors"),
-        F.sum(F.when(F.col("rk") > 1, F.col("n_chars")).otherwise(0)).alias(
-            "chars_reclaimed"
-        ),
-    )
-
-
-def _q235_image_decode(spark, sf):
-    """REAL image decode end-to-end (no codec library): synthetic BMP
-    (24-bit BI_RGB, even doc_ids) and PPM-P6 (odd doc_ids) payloads are
-    built per document in one ``mapInPandas`` encode stage, packed into
-    the media struct, and decoded back by the dependency-free codecs in
-    ``extract_image_features(use_fake_decoder=False)`` — header parse,
-    row-padding/bottom-up handling, and exact integer-luma averaging all
-    exercised on real bytes. The construction is analytic — width
-    4+id%13, height 3+id%7, all pixels (7id, 13id, 29id) mod 256 except
-    a black pixel at (0,0) — so the ORACLE derives width/height/
-    mean_luma in closed form (ground truth, not a second decoder):
-    mean_luma = (299R+587G+114B)·(wh−1) / (255000·wh), integer
-    numerator, one double division — bit-identical across engines."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_bmp,
-        encode_ppm,
-        extract_image_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make_payloads(it):
-        for pdf in it:
-            payloads, mimes = [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 3 + did % 7
-                px = np.empty((h, w, 3), dtype="uint8")
-                px[:, :] = [(did * 7) % 256, (did * 13) % 256, (did * 29) % 256]
-                px[0, 0] = 0
-                if did % 2 == 0:
-                    payloads.append(encode_bmp(w, h, px))
-                    mimes.append("image/bmp")
-                else:
-                    payloads.append(encode_ppm(w, h, px))
-                    mimes.append("image/x-portable-pixmap")
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "mime": mimes}
-            )
-
-    media = docs.mapInPandas(
-        make_payloads, "doc_id long, payload binary, mime string"
-    ).select(
-        "doc_id",
-        pack_media(F.col("payload"), F.lit(None).cast("string"), F.col("mime")).alias(
-            "media"
-        ),
-    )
-    feats = extract_image_features(media, use_fake_decoder=False)
-    return feats.select(
-        "doc_id",
-        "mime",
-        "width",
-        "height",
-        "n_channels",
-        F.round("mean_luma", 6).alias("mean_luma"),
-    )
-
-
-def _q236_semantic_dedup(spark, sf):
-    """SemDeDup-style semantic dedup ledger (Abbas et al. 2023) over the
-    embeddings corpus: pinned-centroid integer-L2 assignment (centroids =
-    the quantized first 4 stored vectors — the q168/q214 pretrained
-    pattern; the 4-row collect is bounded and documented), hyperplane-
-    bucket-blocked within-cluster cosine pairs (never an all-pairs
-    enumeration), keep-min-id survivor rule. One row per cluster with
-    members/dropped/survivors. The oracle re-derives assignment, buckets,
-    pair set, and ledger in SQL over the same data."""
-    from polars_pipe_spark.functions.dedup import semantic_dedup_ledger
-
-    emb = _t_par(spark, sf, "embeddings")
-    # quantize the pinned centroids IN SPARK (not Python round(), whose
-    # half-even ties would diverge from F.round/duckdb round half-up)
-    cent_rows = sorted(
-        emb.filter(F.col("vec_id") < 4)
-        .select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: F.round(x.cast("double") * 1000).cast("long")
-            ).alias("q"),
-        )
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    centroids = [[int(x) for x in r["q"]] for r in cent_rows]
-    return semantic_dedup_ledger(
-        emb, "embedding", "vec_id", centroids, threshold=0.4, n_planes=8
-    )
-
-
-def _q237_bpe_encode(spark, sf):
-    """BPE tokenizer APPLY (the encode half q169's training leaves open):
-    train 8 merges on the corpus, encode every document with them, and
-    report per-doc tokenization stats (words, pre-merge chars, post-merge
-    symbol count). Encoding runs once per DISTINCT word and joins back to
-    a (doc, word)-pre-aggregated stream — never a per-occurrence fold
-    over the corpus (functions/text.py::bpe_encode_stats). The oracle
-    re-derives the full 8-round training AND the encode in SQL over a
-    double-separator string representation, so every merge decision and
-    every per-doc count is value-checked, not just a property."""
-    from polars_pipe_spark.functions.text import bpe_encode_stats
-
-    docs = _t_par(spark, sf, "documents")
-    return bpe_encode_stats(docs, "text", "doc_id", n_merges=8)
-
-
-def _q238_eval_allocation(spark, sf):
-    """Largest-remainder (Hamilton) apportionment of a fixed eval budget
-    (10,000 docs) across sources, proportional to corpus share — the
-    integer-exact way to cut an eval set so per-source allocations sum
-    EXACTLY to the budget (naive rounding over- or under-shoots). Base
-    quota = floor(budget·n/total) in BIGINT, leftover seats go to the
-    largest remainders (ties to source asc). The ranking windows run on
-    the one-row-per-SOURCE frame (bounded by domain count — declared in
-    tools/plan_sweep.BOUNDED_GLOBAL_WINDOW like q157)."""
-    budget = 10_000
-    docs = _t_par(spark, sf, "documents")
-    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    tot = counts.agg(F.sum("n_docs").alias("total"))
-    staged = (
-        counts.crossJoin(F.broadcast(tot))
-        .withColumn("base", F.expr(f"CAST({budget} * n_docs AS BIGINT) DIV total"))
-        .withColumn("rem_num", F.expr(f"CAST({budget} * n_docs AS BIGINT) % total"))
-    )
-    w_all = Window.partitionBy(F.lit(1))
-    w_rank = w_all.orderBy(F.col("rem_num").desc(), F.col("source").asc())
-    return (
-        staged.withColumn("leftover", F.lit(budget) - F.sum("base").over(w_all))
-        .withColumn("rk", F.row_number().over(w_rank))
-        .withColumn(
-            "alloc",
-            (F.col("base") + F.when(F.col("rk") <= F.col("leftover"), 1).otherwise(0)).cast(
-                "long"
-            ),
-        )
-        .select("source", "n_docs", F.col("base").cast("long").alias("base"), "alloc")
-    )
-
-
-def _q239_ks_drift(spark, sf):
-    """Exact two-sample Kolmogorov–Smirnov statistic between the
-    purchase and click value distributions — the distribution-drift test
-    PSI (q142) approximates, computed EXACTLY on the cents-quantized
-    value axis. The cumulative ECDFs use a HIERARCHICAL PREFIX SUM: the
-    cents axis is cut into 500-cent ranges, cumulative counts run in a
-    range-partitioned window (≤ 500 rows per reducer), and per-range
-    offsets come from one global cumulative over the ~100-row range
-    frame (bounded by the VALUE DOMAIN, not the corpus — declared in
-    tools/plan_sweep.BOUNDED_GLOBAL_WINDOW). No corpus-sized
-    single-reducer window anywhere; the KS max is a plain aggregate.
-    KS numerator stays in exact integers (|cum_a·N_b − cum_b·N_a|); the
-    one double division happens at the end on identical operands in both
-    engines."""
-    ev = _t_par(spark, sf, "events").filter(
-        F.col("event_type").isin("purchase", "click")
-    )
-    g = (
-        ev.withColumn("c", F.round(F.col("value") * 100).cast("long"))
-        .groupBy("c")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-                "n1"
-            ),
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("n2"),
-        )
-        .withColumn("r", F.expr("c DIV 500"))
-    )
-    w_in = (
-        Window.partitionBy("r")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    within = g.withColumn("c1_in", F.sum("n1").over(w_in)).withColumn(
-        "c2_in", F.sum("n2").over(w_in)
-    )
-    rtot = g.groupBy("r").agg(F.sum("n1").alias("s1"), F.sum("n2").alias("s2"))
-    w_r = (
-        Window.partitionBy(F.lit(1))
-        .orderBy("r")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = rtot.select(
-        "r",
-        F.coalesce(F.sum("s1").over(w_r), F.lit(0)).alias("off1"),
-        F.coalesce(F.sum("s2").over(w_r), F.lit(0)).alias("off2"),
-    )
-    cum = within.join(F.broadcast(offsets), "r").select(
-        "c",
-        (F.col("off1") + F.col("c1_in")).alias("cum1"),
-        (F.col("off2") + F.col("c2_in")).alias("cum2"),
-    )
-    totals = g.agg(F.sum("n1").alias("n_a"), F.sum("n2").alias("n_b"))
-    return (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.max("n_a").alias("n_a"),
-            F.max("n_b").alias("n_b"),
-            F.max(
-                F.abs(F.col("cum1") * F.col("n_b") - F.col("cum2") * F.col("n_a"))
-            ).alias("ks_num"),
-        )
-        .select(
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.col("ks_num").cast("long").alias("ks_num"),
-            F.round(
-                F.col("ks_num").cast("double") / (F.col("n_a") * F.col("n_b")), 6
-            ).alias("ks"),
-        )
-    )
-
-
-def _q240_anova(spark, sf):
-    """One-way ANOVA F-statistic of event value across event types, from
-    EXACT integer moments (the >2-group companion to q221's two-sample
-    z-test). Per-group (n, Σcents, Σcents²) reduce in one partial-agg
-    shuffle; the between/within sums of squares use the identity
-    SSB = Σ s_g²/n_g − S²/N and SSW = Σ(ssq_g − s_g²/n_g), with each
-    s_g²/n_g term floored at milli precision through DECIMAL(38,0) DIV
-    (integer-exact, order-free summation over groups — never a
-    float accumulation whose grouping order could flip a bit). One final
-    double division pair produces F on identical operands in both
-    engines. Emitted terms are BIGINT (valid to sf ≈ 4e4; the DECIMAL
-    intermediates never overflow)."""
-    ev = _t_par(spark, sf, "events").withColumn(
-        "cents", F.round(F.col("value") * 100).cast("long")
-    )
-    g = ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("cents").alias("s"),
-        F.sum(F.col("cents") * F.col("cents")).alias("ssq"),
-    )
-    terms = g.select(
-        "n",
-        "s",
-        "ssq",
-        F.expr(
-            "CAST(CAST(s AS DECIMAL(38,0)) * s * 1000 AS DECIMAL(38,0)) DIV n"
-        ).alias("sq_over_n_milli"),
-    )
-    agg = terms.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.sum("n").alias("n_total"),
-        F.sum("s").alias("s_total"),
-        F.sum(F.expr("ssq * 1000") - F.col("sq_over_n_milli")).alias("ssw_milli"),
-        F.sum("sq_over_n_milli").alias("sq_sum_milli"),
-    )
-    return agg.select(
-        F.col("k").cast("long").alias("k"),
-        F.col("n_total").cast("long").alias("n_total"),
-        (
-            F.col("sq_sum_milli")
-            - F.expr(
-                "CAST(CAST(s_total AS DECIMAL(38,0)) * s_total * 1000"
-                " AS DECIMAL(38,0)) DIV n_total"
-            )
-        ).cast("long").alias("ssb_milli"),
-        F.col("ssw_milli").cast("long").alias("ssw_milli"),
-    ).select(
-        "k",
-        "n_total",
-        "ssb_milli",
-        "ssw_milli",
-        F.round(
-            (F.col("ssb_milli").cast("double") / (F.col("k") - 1))
-            / (F.col("ssw_milli").cast("double") / (F.col("n_total") - F.col("k"))),
-            6,
-        ).alias("f_stat"),
-    )
-
-
-def _q241_dup_graph_triangles(spark, sf):
-    """Distributed triangle counting + global transitivity on the
-    near-dup graph (the graph-analytics step past q63's connected
-    components: transitivity says whether near-dup clusters are cliques
-    — true redundancy — or sparse chains threaded by a few hub docs).
-    Standard oriented-triangle algorithm: edges are already id_a < id_b,
-    so the two-hop join (a<b<c) followed by the closing-edge join counts
-    each triangle exactly once — all equi-joins on ids, no enumeration
-    beyond path-of-length-2 candidates. Triads Σ d(d−1)/2 stay integer
-    (d(d−1) is even, DIV exact); transitivity = 3T/triads leaves as one
-    double division."""
-    from polars_pipe_spark.functions.dedup import minhash_near_dups
-
-    docs = _t_par(spark, sf, "documents")
-    e = (
-        minhash_near_dups(
-            docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-        )
-        .select("id_a", "id_b")
-        .persist()
-    )
-    two_hop = (
-        e.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .join(
-            e.select(F.col("id_a").alias("b"), F.col("id_b").alias("c")),
-            "b",
-        )
-    )
-    tri = two_hop.join(
-        e.select(F.col("id_a").alias("a"), F.col("id_b").alias("c")),
-        ["a", "c"],
-    ).agg(F.count(F.lit(1)).alias("n_triangles"))
-    deg = (
-        e.select(F.col("id_a").alias("v"))
-        .unionAll(e.select(F.col("id_b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    stats = deg.agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.sum(F.expr("(d * (d - 1)) DIV 2")).alias("n_triads"),
-    )
-    edges = e.agg(F.count(F.lit(1)).alias("n_edges"))
-    return (
-        stats.crossJoin(F.broadcast(edges))
-        .crossJoin(F.broadcast(tri))
-        .select(
-            F.col("n_nodes").cast("long").alias("n_nodes"),
-            F.col("n_edges").cast("long").alias("n_edges"),
-            F.col("n_triangles").cast("long").alias("n_triangles"),
-            F.col("n_triads").cast("long").alias("n_triads"),
-            F.when(F.col("n_triads") > 0,
-                   F.round(
-                       (F.col("n_triangles") * 3).cast("double")
-                       / F.col("n_triads"), 6,
-                   ))
-            .otherwise(F.lit(0.0))
-            .alias("transitivity"),
-        )
-    )
-
-
-def _q242_countmin_sketch(spark, sf):
-    """Count-Min sketch audit over the token stream: build the 4×64
-    mergeable counter grid in one corpus pass (functions/integrity.py::
-    count_min_sketch — each row explodes to depth cells, one partial-agg
-    groupBy on a ≤ depth·width key space), then point-estimate the
-    stopword probe set against EXACT counts. md5-derived bucket hashes
-    make every cell and every estimate engine-reproducible, so the
-    oracle value-checks the whole grid-lookup path, and the
-    ``never_undercounts`` column is the CMS one-sided guarantee checked
-    per key, not assumed."""
-    from polars_pipe_spark.functions.integrity import count_min_estimates
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select(F.explode(tokens("text")).alias("token"))
-    probes = spark.createDataFrame(
-        [(w,) for w in ["the", "and", "of", "to", "a", "data", "xyzzy-absent"]],
-        "token string",
-    )
-    return count_min_estimates(tok, "token", probes, width=64, depth=4)
-
-
-def _q243_hll_registers(spark, sf):
-    """From-scratch HyperLogLog over the events user population with
-    EXPLICIT register state (functions/integrity.py::hll_cardinality) —
-    q40's approx_count_distinct treats HLL++ as a black box; this one is
-    white-box: md5-derived (register, rank), register-wise MAX (the
-    merge law), an INTEGER harmonic-mean denominator via shiftleft, and
-    the linear-counting small-range correction — every cell
-    value-checked by the oracle, with the exact distinct count alongside
-    as the audit column."""
-    from polars_pipe_spark.functions.integrity import hll_cardinality
-
-    ev = _t_par(spark, sf, "events")
-    return hll_cardinality(ev, "user_id", m=64)
-
-
-def _q244_exact_k_sample(spark, sf):
-    """Deterministic exact-k sampling, both flavors a data curator needs:
-    (a) per-source exact-5 via a SOURCE-partitioned rank window over the
-    md5 order (seed-free, reproducible across engines and reruns —
-    the q53/q127 determinism contract extended to fixed counts), and
-    (b) the global exact-k case is the same pattern ordered globally,
-    which Spark plans as TakeOrderedAndProject (per-partition top-k +
-    driver merge, never a global sort) — q54 pins that plan shape. A
-    sampled-flag column makes the oracle check BOTH the chosen rows and
-    the rank order."""
-    docs = _t_par(spark, sf, "documents")
-    w = Window.partitionBy("source").orderBy(F.md5(F.col("doc_id").cast("string")))
-    return (
-        docs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(
-            "source",
-            "doc_id",
-            F.col("rk").cast("long").alias("rk"),
-            F.md5(F.col("doc_id").cast("string")).alias("sample_key"),
-        )
-    )
-
-
-def _q245_streaming_cms(spark, sf):
-    """Count-Min sketch maintained BY A STREAM — the mergeable-sketch
-    property in its natural habitat: each micro-batch's (row, bucket)
-    cell counts fold into the running grid by cell-wise SUM (a standard
-    streaming aggregation in complete mode, no custom state store), so
-    the final grid equals the batch-built sketch exactly. The oracle is
-    the batch CMS grid over the same token stream — streaming/batch
-    equivalence is the checked property (the q130/q32 pattern, applied
-    to a sketch)."""
-    import tempfile
-
-    from polars_pipe_spark.functions.integrity import _cms_bucket
-    from polars_pipe_spark.functions.text import tokens
-
-    path = f"{sf}/documents.parquet"
-    batch = _t_par(spark, sf, "documents")
-    if not os.path.isdir(path):
-        staged = tempfile.mkdtemp(prefix="pps_cms_src_") + "/documents"
-        batch.write.mode("overwrite").parquet(staged)
-        path = staged
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(path)
-    tok = stream.select(F.explode(tokens("text")).alias("token"))
-    cells = tok.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).alias("row"),
-                        _cms_bucket(F.col("token"), r, 64).alias("bucket"),
-                    )
-                    for r in range(4)
-                ]
-            )
-        ).alias("c")
-    )
-    grid = cells.groupBy(
-        F.col("c.row").alias("row"), F.col("c.bucket").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-    name = "pps_cms_out"
-    q = (
-        grid.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    return spark.table(name)
-
-
-def _q246_grouped_hll(spark, sf):
-    """Distinct users PER EVENT TYPE via the white-box grouped HLL
-    (functions/integrity.py::hll_cardinality_by): one register set per
-    group in two partial-agg shuffles — untouched registers never
-    materialise; their 2^40 mass is added arithmetically. Exact distinct
-    counts ride along per group as the audit column."""
-    from polars_pipe_spark.functions.integrity import hll_cardinality_by
-
-    ev = _t_par(spark, sf, "events")
-    return hll_cardinality_by(ev, "event_type", "user_id", m=64)
-
-
-def _q247_wilson_intervals(spark, sf):
-    """Wilson score 95% confidence interval for the purchase share of
-    each day-of-week's events — the interval that stays valid at small n
-    and never leaves [0,1], unlike the naive normal interval (the
-    uncertainty-quantification companion to q221's point z-test). Counts
-    (k, n) are exact integers from one partial-agg groupBy; the interval
-    arithmetic is a fixed-order double formula over those two integers,
-    so both engines compute bit-identical bounds. z is pinned at 1.96.
-    Day-of-week is the engine-neutral datediff%7 (the q223 convention —
-    no dependence on either engine's dow numbering)."""
-    ev = _t_par(spark, sf, "events")
-    g = ev.groupBy(
-        F.expr("datediff(CAST(ts AS DATE), DATE '2024-01-01') % 7").alias("dow")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("k"),
-    )
-    z2 = "(1.96 * 1.96)"
-    phat = "(CAST(k AS DOUBLE) / CAST(n AS DOUBLE))"
-    center = f"({phat} + {z2} / (2.0 * n))"
-    margin = f"(1.96 * sqrt({phat} * (1.0 - {phat}) / n + {z2} / (4.0 * n * n)))"
-    denom = f"(1.0 + {z2} / n)"
-    return g.select(
-        F.col("dow").cast("long").alias("dow"),
-        F.col("n").cast("long").alias("n"),
-        F.col("k").cast("long").alias("k"),
-        F.round(F.expr(phat), 6).alias("p_hat"),
-        F.round(F.expr(f"({center} - {margin}) / {denom}"), 6).alias("wilson_lo"),
-        F.round(F.expr(f"({center} + {margin}) / {denom}"), 6).alias("wilson_hi"),
-    )
-
-
-def _q248_corrupt_json_audit(spark, sf):
-    """Malformed-record ingestion audit — the production JSONL concern
-    the clean q44 source skips: a JSONL landing file is staged in-query
-    (one line per document; every doc_id % 10 == 3 line is deliberately
-    truncated mid-object), read back with Spark's native PERMISSIVE mode
-    + ``columnNameOfCorruptRecord``, and the audit reports good/corrupt
-    counts and the recovered value sum. Spark's JSON reader does the
-    quarantining — no custom parsing — and the corrupt rows keep their
-    raw line for a dead-letter queue. The oracle derives the expected
-    splits analytically from the construction."""
-    import tempfile
-
-    docs = _t_par(spark, sf, "documents")
-    lines = docs.select(
-        F.when(
-            F.col("doc_id") % 10 == 3,
-            # truncated mid-object: unparseable on purpose
-            F.concat(F.lit('{"doc_id": '), F.col("doc_id").cast("string"), F.lit(', "n_ch')),
-        )
-        .otherwise(
-            F.concat(
-                F.lit('{"doc_id": '),
-                F.col("doc_id").cast("string"),
-                F.lit(', "n_chars": '),
-                F.col("n_chars").cast("string"),
-                F.lit("}"),
-            )
-        )
-        .alias("value")
-    )
-    d = tempfile.mkdtemp(prefix="pps_jsonl_")
-    lines.write.mode("overwrite").text(d)
-    schema = "doc_id long, n_chars long, _corrupt_record string"
-    back = (
-        spark.read.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(d)
-    )
-    return back.agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        F.sum(F.when(F.col("_corrupt_record").isNull(), 1).otherwise(0)).alias(
-            "n_good"
-        ),
-        F.sum(F.when(F.col("_corrupt_record").isNotNull(), 1).otherwise(0)).alias(
-            "n_corrupt"
-        ),
-        F.sum(F.when(F.col("_corrupt_record").isNull(), F.col("n_chars"))).alias(
-            "good_chars"
-        ),
-    ).select(
-        F.col("n_lines").cast("long").alias("n_lines"),
-        F.col("n_good").cast("long").alias("n_good"),
-        F.col("n_corrupt").cast("long").alias("n_corrupt"),
-        F.col("good_chars").cast("long").alias("good_chars"),
-    )
-
-
-def _q249_rendezvous_sharding(spark, sf):
-    """Rendezvous (highest-random-weight) hashing — the shard-assignment
-    rule that keeps placement STABLE under membership change (only the
-    departed shard's keys move, unlike mod-N where nearly everything
-    reshuffles). Each doc scores every shard with md5(shard:doc) and
-    takes the argmax (ties impossible: md5 collisions aside, scores are
-    distinct hex). The audit compares assignment under 8 shards vs the
-    same rule with shard 3 removed and proves the HRW property: moved
-    docs == docs that were ON shard 3, everyone else stays put — a
-    per-shard ledger the mod-N strategy would fail. Pure expressions,
-    one aggregate; no shuffle beyond the final groupBy."""
-    docs = _t_par(spark, sf, "documents")
-
-    def shard_of(shards: list[int]) -> F.Column:
-        best = None
-        for s in shards:
-            score = F.md5(
-                F.concat(F.lit(f"{s}:"), F.col("doc_id").cast("string"))
-            )
-            pair = F.struct(score.alias("score"), F.lit(s).alias("s"))
-            best = pair if best is None else F.when(
-                pair["score"] > best["score"], pair
-            ).otherwise(best)
-        return best["s"]
-
-    full = list(range(8))
-    reduced = [s for s in full if s != 3]
-    assigned = docs.select(
-        "doc_id",
-        shard_of(full).alias("shard_before"),
-        shard_of(reduced).alias("shard_after"),
-    )
-    return (
-        assigned.groupBy("shard_before")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(
-                F.when(F.col("shard_before") != F.col("shard_after"), 1).otherwise(0)
-            ).alias("n_moved"),
-        )
-        .select(
-            F.col("shard_before").cast("long").alias("shard"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_moved").cast("long").alias("n_moved"),
-            # the HRW stability property, checked per shard: only the
-            # removed shard's docs move
-            (
-                (F.col("shard_before") == 3) & (F.col("n_moved") == F.col("n_docs"))
-                | (F.col("shard_before") != 3) & (F.col("n_moved") == 0)
-            ).alias("hrw_stable"),
-        )
-    )
-
-
-def _q250_cdc_chunking(spark, sf):
-    """Content-defined chunking dedup audit (functions/text.py::
-    cdc_chunks — restic/LBFS-style): chunk boundaries fall where the
-    rolling 3-gram hash ≡ 0 (mod 16), so boundaries are LOCAL-content
-    functions and an early edit never re-splits the rest of the document
-    (the property fixed-size chunking lacks; it is why CDC is the
-    storage-dedup standard). The audit explodes every chunk, counts
-    cross-document sharing, and reports the corpus reuse ratio — the
-    storage a chunk-level dedup store would reclaim. One explode + one
-    chunk-keyed partial-agg groupBy."""
-    from polars_pipe_spark.functions.text import cdc_chunks_kernel
-
-    docs = _t_par(spark, sf, "documents")
-    # r9: the Arrow kernel twin of cdc_chunks — the expression form pays
-    # an interpreted md5 per TOKEN inside F.filter (119 s at sf1);
-    # boundaries/chunks identical, parity test-pinned.
-    ch = docs.select(
-        "doc_id",
-        F.explode(cdc_chunks_kernel("text", window=3, mask=16)).alias("chunk"),
-    )
-    per_chunk = ch.groupBy("chunk").agg(
-        F.count(F.lit(1)).alias("n_occ"),
-        F.countDistinct("doc_id").alias("n_docs_with"),
-    )
-    n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
-    return (
-        per_chunk.agg(
-            F.sum("n_occ").alias("n_chunks"),
-            F.count(F.lit(1)).alias("n_distinct_chunks"),
-            F.sum(F.when(F.col("n_docs_with") >= 2, 1).otherwise(0)).alias(
-                "n_shared_chunks"
-            ),
-        )
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            F.col("n_docs").cast("long").alias("n_docs"),
-            F.col("n_chunks").cast("long").alias("n_chunks"),
-            F.col("n_distinct_chunks").cast("long").alias("n_distinct_chunks"),
-            F.col("n_shared_chunks").cast("long").alias("n_shared_chunks"),
-            F.expr(
-                "CAST((n_chunks - n_distinct_chunks) * 1000000 AS BIGINT)"
-                " DIV n_chunks"
-            ).alias("reuse_ppm"),
-        )
-    )
-
-
-def _q251_simhash_banded(spark, sf):
-    """Hamming-space LSH (Manku et al., WWW'07 — Google's web-dedup
-    banding) over the q26 SimHash column: 16-bit signatures split into 4
-    bit-bands, candidates from exact band equality, verified at hamming
-    ≤ 3. Pigeonhole makes the blocking LOSSLESS while no band bucket
-    hits the max_band_members=1000 cap (3 flipped bits damage ≤ 3 of 4
-    bands, so one band always survives). The ORACLE replays the FULL
-    documented contract — banding, per-bucket cap, candidates through
-    surviving buckets only, hamming verify — in SQL (r11 fix: the old
-    brute-force oracle equals this only in the unsaturated regime;
-    sf0.1's densest 4-bit-band buckets exceed the cap and are dropped
-    per the partial-drop contract). In the sf0.01 artifact no bucket
-    saturates, so the oracle there IS the brute-force recall proof.
-    functions/dedup.py::simhash_near_dups; band-bucket cap shared with
-    the minhash path."""
-    from polars_pipe_spark.functions.dedup import simhash_near_dups
-
-    docs = _t_par(spark, sf, "documents")
-    return simhash_near_dups(
-        docs, "text", "doc_id", bits=16, n_bands=4, max_hamming=3
-    )
-
-
-def _q252_pagerank(spark, sf):
-    """Integer-exact PageRank (5 fixed iterations, damping 0.85) over the
-    near-dup graph — hub scoring that flags template/boilerplate
-    documents whose rank concentrates across many duplicate edges
-    (functions/dedup.py::pagerank_exact). The recurrence is pure integer
-    micro-arithmetic (share = rank DIV deg; damped inflow through
-    DECIMAL(38,0)), so the SQL oracle replays all five rounds as
-    unrolled CTEs and every node's rank must match to the micro."""
-    from polars_pipe_spark.functions.dedup import minhash_near_dups, pagerank_exact
-
-    docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-    ).select("id_a", "id_b")
-    return pagerank_exact(pairs, iterations=5)
-
-
-def _q253_kmv_theta(spark, sf):
-    """KMV / theta sketch (Bar-Yossef 2002; the Apache DataSketches theta
-    family): keep the k SMALLEST md5 hashes of each set's members; with
-    θ = the k-th minimum (as a fraction of hash space), |A| ≈ (k−1)/θ.
-    Set algebra HLL cannot do directly: the INTERSECTION estimate comes
-    from counting shared hashes below min(θ_A, θ_B) — here for the
-    purchase-user vs click-user populations, audited against the exact
-    overlap. Everything is deterministic (md5 order): the k-th min is a
-    TakeOrdered-style bounded selection per side, the sketch compare is
-    a join of two ≤k-row frames. Estimates emit as exact integers
-    (numerators/denominators) plus one rounded double each."""
-    k = 64
-    ev = _t_par(spark, sf, "events")
-
-    def side(event_type):
-        return (
-            ev.filter(F.col("event_type") == event_type)
-            .select(F.col("user_id"))
-            .distinct()
-            .select(
-                "user_id",
-                F.conv(
-                    F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-                )
-                .cast("long")
-                .alias("h"),
-            )
-            .orderBy("h")
-            .limit(k)
-        )
-    # persist: each sketch is <= k rows but its lineage is a full
-    # distinct-over-events + bounded selection, and each is consumed 3x
-    # (theta agg, intersection join, final assembly) — without persist
-    # the distinct re-runs six times (r8 plan-sweep multi-scan rule)
-    a, b = side("purchase").persist(), side("click").persist()
-    theta_a = a.agg(F.max("h").alias("ta"), F.count(F.lit(1)).alias("ka"))
-    theta_b = b.agg(F.max("h").alias("tb"), F.count(F.lit(1)).alias("kb"))
-    # shared hashes below min(theta): intersection sample
-    inter = (
-        a.join(b.select(F.col("h").alias("hb")), F.col("h") == F.col("hb"))
-        .crossJoin(F.broadcast(theta_a))
-        .crossJoin(F.broadcast(theta_b))
-        .filter(F.col("h") <= F.least("ta", "tb"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    exact = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("user_id")
-        .distinct()
-        .join(
-            ev.filter(F.col("event_type") == "click").select("user_id").distinct(),
-            "user_id",
-        )
-        .agg(F.count(F.lit(1)).alias("n_exact_overlap"))
-    )
-    scale = float(2**32)
-    return (
-        theta_a.crossJoin(F.broadcast(theta_b))
-        .crossJoin(F.broadcast(inter))
-        .crossJoin(F.broadcast(exact))
-        .select(
-            F.col("ka").cast("long").alias("k_a"),
-            F.col("kb").cast("long").alias("k_b"),
-            F.col("ta").cast("long").alias("theta_a"),
-            F.col("tb").cast("long").alias("theta_b"),
-            F.col("n_shared").cast("long").alias("n_shared"),
-            F.col("n_exact_overlap").cast("long").alias("n_exact_overlap"),
-            F.round(
-                (F.col("ka") - 1).cast("double")
-                / (F.col("ta").cast("double") / F.lit(scale)),
-                4,
-            ).alias("est_a"),
-            F.round(
-                (F.col("kb") - 1).cast("double")
-                / (F.col("tb").cast("double") / F.lit(scale)),
-                4,
-            ).alias("est_b"),
-        )
-    )
-
-
-def _q254_phrase_search(spark, sf):
-    """Positional inverted index + exact phrase query (the capability a
-    positions-free index like q199 cannot express): postings are
-    (token, doc_id, pos); a 2-word phrase matches where the two tokens'
-    postings align at pos+1 WITHIN the same doc. The probe phrases are
-    the corpus' own top-3 bigrams (TakeOrdered, deterministic ties), and
-    the output CROSS-VALIDATES two independent derivations — adjacency-
-    explode bigram counts vs positional-join occurrence counts — which
-    must agree exactly; `agree` is computed, not asserted. Joins are
-    token-then-(doc,pos) keyed; the probe side is 3 rows, broadcast.
-
-    r14 (§2.3): the 3-row top3 frame is collected (bounded driver
-    action, the q62/q236 pattern) and re-enters as literals, so BOTH
-    posting probes become scan-side `isin` filters on the persisted
-    posting list — the positional join used to shuffle the ENTIRE
-    posting list on (doc, pos+1, token) keys when only rows whose token
-    is one of 3 literal words can survive its t2 == w2 conjunct. The
-    surviving join input is the filtered slice; result rows identical
-    (the filter is implied by the join condition)."""
-    from polars_pipe_spark.functions.text import shingles, tokens
-
-    docs = _t_par(spark, sf, "documents")
-    post = docs.select(
-        "doc_id", F.posexplode(tokens("text")).alias("pos", "token")
-    ).persist()
-    bigrams = docs.select(F.explode(shingles("text", 2)).alias("bg"))
-    top3_rows = (
-        bigrams.groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("n_occ_bigram"))
-        .orderBy(F.col("n_occ_bigram").desc(), F.col("bg").asc())
-        .limit(3)
-        .select(
-            "bg",
-            "n_occ_bigram",
-            F.split("bg", " ")[0].alias("w1"),
-            F.split("bg", " ")[1].alias("w2"),
-        )
-        .collect()
-    )
-    if not top3_rows:
-        schema = (
-            "bg string, n_occ_bigram long, n_occ_positional long, "
-            "n_docs long, agree boolean"
-        )
-        return spark.createDataFrame([], schema)
-    top3 = spark.createDataFrame(
-        top3_rows, "bg string, n_occ_bigram long, w1 string, w2 string"
-    )
-    w1s = [r["w1"] for r in top3_rows]
-    w2s = [r["w2"] for r in top3_rows]
-    p1 = (
-        post.filter(F.col("token").isin(*w1s))
-        .join(F.broadcast(top3), post.token == top3.w1)
-        .select("bg", "n_occ_bigram", "doc_id", "pos", "w2")
-    )
-    hits = p1.join(
-        post.filter(F.col("token").isin(*w2s)).select(
-            F.col("doc_id").alias("d2"),
-            F.col("pos").alias("p2"),
-            F.col("token").alias("t2"),
-        ),
-        (F.col("doc_id") == F.col("d2"))
-        & (F.col("p2") == F.col("pos") + 1)
-        & (F.col("t2") == F.col("w2")),
-    )
-    return (
-        hits.groupBy("bg", "n_occ_bigram")
-        .agg(
-            F.count(F.lit(1)).alias("n_occ_positional"),
-            F.countDistinct("doc_id").alias("n_docs"),
-        )
-        .select(
-            "bg",
-            F.col("n_occ_bigram").cast("long").alias("n_occ_bigram"),
-            F.col("n_occ_positional").cast("long").alias("n_occ_positional"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-            (F.col("n_occ_bigram") == F.col("n_occ_positional")).alias("agree"),
-        )
-    )
-
-
-def _q255_mann_whitney(spark, sf):
-    """Exact Mann–Whitney U (rank-sum) test between the purchase and
-    click value distributions — the NONPARAMETRIC location test
-    completing the q221 z / q240 ANOVA / q239 KS battery. Ranks are
-    EXACT with the standard tie correction, computed WITHOUT a global
-    sort: twice-the-average-rank of a tie group at value c is
-    2·cum_before(c) + n(c) + 1 (integer — the ×2 trick keeps midranks
-    out of floats), with cum_before from the q239 hierarchical prefix
-    sum (range-partitioned cumulative + bounded ~100-row offset level).
-    U and the rank sums stay integers; the tie-corrected normal
-    approximation z is the single fixed-order double at the end."""
-    ev = _t_par(spark, sf, "events").filter(
-        F.col("event_type").isin("purchase", "click")
-    )
-    g = (
-        ev.withColumn("c", F.round(F.col("value") * 100).cast("long"))
-        .groupBy("c")
-        .agg(
-            F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-                "n1"
-            ),
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias("n2"),
-        )
-        .withColumn("nt", F.col("n1") + F.col("n2"))
-        .withColumn("r", F.expr("c DIV 500"))
-    )
-    w_in = (
-        Window.partitionBy("r").orderBy("c").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    within = g.withColumn("cum_in", F.coalesce(F.sum("nt").over(w_in), F.lit(0)))
-    rtot = g.groupBy("r").agg(F.sum("nt").alias("s"))
-    w_r = (
-        Window.partitionBy(F.lit(1))
-        .orderBy("r")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = rtot.select(
-        "r", F.coalesce(F.sum("s").over(w_r), F.lit(0)).alias("off")
-    )
-    ranked = within.join(F.broadcast(offsets), "r").select(
-        "c",
-        "n1",
-        "n2",
-        "nt",
-        (F.lit(2) * (F.col("off") + F.col("cum_in")) + F.col("nt") + 1).alias(
-            "rank2"
-        ),
-    )
-    agg = ranked.agg(
-        F.sum("n1").alias("na"),
-        F.sum("n2").alias("nb"),
-        F.sum(F.col("n1") * F.col("rank2")).alias("r1_2"),
-        F.sum(F.col("nt") * F.col("nt") * F.col("nt") - F.col("nt")).alias(
-            "tie_cubes"
-        ),
-    )
-    return agg.select(
-        F.col("na").cast("long").alias("n_a"),
-        F.col("nb").cast("long").alias("n_b"),
-        F.expr("CAST((r1_2 - na * (na + 1)) AS BIGINT) DIV 2").alias("u_stat"),
-        F.col("tie_cubes").cast("long").alias("tie_cubes"),
-        F.round(
-            (
-                F.expr("CAST((r1_2 - na * (na + 1)) AS BIGINT) DIV 2").cast("double")
-                - (F.col("na") * F.col("nb")).cast("double") / 2.0
-            )
-            / F.sqrt(
-                (F.col("na") * F.col("nb")).cast("double") / 12.0
-                * (
-                    (F.col("na") + F.col("nb") + 1).cast("double")
-                    - F.col("tie_cubes").cast("double")
-                    / (
-                        (F.col("na") + F.col("nb")).cast("double")
-                        * (F.col("na") + F.col("nb") - 1).cast("double")
-                    )
-                )
-            ),
-            6,
-        ).alias("z_score"),
-    )
-
-
-def _q256_entity_resolution(spark, sf):
-    """End-to-end entity resolution (the MDM/record-linkage flow): a
-    second source of records is staged in-query (every 7th customer gets
-    a clone with a corrupted name — 3rd char dropped — same balance),
-    then: (1) candidate pairs from an EQUI-join on the strong key
-    (balance cents — blocking, never an all-pairs product), (2) verified
-    with levenshtein ≤ 2 on the name, (3) transitive closure via q63's
-    min-label propagation (functions/dedup.py::dedup_clusters), (4) the
-    resolution ledger: records, entities, merged records, largest
-    entity. The oracle re-derives the edges with DuckDB's levenshtein
-    and replays the closure with a recursive CTE — every count
-    value-checked."""
-    from polars_pipe_spark.functions.dedup import dedup_clusters
-
-    cust = _t(spark, sf, "customer").select(
-        (F.col("c_custkey") * 10).alias("rec_id"),
-        F.lower(F.col("c_name")).alias("name"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
-    clones = (
-        _t(spark, sf, "customer")
-        .filter(F.col("c_custkey") % 7 == 0)
-        .select(
-            (F.col("c_custkey") * 10 + 1).alias("rec_id"),
-            F.concat(
-                F.substring(F.lower(F.col("c_name")), 1, 2),
-                F.substring(F.lower(F.col("c_name")), 4, 100),
-            ).alias("name"),
-            F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-        )
-    )
-    records = cust.unionByName(clones).persist()
-    a = records.alias("a")
-    b = records.select(
-        F.col("rec_id").alias("rec_b"),
-        F.col("name").alias("name_b"),
-        F.col("cents").alias("cents_b"),
-    )
-    edges = (
-        a.join(b, (F.col("a.cents") == F.col("cents_b")) & (F.col("a.rec_id") < F.col("rec_b")))
-        .filter(F.levenshtein(F.col("a.name"), F.col("name_b")) <= 2)
-        .select(F.col("a.rec_id").alias("id_a"), F.col("rec_b").alias("id_b"))
-    )
-    clusters = dedup_clusters(edges).select(
-        F.col("node").alias("rec_id"), "cluster_id"
-    )
-    # singletons (no edges) resolve to themselves
-    resolved = records.join(clusters, "rec_id", "left").select(
-        "rec_id", F.coalesce("cluster_id", F.col("rec_id")).alias("entity_id")
-    )
-    sizes = resolved.groupBy("entity_id").agg(F.count(F.lit(1)).alias("sz"))
-    return sizes.agg(
-        F.sum("sz").alias("n_records"),
-        F.count(F.lit(1)).alias("n_entities"),
-        (F.sum("sz") - F.count(F.lit(1))).alias("n_merged"),
-        F.max("sz").alias("max_entity_size"),
-    ).select(
-        F.col("n_records").cast("long").alias("n_records"),
-        F.col("n_entities").cast("long").alias("n_entities"),
-        F.col("n_merged").cast("long").alias("n_merged"),
-        F.col("max_entity_size").cast("long").alias("max_entity_size"),
-    )
-
-
-def _q257_sql_surface(spark, sf):
-    """The engine's PURE-SQL entry point — the surface the reference
-    lacks entirely (no SQL parser there; Spark gives ANSI SQL + Catalyst
-    for free): tables registered as temp views, a multi-CTE query with a
-    join, aggregate, and rank window submitted as SQL TEXT via
-    spark.sql(). Same optimizer, same plans as the DataFrame API —
-    demonstrated by this query being literally its own oracle (modulo
-    dialect casts)."""
-    _t(spark, sf, "customer").createOrReplaceTempView("v_customer")
-    _t(spark, sf, "orders").createOrReplaceTempView("v_orders")
-    _t(spark, sf, "nation").createOrReplaceTempView("v_nation")
-    return spark.sql(
-        """
-        WITH rev AS (
-          SELECT c.c_nationkey,
-                 SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS rev_cents,
-                 COUNT(*) AS n_orders
-          FROM v_orders o JOIN v_customer c ON o.o_custkey = c.c_custkey
-          GROUP BY c.c_nationkey
-        )
-        SELECT n.n_name AS nation,
-               r.rev_cents,
-               r.n_orders,
-               CAST(RANK() OVER (ORDER BY r.rev_cents DESC, n.n_name ASC)
-                    AS BIGINT) AS rev_rank
-        FROM rev r JOIN v_nation n ON r.c_nationkey = n.n_nationkey
-        """
-    )
-
-
-def _q258_scalar_pandas_udf(spark, sf):
-    """The Arrow-vectorized SCALAR pandas_udf surface (the third UDF
-    flavor after mapInPandas kernels and applyInPandas grouped stats):
-    a numpy-vectorized score runs per Arrow batch — the sanctioned slow
-    path when an expression genuinely needs Python (here log1p, chosen
-    because the oracle can verify it EXACTLY: ln(1+x) on identical
-    doubles). The point under test is the UDF plumbing — batch transfer,
-    null passthrough, type fidelity — not the math."""
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf
-
-    def _log1p(v):
-        import numpy as np
-
-        return pd.Series(np.log1p(v.to_numpy(dtype="float64")))
-
-    # real-object annotations: this module uses `from __future__ import
-    # annotations`, which stringifies inline hints and breaks PySpark's
-    # signature inspection for pandas_udf
-    _log1p.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    log1p_score = pandas_udf(_log1p, "double")
-
-    ev = _t_par(spark, sf, "events")
-    # per-row round → decimal sum: float addition order across partitions
-    # is nondeterministic, so the aggregate goes through exact decimals
-    # (the q131 pattern) and only the per-row UDF value is floating
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                F.round(log1p_score(F.col("value")), 6).cast("decimal(18,6)")
-            ).cast("double").alias("sum_log1p"),
-        )
-        .select(
-            "event_type",
-            F.col("n_events").cast("long").alias("n_events"),
-            "sum_log1p",
-        )
-    )
-
-
-def _q259_theil_sen(spark, sf):
-    """Theil–Sen robust trend per event type — the median of all
-    pairwise day-slopes, the estimator that shrugs off the outlier days
-    that wreck q147's least squares (breakdown point 29%). Scale shape:
-    slopes are pairwise over the DAILY aggregate (bounded by the
-    calendar, ~31 rows/group → ≤ ~465 pairs/group), never over events;
-    the pair join and median rank are both keyed by event_type. Slopes
-    quantize to exact micros ((Δcents·1e4) DIV Δdays — sign-split so
-    DIV/ // agree), and the median is the lower-median by rank — every
-    value integer, fully oracle-checkable."""
-    ev = _t_par(spark, sf, "events")
-    daily = (
-        ev.groupBy(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
-                "x"
-            ),
-        )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("y_cents"))
-        .persist()
-    )
-    b = daily.select(
-        F.col("event_type"),
-        F.col("x").alias("x2"),
-        F.col("y_cents").alias("y2"),
-    )
-    pairs = (
-        daily.join(b, "event_type")
-        .filter(F.col("x2") > F.col("x"))
-        .select(
-            "event_type",
-            (
-                F.signum((F.col("y2") - F.col("y_cents")).cast("double")).cast("long")
-                * F.expr("abs(y2 - y_cents) * 10000 DIV (x2 - x)")
-            ).alias("slope_micro"),
-        )
-    )
-    w = Window.partitionBy("event_type").orderBy("slope_micro")
-    ranked = pairs.withColumn("rn", F.row_number().over(w))
-    counts = pairs.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_pairs"))
-    return (
-        ranked.join(counts, "event_type")
-        .filter(F.col("rn") == F.expr("(n_pairs + 1) DIV 2"))
-        .select(
-            "event_type",
-            F.col("n_pairs").cast("long").alias("n_pairs"),
-            F.col("slope_micro").cast("long").alias("theilsen_slope_micro"),
-        )
-    )
-
-
-def _q260_longest_streak(spark, sf):
-    """Gaps-and-islands: each user's LONGEST run of consecutive active
-    days, by the classic rn-difference trick — day_index − row_number()
-    is constant within a consecutive run, so one grouped count per
-    (user, island) recovers every streak without self-joins or
-    recursion. All windows are user-partitioned (keyed); output is the
-    corpus-level streak histogram (streak_len → n_users), bounded by the
-    calendar span."""
-    ev = _t_par(spark, sf, "events")
-    days = (
-        ev.select(
-            "user_id",
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")
-            ).alias("day"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    islands = days.withColumn(
-        "grp", F.col("day") - F.row_number().over(w)
-    )
-    streaks = islands.groupBy("user_id", "grp").agg(
-        F.count(F.lit(1)).alias("streak_len")
-    )
-    longest = streaks.groupBy("user_id").agg(
-        F.max("streak_len").alias("longest")
-    )
-    return (
-        longest.groupBy("longest")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-        .select(
-            F.col("longest").cast("long").alias("streak_len"),
-            F.col("n_users").cast("long").alias("n_users"),
-        )
-    )
-
-
-def _q261_wav_decode(spark, sf):
-    """REAL audio container decode end-to-end (no audio library): a
-    PCM-16 mono WAV is synthesized per document from an analytic integer
-    waveform (sample_i = ((doc_id·31 + i·7) mod 2001) − 1000, n = 50 +
-    doc_id mod 20, 8 kHz), written through the RIFF encoder, packed into
-    the media struct, and decoded back by
-    functions/multimodal.py::extract_wav_features — RIFF chunk walk,
-    fmt validation, int16 extraction, integer-exact RMS. The ORACLE
-    derives sample count, duration and RMS in closed form from the same
-    construction (ground truth, not a second decoder) — the audio twin
-    of q235."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_wav,
-        extract_wav_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 50 + did % 20
-                i = np.arange(n, dtype="int64")
-                samples = (did * 31 + i * 7) % 2001 - 1000
-                payloads.append(encode_wav(samples.tolist(), 8000))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("audio/wav")
-        ).alias("media"),
-    )
-    return extract_wav_features(media).select(
-        "doc_id",
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        F.round("rms", 6).alias("rms"),
-    )
-
-
-def _q262_seasonal_backtest(spark, sf):
-    """Forecast backtesting: score the seasonal-naive baseline
-    (forecast(t) = actual(t−7)) over every day that has a week-ago
-    anchor — the evaluation harness any forecasting pipeline needs
-    before trusting a fancier model. Errors stay in integer cents; the
-    two headline metrics are integer-exact ratios: WAPE (Σ|err| over
-    Σ actual, in ppm — the weighted MAPE that tolerates zero-actual
-    days) and signed bias (sign-split DIV). One daily aggregate + one
-    7-day-lag self-join per event type — both keyed, no windows."""
-    ev = _t_par(spark, sf, "events")
-    daily = (
-        ev.groupBy(
-            "event_type",
-            F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
-                "day"
-            ),
-        )
-        .agg(F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"))
-        .persist()
-    )
-    fc = daily.select(
-        "event_type",
-        (F.col("day") + 7).alias("day"),
-        F.col("cents").alias("forecast_cents"),
-    )
-    scored = daily.join(fc, ["event_type", "day"]).select(
-        "event_type",
-        (F.col("cents") - F.col("forecast_cents")).alias("err"),
-        "cents",
-    )
-    agg = scored.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum(F.abs(F.col("err"))).alias("abs_err"),
-        F.sum("err").alias("sum_err"),
-        F.sum("cents").alias("sum_actual"),
-    # all-zero-actual groups are excluded on BOTH sides: Spark's DIV by
-    # zero nulls silently while DuckDB // errors — the engines would
-    # diverge exactly there (cannot happen on this data, value > 0, but
-    # the operator should not rely on that)
-    ).filter(F.col("sum_actual") > 0)
-    return agg.select(
-        "event_type",
-        F.col("n_days").cast("long").alias("n_days"),
-        F.expr(
-            "CAST((CAST(abs_err AS DECIMAL(38,0)) * 1000000)"
-            " DIV sum_actual AS BIGINT)"
-        ).alias("wape_ppm"),
-        (
-            F.signum(F.col("sum_err").cast("double")).cast("long")
-            * F.expr(
-                "CAST((CAST(abs(sum_err) AS DECIMAL(38,0)) * 1000000)"
-                " DIV sum_actual AS BIGINT)"
-            )
-        ).alias("bias_ppm"),
-    )
-
-
-def _q263_source_entropy(spark, sf):
-    """Corpus diversity: Shannon entropy (and its exponential, the
-    effective source count) of the documents-per-source distribution,
-    plus normalized evenness. Demonstrates the canonical pattern for
-    DETERMINISTIC floating-point reduction across engines: the per-source
-    −p·ln p terms are collected into a SORTED array (keyed by source) and
-    folded left-to-right with F.aggregate — aggregate SUM over doubles
-    has partition-order-dependent rounding, a sorted-array fold does not.
-    Bounded by the source dimension (~20 rows collected), exactly the
-    frame size where collect_list is legitimate."""
-    docs = _t_par(spark, sf, "documents")
-    counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    total = counts.agg(F.sum("n").alias("total"))
-    terms = (
-        counts.crossJoin(F.broadcast(total))
-        .select(
-            "source",
-            (
-                -(F.col("n").cast("double") / F.col("total"))
-                * F.log(F.col("n").cast("double") / F.col("total"))
-            ).alias("term"),
-            "total",
-        )
-    )
-    folded = terms.groupBy("total").agg(
-        F.count(F.lit(1)).alias("n_sources"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("source", "term"))),
-                lambda st: st["term"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("entropy_nats"),
-    )
-    return folded.select(
-        F.col("n_sources").cast("long").alias("n_sources"),
-        F.col("total").cast("long").alias("n_docs"),
-        F.round("entropy_nats", 6).alias("entropy_nats"),
-        F.round(F.exp("entropy_nats"), 6).alias("effective_sources"),
-        F.round(
-            F.col("entropy_nats") / F.log(F.col("n_sources").cast("double")), 6
-        ).alias("evenness"),
-    )
-
-
-def _q264_sparse_cosine_topk(spark, sf):
-    """SPARSE document-to-document cosine top-k through the inverted
-    index — the lexical/sparse-retrieval counterpart of the dense ANN
-    family (q28/q29/q33/q168): pairs meet only through SHARED TOKENS
-    (token-keyed join), with the classic df-cap making the fanout
-    bounded — tokens appearing in more than 50 documents are dropped
-    from pairing (stopwords carry no similarity signal and would
-    contribute O(df²) pairs; this is Elasticsearch's
-    max_doc_freq idea). TF-IDF weights quantize to integer micros so the
-    per-pair dot is an exact BIGINT sum; the one double step is the
-    final norm division on identical operands. Top-3 per doc by keyed
-    rank window."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    tok = docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-    tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf")).persist()
-    n_docs = docs.agg(F.countDistinct("doc_id").alias("n_docs"))
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    w = (
-        tf.join(dfreq.filter(F.col("df") <= 50), "token")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "token",
-            "doc_id",
-            F.round(
-                F.round(F.col("tf") * F.log(F.col("n_docs") / F.col("df")), 6)
-                * 1_000_000
-            )
-            .cast("long")
-            .alias("w_micro"),
-        )
-        .persist()
-    )
-    norms = w.groupBy("doc_id").agg(
-        F.sum(F.col("w_micro") * F.col("w_micro")).alias("norm2")
-    )
-    pairs = (
-        w.alias("a")
-        .join(
-            w.select(
-                F.col("token").alias("token_b"),
-                F.col("doc_id").alias("doc_b"),
-                F.col("w_micro").alias("w_b"),
-            ),
-            (F.col("a.token") == F.col("token_b"))
-            & (F.col("a.doc_id") < F.col("doc_b")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("doc_b"))
-        .agg(F.sum(F.col("a.w_micro") * F.col("w_b")).alias("dot"))
-    )
-    scored = (
-        pairs.join(norms.withColumnsRenamed({"doc_id": "doc_a", "norm2": "na"}), "doc_a")
-        .join(norms.withColumnsRenamed({"doc_id": "doc_b", "norm2": "nb"}), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("dot").cast("double")
-                / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    rk = Window.partitionBy("doc_a").orderBy(
-        F.col("cosine").desc(), F.col("doc_b").asc()
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(rk))
-        .filter(F.col("rk") <= 3)
-        .select("doc_a", "doc_b", "cosine", F.col("rk").cast("long").alias("rk"))
-    )
-
-
-def _q265_front_coding(spark, sf):
-    """Dictionary front coding (the term-dictionary compression inside
-    Lucene/parquet dictionary pages): sort the vocabulary, store each
-    term as (shared-prefix length with predecessor, suffix). Reported
-    per first-character block: terms, raw chars, chars saved by prefix
-    sharing, and the ppm saving. The sort is PARTITIONED by first
-    character (≤ a few dozen blocks — never a global sort; the one
-    cross-block comparison forfeited per block is the documented
-    trade), and the shared-prefix length is a pure expression over
-    lag(term) — no UDF."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    vocab = (
-        docs.select(F.explode(tokens("text")).alias("term"))
-        .distinct()
-        .withColumn("blk", F.substring("term", 1, 1))
-    )
-    w = Window.partitionBy("blk").orderBy("term")
-    lagged = vocab.withColumn("prev", F.lag("term").over(w))
-    # common prefix length via the first differing position: compare
-    # char-by-char over the shorter length with a filtered sequence
-    lcp = F.when(F.col("prev").isNull(), F.lit(0)).otherwise(
-        F.coalesce(
-            F.array_min(
-                F.filter(
-                    F.sequence(
-                        F.lit(1),
-                        F.least(F.length("term"), F.length("prev")),
-                    ),
-                    lambda i: F.col("term").substr(i, F.lit(1))
-                    != F.col("prev").substr(i, F.lit(1)),
-                )
-            )
-            - 1,
-            F.least(F.length("term"), F.length("prev")),
-        )
-    )
-    coded = lagged.withColumn("lcp", lcp)
-    return (
-        coded.groupBy("blk")
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.sum(F.length("term")).alias("raw_chars"),
-            F.sum("lcp").alias("saved_chars"),
-        )
-        .select(
-            "blk",
-            F.col("n_terms").cast("long").alias("n_terms"),
-            F.col("raw_chars").cast("long").alias("raw_chars"),
-            F.col("saved_chars").cast("long").alias("saved_chars"),
-            F.expr(
-                "CAST((CAST(saved_chars AS DECIMAL(38,0)) * 1000000)"
-                " DIV raw_chars AS BIGINT)"
-            ).alias("saving_ppm"),
-        )
-    )
-
-
-def _q266_good_turing(spark, sf):
-    """Good–Turing unseen-mass estimate from the frequency-of-
-    frequencies table (the count-of-counts double aggregate every
-    language model smoother starts from): P(unseen) ≈ N₁/N where N₁ is
-    the hapax count. Output: vocabulary size, token mass, hapax/dis
-    legomena, and the unseen-mass estimate in exact ppm — plus the
-    Good–Turing r* for r=1 (2·N₂/N₁, milli-scaled integer), the
-    smoothed count a hapax should really get."""
-    from polars_pipe_spark.functions.text import tokens
-
-    docs = _t_par(spark, sf, "documents")
-    counts = (
-        docs.select(F.explode(tokens("text")).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("r"))
-    )
-    fof = counts.groupBy("r").agg(F.count(F.lit(1)).alias("n_r"))
-    return fof.agg(
-        F.sum("n_r").alias("vocab"),
-        F.sum(F.col("r") * F.col("n_r")).alias("n_tokens"),
-        F.sum(F.when(F.col("r") == 1, F.col("n_r"))).alias("n1"),
-        F.sum(F.when(F.col("r") == 2, F.col("n_r"))).alias("n2"),
-    ).select(
-        F.col("vocab").cast("long").alias("vocab"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.coalesce("n1", F.lit(0)).cast("long").alias("n_hapax"),
-        F.coalesce("n2", F.lit(0)).cast("long").alias("n_dis"),
-        F.expr(
-            "CAST(COALESCE(n1, 0) * 1000000 AS BIGINT) DIV n_tokens"
-        ).alias("unseen_mass_ppm"),
-        F.expr(
-            "CASE WHEN COALESCE(n1, 0) > 0 THEN "
-            "CAST(2 * COALESCE(n2, 0) * 1000 AS BIGINT) DIV n1 "
-            "ELSE CAST(0 AS BIGINT) END"
-        ).alias("r_star_1_milli"),
-    )
-
-
-def _q267_er_evaluation(spark, sf):
-    """Entity-resolution EVALUATION harness — q256 runs the flow, this
-    scores it against ground truth (the construction knows every true
-    match: clone 10k+1 ↔ original 10k): pairwise precision/recall/F1
-    over the predicted same-entity pairs, all exact-integer ppm. The
-    standard ER metric (pairwise P/R) computed distributively: predicted
-    pairs come from a per-entity size aggregate (Σ sz·(sz−1)/2 — never
-    enumerating pairs), true-positive pairs from joining each record's
-    predicted entity to its ground-truth partner's."""
-    from polars_pipe_spark.functions.dedup import dedup_clusters
-
-    cust = _t(spark, sf, "customer").select(
-        (F.col("c_custkey") * 10).alias("rec_id"),
-        F.lower(F.col("c_name")).alias("name"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
-    clones = (
-        _t(spark, sf, "customer")
-        .filter(F.col("c_custkey") % 7 == 0)
-        .select(
-            (F.col("c_custkey") * 10 + 1).alias("rec_id"),
-            F.concat(
-                F.substring(F.lower(F.col("c_name")), 1, 2),
-                F.substring(F.lower(F.col("c_name")), 4, 100),
-            ).alias("name"),
-            F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-        )
-    )
-    records = cust.unionByName(clones).persist()
-    b = records.select(
-        F.col("rec_id").alias("rec_b"),
-        F.col("name").alias("name_b"),
-        F.col("cents").alias("cents_b"),
-    )
-    edges = (
-        records.alias("a")
-        .join(
-            b,
-            (F.col("a.cents") == F.col("cents_b"))
-            & (F.col("a.rec_id") < F.col("rec_b")),
-        )
-        .filter(F.levenshtein(F.col("a.name"), F.col("name_b")) <= 2)
-        .select(F.col("a.rec_id").alias("id_a"), F.col("rec_b").alias("id_b"))
-    )
-    clusters = dedup_clusters(edges).select(
-        F.col("node").alias("rec_id"), "cluster_id"
-    )
-    resolved = records.join(clusters, "rec_id", "left").select(
-        "rec_id", F.coalesce("cluster_id", F.col("rec_id")).alias("entity_id")
-    ).persist()
-    # predicted pairs = Σ sz·(sz−1)/2 over entities
-    pred = resolved.groupBy("entity_id").agg(F.count(F.lit(1)).alias("sz")).agg(
-        F.sum(F.expr("(sz * (sz - 1)) DIV 2")).alias("n_pred_pairs")
-    )
-    # ground truth: one true pair per clone (orig 10k, clone 10k+1)
-    truth = clones.select(
-        (F.col("rec_id") - 1).alias("rec_orig"), F.col("rec_id").alias("rec_clone")
-    )
-    tp = (
-        truth.join(
-            resolved.withColumnsRenamed({"rec_id": "rec_orig", "entity_id": "ea"}),
-            "rec_orig",
-        )
-        .join(
-            resolved.withColumnsRenamed({"rec_id": "rec_clone", "entity_id": "eb"}),
-            "rec_clone",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_true_pairs"),
-            F.sum(F.when(F.col("ea") == F.col("eb"), 1).otherwise(0)).alias("tp"),
-        )
-    )
-    return (
-        pred.crossJoin(F.broadcast(tp))
-        .select(
-            F.col("n_pred_pairs").cast("long").alias("n_pred_pairs"),
-            F.col("n_true_pairs").cast("long").alias("n_true_pairs"),
-            F.col("tp").cast("long").alias("tp"),
-            F.expr("CAST(tp * 1000000 AS BIGINT) DIV n_pred_pairs").alias(
-                "precision_ppm"
-            ),
-            F.expr("CAST(tp * 1000000 AS BIGINT) DIV n_true_pairs").alias(
-                "recall_ppm"
-            ),
-            F.expr(
-                "CAST((2 * tp) * 1000000 AS BIGINT) DIV (n_pred_pairs + n_true_pairs)"
-            ).alias("f1_ppm"),
-        )
-    )
-
-
-def _q268_secret_scan(spark, sf):
-    """Pre-training secret/credential screening — the redaction pass a
-    corpus runs before anything ships: flag tokens shaped like API keys
-    or credentials (long base64-ish or hex runs) and confirm with a
-    cheap INTEGER entropy proxy (distinct-character count ≥ 10 —
-    dictionary words fail it, random keys pass). Candidates are planted
-    deterministically in-query (every doc_id % 23 == 5 doc gets a
-    synthetic hex credential derived from its md5) so detection has
-    ground truth: the output's recall columns prove every plant is
-    found and nothing legitimate fires. Pure regexp + array exprs; the
-    patterns are RE2-safe so both engines match identically."""
-    docs = _t_par(spark, sf, "documents")
-    planted = docs.withColumn(
-        "text2",
-        F.when(
-            F.col("doc_id") % 23 == 5,
-            F.concat(
-                F.col("text"),
-                F.lit(" api_key="),
-                F.md5(F.col("doc_id").cast("string")),
-            ),
-        ).otherwise(F.col("text")),
-    )
-    cands = planted.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(
-                F.col("text2"), F.lit(r"[A-Fa-f0-9]{32,}|[A-Za-z0-9+/]{28,}={0,2}"), 0
-            )
-        ).alias("cand"),
-    )
-    confirmed = cands.withColumn(
-        "distinct_chars", F.size(F.array_distinct(F.split(F.col("cand"), "")))
-    ).filter(F.col("distinct_chars") >= 10)
-    summary = confirmed.agg(
-        F.count(F.lit(1)).alias("n_secrets"),
-        F.countDistinct("doc_id").alias("n_docs_with_secrets"),
-    )
-    expected = docs.agg(
-        F.sum(F.when(F.col("doc_id") % 23 == 5, 1).otherwise(0)).alias("n_planted")
-    )
-    return (
-        summary.crossJoin(F.broadcast(expected))
-        .select(
-            F.col("n_secrets").cast("long").alias("n_secrets"),
-            F.col("n_docs_with_secrets").cast("long").alias("n_docs_with_secrets"),
-            F.col("n_planted").cast("long").alias("n_planted"),
-            (F.col("n_docs_with_secrets") == F.col("n_planted")).alias(
-                "all_plants_found"
-            ),
-        )
-    )
-
-
-def _q269_bloom_fpr(spark, sf):
-    """Explicit Bloom filter with a MEASURED false-positive-rate audit —
-    the proof behind q204's join pruning: m=4096 bits, k=3 md5-derived
-    hash functions, built from the purchase-user set, probed with a
-    DISJOINT synthetic key set (user_id + 10⁶ — guaranteed non-members).
-    A probe is a false positive iff all k of its buckets are occupied.
-    Every bucket is deterministic (the shared md5-int convention), so
-    the measured FPR is exact and the oracle replays bit-for-bit; the
-    theoretical rate (1 − e^{−kn/m})^k rides along for comparison — the
-    audit a capacity-planning doc would cite. Filter state is the
-    distinct occupied-bucket set (≤ m rows, broadcast to the probe
-    side)."""
-    m_bits, k = 4096, 3
-    ev = _t_par(spark, sf, "events")
-    members = (
-        ev.filter(F.col("event_type") == "purchase").select("user_id").distinct()
-    )
-
-    def buckets(col):
-        return F.array(
-            *[
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit(f"{r}:"), col.cast("string"))), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % m_bits
-                for r in range(k)
-            ]
-        )
-
-    bits = members.select(
-        F.explode(buckets(F.col("user_id"))).alias("bit")
-    ).distinct()
-    probes = members.select((F.col("user_id") + 1_000_000).alias("probe_id"))
-    probe_bits = probes.select(
-        "probe_id", F.explode(buckets(F.col("probe_id"))).alias("bit")
-    )
-    hits = (
-        probe_bits.join(F.broadcast(bits.withColumn("__set", F.lit(1))), "bit", "left")
-        .groupBy("probe_id")
-        .agg(F.sum(F.coalesce("__set", F.lit(0))).alias("n_set"))
-    )
-    stats = hits.agg(
-        F.count(F.lit(1)).alias("n_probes"),
-        F.sum(F.when(F.col("n_set") == k, 1).otherwise(0)).alias("n_false_pos"),
-    )
-    n_bits = bits.agg(F.count(F.lit(1)).alias("bits_set"))
-    n_mem = members.agg(F.count(F.lit(1)).alias("n_members"))
-    return (
-        stats.crossJoin(F.broadcast(n_bits))
-        .crossJoin(F.broadcast(n_mem))
-        .select(
-            F.col("n_members").cast("long").alias("n_members"),
-            F.col("bits_set").cast("long").alias("bits_set"),
-            F.col("n_probes").cast("long").alias("n_probes"),
-            F.col("n_false_pos").cast("long").alias("n_false_pos"),
-            F.expr("CAST(n_false_pos * 1000000 AS BIGINT) DIV n_probes").alias(
-                "measured_fpr_ppm"
-            ),
-            F.round(
-                F.pow(
-                    1.0
-                    - F.exp(
-                        -(F.lit(float(k)) * F.col("n_members").cast("double"))
-                        / F.lit(float(m_bits))
-                    ),
-                    F.lit(float(k)),
-                ),
-                6,
-            ).alias("theoretical_fpr"),
-        )
-    )
-
-
-def _q270_ipf_raking(spark, sf):
-    """Iterative proportional fitting (raking — Deming & Stephan 1940,
-    the survey-calibration workhorse): reweight the (event_type ×
-    day-of-week) contingency table so both margins match uniform targets
-    (total DIV 5 per type, total DIV 7 per dow). Four full iterations of
-    alternating row/column scaling, every step in integer micro-weights
-    with the scale products routed through DECIMAL(38,0) DIV (the q147
-    overflow discipline) — a fully deterministic recurrence both engines
-    replay, the q169/q252 unrolled-oracle pattern. Each half-step is one
-    margin-keyed partial aggregate joined back; the 35-cell frame is
-    tiny but the shape is margin-keyed, never a global window."""
-    ev = _t_par(spark, sf, "events")
-    cells = (
-        ev.groupBy(
-            "event_type",
-            F.expr("datediff(CAST(ts AS DATE), DATE '2024-01-01') % 7").alias("dow"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist()
-    )
-    total = cells.agg(F.sum("n").alias("t")).first()["t"]
-    t_row_micro = (int(total) // 5) * 1_000_000
-    t_col_micro = (int(total) // 7) * 1_000_000
-    w = cells.select(
-        "event_type", "dow", (F.col("n") * 1_000_000).cast("long").alias("w")
-    )
-    for _ in range(4):
-        rs = w.groupBy("event_type").agg(F.sum("w").alias("rs"))
-        w = (
-            w.join(rs, "event_type")
-            .select(
-                "event_type",
-                "dow",
-                F.expr(
-                    f"CAST(CAST(w AS DECIMAL(38,0)) * {t_row_micro}"
-                    " AS DECIMAL(38,0)) DIV rs"
-                ).cast("long").alias("w"),
-            )
-        )
-        cs = w.groupBy("dow").agg(F.sum("w").alias("cs"))
-        w = (
-            w.join(cs, "dow")
-            .select(
-                "event_type",
-                "dow",
-                F.expr(
-                    f"CAST(CAST(w AS DECIMAL(38,0)) * {t_col_micro}"
-                    " AS DECIMAL(38,0)) DIV cs"
-                ).cast("long").alias("w"),
-            )
-            .localCheckpoint()
-        )
-    return w.select(
-        "event_type",
-        F.col("dow").cast("long").alias("dow"),
-        F.col("w").alias("weight_micro"),
-    )
-
-
-def _q271_forward_asof(spark, sf):
-    """FORWARD as-of join with tolerance (pandas merge_asof's
-    direction='forward', the half q21's backward as-of leaves open): for
-    every click, the user's NEXT purchase within 7 days — the
-    time-to-conversion lookup as a JOIN, not an aggregate. Same
-    union-merge single-shuffle machinery (operators/joins.py::asof_join,
-    now direction-aware with tolerance nulling far matches). Output is
-    the per-day-lag conversion histogram plus the unmatched count, all
-    exact."""
-    from polars_pipe_spark.operators.joins import asof_join
-
-    ev = _t_par(spark, sf, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts")
-    )
-    joined = asof_join(
-        clicks,
-        purchases,
-        "user_id",
-        "click_ts",
-        "p_ts",
-        ["p_ts"],
-        direction="forward",
-        tolerance=7 * 86400,
-    )
-    return (
-        joined.withColumn(
-            "lag_days",
-            F.when(
-                F.col("p_ts").isNotNull(),
-                F.datediff(F.col("p_ts").cast("date"), F.col("click_ts").cast("date")),
-            ).cast("long"),
-        )
-        .groupBy("lag_days")
-        .agg(F.count(F.lit(1)).alias("n_clicks"))
-        .select("lag_days", F.col("n_clicks").cast("long").alias("n_clicks"))
-    )
-
-
-def _q272_sorted_neighborhood(spark, sf):
-    """Sorted-neighborhood blocking (Hernández & Stolfo 1995) — the
-    third candidate-generation family after equi-key (q256) and LSH
-    (q25): sort records by a key, compare each record only to its next
-    w neighbors in sort order. Distributed form: the sort is PARTITIONED
-    by the key's first character (the q265 blocked-sort pattern — never
-    a global sort; cross-block neighbors are the documented forfeit),
-    neighbors come from lead(1..3) over the keyed window, and
-    levenshtein ≤ 2 verifies. The audit compares this strategy's
-    verified pair set against q256's cents-equi-blocking on the same
-    corrupted-clone corpus: per strategy-overlap class (both /
-    sorted-only / cents-only) a pair count — the blocking-recall
-    comparison an ER engineer actually runs. On this corpus the sets
-    are DISJOINT, and that is the lesson: the mid-string corruption
-    ('cu' + 'tomer…') sorts clones far from their originals, so
-    name-sorted neighborhoods miss every true pair, while sequential
-    serial-number names are lev-1 apart, so the loose verifier floods
-    sorted-only with false matches — the textbook argument for
-    multi-pass SNM over independent keys and for strong-key blocking."""
-    w_size = 3
-    cust = _t(spark, sf, "customer").select(
-        (F.col("c_custkey") * 10).alias("rec_id"),
-        F.lower(F.col("c_name")).alias("name"),
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-    )
-    clones = (
-        _t(spark, sf, "customer")
-        .filter(F.col("c_custkey") % 7 == 0)
-        .select(
-            (F.col("c_custkey") * 10 + 1).alias("rec_id"),
-            F.concat(
-                F.substring(F.lower(F.col("c_name")), 1, 2),
-                F.substring(F.lower(F.col("c_name")), 4, 100),
-            ).alias("name"),
-            F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
-        )
-    )
-    records = cust.unionByName(clones).persist()
-    blk = records.withColumn("blk", F.substring("name", 1, 1))
-    w = Window.partitionBy("blk").orderBy("name", "rec_id")
-    with_leads = blk.select(
-        "rec_id",
-        "name",
-        *[
-            F.lead("rec_id", i).over(w).alias(f"nid{i}")
-            for i in range(1, w_size + 1)
-        ],
-        *[
-            F.lead("name", i).over(w).alias(f"nname{i}")
-            for i in range(1, w_size + 1)
-        ],
-    )
-    sn_parts = [
-        with_leads.select(
-            F.least(F.col("rec_id"), F.col(f"nid{i}")).alias("id_a"),
-            F.greatest(F.col("rec_id"), F.col(f"nid{i}")).alias("id_b"),
-            F.col("name").alias("na"),
-            F.col(f"nname{i}").alias("nb"),
-        ).filter(F.col("id_b").isNotNull())
-        for i in range(1, w_size + 1)
-    ]
-    sn_all = sn_parts[0]
-    for p in sn_parts[1:]:
-        sn_all = sn_all.unionByName(p)
-    sn = (
-        sn_all.filter(F.levenshtein("na", "nb") <= 2)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    b = records.select(
-        F.col("rec_id").alias("rec_b"),
-        F.col("name").alias("name_b"),
-        F.col("cents").alias("cents_b"),
-    )
-    eqb = (
-        records.alias("a")
-        .join(
-            b,
-            (F.col("a.cents") == F.col("cents_b"))
-            & (F.col("a.rec_id") < F.col("rec_b")),
-        )
-        .filter(F.levenshtein(F.col("a.name"), F.col("name_b")) <= 2)
-        .select(F.col("a.rec_id").alias("id_a"), F.col("rec_b").alias("id_b"))
-        .distinct()
-    )
-    tagged = (
-        sn.withColumn("in_sn", F.lit(1))
-        .join(eqb.withColumn("in_eq", F.lit(1)), ["id_a", "id_b"], "full_outer")
-        .select(
-            F.when(
-                F.col("in_sn").isNotNull() & F.col("in_eq").isNotNull(), "both"
-            )
-            .when(F.col("in_sn").isNotNull(), "sorted_only")
-            .otherwise("cents_only")
-            .alias("found_by"),
-        )
-    )
-    return tagged.groupBy("found_by").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs")
-    )
-
-
-def _q273_soft_dedup_weights(spark, sf):
-    """SOFT deduplication — keep every document but down-weight
-    duplicates so each near-dup cluster contributes one unit of training
-    mass (weight = 1e6 DIV cluster_size micro-units; singletons keep
-    1e6): the loss-weighting alternative to dropping (retains diversity
-    within clusters while killing the over-representation that makes
-    models memorize boilerplate). Clusters from the q63 connected
-    components; the audit columns prove the invariant: Σ weights is
-    within one floor-rounding unit per cluster of n_clusters·1e6. One
-    join against the cluster map; docs outside any cluster pass through
-    at full weight."""
-    from polars_pipe_spark.functions.dedup import dedup_clusters, minhash_near_dups
-
-    docs = _t_par(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "text", "doc_id", shingle_k=3, sig_k=8, n_bands=4, threshold=0.2
-    ).select("id_a", "id_b").persist()
-    clusters = dedup_clusters(pairs).select(
-        F.col("node").alias("doc_id"), "cluster_id"
-    )
-    sized = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("csize"))
-    weighted = (
-        docs.select("doc_id")
-        .join(clusters, "doc_id", "left")
-        .join(sized, "cluster_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("csize", F.lit(1)).cast("long").alias("cluster_size"),
-            F.expr(
-                "CAST(1000000 AS BIGINT) DIV CAST(COALESCE(csize, 1) AS BIGINT)"
-            ).alias("weight_micro"),
-        )
-    )
-    return weighted.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("cluster_size") > 1, 1).otherwise(0)).alias(
-            "n_in_clusters"
-        ),
-        F.sum("weight_micro").alias("total_weight_micro"),
-        F.countDistinct(
-            F.when(F.col("cluster_size") > 1, F.col("weight_micro"))
-        ).alias("n_weight_levels"),
-    ).select(
-        F.col("n_docs").cast("long").alias("n_docs"),
-        F.col("n_in_clusters").cast("long").alias("n_in_clusters"),
-        F.col("total_weight_micro").cast("long").alias("total_weight_micro"),
-        F.col("n_weight_levels").cast("long").alias("n_weight_levels"),
-    )
-
-
-def _q274_survival_hazard(spark, sf):
-    """Discrete-time survival analysis (the Kaplan–Meier life table, by
-    tenure week): per user, tenure = weeks from first to last event;
-    a user is an observed CHURN if their last event precedes the
-    observation end by > 1 day (the tight threshold matching the
-    synthetic ~31-day window), otherwise right-CENSORED (the
-    distinction that separates survival analysis from a naive churn
-    rate). Per week w: at-risk = users with tenure ≥ w, events = churns
-    at exactly w, hazard = events/at-risk in exact ppm, and the KM
-    survival curve S(w) = Π(1 − h_j) folded over the week-sorted array
-    (the q263 deterministic-float-fold pattern; the week axis is ~5
-    rows, bounded by the observation span). At-risk counts come from a
-    reverse cumulative over the bounded week histogram — no per-user
-    window anywhere."""
-    ev = _t_par(spark, sf, "events")
-    span = ev.agg(F.max("ts").alias("end_ts"))
-    users = (
-        ev.groupBy("user_id")
-        .agg(F.min("ts").alias("first_ts"), F.max("ts").alias("last_ts"))
-        .crossJoin(F.broadcast(span))
-        .select(
-            "user_id",
-            F.expr(
-                "CAST(datediff(CAST(last_ts AS DATE), CAST(first_ts AS DATE))"
-                " AS BIGINT) DIV 7"
-            ).alias("week"),
-            (
-                F.unix_timestamp("end_ts") - F.unix_timestamp("last_ts")
-                > 86400
-            ).alias("churned"),
-        )
-    )
-    hist = users.groupBy("week").agg(
-        F.count(F.lit(1)).alias("n_ending"),
-        F.sum(F.when(F.col("churned"), 1).otherwise(0)).alias("n_churned"),
-    )
-    w_rev = (
-        Window.partitionBy(F.lit(1))
-        .orderBy(F.col("week").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    staged = hist.withColumn("n_at_risk", F.sum("n_ending").over(w_rev)).withColumn(
-        "hazard_ppm",
-        F.expr("CAST(n_churned * 1000000 AS BIGINT) DIV n_at_risk"),
-    )
-    # KM survival: product of (1 - hazard) over weeks <= w, computed as a
-    # week-sorted array fold per row (bounded axis)
-    folded = staged.withColumn(
-        "survival",
-        F.round(
-            F.aggregate(
-                F.transform(
-                    F.filter(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct("week", "hazard_ppm")
-                            ).over(Window.partitionBy(F.lit(1)))
-                        ),
-                        lambda st: st["week"] <= F.col("week"),
-                    ),
-                    lambda st: 1.0 - st["hazard_ppm"].cast("double") / 1_000_000.0,
-                ),
-                F.lit(1.0),
-                lambda acc, x: acc * x,
-            ),
-            6,
-        ),
-    )
-    return folded.select(
-        F.col("week").cast("long").alias("week"),
-        F.col("n_at_risk").cast("long").alias("n_at_risk"),
-        F.col("n_churned").cast("long").alias("n_churned"),
-        "hazard_ppm",
-        "survival",
-    )
-
-
-def _q275_burstiness(spark, sf):
-    """Arrival burstiness per event type: the Fano factor (variance-to-
-    mean ratio of daily counts — VMR 1 = Poisson, > 1 = overdispersed /
-    bursty, < 1 = regular), the diagnostic that says whether a stream's
-    spikes are real structure or Poisson noise. Exact integer moments
-    over the bounded daily-count table; VMR leaves as milli-scaled
-    integer division of exact numerators (population variance·n² =
-    nΣx²−(Σx)², the q240 identity), so no float accumulation anywhere;
-    the over/under-dispersed verdict is an integer cross-multiply."""
-    ev = _t_par(spark, sf, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date")).alias(
-            "day"
-        ),
-    ).agg(F.count(F.lit(1)).alias("x"))
-    m = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-    )
-    return m.select(
-        "event_type",
-        F.col("n").cast("long").alias("n_days"),
-        F.expr("CAST(sx * 1000 AS BIGINT) DIV n").alias("mean_milli"),
-        # VMR = var/mean = (n·Σx²−(Σx)²) / (n·Σx): both exact integers
-        F.expr(
-            "CAST((n * sxx - sx * sx) * 1000 AS BIGINT) DIV (n * sx)"
-        ).alias("vmr_milli"),
-        # bursty iff var > mean ⟺ n·Σx²−(Σx)² > n·Σx (integer compare)
-        F.expr("(n * sxx - sx * sx) > (n * sx)").alias("overdispersed"),
-    )
-
-
-def _q276_png_decode(spark, sf):
-    """REAL PNG decode end-to-end (zlib inflate + all five scanline
-    un-filters): per document a small RGB image is synthesized from a
-    closed-form pixel rule (r=(did·7+3i)%256, g=(did·11+5i)%256,
-    b=(did·13+2i)%256 at row-major index i; w=4+did%3, h=3+did%2),
-    written through the PNG encoder with filter_type = did%5 — so the
-    corpus exercises None/Sub/Up/Average/Paeth un-filtering — packed
-    into the media struct, and decoded back by
-    functions/multimodal.py::extract_image_features. PNG is lossless,
-    so the ORACLE derives width/height/channels and the exact
-    integer-sum mean_luma from the same construction (ground truth,
-    not a second decoder) — the image twin of q261."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_png,
-        extract_image_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 3, 3 + did % 2
-                i = np.arange(w * h, dtype="int64")
-                px = np.stack(
-                    [
-                        (did * 7 + i * 3) % 256,
-                        (did * 11 + i * 5) % 256,
-                        (did * 13 + i * 2) % 256,
-                    ],
-                    axis=-1,
-                ).reshape(h, w, 3).astype("uint8")
-                payloads.append(encode_png(w, h, px, filter_type=did % 5))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("image/png")
-        ).alias("media"),
-    )
-    return extract_image_features(media, use_fake_decoder=False).select(
-        "doc_id", "width", "height", "n_channels", "mean_luma"
-    )
-
-
-def _q277_jpeg_decode(spark, sf):
-    """REAL baseline JPEG decode end-to-end (marker walk, payload-
-    embedded DQT/DHT, Huffman + dequant + IDCT): per document an 8x8
-    solid-gray image with EVEN value v = 2·(did%128) is encoded at
-    quality 50 — the Annex-K tables unscaled, DC quant 16, so
-    8·(v−128)/16 is an integer and the lossy pipeline round-trips the
-    gray level BIT-EXACTLY (decoded mean_luma = 64000·v / (255000·64)
-    in closed form). Varying v across the corpus walks the Huffman DC
-    magnitude categories; AC/subsampling paths are covered by the
-    pytest round-trip matrix. The ORACLE computes the same closed form
-    — ground truth, not a second decoder."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_jpeg,
-        extract_image_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                v = 2 * (int(did) % 128)
-                px = np.full((8, 8, 3), v, dtype="uint8")
-                payloads.append(encode_jpeg(8, 8, px, quality=50))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("image/jpeg")
-        ).alias("media"),
-    )
-    return extract_image_features(media, use_fake_decoder=False).select(
-        "doc_id", "width", "height", "n_channels", "mean_luma"
-    )
-
-
-def _q280_png_full_matrix(spark, sf):
-    """PNG spec-matrix decode end-to-end (r9 — the seam-closing twin of
-    q276/q278): per document one of four shapes by doc_id % 4 —
-      0: 16-bit grayscale, Adam7 interlaced; g_i = (did·257+1031i) % 65536
-      1: 4-bit grayscale (samples expand ×17 exactly); g_i = (did+i) % 16
-      2: 2-bit palette (4-entry PLTE), Adam7; idx_i = (did+i) % 4
-      3: 16-bit RGB; (did·7+3i, did·11+5i, did·13+2i) % 65536 —
-    all at w = 4+did%3, h = 3+did%2 (small enough that Adam7 passes go
-    empty) and filter_type = did % 5. PNG is lossless at every depth, so
-    the ORACLE is the closed-form construction with the depth's own
-    integer-luma denominator (65535 for 16-bit) — ground truth, not a
-    second decoder."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_png,
-        extract_image_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 3, 3 + did % 2
-                i = np.arange(w * h, dtype="int64")
-                ft = did % 5
-                cls = did % 4
-                if cls == 0:
-                    g = ((did * 257 + i * 1031) % 65536).reshape(h, w)
-                    payloads.append(
-                        encode_png(w, h, g, filter_type=ft, depth=16, interlace=1)
-                    )
-                elif cls == 1:
-                    g = ((did + i) % 16).reshape(h, w)
-                    payloads.append(encode_png(w, h, g, filter_type=ft, depth=4))
-                elif cls == 2:
-                    j = np.arange(4, dtype="int64")
-                    pal = np.stack(
-                        [
-                            (did * 5 + 3 * j) % 256,
-                            (did * 9 + 7 * j) % 256,
-                            (did * 3 + 11 * j) % 256,
-                        ],
-                        axis=-1,
-                    ).astype("uint8")
-                    idx = ((did + i) % 4).reshape(h, w)
-                    payloads.append(
-                        encode_png(w, h, idx, filter_type=ft, depth=2,
-                                   interlace=1, palette=pal)
-                    )
-                else:
-                    px = np.stack(
-                        [
-                            (did * 7 + i * 3) % 65536,
-                            (did * 11 + i * 5) % 65536,
-                            (did * 13 + i * 2) % 65536,
-                        ],
-                        axis=-1,
-                    ).reshape(h, w, 3)
-                    payloads.append(encode_png(w, h, px, filter_type=ft, depth=16))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("image/png")
-        ).alias("media"),
-    )
-    return extract_image_features(media, use_fake_decoder=False).select(
-        "doc_id", "width", "height", "n_channels", "mean_luma"
-    )
-
-
-def _q279_jpeg_progressive(spark, sf):
-    """REAL progressive JPEG decode end-to-end (SOF2, T.81 Annex G:
-    spectral selection + successive approximation, EOB runs, AC
-    refinement — the libjpeg default 10-scan script): same solid-gray
-    closed-form construction as q277 (even v = 2·(did%128), quality 50,
-    DC quant 16 divides exactly), but transmitted progressively — DC
-    arrives at Al=1 then refines, the empty AC bands ride EOBn runs.
-    Fully-refined progressive reconstructs the SAME coefficients as
-    baseline, so the ORACLE is q277's closed form (ground truth, not a
-    second decoder)."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_jpeg_progressive,
-        extract_image_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                v = 2 * (int(did) % 128)
-                px = np.full((8, 8, 3), v, dtype="uint8")
-                payloads.append(encode_jpeg_progressive(8, 8, px, quality=50))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("image/jpeg")
-        ).alias("media"),
-    )
-    return extract_image_features(media, use_fake_decoder=False).select(
-        "doc_id", "width", "height", "n_channels", "mean_luma"
-    )
-
-
-def _q278_png_palette_gray(spark, sf):
-    """REAL palette + grayscale PNG decode end-to-end (r8 VERDICT
-    item 4 — palette PNG is common in web-scraped corpora): per document
-    one of three 8-bit color types by doc_id % 3 —
-      0: grayscale (ct 0), g_i = (did·7+3i) % 256;
-      1: gray+alpha (ct 4), same gray rule, alpha (did·17+i) % 256
-         (ignored by luma);
-      2: palette (ct 3), 16-entry PLTE p_j = ((did·5+3j)%256,
-         (did·9+7j)%256, (did·3+11j)%256), index_i = (did+i) % 16, with
-         a tRNS chunk when did is odd (n_channels 4 vs 3) —
-    all at w = 4+did%3, h = 3+did%2 and filter_type = did % 5, so every
-    un-filter path runs at 1- and 2-byte strides too. PNG is lossless,
-    so the ORACLE is the same closed-form construction (ground truth,
-    not a second decoder) — the indexed/gray twin of q276."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_png,
-        extract_image_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 3, 3 + did % 2
-                i = np.arange(w * h, dtype="int64")
-                cls = did % 3
-                if cls == 0:
-                    px = ((did * 7 + i * 3) % 256).reshape(h, w).astype("uint8")
-                    payloads.append(encode_png(w, h, px, filter_type=did % 5))
-                elif cls == 1:
-                    g = (did * 7 + i * 3) % 256
-                    a = (did * 17 + i) % 256
-                    px = np.stack([g, a], axis=-1).reshape(h, w, 2).astype("uint8")
-                    payloads.append(encode_png(w, h, px, filter_type=did % 5))
-                else:
-                    j = np.arange(16, dtype="int64")
-                    pal = np.stack(
-                        [
-                            (did * 5 + 3 * j) % 256,
-                            (did * 9 + 7 * j) % 256,
-                            (did * 3 + 11 * j) % 256,
-                        ],
-                        axis=-1,
-                    ).astype("uint8")
-                    idx = ((did + i) % 16).reshape(h, w).astype("uint8")
-                    trns = list(range(16)) if did % 2 else None
-                    payloads.append(
-                        encode_png(w, h, idx, filter_type=did % 5,
-                                   palette=pal, trns=trns)
-                    )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("image/png")
-        ).alias("media"),
-    )
-    return extract_image_features(media, use_fake_decoder=False).select(
-        "doc_id", "width", "height", "n_channels", "mean_luma"
-    )
-
-
-def _q281_adpcm_decode(spark, sf):
-    """REAL compressed-audio decode end-to-end (r10 — closes the audio
-    seam the r9 verdict flagged: images had spec decoders, audio stopped
-    at PCM-16): a single-block mono IMA-ADPCM WAV is synthesized per
-    document from an ANALYTIC nibble stream (nibble_i = (doc_id·13 +
-    i·5) mod 16, n_nib = 40 + doc_id mod 16, initial predictor =
-    (doc_id·17) mod 1024 − 512, step index = doc_id mod 40, 8 kHz) via
-    functions/multimodal.py::encode_wav_ima_adpcm_nibbles, then decoded
-    back by extract_wav_features → decode_wav — RIFF walk, fmt-17
-    validation, per-nibble step/index-table recurrence, int16 clamp,
-    fact-chunk truncation, integer-exact RMS. The ORACLE replays the
-    SAME published IMA recurrence as a DuckDB recursive CTE over the
-    construction (ground truth through an independent engine, not a
-    second Python decoder)."""
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_wav_ima_adpcm_nibbles,
-        extract_wav_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n_nib = 40 + did % 16
-                nibs = [(did * 13 + i * 5) % 16 for i in range(n_nib)]
-                payloads.append(
-                    encode_wav_ima_adpcm_nibbles(
-                        (did * 17) % 1024 - 512, did % 40, nibs, 8000
-                    )
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("audio/wav")
-        ).alias("media"),
-    )
-    return extract_wav_features(media).select(
-        "doc_id",
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        F.round("rms", 6).alias("rms"),
-    )
-
-
-def _q282_wav_float_decode(spark, sf):
-    """IEEE-float WAV decode end-to-end (r10 audio-seam closure, the
-    float twin of q261): per document a float32 mono WAV with
-    s_i = ((doc_id·31 + i·7) mod 2001 − 1000) / 128 — exactly
-    representable in float32, and every partial sum of s² is an
-    integer/16384 below 2^53, so the decoder's sequential float64
-    ``cumsum`` fold is EXACTLY Σv²/16384 and the oracle can state the
-    RMS in closed integer form. Decode path:
-    functions/multimodal.py::decode_wav format-3 branch (RIFF walk,
-    fact-chunk sample count, float64 widen, cumsum fold)."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_wav_float,
-        extract_wav_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 50 + did % 20
-                i = np.arange(n, dtype="int64")
-                s = ((did * 31 + i * 7) % 2001 - 1000) / 128.0
-                payloads.append(encode_wav_float(s.tolist(), 8000, bits=32))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("audio/wav")
-        ).alias("media"),
-    )
-    return extract_wav_features(media).select(
-        "doc_id",
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        F.round("rms", 6).alias("rms"),
-    )
-
-
-def _q283_g711_decode(spark, sf):
-    """G.711 telephony-audio decode (r10, the last easy audio format
-    tag): per document a companded byte stream b_i = (doc_id·7 + i·3)
-    mod 256 (n = 40 + doc_id mod 25, 8 kHz) is wrapped as a µ-law WAV
-    (format tag 7) for even doc_ids and A-law (tag 6) for odd, then
-    decoded by functions/multimodal.py::decode_wav — the published
-    BIAS=0x84 µ-law and segment-shifted A-law expansion tables, exact
-    integer RMS. The ORACLE states both expansions in closed integer
-    SQL form over the same construction (~b = 255−b, xor-85, segment
-    CASE) — an independent-engine decode of every byte."""
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_wav_g711,
-        extract_wav_features,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 40 + did % 25
-                bs = bytes((did * 7 + i * 3) % 256 for i in range(n))
-                law = "ulaw" if did % 2 == 0 else "alaw"
-                payloads.append(encode_wav_g711(bs, 8000, law))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(
-        make, "doc_id long, payload binary"
-    ).select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("audio/wav")
-        ).alias("media"),
-    )
-    return extract_wav_features(media).select(
-        "doc_id",
-        # law is a pure function of doc_id — no join back onto the
-        # mapInPandas frame (which would evaluate the synth twice)
-        F.when(F.col("doc_id") % 2 == 0, F.lit("ulaw"))
-        .otherwise(F.lit("alaw"))
-        .alias("law"),
-        "sample_rate",
-        "n_samples",
-        "duration_ms",
-        F.round("rms", 6).alias("rms"),
-    )
-
-
-def _q284_mjpeg_avi_decode(spark, sf):
-    """MJPEG-in-AVI video decode (r11 — the last multimodal modality
-    without a real decoder, r10 verdict task 2): per document an AVI
-    with n = 2 + did%3 frames, each an 8x8 solid-gray baseline JPEG
-    with EVEN value v_f = 2·((did + 17f) % 128) at quality 50 — the
-    q277 construction, whose lossy pipeline round-trips the gray level
-    BIT-EXACTLY (DC quant 16 divides 8·(v−128)) — wrapped by
-    functions/multimodal.py::encode_avi_mjpeg and decoded for REAL by
-    decode_avi_mjpeg → decode_jpeg per frame (RIFF walk + Huffman +
-    dequant + IDCT). One row per frame. The ORACLE is the closed form
-    64000·v_f/(255000·64) over generate_series — ground truth, not a
-    second decoder."""
-    import numpy as np
-    import pandas as pd  # noqa: PLC0415
-
-    from polars_pipe_spark.functions.multimodal import (
-        encode_avi_mjpeg,
-        encode_jpeg,
-        extract_video_frames,
-        pack_media,
-    )
-
-    docs = _t_par(spark, sf, "documents").select("doc_id")
-
-    def make(it):
-        for pdf in it:
-            payloads = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                frames = []
-                for f in range(2 + did % 3):
-                    v = 2 * ((did + 17 * f) % 128)
-                    px = np.full((8, 8, 3), v, dtype="uint8")
-                    frames.append(encode_jpeg(8, 8, px, quality=50))
-                payloads.append(encode_avi_mjpeg(frames, 8, 8, fps=12))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(make, "doc_id long, payload binary").select(
-        "doc_id",
-        pack_media(
-            F.col("payload"), F.lit(None).cast("string"), F.lit("video/x-msvideo")
-        ).alias("media"),
-    )
-    return extract_video_frames(media).select(
-        "doc_id", "n_frames", "fps", "frame_idx", "width", "height",
-        "mean_luma",  # exact double: int luma sum / one division (q277)
-    )
-
-
-def _q285_band_cap_report(spark, sf):
-    """LSH band-cap saturation observability (r12 — the q251 lesson as
-    a first-class query): per minhash band index, bucket count,
-    over-cap bucket count at the production cap (1000), the (id, band)
-    rows a capped candidate run would drop, and the largest bucket.
-    The operational pre-flight for every banded-dedup recall claim at a
-    new scale. No reference parity cite — extension surface
-    (functions/dedup.py::band_cap_report)."""
-    from polars_pipe_spark.functions.dedup import band_cap_report
-
-    return band_cap_report(
-        _t_par(spark, sf, "documents"), "text", "doc_id",
-        shingle_k=3, sig_k=8, n_bands=4, max_band_members=1000,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Registry
-# ---------------------------------------------------------------------------
-
-_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q01_filter_pushdown": _q01_filter_pushdown,
-    "q02_projection_rename": _q02_projection_rename,
-    "q03_recast": _q03_recast,
-    "q04_fill_clip": _q04_fill_clip,
-    "q05_derive_arith": _q05_derive_arith,
-    "q06_agg_broadcast": _q06_agg_broadcast,
-    "q07_normalise_str": _q07_normalise_str,
-    "q08_dedupe_exact": _q08_dedupe_exact,
-    "q09_validate_split": _q09_validate_split,
-    "q10_describe_stats": _q10_describe_stats,
-    "q11_nest_unnest": _q11_nest_unnest,
-    "q12_lineage_hash": _q12_lineage_hash,
-    "q13_tpch_q1": _q13_tpch_q1,
-    "q14_join_revenue_by_nation": _q14_join_revenue_by_nation,
-    "q15_anti_semi_join": _q15_anti_semi_join,
-    "q16_window_topk": _q16_window_topk,
-    "q17_running_sum": _q17_running_sum,
-    "q18_set_ops": _q18_set_ops,
-    "q19_rollup": _q19_rollup,
-    "q20_pivot": _q20_pivot,
-    "q21_asof_join": _q21_asof_join,
-    "q22_sessionize": _q22_sessionize,
-    "q23_text_stats": _q23_text_stats,
-    "q24_exact_dedup": _q24_exact_dedup,
-    "q25_minhash_neardup": _q25_minhash_neardup,
-    "q26_simhash": _q26_simhash,
-    "q27_ngram_jaccard": _q27_ngram_jaccard,
-    "q28_cosine_topk": _q28_cosine_topk,
-    "q29_lsh_topk": _q29_lsh_topk,
-    "q30_multimodal_features": _q30_multimodal_features,
-    "q31_windowed_events": _q31_windowed_events,
-    "q32_streaming_windowed": _q32_streaming_windowed,
-    "q33_ivf_topk": _q33_ivf_topk,
-    "q34_embedding_neardup": _q34_embedding_neardup,
-    "q35_cube": _q35_cube,
-    "q36_unpivot": _q36_unpivot,
-    "q37_json_extract": _q37_json_extract,
-    "q38_date_parts": _q38_date_parts,
-    "q39_string_funcs": _q39_string_funcs,
-    "q40_approx_sketches": _q40_approx_sketches,
-    "q41_grouping_sets_sql": _q41_grouping_sets_sql,
-    "q42_having": _q42_having,
-    "q43_csv_source": _q43_csv_source,
-    "q44_json_source": _q44_json_source,
-    "q45_pipeline_service": _q45_pipeline_service,
-    "q46_salted_agg": _q46_salted_agg,
-    "q47_window_analytics": _q47_window_analytics,
-    "q48_correlated_subquery": _q48_correlated_subquery,
-    "q49_tpch_q3": _q49_tpch_q3,
-    "q50_tpch_q6": _q50_tpch_q6,
-    "q51_tpch_q18": _q51_tpch_q18,
-    "q52_merge_upsert": _q52_merge_upsert,
-    "q53_hash_split": _q53_hash_split,
-    "q54_vocab_topk": _q54_vocab_topk,
-    "q55_length_histogram": _q55_length_histogram,
-    "q56_winsorize": _q56_winsorize,
-    "q57_group_zscore": _q57_group_zscore,
-    "q58_tfidf": _q58_tfidf,
-    "q59_label_centroids": _q59_label_centroids,
-    "q60_trailing_window": _q60_trailing_window,
-    "q61_fuzzy_join": _q61_fuzzy_join,
-    "q62_group_percentiles": _q62_group_percentiles,
-    "q63_dedup_clusters": _q63_dedup_clusters,
-    "q64_frame_sampling": _q64_frame_sampling,
-    "q65_orc_source": _q65_orc_source,
-    "q66_range_join": _q66_range_join,
-    "q67_text_source": _q67_text_source,
-    "q68_bucketed_join": _q68_bucketed_join,
-    "q69_pii_scrub": _q69_pii_scrub,
-    "q70_repetition_quality": _q70_repetition_quality,
-    "q71_sequence_packing": _q71_sequence_packing,
-    "q72_oov_rate": _q72_oov_rate,
-    "q73_dedup_apply": _q73_dedup_apply,
-    "q74_session_window": _q74_session_window,
-    "q75_streaming_session": _q75_streaming_session,
-    "q76_tpch_q10": _q76_tpch_q10,
-    "q77_tpch_q16": _q77_tpch_q16,
-    "q78_quantized_topk": _q78_quantized_topk,
-    "q79_source_mixing": _q79_source_mixing,
-    "q80_contamination": _q80_contamination,
-    "q81_tpch_q4_shape": _q81_tpch_q4_shape,
-    "q82_tpch_q12_shape": _q82_tpch_q12_shape,
-    "q83_tpch_q19_shape": _q83_tpch_q19_shape,
-    "q84_packed_texts": _q84_packed_texts,
-    "q85_time_spine": _q85_time_spine,
-    "q86_stratified_sample": _q86_stratified_sample,
-    "q87_gram_matrix": _q87_gram_matrix,
-    "q88_robust_stats": _q88_robust_stats,
-    "q89_bigram_pmi": _q89_bigram_pmi,
-    "q90_equidepth_histogram": _q90_equidepth_histogram,
-    "q91_hopping_window": _q91_hopping_window,
-    "q92_click_attribution": _q92_click_attribution,
-    "q93_streaming_attribution": _q93_streaming_attribution,
-    "q94_dup_spans": _q94_dup_spans,
-    "q95_lexical_diversity": _q95_lexical_diversity,
-    "q96_salted_join": _q96_salted_join,
-    "q97_multiprobe_lsh": _q97_multiprobe_lsh,
-    "q98_tpch_q7_shape": _q98_tpch_q7_shape,
-    "q99_tpch_q13_shape": _q99_tpch_q13_shape,
-    "q100_tpch_q17_shape": _q100_tpch_q17_shape,
-    "q101_tpch_q18_shape": _q101_tpch_q18_shape,
-    "q102_partitioned_layout": _q102_partitioned_layout,
-    "q103_window_battery": _q103_window_battery,
-    "q104_skew_report": _q104_skew_report,
-    "q105_session_funnel": _q105_session_funnel,
-    "q106_table_expectations": _q106_table_expectations,
-    "q107_streaming_hopping": _q107_streaming_hopping,
-    "q108_feature_hashing": _q108_feature_hashing,
-    "q109_grouped_pandas": _q109_grouped_pandas,
-    "q110_debounce": _q110_debounce,
-    "q111_source_overlap": _q111_source_overlap,
-    "q112_audio_features": _q112_audio_features,
-    "q113_tpch_q8_shape": _q113_tpch_q8_shape,
-    "q114_tpch_q14_shape": _q114_tpch_q14_shape,
-    "q115_tpch_q15_shape": _q115_tpch_q15_shape,
-    "q116_robust_outliers": _q116_robust_outliers,
-    "q117_running_distinct_users": _q117_running_distinct_users,
-    "q118_tpch_q5": _q118_tpch_q5,
-    "q119_tpch_q2_shape": _q119_tpch_q2_shape,
-    "q120_tpch_q9_shape": _q120_tpch_q9_shape,
-    "q121_tpch_q11_shape": _q121_tpch_q11_shape,
-    "q122_tpch_q20_shape": _q122_tpch_q20_shape,
-    "q123_tpch_q21_shape": _q123_tpch_q21_shape,
-    "q124_tpch_q22_shape": _q124_tpch_q22_shape,
-    "q125_bm25_topk": _q125_bm25_topk,
-    "q126_zorder_code": _q126_zorder_code,
-    "q127_weighted_sample": _q127_weighted_sample,
-    "q128_quality_classifier": _q128_quality_classifier,
-    "q129_rerank": _q129_rerank,
-    "q130_streaming_minhash_dedup": _q130_streaming_minhash_dedup,
-    "q131_unigram_logprob": _q131_unigram_logprob,
-    "q132_span_dedup": _q132_span_dedup,
-    "q133_ann_recall": _q133_ann_recall,
-    "q134_training_pairs": _q134_training_pairs,
-    "q135_schema_union": _q135_schema_union,
-    "q136_scd2": _q136_scd2,
-    "q137_ivf_pretrained": _q137_ivf_pretrained,
-    "q138_text_clean": _q138_text_clean,
-    "q139_streaming_quality_gate": _q139_streaming_quality_gate,
-    "q140_locf": _q140_locf,
-    "q141_snapshot_diff": _q141_snapshot_diff,
-    "q142_psi_drift": _q142_psi_drift,
-    "q143_hypertable_rollup": _q143_hypertable_rollup,
-    "q144_quality_rep_dedup": _q144_quality_rep_dedup,
-    "q145_ohlc_bars": _q145_ohlc_bars,
-    "q146_rag_chunks": _q146_rag_chunks,
-    "q147_group_trend": _q147_group_trend,
-    "q148_frame_dedup": _q148_frame_dedup,
-    "q149_pca_whiten": _q149_pca_whiten,
-    "q150_corpus_funnel": _q150_corpus_funnel,
-    "q151_ngram_novelty": _q151_ngram_novelty,
-    "q152_retention_cohorts": _q152_retention_cohorts,
-    "q153_pack_attention": _q153_pack_attention,
-    "q154_ivf_incremental": _q154_ivf_incremental,
-    "q155_corpus_health": _q155_corpus_health,
-    "q156_bpe_pairs": _q156_bpe_pairs,
-    "q157_temperature_mixture": _q157_temperature_mixture,
-    "q158_incremental_dedup": _q158_incremental_dedup,
-    "q159_funnel": _q159_funnel,
-    "q160_fuzzy_join": _q160_fuzzy_join,
-    "q161_quality_bins": _q161_quality_bins,
-    "q162_winnow_fingerprints": _q162_winnow_fingerprints,
-    "q163_oov_rate": _q163_oov_rate,
-    "q164_centroid_similarity": _q164_centroid_similarity,
-    "q165_exact_quantiles": _q165_exact_quantiles,
-    "q166_stream_enrich": _q166_stream_enrich,
-    "q167_lineage_hash_props": _q167_lineage_hash_props,
-    "q168_pq_topk": _q168_pq_topk,
-    "q169_bpe_train": _q169_bpe_train,
-    "q170_trimmed_mean": _q170_trimmed_mean,
-    "q171_padding_waste": _q171_padding_waste,
-    "q172_mixing_schedule": _q172_mixing_schedule,
-    "q173_retrieval_eval": _q173_retrieval_eval,
-    "q174_rfm_scores": _q174_rfm_scores,
-    "q175_cluster_split": _q175_cluster_split,
-    "q176_knn_classify": _q176_knn_classify,
-    "q177_twap": _q177_twap,
-    "q178_session_sensitivity": _q178_session_sensitivity,
-    "q179_langid_calibration": _q179_langid_calibration,
-    "q180_compaction_report": _q180_compaction_report,
-    "q181_ann_dashboard": _q181_ann_dashboard,
-    "q182_dedup_savings": _q182_dedup_savings,
-    "q183_incremental_neardup": _q183_incremental_neardup,
-    "q184_streaming_pq_encode": _q184_streaming_pq_encode,
-    "q185_token_drift": _q185_token_drift,
-    "q186_grouped_quartiles": _q186_grouped_quartiles,
-    "q187_cooccurrence_pairs": _q187_cooccurrence_pairs,
-    "q188_dataset_card": _q188_dataset_card,
-    "q189_referential_integrity": _q189_referential_integrity,
-    "q190_table_checksum": _q190_table_checksum,
-    "q191_split_leakage": _q191_split_leakage,
-    "q192_byte_encoding_audit": _q192_byte_encoding_audit,
-    "q193_heavy_hitters": _q193_heavy_hitters,
-    "q194_bigram_transitions": _q194_bigram_transitions,
-    "q195_matryoshka_recall": _q195_matryoshka_recall,
-    "q196_containment_neardup": _q196_containment_neardup,
-    "q197_maxsim_late_interaction": _q197_maxsim_late_interaction,
-    "q198_ewma_smoothing": _q198_ewma_smoothing,
-    "q199_inverted_index": _q199_inverted_index,
-    "q200_event_path_trigrams": _q200_event_path_trigrams,
-    "q201_lsh_precision": _q201_lsh_precision,
-    "q202_langid_confusion": _q202_langid_confusion,
-    "q203_streaming_heavy_hitters": _q203_streaming_heavy_hitters,
-    "q204_bloom_prune_join": _q204_bloom_prune_join,
-    "q205_url_normalize": _q205_url_normalize,
-    "q206_group_ols": _q206_group_ols,
-    "q207_k_anonymity": _q207_k_anonymity,
-    "q208_range_partition_audit": _q208_range_partition_audit,
-    "q209_schema_evolution_read": _q209_schema_evolution_read,
-    "q210_domain_caps": _q210_domain_caps,
-    "q211_dedup_explain": _q211_dedup_explain,
-    "q212_label_balance": _q212_label_balance,
-    "q213_json_typed_extract": _q213_json_typed_extract,
-    "q214_kmeans_exact": _q214_kmeans_exact,
-    "q215_gap_fill_interpolate": _q215_gap_fill_interpolate,
-    "q216_association_rules": _q216_association_rules,
-    "q217_benford_audit": _q217_benford_audit,
-    "q218_weighted_quantiles": _q218_weighted_quantiles,
-    "q219_rolling_wau": _q219_rolling_wau,
-    "q220_pareto_frontier": _q220_pareto_frontier,
-    "q221_ab_test": _q221_ab_test,
-    "q222_cusum_changepoint": _q222_cusum_changepoint,
-    "q223_dow_seasonality": _q223_dow_seasonality,
-    "q224_clamped_running_balance": _q224_clamped_running_balance,
-    "q225_token_source_pmi": _q225_token_source_pmi,
-    "q226_transition_entropy": _q226_transition_entropy,
-    "q227_growth_accounting": _q227_growth_accounting,
-    "q228_session_basket_lift": _q228_session_basket_lift,
-    "q229_lead_time_sla": _q229_lead_time_sla,
-    "q230_revenue_concentration": _q230_revenue_concentration,
-    "q231_embedding_norm_audit": _q231_embedding_norm_audit,
-    "q232_time_to_convert": _q232_time_to_convert,
-    "q233_partitioned_write_prune": _q233_partitioned_write_prune,
-    "q234_dedup_survivorship": _q234_dedup_survivorship,
-    "q235_image_decode": _q235_image_decode,
-    "q236_semantic_dedup": _q236_semantic_dedup,
-    "q237_bpe_encode": _q237_bpe_encode,
-    "q238_eval_allocation": _q238_eval_allocation,
-    "q239_ks_drift": _q239_ks_drift,
-    "q240_anova": _q240_anova,
-    "q241_dup_graph_triangles": _q241_dup_graph_triangles,
-    "q242_countmin_sketch": _q242_countmin_sketch,
-    "q243_hll_registers": _q243_hll_registers,
-    "q244_exact_k_sample": _q244_exact_k_sample,
-    "q245_streaming_cms": _q245_streaming_cms,
-    "q246_grouped_hll": _q246_grouped_hll,
-    "q247_wilson_intervals": _q247_wilson_intervals,
-    "q248_corrupt_json_audit": _q248_corrupt_json_audit,
-    "q249_rendezvous_sharding": _q249_rendezvous_sharding,
-    "q250_cdc_chunking": _q250_cdc_chunking,
-    "q251_simhash_banded": _q251_simhash_banded,
-    "q252_pagerank": _q252_pagerank,
-    "q253_kmv_theta": _q253_kmv_theta,
-    "q254_phrase_search": _q254_phrase_search,
-    "q255_mann_whitney": _q255_mann_whitney,
-    "q256_entity_resolution": _q256_entity_resolution,
-    "q257_sql_surface": _q257_sql_surface,
-    "q258_scalar_pandas_udf": _q258_scalar_pandas_udf,
-    "q259_theil_sen": _q259_theil_sen,
-    "q260_longest_streak": _q260_longest_streak,
-    "q261_wav_decode": _q261_wav_decode,
-    "q262_seasonal_backtest": _q262_seasonal_backtest,
-    "q263_source_entropy": _q263_source_entropy,
-    "q264_sparse_cosine_topk": _q264_sparse_cosine_topk,
-    "q265_front_coding": _q265_front_coding,
-    "q266_good_turing": _q266_good_turing,
-    "q267_er_evaluation": _q267_er_evaluation,
-    "q268_secret_scan": _q268_secret_scan,
-    "q269_bloom_fpr": _q269_bloom_fpr,
-    "q270_ipf_raking": _q270_ipf_raking,
-    "q271_forward_asof": _q271_forward_asof,
-    "q272_sorted_neighborhood": _q272_sorted_neighborhood,
-    "q273_soft_dedup_weights": _q273_soft_dedup_weights,
-    "q274_survival_hazard": _q274_survival_hazard,
-    "q275_burstiness": _q275_burstiness,
-    "q276_png_decode": _q276_png_decode,
-    "q277_jpeg_decode": _q277_jpeg_decode,
-    "q278_png_palette_gray": _q278_png_palette_gray,
-    "q279_jpeg_progressive": _q279_jpeg_progressive,
-    "q280_png_full_matrix": _q280_png_full_matrix,
-    "q281_adpcm_decode": _q281_adpcm_decode,
-    "q282_wav_float_decode": _q282_wav_float_decode,
-    "q283_g711_decode": _q283_g711_decode,
-    "q284_mjpeg_avi_decode": _q284_mjpeg_avi_decode,
-    "q285_band_cap_report": _q285_band_cap_report,
-}
+    return queries()["q13_tpch_q1"](spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return dict(_QUERIES)
-
-
-_ORACLES: dict[str, str] = {
-    "q01_filter_pushdown": """
-        SELECT l_orderkey, l_linenumber, l_quantity, l_discount
-        FROM lineitem WHERE l_quantity > 45 AND l_discount <= 0.05
-    """,
-    "q02_projection_rename": """
-        SELECT c_custkey AS cust_id, c_name AS cust_name, c_nationkey
-        FROM customer
-    """,
-    "q03_recast": """
-        SELECT l_orderkey, l_linenumber,
-               CAST(FLOOR(l_quantity) AS BIGINT) AS qty_floor,
-               CAST(l_tax AS REAL) AS tax_double
-        FROM lineitem
-    """,
-    "q04_fill_clip": """
-        SELECT c_custkey,
-               COALESCE(NULLIF(c_acctbal, 0.0), -1.0) AS bal_nullable,
-               CASE WHEN c_custkey % 10 != 0
-                    THEN LEAST(GREATEST(c_acctbal, 0.0), 5000.0) END AS bal_sparse
-        FROM customer
-    """,
-    "q05_derive_arith": """
-        SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_discount, l_tax,
-               l_extendedprice * (1 - l_discount) AS gross,
-               l_quantity / l_extendedprice AS qty_price_ratio,
-               l_discount + l_tax AS disc_plus_tax
-        FROM lineitem
-    """,
-    "q06_agg_broadcast": """
-        WITH m AS (
-          SELECT ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                       / COUNT(o_orderkey), 6) AS mean_price
-          FROM orders
-        )
-        SELECT o_orderkey, o_totalprice, mean_price
-        FROM orders CROSS JOIN m
-        WHERE o_totalprice > mean_price
-    """,
-    "q07_normalise_str": """
-        SELECT c_custkey,
-               lower(regexp_replace(regexp_replace('  ' || c_name || chr(9), '^\\s+', ''), '\\s+$', '')) AS padded_name,
-               lower(trim(upper(c_mktsegment))) AS segment
-        FROM customer
-    """,
-    "q08_dedupe_exact": """
-        SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-    """,
-    "q09_validate_split": """
-        SELECT o_orderkey, o_totalprice, o_orderpriority, o_orderstatus,
-               concat_ws(',',
-                 CASE WHEN (o_totalprice > 5000.0) IS FALSE THEN 'price above 5000' END,
-                 CASE WHEN (o_orderpriority IN ('1-urgent','2-high','3-medium')) IS FALSE THEN 'priority known' END
-               ) AS error_reason
-        FROM orders
-        WHERE (o_totalprice > 5000.0) IS FALSE
-           OR (o_orderpriority IN ('1-urgent','2-high','3-medium')) IS FALSE
-    """,
-    "q10_describe_stats": """
-        WITH cols AS (
-          SELECT 'p_retailprice' AS col, p_retailprice AS v FROM part
-          UNION ALL
-          SELECT 'p_size', CAST(p_size AS DOUBLE) FROM part
-        )
-        SELECT s.statistic, c.col AS "column",
-               CASE s.statistic
-                 WHEN 'count' THEN CAST(COUNT(v) AS DOUBLE)
-                 WHEN 'null_count' THEN CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS DOUBLE)
-                 WHEN 'mean' THEN ROUND(CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) / COUNT(v), 6)
-                 WHEN 'min' THEN MIN(v)
-                 WHEN '25%' THEN ROUND(quantile_cont(v, 0.25), 6)
-                 WHEN '50%' THEN ROUND(quantile_cont(v, 0.5), 6)
-                 WHEN '75%' THEN ROUND(quantile_cont(v, 0.75), 6)
-                 WHEN 'max' THEN MAX(v)
-                 WHEN 'n_unique' THEN CAST(COUNT(DISTINCT v) AS DOUBLE)
-               END AS value
-        FROM cols c
-        CROSS JOIN (SELECT unnest(['count','null_count','mean','min','25%','50%','75%','max','n_unique']) AS statistic) s
-        GROUP BY s.statistic, c.col
-    """,
-    "q11_nest_unnest": """
-        SELECT c_custkey, c_acctbal, c_mktsegment FROM customer
-    """,
-    # q12: the raw xxhash64 value has no DuckDB reproduction, so the
-    # oracle checks every lineage literal plus per-row hash totality;
-    # determinism/collision-freeness are oracle-green via q167.
-    "q12_lineage_hash": """
-        SELECT s_suppkey,
-               'fixed-guid' AS sys_col_entrycheck_guid,
-               'supplier.parquet' AS sys_col_entrycheck_src_path,
-               '2025-10-16 12:00:00' AS sys_col_entrycheck_dt,
-               TRUE AS hash_total
-        FROM supplier
-    """,
-    "q13_tpch_q1": """
-        -- BIGINT-only output (type-seam-proof, r4): DuckDB's DECIMAL `//` is
-        -- float-lossy and its decimal->DOUBLE cast is not correctly rounded
-        -- past 2^53 unscaled, so every exact-integer step routes through
-        -- HUGEINT and the scale-10 sums leave as (units, micros) pairs.
-        WITH a AS (
-          SELECT l_returnflag, l_linestatus,
-                 CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) * 100 AS HUGEINT) AS qty_cents,
-                 CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS HUGEINT) AS price_cents,
-                 CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4)))) * 1000000 AS HUGEINT) AS disc_micros,
-                 CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(6,4))) * (1 + CAST(l_tax AS DECIMAL(6,4)))) * 1000000 AS HUGEINT) AS charge_micros,
-                 COUNT(*) AS count_order
-          FROM lineitem
-          WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-          GROUP BY l_returnflag, l_linestatus
-        )
-        SELECT l_returnflag, l_linestatus,
-               CAST(qty_cents AS BIGINT) AS sum_qty_cents,
-               CAST(price_cents AS BIGINT) AS sum_base_price_cents,
-               CAST(disc_micros // 1000000 AS BIGINT) AS sum_disc_price_units,
-               CAST(disc_micros % 1000000 AS BIGINT) AS sum_disc_price_micros,
-               CAST(charge_micros // 1000000 AS BIGINT) AS sum_charge_units,
-               CAST(charge_micros % 1000000 AS BIGINT) AS sum_charge_micros,
-               count_order,
-               CAST((qty_cents * 10000) // count_order AS BIGINT) AS avg_qty_micros,
-               CAST((price_cents * 10000) // count_order AS BIGINT) AS avg_price_micros
-        FROM a
-        ORDER BY l_returnflag, l_linestatus
-    """,
-    "q14_join_revenue_by_nation": """
-        SELECT n_name,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue,
-               COUNT(DISTINCT o_orderkey) AS n_orders
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name
-    """,
-    "q15_anti_semi_join": """
-        SELECT c_mktsegment, COUNT(*) AS n_customers, TRUE AS has_orders
-        FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        GROUP BY c_mktsegment
-        UNION ALL
-        SELECT c_mktsegment, COUNT(*) AS n_customers, FALSE AS has_orders
-        FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        GROUP BY c_mktsegment
-    """,
-    "q16_window_topk": """
-        SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
-          SELECT o_custkey, o_orderkey, o_totalprice,
-                 ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                    ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
-          FROM orders
-        ) WHERE rk <= 3
-    """,
-    "q17_running_sum": """
-        SELECT l_suppkey, l_orderkey, l_linenumber,
-               SUM(l_quantity) OVER (PARTITION BY l_suppkey
-                                     ORDER BY l_shipdate, l_orderkey,
-                                              l_linenumber, l_quantity
-                                     ROWS UNBOUNDED PRECEDING) AS running_qty
-        FROM lineitem
-    """,
-    "q18_set_ops": """
-        SELECT custkey FROM (
-          SELECT c_custkey AS custkey FROM customer WHERE c_mktsegment = 'BUILDING'
-          UNION
-          SELECT DISTINCT o_custkey FROM orders WHERE o_totalprice > 400000
-        )
-        EXCEPT ALL
-        SELECT c_custkey FROM customer WHERE c_mktsegment = 'MACHINERY'
-    """,
-    "q19_rollup": """
-        SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        FROM lineitem
-        GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    "q20_pivot": """
-        SELECT o_orderpriority,
-               COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_open,
-               COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_filled,
-               COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_partial
-        FROM orders GROUP BY o_orderpriority
-    """,
-    "q21_asof_join": """
-        SELECT p.event_id, p.user_id, p.ts, p.value, c.click_ts, c.click_value
-        FROM (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT user_id, ts AS click_ts, value AS click_value
-                        FROM events WHERE event_type = 'click') c
-        ON p.user_id = c.user_id AND c.click_ts <= p.ts
-    """,
-    "q22_sessionize": """
-        WITH gaps AS (
-          SELECT user_id, ts, event_id,
-                 CASE WHEN ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                       OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-          FROM events
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sessions AS (
-          -- CAST: DuckDB's windowed SUM yields HUGEINT (decimal128(38,0));
-          -- Spark's cumulative sum is LONG.  Identical values, different
-          -- physical type — the exact r1-r3 driver hash seam (r3 verdict).
-          SELECT user_id, ts,
-                 CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-          FROM gaps
-        )
-        SELECT user_id, session_id, COUNT(*) AS n_events,
-               epoch_us(MIN(ts)) AS session_start_us, epoch_us(MAX(ts)) AS session_end_us
-        FROM sessions GROUP BY user_id, session_id
-    """,
-}
-
-
-# --- extension oracles (generated with shared SQL fragments) ---------------
-
-_NORM = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
-_TOKS = f"CASE WHEN {_NORM} = '' THEN CAST([] AS VARCHAR[]) ELSE string_split({_NORM}, ' ') END"
-_MARKERS = {
-    "de": ["der", "die", "das", "und", "ein", "eine", "ist", "zu"],
-    "en": ["the", "and", "of", "to", "a", "in", "is", "it"],
-    "es": ["el", "la", "los", "de", "y", "un", "una", "es"],
-    "fr": ["le", "la", "les", "de", "et", "un", "une", "est"],
-}
-_PUNCT_RE = "[.,;:!?''\"()\\[\\]{}-]"
-
-
-def _in_list(words: list[str]) -> str:
-    return "(" + ", ".join(f"'{w}'" for w in words) + ")"
-
-
-def _lang_score(lang: str) -> str:
-    return f"len(list_filter(toks, t -> t IN {_in_list(_MARKERS[lang])}))"
-
-
-_ORACLES["q23_text_stats"] = f"""
-    WITH tok AS (
-      SELECT doc_id, text, {_NORM} AS norm, {_TOKS} AS toks FROM documents
-    ), feat AS (
-      SELECT doc_id, text, norm, toks,
-             len(toks) AS n_tokens,
-             len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS n_bpe_tokens,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks)
-                  ELSE 0.0 END AS awl,
-             CASE WHEN length(text) > 0
-                  THEN CAST(length(text) - length(regexp_replace(text, '{_PUNCT_RE}', '', 'g')) AS DOUBLE) / length(text)
-                  ELSE 0.0 END AS pr,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(len(list_filter(toks, t -> t IN {_in_list(_MARKERS["en"])})) AS DOUBLE) / len(toks)
-                  ELSE 0.0 END AS sr,
-             {_lang_score("de")} AS s_de, {_lang_score("en")} AS s_en,
-             {_lang_score("es")} AS s_es, {_lang_score("fr")} AS s_fr
-      FROM tok
-    )
-    SELECT doc_id, n_tokens, n_bpe_tokens,
-           round(awl, 6) AS avg_word_len,
-           round(pr, 6) AS punct_ratio,
-           round(sr, 6) AS stopword_ratio,
-           round(least(n_tokens / 100.0, 1.0) * 0.4
-                 + least(sr * 5.0, 1.0) * 0.4
-                 + (1.0 - least(pr * 10.0, 1.0)) * 0.2, 6) AS quality,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'unknown'
-                WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-                WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-                WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-                ELSE 'fr' END AS lang_pred,
-           md5(norm) AS fingerprint
-    FROM feat
-"""
-
-_ORACLES["q24_exact_dedup"] = f"""
-    SELECT md5({_NORM}) AS fingerprint, min(doc_id) AS canonical_id,
-           count(*) AS n_copies
-    FROM documents GROUP BY 1
-"""
-
-_SHINGLES3 = (
-    "CASE WHEN len(toks) <= 3 THEN [array_to_string(toks, ' ')] "
-    "ELSE list_transform(range(1, len(toks) - 1), i -> array_to_string(toks[i:i+2], ' ')) END"
-)
-
-def _q25_inner(max_band_members: int | None) -> str:
-    """Canonical minhash-LSH pair generation in DuckDB SQL, REPLAYING
-    the Spark side's band-bucket cap contract (r11 verdict task 2, the
-    q251 fix pattern generalized): ``minhash_near_dups`` /
-    ``minhash_lsh_candidates`` DROP band buckets with more than
-    ``max_band_members`` distinct members before the self-join
-    (functions/dedup.py::_cap_band_buckets), so a brute-force oracle is
-    only valid while no bucket saturates — exactly the class of silent
-    wrong-answer-at-scale that q251's sf0.1 run caught for simhash.
-    The capped CTE (``bc``/``kept``) makes every _Q25_BODY consumer's
-    oracle valid at ANY rung, binding cap or not.  ``None`` keeps the
-    uncapped body — used ONLY by q183, whose Spark side
-    (``incremental_near_dups``) deliberately runs uncapped (the batch
-    side is small by construction; see its docstring)."""
-    if max_band_members is None:
-        kept = "bands"
-        cap_ctes = ""
-    else:
-        kept = "kept"
-        cap_ctes = f"""
-    , bc AS (
-      SELECT band, COUNT(*) AS n_members FROM bands GROUP BY band
-    ), kept AS (
-      SELECT bands.doc_id, bands.band
-      FROM bands JOIN bc USING (band) WHERE bc.n_members <= {max_band_members}
-    )"""
-    return f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), dsh AS (
-      SELECT doc_id, list_distinct({_SHINGLES3}) AS dsh FROM tok
-    ), sig AS (
-      SELECT doc_id, (list_sort(list_transform(dsh, s -> md5(s))))[1:8] AS sig FROM dsh
-    ), bands AS (
-      SELECT DISTINCT doc_id, unnest([
-        concat_ws('|', '0', sig[1], sig[2]), concat_ws('|', '1', sig[3], sig[4]),
-        concat_ws('|', '2', sig[5], sig[6]), concat_ws('|', '3', sig[7], sig[8])
-      ]) AS band FROM sig
-    ){cap_ctes}, cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM {kept} a JOIN {kept} b ON a.band = b.band AND a.doc_id < b.doc_id
-    )
-    SELECT id_a, id_b,
-           round(CAST(len(list_filter(x.dsh, s -> list_contains(y.dsh, s))) AS DOUBLE)
-                 / (len(x.dsh) + len(y.dsh)
-                    - len(list_filter(x.dsh, s -> list_contains(y.dsh, s)))), 6) AS jaccard
-    FROM cand JOIN dsh x ON x.doc_id = id_a JOIN dsh y ON y.doc_id = id_b
-"""
-
-
-# cap=1000 mirrors every minhash_near_dups call site's default
-_Q25_INNER = _q25_inner(1000)
-_Q25_INNER_NOCAP = _q25_inner(None)
-_ORACLES["q25_minhash_neardup"] = (
-    "SELECT * FROM (" + _Q25_INNER + ") WHERE jaccard >= 0.2"
-)
-
-_NIB = "strpos('0123456789abcdef', substr(md5(t), {i}, 1)) - 1"
-_TOKVAL = " + ".join(
-    f"({_NIB.format(i=i + 1)}) * {16 ** (3 - i)}" for i in range(4)
-)
-_SIMHASH_BITS = " + ".join(
-    f"CASE WHEN 2 * len(list_filter(vals, v -> (v & {1 << (15 - b)}) != 0)) > n "
-    f"THEN {1 << (15 - b)} ELSE 0 END"
-    for b in range(16)
-)
-
-_ORACLES["q26_simhash"] = f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), v AS (
-      SELECT doc_id, len(toks) AS n,
-             list_transform(toks, t -> {_TOKVAL}) AS vals
-      FROM tok
-    )
-    SELECT doc_id, CAST({_SIMHASH_BITS} AS BIGINT) AS simhash16 FROM v
-"""
-
-_ORACLES["q27_ngram_jaccard"] = f"""
-    SELECT * FROM (
-      WITH g AS (
-        SELECT doc_id AS id, source,
-               list_distinct(list_transform(
-                 range(1, greatest(length({_NORM}) - 3, 1) + 1),
-                 i -> substr({_NORM}, i, 4))) AS grams
-        FROM documents
-      )
-      SELECT a.id AS id_a, b.id AS id_b,
-             round(CAST(len(list_filter(a.grams, s -> list_contains(b.grams, s))) AS DOUBLE)
-                   / (len(a.grams) + len(b.grams)
-                      - len(list_filter(a.grams, s -> list_contains(b.grams, s)))), 6) AS jaccard
-      FROM g a JOIN g b ON a.source = b.source AND a.id < b.id
-    ) WHERE jaccard >= 0.25
-"""
-
-_ORACLES["q211_dedup_explain"] = f"""
-    WITH g AS (
-      SELECT doc_id AS id, source,
-             list_distinct(list_transform(
-               range(1, greatest(length({_NORM}) - 3, 1) + 1),
-               i -> substr({_NORM}, i, 4))) AS grams
-      FROM documents
-    ),
-    p AS (
-      SELECT a.id AS id_a, b.id AS id_b,
-             len(a.grams) AS ng_a, len(b.grams) AS ng_b,
-             len(list_filter(a.grams, s -> list_contains(b.grams, s))) AS n_inter
-      FROM g a JOIN g b ON a.source = b.source AND a.id < b.id
-    )
-    SELECT id_a, id_b,
-           CAST(ng_a AS BIGINT) AS ng_a, CAST(ng_b AS BIGINT) AS ng_b,
-           CAST(n_inter AS BIGINT) AS n_inter,
-           CAST((n_inter * 1000000) // (ng_a + ng_b - n_inter) AS BIGINT)
-             AS jaccard_micros,
-           CAST((n_inter * 1000000) // least(ng_a, ng_b) AS BIGINT)
-             AS containment_micros
-    FROM p WHERE 5 * n_inter >= ng_a + ng_b
-"""
-
-_ORACLES["q212_label_balance"] = """
-    WITH per AS (SELECT label, COUNT(*) AS c FROM embeddings GROUP BY label),
-    s AS (SELECT SUM(c) AS n_rows, COUNT(*) AS n_labels, MAX(c) AS max_c,
-                 SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS sum_c2
-          FROM per)
-    SELECT CAST(n_rows AS BIGINT) AS n_rows,
-           CAST(n_labels AS BIGINT) AS n_labels,
-           CAST((max_c * 1000000) // n_rows AS BIGINT) AS majority_share_ppm,
-           CAST(((CAST(n_rows AS HUGEINT) * n_rows - sum_c2) * 1000000)
-                // (CAST(n_rows AS HUGEINT) * n_rows) AS BIGINT) AS gini_ppm
-    FROM s
-"""
-
-_ORACLES["q213_json_typed_extract"] = """
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-           CAST(SUM(CASE WHEN CAST(props->>'$.k' AS BIGINT) IS NULL
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_unparsed
-    FROM events GROUP BY event_type
-"""
-
-_ORACLES["q214_kmeans_exact"] = """
-    WITH e AS (
-      SELECT vec_id,
-             list_transform(embedding,
-               x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS vm
-      FROM embeddings
-    ),
-    c0 AS (
-      SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cl,
-             vm AS cv
-      FROM e ORDER BY vec_id LIMIT 4
-    ),
-    d1 AS (
-      SELECT e.vec_id, e.vm, c.cl,
-             list_sum(list_transform(range(1, 65),
-               i -> (e.vm[i] - c.cv[i]) * (e.vm[i] - c.cv[i]))) AS dist
-      FROM e CROSS JOIN c0 c
-    ),
-    a1 AS (
-      SELECT vec_id, vm, cl, dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY dist, cl) AS rn
-        FROM d1) WHERE rn = 1
-    ),
-    m1 AS (
-      SELECT cl, list(cv ORDER BY i) AS cv FROM (
-        SELECT a.cl, r.i,
-               CAST(SUM(a.vm[r.i]) // COUNT(*) AS BIGINT) AS cv
-        FROM a1 a CROSS JOIN range(1, 65) AS r(i)
-        GROUP BY a.cl, r.i
-      ) GROUP BY cl
-    ),
-    d2 AS (
-      SELECT e.vec_id, e.vm, c.cl,
-             list_sum(list_transform(range(1, 65),
-               i -> (e.vm[i] - c.cv[i]) * (e.vm[i] - c.cv[i]))) AS dist
-      FROM e CROSS JOIN m1 c
-    ),
-    a2 AS (
-      SELECT vec_id, vm, cl, dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY dist, cl) AS rn
-        FROM d2) WHERE rn = 1
-    ),
-    m2 AS (
-      SELECT cl, list(cv ORDER BY i) AS cv FROM (
-        SELECT a.cl, r.i,
-               CAST(SUM(a.vm[r.i]) // COUNT(*) AS BIGINT) AS cv
-        FROM a2 a CROSS JOIN range(1, 65) AS r(i)
-        GROUP BY a.cl, r.i
-      ) GROUP BY cl
-    ),
-    df AS (
-      SELECT e.vec_id, c.cl,
-             list_sum(list_transform(range(1, 65),
-               i -> (e.vm[i] - c.cv[i]) * (e.vm[i] - c.cv[i]))) AS dist
-      FROM e CROSS JOIN m2 c
-    ),
-    af AS (
-      SELECT vec_id, cl, dist FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY dist, cl) AS rn
-        FROM df) WHERE rn = 1
-    )
-    SELECT af.cl AS cluster_id,
-           CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(SUM(CAST(af.dist AS HUGEINT)) // COUNT(*) AS BIGINT) AS mean_sse,
-           ANY_VALUE(m.cv) AS centroid
-    FROM af JOIN m2 m ON af.cl = m.cl
-    GROUP BY af.cl
-"""
-
-_ORACLES["q215_gap_fill_interpolate"] = """
-    WITH per AS (
-      SELECT user_id,
-             date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-             CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS v_cents
-      FROM events GROUP BY 1, 2
-    ),
-    b AS (SELECT user_id, MIN(day) AS lo, MAX(day) AS hi FROM per GROUP BY 1),
-    spine AS (
-      SELECT b.user_id, unnest(generate_series(b.lo - 2, b.hi + 2)) AS day
-      FROM b
-    ),
-    s AS (
-      SELECT spine.user_id, spine.day, per.v_cents
-      FROM spine LEFT JOIN per
-        ON spine.user_id = per.user_id AND spine.day = per.day
-    ),
-    st AS (
-      SELECT *,
-        last_value(v_cents IGNORE NULLS) OVER
-          (PARTITION BY user_id ORDER BY day
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        last_value(CASE WHEN v_cents IS NOT NULL THEN day END IGNORE NULLS) OVER
-          (PARTITION BY user_id ORDER BY day
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
-        first_value(v_cents IGNORE NULLS) OVER
-          (PARTITION BY user_id ORDER BY day
-           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        first_value(CASE WHEN v_cents IS NOT NULL THEN day END IGNORE NULLS) OVER
-          (PARTITION BY user_id ORDER BY day
-           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
-      FROM s
-    )
-    SELECT user_id, day, v_cents,
-           CASE WHEN v_cents IS NOT NULL THEN v_cents
-                WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-                  pv + ((day - pd) * (nv - pv)) // (nd - pd)
-                WHEN pv IS NOT NULL THEN pv END AS filled,
-           CASE WHEN v_cents IS NOT NULL THEN 'known'
-                WHEN pv IS NOT NULL AND nv IS NOT NULL THEN 'interp'
-                WHEN pv IS NOT NULL THEN 'locf'
-                ELSE 'leading' END AS fill_kind
-    FROM st
-"""
-
-_ORACLES["q216_association_rules"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(list_distinct({_TOKS})) AS token FROM documents
-    ), vocab AS (
-      SELECT token, n_t FROM (
-        SELECT token, COUNT(*) AS n_t FROM tok GROUP BY token
-        ORDER BY n_t DESC, token ASC LIMIT 30
-      )
-    ), vt AS (
-      SELECT doc_id, tok.token, n_t FROM tok JOIN vocab USING (token)
-    ), pc AS (
-      SELECT a.token AS t_a, b.token AS t_b, a.n_t AS n_a, b.n_t AS n_b,
-             COUNT(*) AS n_ab
-      FROM vt a JOIN vt b ON a.doc_id = b.doc_id AND a.token < b.token
-      GROUP BY 1, 2, 3, 4
-    ), nd AS (SELECT COUNT(*) AS n_docs FROM documents),
-    rules AS (
-      SELECT t_a AS antecedent, t_b AS consequent,
-             n_a AS n_ante, n_b AS n_cons, n_ab FROM pc
-      UNION ALL
-      SELECT t_b, t_a, n_b, n_a, n_ab FROM pc
-    )
-    SELECT antecedent, consequent, CAST(n_ab AS BIGINT) AS n_ab,
-           CAST((n_ab * 1000000) // n_docs AS BIGINT) AS support_ppm,
-           CAST((n_ab * 1000000) // n_ante AS BIGINT) AS confidence_ppm,
-           CAST((CAST(n_ab AS HUGEINT) * n_docs * 1000000)
-                // (CAST(n_ante AS HUGEINT) * n_cons) AS BIGINT) AS lift_micros
-    FROM rules, nd WHERE n_ab >= 5
-    ORDER BY lift_micros DESC, antecedent ASC, consequent ASC LIMIT 20
-"""
-
-_ORACLES["q217_benford_audit"] = """
-    WITH v AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS cents FROM orders
-    ),
-    per AS (
-      SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM v WHERE cents > 0 GROUP BY 1
-    ),
-    t AS (SELECT SUM(n) AS total FROM per),
-    e AS (
-      SELECT 1 AS digit, 301030 AS exp_ppm UNION ALL\n      SELECT 2 AS digit, 176091 AS exp_ppm UNION ALL\n      SELECT 3 AS digit, 124939 AS exp_ppm UNION ALL\n      SELECT 4 AS digit, 96910 AS exp_ppm UNION ALL\n      SELECT 5 AS digit, 79181 AS exp_ppm UNION ALL\n      SELECT 6 AS digit, 66947 AS exp_ppm UNION ALL\n      SELECT 7 AS digit, 57992 AS exp_ppm UNION ALL\n      SELECT 8 AS digit, 51153 AS exp_ppm UNION ALL\n      SELECT 9 AS digit, 45757 AS exp_ppm
-    )
-    SELECT per.digit, per.n,
-           CAST((per.n * 1000000) // t.total AS BIGINT) AS obs_ppm,
-           CAST(e.exp_ppm AS BIGINT) AS exp_ppm,
-           CAST(abs(CAST((per.n * 1000000) // t.total AS BIGINT) - e.exp_ppm)
-                AS BIGINT) AS dev_ppm
-    FROM per, t JOIN e ON per.digit = e.digit
-"""
-
-_ORACLES["q218_weighted_quantiles"] = """
-    WITH base AS (
-      SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS v,
-             CAST(ROUND(l_quantity) AS BIGINT) AS w
-      FROM lineitem
-      WHERE l_extendedprice IS NOT NULL AND ROUND(l_quantity) > 0
-    ),
-    tot AS (SELECT SUM(w) AS W FROM base),
-    cum AS (
-      SELECT v, SUM(w) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS c
-      FROM base
-    ),
-    targets AS (
-      SELECT 250000 AS q_ppm, CAST(FLOOR((W - 1) * 0.25) AS BIGINT) AS k FROM tot
-      UNION ALL
-      SELECT 500000, CAST(FLOOR((W - 1) * 0.5) AS BIGINT) FROM tot
-      UNION ALL
-      SELECT 750000, CAST(FLOOR((W - 1) * 0.75) AS BIGINT) FROM tot
-    )
-    SELECT t.q_ppm, t.k AS weight_rank,
-           (SELECT MIN(v) FROM cum WHERE c > t.k) AS value_cents
-    FROM targets t
-"""
-
-_ORACLES["q219_rolling_wau"] = """
-    WITH ue AS (
-      SELECT user_id,
-             date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-             COUNT(*) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    b AS (SELECT MAX(day) AS mx FROM ue),
-    contrib AS (
-      SELECT ue.user_id, ue.n, ue.day + o.o AS window_end
-      FROM ue CROSS JOIN (SELECT unnest(generate_series(0, 6)) AS o) o
-    )
-    SELECT CAST(window_end AS BIGINT) AS window_end,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS wau,
-           CAST(SUM(n) AS BIGINT) AS n_events_7d
-    FROM contrib, b WHERE window_end <= mx GROUP BY 1
-"""
-
-# q220: the naive global cummax window the distributed prefix-scan
-# decomposition must reproduce exactly
-_ORACLES["q220_pareto_frontier"] = """
-    WITH pts AS (
-      SELECT CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS price,
-             CAST(ROUND(l_quantity) AS BIGINT) AS qty
-      FROM lineitem
-      WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
-    ),
-    pp AS (SELECT price, MAX(qty) AS qty FROM pts GROUP BY price),
-    c AS (
-      SELECT price, qty,
-             MAX(qty) OVER (ORDER BY price
-                            RANGE BETWEEN UNBOUNDED PRECEDING
-                            AND 1 PRECEDING) AS prior
-      FROM pp
-    )
-    SELECT price, CAST(qty AS BIGINT) AS qty
-    FROM c WHERE prior IS NULL OR qty > prior
-"""
-
-_ORACLES["q222_cusum_changepoint"] = """
-    WITH daily AS (
-      SELECT user_id,
-             date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    st AS (
-      SELECT user_id, day, n,
-             SUM(n) OVER (PARTITION BY user_id) AS S,
-             COUNT(*) OVER (PARTITION BY user_id) AS T
-      FROM daily
-    ),
-    cs AS (
-      SELECT user_id, day, T,
-             SUM(n * T - S) OVER (PARTITION BY user_id ORDER BY day
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) AS cusum
-      FROM st WHERE T >= 10
-    ),
-    rk AS (
-      SELECT user_id, day, T, cusum,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY abs(cusum) DESC, day ASC) AS r
-      FROM cs
-    )
-    SELECT user_id, CAST(day AS BIGINT) AS cp_day,
-           CAST(abs(cusum) AS BIGINT) AS cusum_abs,
-           CAST(T AS BIGINT) AS n_days
-    FROM rk WHERE r = 1
-"""
-
-_ORACLES["q223_dow_seasonality"] = """
-    WITH per AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7
-                  AS BIGINT) AS dow,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY 1, 2
-    ),
-    w AS (
-      SELECT *, SUM(n) OVER (PARTITION BY event_type) AS total,
-             MAX(n) OVER (PARTITION BY event_type) AS peak_n
-      FROM per
-    )
-    SELECT event_type, dow, n,
-           CAST((n * 1000000) // total AS BIGINT) AS share_ppm,
-           CAST(CASE WHEN n = peak_n THEN 1 ELSE 0 END AS BIGINT) AS is_peak
-    FROM w
-"""
-
-# q224: the oracle computes the RECURRENCE directly with a recursive
-# walk-free formulation: same closed form, independent engine
-_ORACLES["q224_clamped_running_balance"] = """
-    WITH d AS (
-      SELECT l_suppkey, l_orderkey, l_linenumber,
-             CASE WHEN l_returnflag = 'R'
-                  THEN CAST(ROUND(l_quantity) AS BIGINT)
-                  ELSE -CAST(ROUND(l_quantity) AS BIGINT) END AS delta,
-             l_shipdate
-      FROM lineitem WHERE l_suppkey < 50
-    ),
-    s1 AS (
-      SELECT l_suppkey, l_orderkey, l_linenumber, l_shipdate, delta,
-             SUM(delta) OVER (PARTITION BY l_suppkey
-                              ORDER BY l_shipdate, l_orderkey,
-                                       l_linenumber, delta
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS s
-      FROM d
-    ),
-    s AS (
-      SELECT l_suppkey, l_orderkey, l_linenumber, delta, s,
-             MIN(LEAST(s, 0)) OVER (PARTITION BY l_suppkey
-                                    ORDER BY l_shipdate, l_orderkey,
-                                             l_linenumber, delta,
-                                             s * SIGN(delta)
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS runmin
-      FROM s1
-    )
-    SELECT l_suppkey, l_orderkey, l_linenumber, delta,
-           CAST(s - LEAST(runmin, 0) AS BIGINT) AS balance
-    FROM s
-"""
-
-_ORACLES["q225_token_source_pmi"] = f"""
-    WITH tok AS (
-      SELECT doc_id, source, unnest(list_distinct({_TOKS})) AS token
-      FROM documents
-    ),
-    vocab AS (
-      SELECT token, n_x FROM (
-        SELECT token, CAST(COUNT(*) AS BIGINT) AS n_x FROM tok GROUP BY token
-        ORDER BY n_x DESC, token ASC LIMIT 30
-      )
-    ),
-    joint AS (
-      SELECT tok.token, tok.source, vocab.n_x,
-             CAST(COUNT(*) AS BIGINT) AS n_xy
-      FROM tok JOIN vocab USING (token) GROUP BY 1, 2, 3
-    ),
-    sc AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_y
-           FROM documents GROUP BY source),
-    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents)
-    SELECT token, joint.source, n_xy, n_x, n_y, n,
-           ROUND(LN(CAST(n_xy AS DOUBLE) * CAST(n AS DOUBLE)
-                 / (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))), 6) AS pmi
-    FROM joint JOIN sc ON joint.source = sc.source, nd
-    WHERE n_xy >= 5
-"""
-
-_ORACLES["q226_transition_entropy"] = """
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER (PARTITION BY user_id
-                                   ORDER BY ts, event_id) AS prev
-      FROM events
-    ),
-    cnt AS (
-      SELECT user_id, prev, event_type, CAST(COUNT(*) AS BIGINT) AS c
-      FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2, 3
-    ),
-    tt AS (
-      SELECT *, SUM(c) OVER (PARTITION BY user_id) AS T FROM cnt
-    )
-    SELECT user_id,
-           CAST(MAX(T) AS BIGINT) AS n_transitions,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct_pairs,
-           ROUND(SUM((CAST(c AS DOUBLE) / T)
-                 * LN(CAST(T AS DOUBLE) / c)), 6) AS entropy
-    FROM tt GROUP BY user_id HAVING CAST(MAX(T) AS BIGINT) >= 20
-"""
-
-_ORACLES["q227_growth_accounting"] = """
-    WITH per AS (
-      SELECT user_id,
-             CAST(COALESCE(SUM(CASE WHEN
-               date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15
-               THEN CAST(ROUND(value * 100) AS BIGINT) END), 0) AS BIGINT) AS v1,
-             CAST(COALESCE(SUM(CASE WHEN
-               date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) >= 15
-               THEN CAST(ROUND(value * 100) AS BIGINT) END), 0) AS BIGINT) AS v2
-      FROM events GROUP BY user_id
-    ),
-    cls AS (
-      SELECT *,
-             CASE WHEN v1 = 0 AND v2 > 0 THEN 'new'
-                  WHEN v1 > 0 AND v2 = 0 THEN 'churned'
-                  WHEN v2 > v1 THEN 'expanded'
-                  WHEN v2 < v1 THEN 'contracted'
-                  ELSE 'flat' END AS category
-      FROM per
-    )
-    SELECT category,
-           CAST(COUNT(*) AS BIGINT) AS n_users,
-           CAST(SUM(v2 - v1) AS BIGINT) AS delta_cents,
-           CAST(SUM(v1) AS BIGINT) AS p1_cents,
-           CAST(SUM(v2) AS BIGINT) AS p2_cents
-    FROM cls GROUP BY category
-"""
-
-_ORACLES["q228_session_basket_lift"] = """
-    WITH gaps AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                   OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sess AS (
-      SELECT user_id, event_type,
-             CAST(SUM(new_session) OVER (PARTITION BY user_id
-                                         ORDER BY ts, event_id
-                                         ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS session_id
-      FROM gaps
-    ),
-    et AS (SELECT DISTINCT user_id, session_id, event_type FROM sess),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_sessions FROM
-            (SELECT DISTINCT user_id, session_id FROM et)),
-    singles AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_t
-                FROM et GROUP BY event_type),
-    pairs AS (
-      SELECT a.event_type AS type_a, b.event_type AS type_b,
-             CAST(COUNT(*) AS BIGINT) AS n_xy
-      FROM et a JOIN et b
-        ON a.user_id = b.user_id AND a.session_id = b.session_id
-       AND a.event_type < b.event_type
-      GROUP BY 1, 2
-    )
-    SELECT type_a, type_b, n_xy,
-           sa.n_t AS n_a, sb.n_t AS n_b, n_sessions,
-           CAST((CAST(n_xy AS HUGEINT) * n_sessions * 1000000)
-                // (CAST(sa.n_t AS HUGEINT) * sb.n_t) AS BIGINT) AS lift_micros
-    FROM pairs
-    JOIN singles sa ON pairs.type_a = sa.event_type
-    JOIN singles sb ON pairs.type_b = sb.event_type, tot
-"""
-
-_ORACLES["q229_lead_time_sla"] = """
-    WITH lags AS (
-      SELECT o.o_orderpriority,
-             CAST(date_diff('day', CAST(o.o_orderdate AS DATE),
-                            CAST(l.l_shipdate AS DATE)) AS BIGINT) AS lag_days
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    per AS (
-      SELECT o_orderpriority, lag_days, CAST(COUNT(*) AS BIGINT) AS c
-      FROM lags GROUP BY 1, 2
-    ),
-    st AS (
-      SELECT *,
-             SUM(c) OVER (PARTITION BY o_orderpriority) AS n,
-             SUM(c) OVER (PARTITION BY o_orderpriority ORDER BY lag_days
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS cum
-      FROM per
-    )
-    SELECT o_orderpriority,
-           CAST(MAX(n) AS BIGINT) AS n_lines,
-           MIN(CASE WHEN cum > CAST(FLOOR((n - 1) * 0.5) AS BIGINT)
-                    THEN lag_days END) AS p50_days,
-           MIN(CASE WHEN cum > CAST(FLOOR((n - 1) * 0.95) AS BIGINT)
-                    THEN lag_days END) AS p95_days,
-           MAX(lag_days) AS max_days
-    FROM st GROUP BY o_orderpriority
-"""
-
-_ORACLES["q230_revenue_concentration"] = """
-    WITH per AS (
-      SELECT o_custkey,
-             CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS y
-      FROM orders GROUP BY o_custkey
-    ),
-    tot AS (SELECT SUM(y) AS W FROM per),
-    cum AS (
-      SELECT y, SUM(y) OVER (ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS c
-      FROM per
-    ),
-    th AS (
-      SELECT (SELECT MIN(y) FROM cum
-              WHERE c > (SELECT CAST(FLOOR((W - 1) * 0.2) AS BIGINT) FROM tot))
-             AS t
-    )
-    SELECT CAST(t AS BIGINT) AS threshold_cents,
-           CAST(COUNT(*) AS BIGINT) AS n_customers,
-           CAST(SUM(CASE WHEN y > t THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-           CAST(SUM(CASE WHEN y = t THEN 1 ELSE 0 END) AS BIGINT) AS n_at,
-           CAST(SUM(y) AS BIGINT) AS total_cents,
-           CAST(SUM(CASE WHEN y > t THEN y ELSE 0 END) AS BIGINT)
-             AS mass_above_cents,
-           CAST((SUM(CASE WHEN y > t THEN y ELSE 0 END) * 1000000)
-                // SUM(y) AS BIGINT) AS mass_above_ppm
-    FROM per, th GROUP BY t
-"""
-
-_ORACLES["q231_embedding_norm_audit"] = """
-    WITH v AS (
-      SELECT vec_id,
-             CAST(list_sum(list_transform(embedding,
-               x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT)
-                    * CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT)))
-               AS BIGINT) AS n2
-      FROM embeddings
-    ),
-    s AS (SELECT n2, ROW_NUMBER() OVER (ORDER BY n2) AS r FROM v),
-    cnt AS (SELECT COUNT(*) AS n FROM v),
-    th AS (
-      SELECT
-        (SELECT n2 FROM s WHERE r =
-           (SELECT CAST(FLOOR((n - 1) * 0.01) AS BIGINT) + 1 FROM cnt)) AS lo,
-        (SELECT n2 FROM s WHERE r =
-           (SELECT CAST(FLOOR((n - 1) * 0.99) AS BIGINT) + 1 FROM cnt)) AS hi
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_vecs,
-           CAST(lo AS BIGINT) AS p01_n2, CAST(hi AS BIGINT) AS p99_n2,
-           CAST(SUM(CASE WHEN n2 < lo THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-           CAST(SUM(CASE WHEN n2 > hi THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-           MIN(n2) AS min_n2, MAX(n2) AS max_n2
-    FROM v, th GROUP BY lo, hi
-"""
-
-_ORACLES["q232_time_to_convert"] = """
-    WITH su AS (
-      SELECT user_id, MIN(ts) AS su FROM events
-      WHERE event_type = 'signup' GROUP BY user_id
-    ),
-    firsts AS (
-      SELECT e.user_id, s.su, MIN(e.ts) AS fp
-      FROM events e JOIN su s USING (user_id)
-      WHERE e.event_type = 'purchase' AND e.ts >= s.su
-      GROUP BY e.user_id, s.su
-    ),
-    lagd AS (
-      SELECT CAST(date_diff('day', CAST(su AS DATE), CAST(fp AS DATE))
-                  AS BIGINT) AS lag_days
-      FROM firsts
-    ),
-    per AS (SELECT lag_days, CAST(COUNT(*) AS BIGINT) AS c
-            FROM lagd GROUP BY lag_days),
-    st AS (
-      SELECT *, SUM(c) OVER () AS n,
-             SUM(c) OVER (ORDER BY lag_days ROWS BETWEEN UNBOUNDED PRECEDING
-                          AND CURRENT ROW) AS cum
-      FROM per
-    )
-    SELECT CAST(MAX(n) AS BIGINT) AS n_converted,
-           MIN(CASE WHEN cum > CAST(FLOOR((n - 1) * 0.5) AS BIGINT)
-                    THEN lag_days END) AS p50_days,
-           MIN(CASE WHEN cum > CAST(FLOOR((n - 1) * 0.9) AS BIGINT)
-                    THEN lag_days END) AS p90_days,
-           MAX(lag_days) AS max_days
-    FROM st
-"""
-
-_ORACLES["q233_partitioned_write_prune"] = """
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT)
-             AS value_cents,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-    FROM events WHERE event_type IN ('purchase', 'signup')
-    GROUP BY event_type
-"""
-
-_DOT = (
-    "list_reduce(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
-)
-_NORM_V = (
-    "sqrt(list_reduce(list_transform(range(1, len({a}) + 1), "
-    "i -> CAST({a}[i] AS DOUBLE) * CAST({a}[i] AS DOUBLE)), (x, y) -> x + y))"
-)
-
-
-def _cosine_sql(a: str, b: str) -> str:
-    return (
-        f"round({_DOT.format(a=a, b=b)} / "
-        f"({_NORM_V.format(a=a)} * {_NORM_V.format(a=b)}), 6)"
-    )
-
-
-_ORACLES["q78_quantized_topk"] = f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-    params AS (
-      SELECT vec_id AS neighbor_id, embedding,
-             CAST(list_min(embedding) AS DOUBLE) AS mn,
-             CASE WHEN CAST(list_max(embedding) AS DOUBLE) > CAST(list_min(embedding) AS DOUBLE)
-                  THEN CAST(list_max(embedding) AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE)
-                  ELSE 1.0 END AS rng
-      FROM embeddings
-    ),
-    c AS (
-      SELECT neighbor_id,
-             list_transform(embedding,
-               x -> mn + floor((CAST(x AS DOUBLE) - mn) / rng * 255.0 + 0.5) * rng / 255.0) AS cv
-      FROM params
-    ),
-    s AS (
-      SELECT query_id, neighbor_id, {_cosine_sql("cv", "qv")} AS cosine
-      FROM c CROSS JOIN q WHERE neighbor_id != query_id
-    )
-    SELECT query_id, neighbor_id, cosine,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS INT) AS rk
-    FROM s QUALIFY rk <= 5
-"""
-
-_ORACLES["q28_cosine_topk"] = f"""
-    WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-    c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-    s AS (
-      SELECT query_id, neighbor_id, {_cosine_sql("cv", "qv")} AS cosine
-      FROM c CROSS JOIN q WHERE neighbor_id != query_id
-    )
-    SELECT query_id, neighbor_id, cosine,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS INT) AS rk
-    FROM s QUALIFY rk <= 5
-"""
-
-
-def _bucket_sql(v: str, n_planes: int) -> str:
-    bits = []
-    for j in range(n_planes):
-        proj = (
-            f"list_reduce(list_transform(range(1, len({v}) + 1), "
-            f"i -> CAST({v}[i] AS DOUBLE) * sin({j + 1} * 2.399963229728653 * i + {j})), "
-            f"(x, y) -> x + y)"
-        )
-        bits.append(f"(CASE WHEN {proj} >= 0 THEN {1 << (n_planes - 1 - j)} ELSE 0 END)")
-    return "(" + " + ".join(bits) + ")"
-
-
-_ORACLES["q29_lsh_topk"] = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qv,
-             {_bucket_sql("embedding", 6)} AS bucket
-      FROM embeddings WHERE vec_id < 20
-    ), c AS (
-      SELECT vec_id AS neighbor_id, embedding AS cv,
-             {_bucket_sql("embedding", 6)} AS bucket
-      FROM embeddings
-    ), s AS (
-      SELECT query_id, neighbor_id, {_cosine_sql("cv", "qv")} AS cosine
-      FROM c JOIN q USING (bucket) WHERE neighbor_id != query_id
-    )
-    SELECT query_id, neighbor_id, cosine,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS INT) AS rk
-    FROM s QUALIFY rk <= 5
-"""
-
-_SEED = "(" + " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5(text), {i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-    for i in range(8)
-) + ")"
-
-_ORACLES["q30_multimodal_features"] = f"""
-    SELECT doc_id,
-           md5(text) AS content_hash,
-           CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-           CASE WHEN octet_length(encode(text)) > 300
-                THEN 'image/png' ELSE 'image/jpeg' END AS mime,
-           CAST({_SEED} % 1920 + 1 AS INT) AS width,
-           CAST(({_SEED} // 1920) % 1080 + 1 AS INT) AS height,
-           CAST({_SEED} % 2 + 3 AS INT) AS n_channels,
-           ({_SEED} % 256) / 255.0 AS mean_luma
-    FROM documents
-"""
-
-_WINDOWED_SQL = """
-    SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-           time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour' AS window_end,
-           event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events GROUP BY 1, 2, 3
-"""
-_ORACLES["q31_windowed_events"] = _WINDOWED_SQL
-_ORACLES["q32_streaming_windowed"] = _WINDOWED_SQL
-
-def _bucket_sql_auto(v: str, np_ref: str, max_planes: int = 16) -> str:
-    """Corpus-adaptive twin of _bucket_sql: the plane count is a SQL
-    scalar (``np_ref``) instead of a Python literal, so the oracle
-    matches embedding_near_dups' auto-planes rule at ANY corpus size,
-    not just the sf0.01 gate (r8: the sf1 self-check caught the static
-    4-plane oracle diverging from Spark's 8 planes at 50k vectors).
-    Planes are unrolled to ``max_planes`` with a ``j < np`` gate; the
-    bit weight 2^(np-1-j) is computed per row (exact in double for
-    np <= 16, cast back to BIGINT)."""
-    bits = []
-    for j in range(max_planes):
-        proj = (
-            f"list_reduce(list_transform(range(1, len({v}) + 1), "
-            f"i -> CAST({v}[i] AS DOUBLE) * sin({j + 1} * 2.399963229728653 * i + {j})), "
-            f"(x, y) -> x + y)"
-        )
-        bits.append(
-            f"(CASE WHEN {j} < {np_ref} THEN "
-            f"(CASE WHEN {proj} >= 0 THEN CAST(POWER(2, {np_ref} - 1 - {j}) AS BIGINT) "
-            f"ELSE 0 END) ELSE 0 END)"
-        )
-    return "(" + " + ".join(bits) + ")"
-
-
-_ORACLES["q34_embedding_neardup"] = f"""
-    WITH p0 AS (
-      SELECT GREATEST(4, CAST(CEIL(LOG2(GREATEST(COUNT(*), 1) / 256.0)) AS INT)) AS np
-      FROM embeddings
-    ), p AS (
-      -- guard: the plane sum below is unrolled to 16 terms; Spark's auto
-      -- rule is uncapped, so past ~16.7M vectors this oracle would
-      -- silently drop the extra plane bits. Fail loudly instead.
-      SELECT CASE WHEN np > 16
-                  THEN CAST(error('q34 oracle: auto plane count ' || np
-                                  || ' exceeds the unrolled max of 16 — '
-                                  || 'extend _bucket_sql_auto(max_planes)')
-                            AS INT)
-                  ELSE np END AS np
-      FROM p0
-    ), b AS (
-      SELECT vec_id AS id, embedding AS v,
-             {_bucket_sql_auto("embedding", "p.np")} AS bucket
-      FROM embeddings, p
-    )
-    SELECT a.id AS id_a, bb.id AS id_b, {_cosine_sql("a.v", "bb.v")} AS cosine
-    FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.id < bb.id
-"""
-_ORACLES["q34_embedding_neardup"] = (
-    # NOT isnan: engine cosines cross the pandas->Arrow seam, which maps
-    # NaN to NULL, so degenerate (zero-norm / NaN-valued) pairs fail the
-    # Spark-side `round(cos,6) >= t` filter; DuckDB's expression keeps a
-    # true NaN, which orders ABOVE the threshold — guard it out so a
-    # degenerate corpus cannot diverge (r8 ADVICE).
-    "SELECT * FROM (" + _ORACLES["q34_embedding_neardup"]
-    + ") WHERE cosine >= 0.4 AND NOT isnan(cosine)"
-)
-
-# q33 (r4, was rows-only): the exact-side counts come straight from the
-# q28 brute-force oracle; the IVF recall property is asserted as TRUE
-# (bound 0.30 vs measured mean 0.44 at the driver's sf0.01).
-_ORACLES["q33_ivf_topk"] = f"""
-    WITH bf AS (
-      SELECT query_id, neighbor_id FROM ({_ORACLES["q28_cosine_topk"]})
-    )
-    SELECT COUNT(DISTINCT query_id) AS n_queries,
-           COUNT(*) AS n_exact_total,
-           TRUE AS recall_ok
-    FROM bf
-"""
-
-_ORACLES["q35_cube"] = """
-    SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-    FROM orders GROUP BY CUBE (o_orderpriority, o_orderstatus)
-"""
-
-_ORACLES["q36_unpivot"] = """
-    SELECT p_partkey, 'size' AS metric, CAST(p_size AS DOUBLE) AS value FROM part
-    UNION ALL
-    SELECT p_partkey, 'retailprice', p_retailprice FROM part
-"""
-
-_ORACLES["q37_json_extract"] = """
-    SELECT event_id, event_type,
-           CAST(NULLIF(regexp_extract(props, '"k":\\s*(\\d+)', 1), '') AS BIGINT) AS k_value
-    FROM events
-    WHERE CAST(NULLIF(regexp_extract(props, '"k":\\s*(\\d+)', 1), '') AS BIGINT) > 80
-"""
-
-_ORACLES["q38_date_parts"] = """
-    SELECT o_orderkey,
-           year(o_orderdate) AS yr, quarter(o_orderdate) AS qtr,
-           month(o_orderdate) AS mo, day(o_orderdate) AS dom,
-           date_trunc('month', o_orderdate) AS month_start,
-           date_diff('day', CAST(o_orderdate AS DATE), DATE '1998-01-01') AS days_to_1998
-    FROM orders
-"""
-
-_ORACLES["q39_string_funcs"] = """
-    SELECT c_custkey,
-           upper(c_name) AS upper_name,
-           substr(c_name, 10, 5) AS name_part,
-           concat_ws('-', c_mktsegment, CAST(c_custkey AS VARCHAR)) AS seg_key,
-           lpad(CAST(c_custkey AS VARCHAR), 8, '0') AS padded_key,
-           regexp_replace(c_name, '0+', '#', 'g') AS squashed,
-           strpos(c_name, '1') AS pos_one,
-           length(c_name) AS name_len
-    FROM customer
-"""
-
-# q40 (r4, was rows-only): exact counts are SQL-checkable; the sketch
-# error-bound booleans are asserted as literal TRUE (HLL at 5-sigma,
-# approx-median inside the exact p45..p55 band — both deterministic).
-_ORACLES["q40_approx_sketches"] = """
-    SELECT l_returnflag, COUNT(*) AS n_rows,
-           COUNT(DISTINCT l_orderkey) AS exact_orders,
-           TRUE AS hll_within_rel_err,
-           TRUE AS median_within_rank_err
-    FROM lineitem GROUP BY l_returnflag
-"""
-
-_ORACLES["q41_grouping_sets_sql"] = """
-    SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-"""
-
-_ORACLES["q42_having"] = """
-    SELECT l_orderkey, COUNT(*) AS n_lines, MAX(l_quantity) AS max_qty
-    FROM lineitem GROUP BY l_orderkey
-    HAVING COUNT(*) >= 5 AND MAX(l_quantity) > 45
-"""
-
-_ORACLES["q43_csv_source"] = """
-    SELECT l_returnflag, COUNT(*) AS n_rows,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           COUNT(DISTINCT l_orderkey) AS n_orders
-    FROM lineitem GROUP BY l_returnflag
-"""
-
-_ORACLES["q44_json_source"] = """
-    SELECT o_orderkey, o_orderstatus, o_totalprice
-    FROM orders WHERE o_totalprice > 400000
-"""
-
-_ORACLES["q45_pipeline_service"] = """
-    WITH validated AS (
-      SELECT c_custkey,
-             lower(trim(c_name)) AS customer_name,
-             c_nationkey, c_acctbal,
-             lower(trim(c_mktsegment)) AS c_mktsegment
-      FROM customer WHERE c_acctbal > 0.0
-    ), filtered AS (
-      SELECT * FROM validated WHERE c_mktsegment != 'machinery'
-    ), clipped AS (
-      SELECT c_custkey, customer_name, c_nationkey,
-             LEAST(GREATEST(c_acctbal, 100.0), 8000.0) AS c_acctbal,
-             c_mktsegment
-      FROM filtered
-    ), m AS (
-      SELECT ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE)
-                   / COUNT(*), 6) AS mean_bal
-      FROM clipped
-    )
-    SELECT c_custkey, customer_name, c_nationkey, c_acctbal, c_mktsegment,
-           ROUND(c_acctbal, -2) AS bal_round, mean_bal
-    FROM clipped CROSS JOIN m
-"""
-
-_ORACLES["q46_salted_agg"] = """
-    SELECT l_returnflag, COUNT(l_orderkey) AS n_rows,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           MIN(l_quantity) AS min_qty, MAX(l_quantity) AS max_qty
-    FROM lineitem GROUP BY l_returnflag
-"""
-
-_ORACLES["q47_window_analytics"] = """
-    SELECT o_custkey, o_orderkey,
-           LAG(o_totalprice) OVER w AS prev_price,
-           LEAD(o_totalprice) OVER w AS next_price,
-           NTILE(4) OVER w AS quartile,
-           ROUND(PERCENT_RANK() OVER w, 6) AS pct_rank
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-"""
-
-_ORACLES["q48_correlated_subquery"] = """
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders o
-    WHERE o_totalprice > 2 * (
-      SELECT ROUND(CAST(SUM(CAST(i.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   / COUNT(*), 6)
-      FROM orders i WHERE i.o_custkey = o.o_custkey
-    )
-"""
-
-_ORACLES["q49_tpch_q3"] = """
-    SELECT l_orderkey, o_orderdate, o_orderpriority,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-      AND l_shipdate > TIMESTAMP '1996-01-01 00:00:00'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey ASC
-    LIMIT 10
-"""
-
-_ORACLES["q50_tpch_q6"] = """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-           COUNT(*) AS n_rows
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.02 AND 0.06
-      AND l_quantity < 24
-"""
-
-_ORACLES["q51_tpch_q18"] = """
-    SELECT c_custkey, c_name AS cust_name, o_orderkey, o_totalprice,
-           CAST(tot_qty AS DOUBLE) AS tot_qty
-    FROM (
-      SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS tot_qty
-      FROM lineitem GROUP BY l_orderkey HAVING tot_qty > 250
-    )
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-"""
-
-_ORACLES["q52_merge_upsert"] = """
-    WITH updates AS (
-      SELECT o_orderkey, 'U' AS o_orderstatus,
-             CAST(ROUND(CAST(o_totalprice AS DECIMAL(18,2)) * CAST(1.1 AS DECIMAL(3,2)), 2) AS DOUBLE) AS o_totalprice
-      FROM orders WHERE o_orderkey % 10 = 0
-      UNION ALL
-      SELECT CAST(x - 10 AS BIGINT), 'N', 0.0 FROM range(3) t(x)
-    )
-    SELECT * FROM updates
-    UNION ALL
-    SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders o
-    WHERE NOT EXISTS (SELECT 1 FROM updates u WHERE u.o_orderkey = o.o_orderkey)
-"""
-
-_ORACLES["q79_source_mixing"] = """
-    WITH mixed AS (
-      SELECT source, doc_id
-      FROM documents
-      WHERE ((((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)) % 1000 < FLOOR(CASE source WHEN 'src0' THEN 0.9
-                                         WHEN 'src1' THEN 0.25
-                                         ELSE 0.5 END * 1000)
-    )
-    SELECT source, COUNT(*) AS n_kept,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM mixed GROUP BY source
-"""
-
-_ORACLES["q53_hash_split"] = """
-    SELECT doc_id, source, n_chars,
-           CASE WHEN ((((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)) % 100 < 10 THEN 'test' ELSE 'train' END AS split,
-           ((((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1)) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)) % 100 AS bucket
-    FROM documents
-"""
-
-_ORACLES["q54_vocab_topk"] = """
-    WITH tok AS (
-      SELECT unnest(string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')) AS token
-      FROM documents WHERE regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') != ''
-    ), counts AS (
-      SELECT token, COUNT(*) AS n FROM tok GROUP BY token
-    )
-    SELECT token, n, CAST(row_number() OVER (ORDER BY n DESC, token ASC) AS INT) AS rk
-    FROM counts QUALIFY rk <= 20
-"""
-
-_ORACLES["q55_length_histogram"] = """
-    SELECT CAST(FLOOR(n_chars / 50) AS BIGINT) AS bucket, COUNT(*) AS n_docs,
-           MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
-    FROM documents GROUP BY 1
-"""
-
-_ORACLES["q56_winsorize"] = """
-    WITH b AS (
-      SELECT quantile_cont(l_extendedprice, 0.01) AS p01,
-             quantile_cont(l_extendedprice, 0.99) AS p99
-      FROM lineitem
-    )
-    SELECT l_orderkey, l_linenumber, l_extendedprice,
-           ROUND(p01, 6) AS p01, ROUND(p99, 6) AS p99,
-           ROUND(LEAST(GREATEST(l_extendedprice, p01), p99), 6) AS price_winsorized
-    FROM lineitem CROSS JOIN b
-"""
-
-_ORACLES["q57_group_zscore"] = """
-    WITH s AS (
-      SELECT l_returnflag,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS s1,
-             SUM(CAST(l_extendedprice AS DECIMAL(28,4)) * CAST(l_extendedprice AS DECIMAL(28,4))) AS s2,
-             COUNT(*) AS n
-      FROM lineitem GROUP BY l_returnflag
-    ), m AS (
-      SELECT l_returnflag,
-             CAST(s1 AS DOUBLE) / n AS mean,
-             SQRT((CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n) / (n - 1)) AS std
-      FROM s
-    )
-    SELECT l.l_returnflag, l_orderkey, l_linenumber,
-           ROUND((l_extendedprice - mean) / std, 6) AS zscore
-    FROM lineitem l JOIN m ON l.l_returnflag = m.l_returnflag
-"""
-
-_ORACLES["q58_tfidf"] = """
-    WITH tok AS (
-      SELECT doc_id,
-             unnest(string_split(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'), ' ')) AS token
-      FROM documents WHERE regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') != ''
-    ), tf AS (
-      SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token
-    ), dft AS (
-      SELECT token, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY token
-    ), nd AS (
-      SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents
-    ), scored AS (
-      SELECT tf.doc_id, tf.token, tf.tf, dft.df,
-             ROUND(tf.tf * LN(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
-      FROM tf JOIN dft ON tf.token = dft.token CROSS JOIN nd
-    )
-    SELECT doc_id, token, tf, df, tfidf,
-           CAST(row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, token ASC) AS INT) AS rk
-    FROM scored QUALIFY rk <= 3
-"""
-
-# r11: mean rounded in exact integer micro space (see _q59's docstring —
-# a real 7th-decimal .5 tie at sf0.1 made engine double-rounds diverge);
-# sign(S)·((2|S| + n) // (2n)) is half-away-from-zero with no double
-# arithmetic until the final exact /1e6.
-_ORACLES["q59_label_centroids"] = """
-    WITH e AS (
-      SELECT label, i - 1 AS dim,
-             CAST(ROUND(CAST(embedding[i] AS DOUBLE), 6) AS DECIMAL(12,6)) AS vd
-      FROM embeddings, (SELECT unnest(range(1, 65)) AS i)
-    ), a AS (
-      SELECT label, dim,
-             CAST(SUM(vd) * 1000000 AS BIGINT) AS s_micro,
-             COUNT(*) AS n_vecs
-      FROM e GROUP BY label, dim
-    )
-    SELECT label, CAST(dim AS INT) AS dim,
-           CAST(CASE WHEN s_micro < 0
-                THEN -((2 * (-s_micro) + n_vecs) // (2 * n_vecs))
-                ELSE (2 * s_micro + n_vecs) // (2 * n_vecs) END AS DOUBLE)
-             / 1000000.0 AS mean_val,
-           n_vecs
-    FROM a
-"""
-
-_ORACLES["q60_trailing_window"] = """
-    SELECT l_suppkey, l_orderkey, l_linenumber,
-           SUM(l_quantity) OVER (
-             PARTITION BY l_suppkey
-             ORDER BY CAST(epoch(l_shipdate) AS BIGINT)
-             RANGE BETWEEN 518400 PRECEDING AND CURRENT ROW
-           ) AS qty_7d
-    FROM lineitem
-"""
-
-# q61 (r9): deletion-signature blocking is LOSSLESS for lev<=2, so the
-# oracle no longer replicates any blocking — it IS the exact fuzzy join
-# (DuckDB evaluates the small cross product directly at gate scale).
-_ORACLES["q61_fuzzy_join"] = """
-    WITH cust AS (
-      SELECT c_custkey AS cust_id, lower(c_name) AS name FROM customer
-    ), probes AS (
-      SELECT cust_id AS probe_id,
-             substr(name, 1, 2) || substr(name, 4) AS probe_name
-      FROM cust WHERE cust_id % 97 = 0
-    )
-    SELECT probe_id, cust_id, name, probe_name,
-           levenshtein(name, probe_name) AS dist
-    FROM cust CROSS JOIN probes
-    WHERE levenshtein(name, probe_name) <= 2
-"""
-
-_ORACLES["q62_group_percentiles"] = """
-    SELECT l_returnflag, l_linestatus,
-           ROUND(quantile_cont(l_extendedprice, 0.5), 6) AS median_price,
-           ROUND(quantile_cont(l_extendedprice, 0.9), 6) AS p90_price,
-           COUNT(*) AS n_rows
-    FROM lineitem GROUP BY l_returnflag, l_linestatus
-"""
-
-# q63 oracle: same pair generation as q25, then recursive-CTE connected
-# components (min reachable id per node)
-_Q25_BODY = _ORACLES["q25_minhash_neardup"]
-_ORACLES["q63_dedup_clusters"] = f"""
-    WITH RECURSIVE prs AS (
-      {_Q25_BODY}
-    ), edges AS (
-      SELECT id_a AS s, id_b AS d FROM prs
-      UNION
-      SELECT id_b, id_a FROM prs
-    ), nodes AS (
-      SELECT DISTINCT s AS n FROM edges
-    ), walk(n, l) AS (
-      SELECT n, n FROM nodes
-      UNION
-      SELECT e.d, walk.l FROM walk JOIN edges e ON walk.n = e.s
-    )
-    SELECT n AS doc_id, MIN(l) AS cluster_id FROM walk GROUP BY n
-"""
-
-_ORACLES["q64_frame_sampling"] = """
-    SELECT doc_id, CAST(i AS INT) AS frame_idx,
-           md5(md5(text) || ':' || CAST(i AS VARCHAR)) AS frame_hash
-    FROM documents,
-         (SELECT unnest(range(0, 3)) AS i)
-    WHERE i < LEAST(3, GREATEST(1, octet_length(encode(text)) // 100))
-"""
-
-_ORACLES["q65_orc_source"] = """
-    SELECT n_regionkey, COUNT(*) AS n_nations FROM nation GROUP BY n_regionkey
-"""
-
-_ORACLES["q66_range_join"] = """
-    WITH bands AS (
-      SELECT CAST(i AS INT) AS band_id, i * 10.0 AS lo, (i + 1) * 10.0 AS hi
-      FROM (SELECT unnest(range(0, 10)) AS i)
-    )
-    SELECT band_id, COUNT(*) AS n_events,
-           ROUND(MIN(value), 6) AS min_v, ROUND(MAX(value), 6) AS max_v
-    FROM events JOIN bands ON lo <= value AND value < hi
-    GROUP BY band_id
-"""
-
-_ORACLES["q67_text_source"] = """
-    SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
-"""
-
-_ORACLES["q68_bucketed_join"] = """
-    SELECT c_mktsegment, COUNT(*) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-    FROM orders JOIN customer ON o_custkey = c_custkey
-    GROUP BY c_mktsegment
-"""
-
-_ORACLES["q69_pii_scrub"] = """
-    WITH inj AS (
-      SELECT doc_id,
-             text
-             || CASE WHEN doc_id % 3 = 0
-                     THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now'
-                     ELSE '' END
-             || CASE WHEN doc_id % 5 = 0 THEN ' ip 10.0.0.1 seen' ELSE '' END
-             || CASE WHEN doc_id % 7 = 0 THEN ' call +123-456-7890 today' ELSE '' END
-             AS txt
-      FROM documents
-    )
-    SELECT doc_id,
-           len(regexp_extract_all(txt, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS n_email,
-           len(regexp_extract_all(txt, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b')) AS n_ipv4,
-           len(regexp_extract_all(txt, '\\b\\+?\\d{3}[-. ]\\d{3}[-. ]\\d{4}\\b')) AS n_phone,
-           md5(regexp_replace(
-                 regexp_replace(
-                   regexp_replace(txt,
-                     '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-                   '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '[IP]', 'g'),
-                 '\\b\\+?\\d{3}[-. ]\\d{3}[-. ]\\d{4}\\b', '[PHONE]', 'g')) AS scrubbed_md5
-    FROM inj
-"""
-
-_ORACLES["q70_repetition_quality"] = f"""
-    WITH lines AS (
-      SELECT doc_id,
-             string_split(regexp_replace(text, '\\. ', chr(10), 'g'), chr(10)) AS ls
-      FROM documents
-    ), dl AS (
-      SELECT doc_id,
-             CASE WHEN len(ls) <= 1 THEN 0.0
-                  ELSE round(CAST(len(ls) - len(list_distinct(ls)) AS DOUBLE) / len(ls), 6)
-             END AS dup_line_frac
-      FROM lines
-    ), tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), grams AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(toks)),
-                                   i -> toks[i] || ' ' || toks[i+1])) AS gram
-      FROM tok WHERE len(toks) >= 2
-    ), per_gram AS (
-      SELECT doc_id, gram, COUNT(*) AS c FROM grams GROUP BY doc_id, gram
-    ), per_doc AS (
-      SELECT doc_id,
-             round(CAST(MAX(c) AS DOUBLE) / SUM(c), 6) AS top_ngram_frac
-      FROM per_gram GROUP BY doc_id
-    )
-    SELECT dl.doc_id, dl.dup_line_frac, per_doc.top_ngram_frac
-    FROM dl LEFT JOIN per_doc ON dl.doc_id = per_doc.doc_id
-"""
-
-_ORACLES["q74_session_window"] = """
-    WITH o AS (
-      SELECT user_id, ts, event_id,
-             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-      FROM events
-    ), f AS (
-      SELECT user_id, ts, event_id,
-             CASE WHEN prev_ts IS NULL
-                       OR ts - prev_ts > INTERVAL '30 minutes' THEN 1
-                  ELSE 0 END AS new_s
-      FROM o
-    ), s AS (
-      SELECT user_id, ts,
-             SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-      FROM f
-    )
-    SELECT user_id,
-           MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL '30 minutes' AS session_end,
-           COUNT(*) AS n_events,
-           MIN(ts) AS first_ts
-    FROM s GROUP BY user_id, sid
-"""
-
-_ORACLES["q75_streaming_session"] = _ORACLES["q74_session_window"]
-
-_ORACLES["q76_tpch_q10"] = """
-    SELECT c_custkey, c_name,
-           CAST(rev AS DOUBLE) AS revenue, c_acctbal, n_name
-    FROM (
-      SELECT c_custkey, c_name, c_acctbal, n_name,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                 * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))) AS rev
-      FROM lineitem
-      JOIN orders   ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN nation   ON c_nationkey = n_nationkey
-      WHERE l_returnflag = 'R'
-      GROUP BY c_custkey, c_name, c_acctbal, n_name
-    )
-    ORDER BY rev DESC, c_custkey LIMIT 20
-"""
-
-_ORACLES["q77_tpch_q16"] = """
-    SELECT p_brand, p_size, COUNT(DISTINCT l_suppkey) AS supplier_cnt
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    WHERE p_brand <> 'Brand#45' AND p_size < 30
-      AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-    GROUP BY p_brand, p_size
-"""
-
-_ORACLES["q72_oov_rate"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS token FROM documents
-    ), counts AS (
-      SELECT token, COUNT(*) AS n FROM tok GROUP BY token
-    ), vocab AS (
-      SELECT token FROM counts ORDER BY n DESC, token LIMIT 1000
-    ), flagged AS (
-      SELECT t.doc_id, CASE WHEN v.token IS NULL THEN 1 ELSE 0 END AS oov
-      FROM tok t LEFT JOIN vocab v ON t.token = v.token
-    )
-    SELECT doc_id, COUNT(*) AS n_tok, CAST(SUM(oov) AS BIGINT) AS n_oov,
-           round(CAST(SUM(oov) AS DOUBLE) / COUNT(*), 6) AS oov_rate
-    FROM flagged GROUP BY doc_id
-"""
-
-_ORACLES["q73_dedup_apply"] = f"""
-    WITH RECURSIVE prs AS (
-      {_Q25_BODY}
-    ), edges AS (
-      SELECT id_a AS s, id_b AS d FROM prs
-      UNION
-      SELECT id_b, id_a FROM prs
-    ), nodes AS (
-      SELECT DISTINCT s AS n FROM edges
-    ), walk(n, l) AS (
-      SELECT n, n FROM nodes
-      UNION
-      SELECT e.d, walk.l FROM walk JOIN edges e ON walk.n = e.s
-    ), clusters AS (
-      SELECT n AS doc_id, MIN(l) AS cluster_id FROM walk GROUP BY n
-    ), losers AS (
-      SELECT doc_id FROM clusters WHERE doc_id <> cluster_id
-    )
-    SELECT source, COUNT(*) AS n_docs,
-           MIN(doc_id) AS min_doc_id, MAX(doc_id) AS max_doc_id
-    FROM documents
-    WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-    GROUP BY source
-"""
-
-_ORACLES["q71_sequence_packing"] = f"""
-    WITH tok AS (
-      SELECT source, doc_id, len({_TOKS}) AS n_tok FROM documents
-    ), packed AS (
-      SELECT source, n_tok,
-             CAST(FLOOR(CAST(SUM(n_tok) OVER (
-                    PARTITION BY source ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                  ) - n_tok AS DOUBLE) / 512) AS BIGINT) AS bin_id
-      FROM tok
-    )
-    SELECT source, bin_id, COUNT(*) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS sum_tokens
-    FROM packed GROUP BY source, bin_id
-"""
-
-
-_ORACLES["q80_contamination"] = f"""
-    WITH toks AS (
-      SELECT doc_id, {_TOKS} AS ws FROM documents
-    ), grams AS (
-      SELECT DISTINCT doc_id,
-             CASE WHEN len(ws) <= 3 THEN array_to_string(ws, ' ')
-                  ELSE ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] END AS gram
-      FROM toks, unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS t(i)
-    )
-    SELECT t.doc_id AS train_id, b.doc_id AS bench_id,
-           CAST(COUNT(*) AS BIGINT) AS n_shared
-    FROM grams t JOIN grams b ON t.gram = b.gram
-    WHERE t.doc_id % 197 <> 0 AND b.doc_id % 197 = 0
-    GROUP BY 1, 2
-    HAVING COUNT(*) >= 2
-"""
-
-_ORACLES["q81_tpch_q4_shape"] = """
-    SELECT o_orderpriority, COUNT(*) AS n_orders
-    FROM orders o
-    WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-      AND EXISTS (
-        SELECT 1 FROM lineitem l
-        WHERE l.l_orderkey = o.o_orderkey
-          AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-      )
-    GROUP BY o_orderpriority
-"""
-
-_ORACLES["q82_tpch_q12_shape"] = """
-    SELECT l_returnflag,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY l_returnflag
-"""
-
-_ORACLES["q83_tpch_q19_shape"] = """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))))
-                AS DOUBLE) AS revenue,
-           COUNT(*) AS n_lines
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-       OR (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-       OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)
-"""
-
-
-_ORACLES["q84_packed_texts"] = f"""
-    WITH tok AS (
-      SELECT source, doc_id, text, len({_TOKS}) AS n_tok FROM documents
-    ), packed AS (
-      SELECT source, doc_id, text, n_tok,
-             CAST(FLOOR(CAST(SUM(n_tok) OVER (
-                    PARTITION BY source ORDER BY doc_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                  ) - n_tok AS DOUBLE) / 512) AS BIGINT) AS bin_id
-      FROM tok
-    )
-    SELECT source, bin_id, COUNT(*) AS n_docs,
-           CAST(SUM(n_tok) AS BIGINT) AS sum_tokens,
-           md5(string_agg(text, ' ' ORDER BY doc_id)) AS seq_fp
-    FROM packed GROUP BY source, bin_id
-"""
-
-_ORACLES["q85_time_spine"] = """
-    WITH keys AS (
-      SELECT DISTINCT user_id FROM events WHERE user_id < 50
-    ), spine AS (
-      SELECT user_id,
-             unnest(generate_series(TIMESTAMP '2024-01-10 00:00:00',
-                                    TIMESTAMP '2024-01-12 23:00:00',
-                                    INTERVAL 1 HOUR)) AS bucket_ts
-      FROM keys
-    ), agg AS (
-      SELECT user_id, date_trunc('hour', ts) AS bucket_ts, COUNT(*) AS n
-      FROM events
-      WHERE user_id < 50
-        AND ts >= TIMESTAMP '2024-01-10 00:00:00'
-        AND ts <= TIMESTAMP '2024-01-12 23:00:00'
-      GROUP BY 1, 2
-    )
-    SELECT s.user_id, s.bucket_ts, CAST(COALESCE(a.n, 0) AS BIGINT) AS n_events
-    FROM spine s LEFT JOIN agg a USING (user_id, bucket_ts)
-"""
-
-
-_ORACLES["q86_stratified_sample"] = """
-    SELECT source, doc_id, lang FROM documents
-    QUALIFY row_number() OVER (
-      PARTITION BY source ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-    ) <= 5
-"""
-
-_ORACLES["q87_gram_matrix"] = """
-    WITH params AS (
-      SELECT embedding,
-             CAST(list_min(embedding) AS DOUBLE) AS mn,
-             CASE WHEN CAST(list_max(embedding) AS DOUBLE) > CAST(list_min(embedding) AS DOUBLE)
-                  THEN CAST(list_max(embedding) AS DOUBLE) - CAST(list_min(embedding) AS DOUBLE)
-                  ELSE 1.0 END AS rng
-      FROM embeddings
-    ), codes AS (
-      SELECT list_transform(embedding,
-               x -> CAST(floor((CAST(x AS DOUBLE) - mn) / rng * 255.0 + 0.5) AS BIGINT)
-             )[1:16] AS c
-      FROM params
-    ), idx AS (SELECT unnest(range(0, 16)) AS d),
-    lin AS (
-      SELECT d, CAST(SUM(c.c[d + 1]) AS BIGINT) AS sd
-      FROM idx CROSS JOIN codes c GROUP BY d
-    ), sums AS (
-      SELECT a.d AS i, b.d AS j, CAST(SUM(c.c[a.d + 1] * c.c[b.d + 1]) AS BIGINT) AS s_ij
-      FROM idx a JOIN idx b ON b.d >= a.d CROSS JOIN codes c
-      GROUP BY a.d, b.d
-    ), n AS (SELECT COUNT(*) AS n FROM codes)
-    SELECT s.i, s.j, n.n, li.sd AS s_i, lj.sd AS s_j, s.s_ij,
-           CAST(n.n * s.s_ij - li.sd * lj.sd AS BIGINT) AS cov_num
-    FROM sums s JOIN lin li ON li.d = s.i JOIN lin lj ON lj.d = s.j CROSS JOIN n
-"""
-
-_ORACLES["q88_robust_stats"] = """
-    WITH med AS (
-      SELECT source, COUNT(*) AS n, median(n_chars) AS med_chars
-      FROM documents GROUP BY source
-    )
-    SELECT m.source, m.n, m.med_chars,
-           median(abs(d.n_chars - m.med_chars)) AS mad_chars
-    FROM documents d JOIN med m ON d.source = m.source
-    GROUP BY m.source, m.n, m.med_chars
-"""
-
-_ORACLES["q89_bigram_pmi"] = f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    uni AS (SELECT unnest(toks) AS tok FROM tok),
-    ucnt AS (SELECT tok, COUNT(*) AS c FROM uni GROUP BY tok),
-    bi AS (
-      SELECT unnest(toks[1:len(toks) - 1]) AS x,
-             unnest(toks[2:len(toks)]) AS y
-      FROM tok WHERE len(toks) >= 2
-    ),
-    bcnt AS (SELECT x, y, COUNT(*) AS c_xy FROM bi GROUP BY x, y),
-    tot AS (
-      SELECT (SELECT CAST(SUM(c) AS BIGINT) FROM ucnt) AS n_uni,
-             (SELECT CAST(SUM(c_xy) AS BIGINT) FROM bcnt) AS n_bi
-    )
-    SELECT x, y, CAST(c_xy AS BIGINT) AS c_xy,
-           CAST(ux.c AS BIGINT) AS c_x, CAST(uy.c AS BIGINT) AS c_y,
-           CAST(c_xy AS DOUBLE) * CAST(n_uni AS DOUBLE) * CAST(n_uni AS DOUBLE)
-             / (CAST(n_bi AS DOUBLE) * CAST(ux.c AS DOUBLE) * CAST(uy.c AS DOUBLE))
-             AS pmi_ratio
-    FROM bcnt JOIN ucnt ux ON ux.tok = x JOIN ucnt uy ON uy.tok = y CROSS JOIN tot
-    ORDER BY c_xy DESC, x, y LIMIT 50
-"""
-
-_ORACLES["q90_equidepth_histogram"] = """
-    WITH b AS (
-      SELECT quantile_disc(l_extendedprice,
-               [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS bounds
-      FROM lineitem
-    )
-    SELECT CAST(len(list_filter(b.bounds, v -> l.l_extendedprice > v)) AS INT) AS bucket,
-           COUNT(*) AS n_rows,
-           MIN(l.l_extendedprice) AS lo, MAX(l.l_extendedprice) AS hi
-    FROM lineitem l CROSS JOIN b
-    GROUP BY 1
-"""
-
-_ORACLES["q91_hopping_window"] = """
-    WITH g AS (
-      SELECT event_type, value, time_bucket(INTERVAL '30 minutes', ts) AS g30 FROM events
-    ), ex AS (
-      SELECT event_type, value,
-             unnest([g30, g30 - INTERVAL '30 minutes']) AS window_start
-      FROM g
-    )
-    SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
-           event_type, COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM ex GROUP BY 1, 2, 3
-"""
-
-_ATTRIBUTION_SQL = """
-    SELECT p.user_id, p.event_id AS purchase_id, p.ts, p.value,
-           c.event_id AS click_id, c.ts AS click_ts, c.value AS click_value
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id
-     AND c.ts >= p.ts - INTERVAL '1 hour'
-     AND c.ts <= p.ts
-"""
-_ORACLES["q92_click_attribution"] = _ATTRIBUTION_SQL
-_ORACLES["q93_streaming_attribution"] = _ATTRIBUTION_SQL
-
-
-_ORACLES["q94_dup_spans"] = f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS t FROM documents),
-    pos AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(t) - 6),
-                    i -> md5(array_to_string(t[i:i+7], ' ')))) AS g
-      FROM tok WHERE len(t) >= 8
-    ),
-    cnt AS (SELECT g, COUNT(*) AS n_occ FROM pos GROUP BY g),
-    per AS (
-      SELECT doc_id, COUNT(*) AS n_windows,
-             SUM(CASE WHEN n_occ > 1 THEN 1 ELSE 0 END) AS n_dup
-      FROM pos JOIN cnt USING (g) GROUP BY doc_id
-    )
-    SELECT d.doc_id AS id,
-           CAST(COALESCE(p.n_windows, 0) AS BIGINT) AS n_windows,
-           CAST(COALESCE(p.n_dup, 0) AS BIGINT) AS n_dup_windows,
-           CAST(p.n_dup AS DOUBLE) / CAST(p.n_windows AS DOUBLE) AS dup_fraction
-    FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
-"""
-
-_ORACLES["q95_lexical_diversity"] = f"""
-    WITH tok AS (SELECT source, unnest({_TOKS}) AS tok FROM documents),
-    lvl1 AS (SELECT source, tok, COUNT(*) AS c FROM tok GROUP BY source, tok)
-    SELECT source, COUNT(*) AS n_types, CAST(SUM(c) AS BIGINT) AS n_tokens,
-           CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-           CAST(COUNT(*) AS DOUBLE) / CAST(SUM(c) AS DOUBLE) AS ttr
-    FROM lvl1 GROUP BY source
-"""
-
-
-_ORACLES["q96_salted_join"] = """
-    SELECT s_nationkey, COUNT(*) AS n_items,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
-    FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-    GROUP BY s_nationkey
-"""
-
-
-_ORACLES["q97_multiprobe_lsh"] = f"""
-    WITH q0 AS (
-      SELECT vec_id AS query_id, embedding AS qv,
-             {_bucket_sql("embedding", 6)} AS b0
-      FROM embeddings WHERE vec_id < 20
-    ), q AS (
-      SELECT query_id, qv,
-             unnest([b0, xor(b0, 1), xor(b0, 2), xor(b0, 4),
-                     xor(b0, 8), xor(b0, 16), xor(b0, 32)]) AS bucket
-      FROM q0
-    ), c AS (
-      SELECT vec_id AS neighbor_id, embedding AS cv,
-             {_bucket_sql("embedding", 6)} AS bucket
-      FROM embeddings
-    ), s AS (
-      SELECT query_id, neighbor_id, {_cosine_sql("cv", "qv")} AS cosine
-      FROM c JOIN q USING (bucket) WHERE neighbor_id != query_id
-    )
-    SELECT query_id, neighbor_id, cosine,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS INT) AS rk
-    FROM s QUALIFY rk <= 5
-"""
-
-_ORACLES["q98_tpch_q7_shape"] = """
-    SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-           CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation n1 ON s_nationkey = n1.n_nationkey
-    JOIN nation n2 ON c_nationkey = n2.n_nationkey
-    WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-      AND l_shipdate <= TIMESTAMP '1996-12-31 00:00:00'
-      AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-    GROUP BY 1, 2, 3
-"""
-
-_ORACLES["q99_tpch_q13_shape"] = """
-    SELECT c_count, COUNT(*) AS custdist FROM (
-      SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-      FROM customer c
-      LEFT JOIN (SELECT * FROM orders WHERE o_orderpriority != '1-URGENT') o
-        ON c.c_custkey = o.o_custkey
-      GROUP BY c.c_custkey
-    ) GROUP BY c_count
-"""
-
-_ORACLES["q100_tpch_q17_shape"] = """
-    WITH brand_li AS (
-      SELECT l.* FROM lineitem l
-      JOIN part p ON p.p_partkey = l.l_partkey
-      WHERE p.p_brand = 'Brand#1'
-    ), avg_q AS (
-      SELECT l_partkey,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_q
-      FROM brand_li GROUP BY l_partkey
-    )
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly,
-           COUNT(*) AS n_items
-    FROM brand_li b JOIN avg_q a ON a.l_partkey = b.l_partkey
-    WHERE b.l_quantity < 0.2 * a.avg_q
-"""
-
-_ORACLES["q101_tpch_q18_shape"] = """
-    WITH big AS (
-      SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty
-      FROM lineitem GROUP BY l_orderkey
-      HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250
-    )
-    SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
-           CAST(sum_qty AS DOUBLE) AS sum_qty
-    FROM big JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    ORDER BY o_totalprice DESC, o_orderdate ASC, o_orderkey ASC
-    LIMIT 100
-"""
-
-
-_ORACLES["q102_partitioned_layout"] = """
-    SELECT source, COUNT(*) AS n_docs FROM documents
-    WHERE lang = 'en' GROUP BY source
-"""
-
-_ORACLES["q103_window_battery"] = """
-    SELECT o_custkey, o_orderkey,
-           rank() OVER w AS rk,
-           dense_rank() OVER w AS drk,
-           percent_rank() OVER w AS prk,
-           cume_dist() OVER w AS cd,
-           CAST(ntile(4) OVER w AS INT) AS quartile,
-           lag(o_totalprice) OVER w AS prev_price,
-           lead(o_totalprice) OVER w AS next_price,
-           first_value(o_totalprice) OVER wf AS first_price,
-           max(o_totalprice) OVER wf AS running_max_price
-    FROM orders
-    WHERE o_custkey < 200
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey),
-           wf AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-"""
-
-_ORACLES["q104_skew_report"] = """
-    WITH counts AS (
-      SELECT user_id, COUNT(*) AS n_rows FROM events GROUP BY user_id
-    ), summary AS (
-      SELECT COUNT(*) AS n_keys, CAST(SUM(n_rows) AS BIGINT) AS total_rows,
-             median(n_rows) AS median_rows
-      FROM counts
-    )
-    SELECT user_id, n_rows,
-           CAST(n_rows AS DOUBLE) / CAST(total_rows AS DOUBLE) AS row_share,
-           CAST(n_rows AS DOUBLE) / median_rows AS skew_ratio,
-           CAST(ceil(CAST(n_rows AS DOUBLE) / median_rows) AS BIGINT) AS suggested_salts,
-           n_keys, total_rows
-    FROM counts CROSS JOIN summary
-    ORDER BY n_rows DESC, user_id ASC LIMIT 10
-"""
-
-
-_ORACLES["q105_session_funnel"] = """
-    WITH gaps AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                   OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id, ts, event_type,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS session_id
-      FROM gaps
-    ), per AS (
-      SELECT user_id, session_id,
-             MIN(CASE WHEN event_type = 'click' THEN ts END) AS first_click,
-             MAX(CASE WHEN event_type = 'purchase' THEN ts END) AS last_purchase
-      FROM sessions GROUP BY user_id, session_id
-    )
-    SELECT COUNT(*) AS n_sessions,
-           CAST(SUM(CASE WHEN first_click IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_with_click,
-           CAST(SUM(CASE WHEN last_purchase IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_with_purchase,
-           CAST(SUM(CASE WHEN first_click IS NOT NULL AND last_purchase IS NOT NULL
-                          AND last_purchase >= first_click THEN 1 ELSE 0 END) AS BIGINT) AS n_converted,
-           CAST(SUM(CASE WHEN first_click IS NOT NULL AND last_purchase IS NOT NULL
-                          AND last_purchase >= first_click THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(SUM(CASE WHEN first_click IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-             AS conversion_rate
-    FROM per
-"""
-
-
-_ORACLES["q106_table_expectations"] = """
-    SELECT 'unique(l_orderkey, l_linenumber)' AS expectation,
-           CAST((SELECT COUNT(*) - COUNT(DISTINCT (l_orderkey, l_linenumber)) FROM lineitem) AS BIGINT) AS violations,
-           (SELECT COUNT(*) = COUNT(DISTINCT (l_orderkey, l_linenumber)) FROM lineitem) AS passed
-    UNION ALL
-    SELECT 'fk(l_orderkey -> o_orderkey)',
-           CAST((SELECT COUNT(*) FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)) AS BIGINT),
-           (SELECT COUNT(*) FROM lineitem WHERE l_orderkey NOT IN (SELECT o_orderkey FROM orders)) = 0
-    UNION ALL
-    SELECT 'non_null(l_quantity)',
-           CAST((SELECT COUNT(*) FROM lineitem WHERE l_quantity IS NULL) AS BIGINT),
-           (SELECT COUNT(*) FROM lineitem WHERE l_quantity IS NULL) = 0
-    UNION ALL
-    SELECT 'non_null(l_shipdate)',
-           CAST((SELECT COUNT(*) FROM lineitem WHERE l_shipdate IS NULL) AS BIGINT),
-           (SELECT COUNT(*) FROM lineitem WHERE l_shipdate IS NULL) = 0
-    UNION ALL
-    SELECT 'min_rows(1000)',
-           CAST((SELECT greatest(1000 - COUNT(*), 0) FROM lineitem) AS BIGINT),
-           (SELECT COUNT(*) >= 1000 FROM lineitem)
-"""
-
-
-_ORACLES["q107_streaming_hopping"] = _ORACLES["q91_hopping_window"]
-
-
-def _md5_bucket_sql(expr: str, n: int) -> str:
-    nibs = [
-        f"(strpos('0123456789abcdef', substr(md5({expr}), {i}, 1)) - 1)"
-        for i in range(1, 5)
-    ]
-    acc = nibs[0]
-    for nib in nibs[1:]:
-        acc = f"({acc} * 16 + {nib})"
-    return f"({acc} % {n})"
-
-
-_ORACLES["q108_feature_hashing"] = f"""
-    WITH tok AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
-    b AS (SELECT doc_id, {_md5_bucket_sql("tok", 16)} AS b FROM tok),
-    counts AS (
-      SELECT doc_id,
-             [{", ".join(f"CAST(COALESCE(SUM(CASE WHEN b = {i} THEN 1 END), 0) AS BIGINT)" for i in range(16))}] AS features
-      FROM b GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           COALESCE(c.features, [{", ".join("CAST(0 AS BIGINT)" for _ in range(16))}]) AS features
-    FROM documents d LEFT JOIN counts c USING (doc_id)
-"""
-
-
-_ORACLES["q109_grouped_pandas"] = """
-    SELECT source, COUNT(*) AS n,
-           quantile_cont(n_chars, 0.25) AS q1,
-           quantile_cont(n_chars, 0.5) AS median,
-           quantile_cont(n_chars, 0.75) AS q3,
-           quantile_cont(n_chars, 0.75) - quantile_cont(n_chars, 0.25) AS iqr
-    FROM documents GROUP BY source
-"""
-
-
-_ORACLES["q110_debounce"] = """
-    WITH gaps AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN ts - LAG(ts) OVER w > INTERVAL 30 MINUTE
-                   OR LAG(ts) OVER w IS NULL THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), sessions AS (
-      SELECT user_id, ts, event_id, event_type,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                    ROWS UNBOUNDED PRECEDING) AS sess
-      FROM gaps
-    )
-    SELECT user_id, event_id, ts, event_type
-    FROM sessions
-    QUALIFY row_number() OVER (PARTITION BY user_id, sess ORDER BY ts, event_id) = 1
-"""
-
-
-_ORACLES["q111_source_overlap"] = f"""
-    WITH tok AS (SELECT source, {_TOKS} AS t FROM documents),
-    sg AS (
-      SELECT DISTINCT source,
-             unnest(list_transform(range(1, len(t) - 6),
-                    i -> md5(array_to_string(t[i:i+7], ' ')))) AS g
-      FROM tok WHERE len(t) >= 8
-    )
-    SELECT a.source AS source_a, b.source AS source_b,
-           COUNT(*) AS n_shared_grams
-    FROM sg a JOIN sg b ON a.g = b.g AND a.source < b.source
-    GROUP BY 1, 2
-"""
-
-
-_ORACLES["q112_audio_features"] = """
-    WITH chars AS (
-      SELECT doc_id, md5(text) AS content_hash,
-             CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-             list_transform(string_split(text, ''), c -> ascii(c)) AS codes
-      FROM documents
-    )
-    SELECT doc_id, content_hash, n_bytes,
-           CAST(greatest(n_bytes // 64, 1) AS INT) AS n_windows,
-           sqrt(CAST(list_sum(list_transform(codes, x -> x * x)) AS DOUBLE)
-                / greatest(n_bytes, 1)) AS rms_energy,
-           CAST(COALESCE(list_max(codes), 0) AS INT) AS peak_byte,
-           CAST(COALESCE(len(list_filter(range(1, len(codes)),
-                i -> (codes[i] >= 128) != (codes[i+1] >= 128))), 0) AS BIGINT)
-             AS zero_crossings
-    FROM chars
-"""
-
-
-_ORACLES["q113_tpch_q8_shape"] = """
-    SELECT CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-           CAST(SUM(CASE WHEN sn.n_name = 'NATION_3'
-                         THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                              * (1 - CAST(l_discount AS DECIMAL(18,4))) END) AS DOUBLE)
-             AS nation_volume,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS total_volume,
-           CAST(SUM(CASE WHEN sn.n_name = 'NATION_3'
-                         THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                              * (1 - CAST(l_discount AS DECIMAL(18,4))) END) AS DOUBLE)
-             / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                        * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS mkt_share
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation cn ON c_nationkey = cn.n_nationkey
-    JOIN region ON cn.n_regionkey = r_regionkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation sn ON s_nationkey = sn.n_nationkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-      AND o_orderdate <= TIMESTAMP '1996-12-31 00:00:00'
-    GROUP BY 1
-"""
-
-_ORACLES["q114_tpch_q14_shape"] = """
-    SELECT CAST(SUM(CASE WHEN p_type = 'PROMO'
-                         THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                              * (1 - CAST(l_discount AS DECIMAL(18,4))) END) AS DOUBLE)
-             AS promo_revenue,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS total_revenue,
-           100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
-                         THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                              * (1 - CAST(l_discount AS DECIMAL(18,4))) END) AS DOUBLE)
-             / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                        * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS promo_ratio
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    WHERE l_shipdate >= TIMESTAMP '1995-09-01 00:00:00'
-      AND l_shipdate < TIMESTAMP '1995-10-01 00:00:00'
-"""
-
-_ORACLES["q115_tpch_q15_shape"] = """
-    WITH rev AS (
-      SELECT l_suppkey,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                 * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS total_rev
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1995-04-01 00:00:00'
-      GROUP BY l_suppkey
-    )
-    SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_rev
-    FROM rev JOIN supplier ON l_suppkey = s_suppkey
-    WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
-"""
-
-
-_ORACLES["q116_robust_outliers"] = """
-    WITH med AS (
-      SELECT source, median(n_chars) AS med FROM documents GROUP BY source
-    ), stats AS (
-      SELECT m.source, m.med, median(abs(d.n_chars - m.med)) AS mad
-      FROM documents d JOIN med m ON d.source = m.source
-      GROUP BY m.source, m.med
-    )
-    SELECT d.source, COUNT(*) AS n_docs,
-           CAST(SUM(CASE WHEN abs(d.n_chars - s.med) > 3.0 * 1.4826 * s.mad
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-    FROM documents d JOIN stats s ON d.source = s.source
-    GROUP BY d.source
-"""
-
-_ORACLES["q117_running_distinct_users"] = """
-    WITH first_seen AS (
-      SELECT user_id, date_trunc('day', MIN(ts)) AS day FROM events GROUP BY user_id
-    ), daily AS (
-      SELECT day, COUNT(*) AS new_users FROM first_seen GROUP BY day
-    )
-    SELECT day, new_users,
-           CAST(SUM(new_users) OVER (ORDER BY day
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_users
-    FROM daily
-"""
-
-
-_ORACLES["q118_tpch_q5"] = """
-    SELECT n_name,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))) AS DOUBLE) AS revenue
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-    JOIN nation ON s_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    WHERE r_name = 'ASIA'
-      AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-      AND o_orderdate < TIMESTAMP '1996-01-01 00:00:00'
-    GROUP BY n_name
-"""
-
-_ORACLES["q119_tpch_q2_shape"] = """
-    WITH cand AS (
-      SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-    ), enriched AS (
-      SELECT l_partkey, s_acctbal, s_name, n_name
-      FROM cand
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN nation ON s_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      WHERE r_name = 'EUROPE'
-    ), best AS (
-      SELECT l_partkey, MAX(s_acctbal) AS best_bal FROM enriched GROUP BY l_partkey
-    )
-    SELECT s_acctbal, s_name, n_name, p_partkey, p_type
-    FROM enriched
-    JOIN best USING (l_partkey)
-    JOIN part ON l_partkey = p_partkey
-    WHERE s_acctbal = best_bal AND p_size = 15
-    ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-    LIMIT 100
-"""
-
-_ORACLES["q120_tpch_q9_shape"] = """
-    SELECT n_name AS nation,
-           EXTRACT(year FROM o_orderdate) AS o_year,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,4)))
-                    - CAST('0.2' AS DECIMAL(3,2))
-                      * CAST(p_retailprice AS DECIMAL(18,2))
-                      * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_profit
-    FROM lineitem
-    JOIN part ON l_partkey = p_partkey
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN supplier ON l_suppkey = s_suppkey
-    JOIN nation ON s_nationkey = n_nationkey
-    WHERE p_name LIKE '%gear%'
-    GROUP BY 1, 2
-"""
-
-_ORACLES["q121_tpch_q11_shape"] = """
-    WITH per_part AS (
-      SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS part_value
-      FROM lineitem
-      JOIN supplier ON l_suppkey = s_suppkey
-      JOIN nation ON s_nationkey = n_nationkey
-      WHERE n_name = 'NATION_1'
-      GROUP BY l_partkey
-    )
-    SELECT l_partkey, CAST(part_value AS DOUBLE) AS part_value
-    FROM per_part
-    WHERE part_value > (SELECT SUM(part_value) * CAST('0.001' AS DECIMAL(6,3))
-                        FROM per_part)
-"""
-
-_ORACLES["q122_tpch_q20_shape"] = """
-    SELECT s_suppkey, s_name
-    FROM supplier
-    WHERE s_suppkey IN (
-      SELECT l_suppkey
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-      WHERE p_brand = 'Brand#1'
-        AND l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-        AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
-      GROUP BY l_suppkey
-      HAVING SUM(l_quantity) > 100
-    )
-"""
-
-_ORACLES["q123_tpch_q21_shape"] = """
-    WITH fli AS (
-      SELECT l_orderkey, l_suppkey, l_returnflag
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      WHERE o_orderstatus = 'F'
-    ), per_order AS (
-      SELECT l_orderkey,
-             COUNT(DISTINCT l_suppkey) AS n_supp,
-             COUNT(DISTINCT CASE WHEN l_returnflag = 'R' THEN l_suppkey END) AS n_fail
-      FROM fli GROUP BY l_orderkey
-    ), culprits AS (
-      SELECT DISTINCT f.l_orderkey, f.l_suppkey
-      FROM fli f JOIN per_order p ON f.l_orderkey = p.l_orderkey
-      WHERE f.l_returnflag = 'R' AND p.n_supp > 1 AND p.n_fail = 1
-    )
-    SELECT s_name, COUNT(*) AS numwait
-    FROM culprits JOIN supplier ON l_suppkey = s_suppkey
-    GROUP BY s_name
-    ORDER BY numwait DESC, s_name
-    LIMIT 100
-"""
-
-_ORACLES["q124_tpch_q22_shape"] = """
-    SELECT c_nationkey AS cntrycode,
-           COUNT(*) AS numcust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-    FROM customer
-    WHERE c_nationkey IN (1, 3, 5, 7, 9)
-      AND CAST(c_acctbal AS DECIMAL(12,2))
-            * (SELECT CAST(COUNT(*) AS DECIMAL(10,0)) FROM customer WHERE c_acctbal > 0)
-          > (SELECT SUM(CAST(c_acctbal AS DECIMAL(12,2))) FROM customer WHERE c_acctbal > 0)
-      AND NOT EXISTS (SELECT 1 FROM orders
-                      WHERE o_custkey = c_custkey
-                        AND o_orderpriority = '1-URGENT')
-    GROUP BY c_nationkey
-"""
-
-
-# q125: mirrors functions/retrieval.py::bm25_topk term by term. Float
-# constants (k1=1.2, b=0.75) go through CAST('…' AS DOUBLE) so DuckDB's
-# decimal-literal parsing can't change the arithmetic type; per-term
-# scores round to 6 decimals then sum as DECIMAL, so the totals are
-# addition-order-free on both engines.
-_ORACLES["q125_bm25_topk"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS term FROM documents
-    ), tf AS (
-      SELECT doc_id, term, COUNT(*) AS tf FROM tok
-      WHERE term IN ('hash', 'join', 'vector', 'stream')
-      GROUP BY doc_id, term
-    ), dl AS (
-      SELECT doc_id, len({_TOKS}) AS dl FROM documents
-    ), corpus AS (
-      SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl
-    ), dfreq AS (
-      SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-    ), scored AS (
-      SELECT tf.doc_id,
-             CAST(round(
-               ln(CAST('1.0' AS DOUBLE)
-                  + (n_docs - df + CAST('0.5' AS DOUBLE)) / (df + CAST('0.5' AS DOUBLE)))
-               * ((tf * CAST('2.2' AS DOUBLE))
-                  / (tf + CAST('1.2' AS DOUBLE)
-                          * (CAST('0.25' AS DOUBLE)
-                             + (CAST('0.75' AS DOUBLE) * dl) / avgdl)))
-             , 6) AS DECIMAL(14,6)) AS term_score
-      FROM tf JOIN dfreq USING (term) JOIN dl USING (doc_id) CROSS JOIN corpus
-    )
-    SELECT doc_id, CAST(SUM(term_score) AS DECIMAL(18,6)) AS bm25
-    FROM scored GROUP BY doc_id
-    ORDER BY bm25 DESC, doc_id
-    LIMIT 20
-"""
-
-# q126: mirrors operators/layout.py::quantize + morton_code for bits=8
-# over (o_custkey, o_totalprice). Every step is IEEE-exact (-, /, *,
-# floor) or integer bit arithmetic, so the codes match bit for bit.
-_Z_INTERLEAVE = " | ".join(
-    f"(((q{j} >> {i}) & 1) << {i * 2 + j})" for i in range(8) for j in range(2)
-)
-_ORACLES["q126_zorder_code"] = f"""
-    WITH b AS (
-      SELECT MIN(o_custkey) AS mn0, MAX(o_custkey) AS mx0,
-             MIN(o_totalprice) AS mn1, MAX(o_totalprice) AS mx1
-      FROM orders
-    ), q AS (
-      SELECT o_orderkey,
-        CASE WHEN CAST(mx0 - mn0 AS DOUBLE) > 0
-             THEN CAST(floor(((CAST(o_custkey AS DOUBLE) - CAST(mn0 AS DOUBLE))
-                              / CAST(mx0 - mn0 AS DOUBLE)) * 255.0) AS BIGINT)
-             ELSE 0 END AS q0,
-        CASE WHEN CAST(mx1 - mn1 AS DOUBLE) > 0
-             THEN CAST(floor(((CAST(o_totalprice AS DOUBLE) - CAST(mn1 AS DOUBLE))
-                              / CAST(mx1 - mn1 AS DOUBLE)) * 255.0) AS BIGINT)
-             ELSE 0 END AS q1
-      FROM orders CROSS JOIN b
-    )
-    SELECT o_orderkey, {_Z_INTERLEAVE} AS __zorder FROM q
-"""
-
-# q127: mirrors functions/sampling.py::md5_unit + weighted_topk. The
-# A-ES rank key ln(u)/w is derived from md5 nibbles of the key, so both
-# engines draw the identical sample; n_chars <= 0 rows are excluded by
-# the guard on both sides.
-_Q127_VAL = "0"
-for _i in range(1, 9):
-    _Q127_VAL = (
-        f"(({_Q127_VAL}) * 16 + (strpos('0123456789abcdef',"
-        f" substr(md5(CAST(doc_id AS VARCHAR)), {_i}, 1)) - 1))"
-    )
-_ORACLES["q127_weighted_sample"] = f"""
-    SELECT doc_id, source, n_chars FROM (
-      SELECT doc_id, source, n_chars,
-             row_number() OVER (
-               PARTITION BY source
-               ORDER BY (ln(CAST({_Q127_VAL} + 1 AS DOUBLE) / CAST(4294967297 AS DOUBLE))
-                         / CAST(n_chars AS DOUBLE)) DESC,
-                        doc_id ASC) AS rk
-      FROM documents WHERE CAST(n_chars AS DOUBLE) > 0
-    ) WHERE rk <= 5
-"""
-
-
-# q128: mirrors functions/text.py::quality_classifier — same feature
-# fragments as the q23 oracle, weights binary-exact, additions in the
-# same left-associative order, sigmoid rounded to 6 before comparison.
-_LANG_PRED = f"""
-    CASE WHEN greatest(s_de, s_en, s_es, s_fr) = 0 THEN 'unknown'
-         WHEN s_de = greatest(s_de, s_en, s_es, s_fr) THEN 'de'
-         WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
-         WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
-         ELSE 'fr' END
-"""
-_ORACLES["q128_quality_classifier"] = f"""
-    WITH tok AS (
-      SELECT doc_id, text, {_TOKS} AS toks FROM documents
-    ), feat AS (
-      SELECT doc_id,
-             CAST(len(toks) AS DOUBLE) AS ntok,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(len(list_filter(toks, t -> t IN {_in_list(_MARKERS["en"])})) AS DOUBLE) / len(toks)
-                  ELSE 0.0 END AS sr,
-             CASE WHEN length(text) > 0
-                  THEN CAST(length(text) - length(regexp_replace(text, '{_PUNCT_RE}', '', 'g')) AS DOUBLE) / length(text)
-                  ELSE 0.0 END AS pr,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE) / len(toks)
-                  ELSE 0.0 END AS awl,
-             {_lang_score("de")} AS s_de, {_lang_score("en")} AS s_en,
-             {_lang_score("es")} AS s_es, {_lang_score("fr")} AS s_fr
-      FROM tok
-    ), z AS (
-      SELECT doc_id, ntok, sr, pr, awl,
-             -1.5 + least(ntok / 200.0, 1.0) * 2.5
-                  + least(sr * 5.0, 1.0) * 3.0
-                  - least(pr * 10.0, 1.0) * 2.0
-                  + (CASE WHEN awl >= 2.0 AND awl <= 12.0 THEN 1.0 ELSE 0.0 END)
-                  + (CASE WHEN ({_LANG_PRED}) = 'en' THEN 0.5 ELSE 0.0 END) AS z
-      FROM feat
-    ), p AS (
-      SELECT doc_id, ntok, sr, pr, awl,
-             round(1.0 / (1.0 + exp(-z)), 6) AS quality_prob,
-             CASE WHEN ntok < 10 THEN 'too_short'
-                  WHEN sr < 0.01 THEN 'low_stopword'
-                  WHEN pr > 0.2 THEN 'high_punct'
-                  WHEN awl < 2.0 OR awl > 12.0 THEN 'weird_word_len'
-                  ELSE 'ok' END AS reject_reason
-      FROM z
-    )
-    SELECT doc_id, quality_prob, reject_reason,
-           CASE WHEN reject_reason = 'ok' AND quality_prob >= 0.5
-                THEN 'keep' ELSE 'drop' END AS verdict
-    FROM p
-"""
-
-# q129: two-stage retrieval. The BM25 stage mirrors q125's oracle with a
-# (query_id, term) VALUES table; the rerank mirrors retrieval.py::
-# rerank_topk (double division of the decimal scores, binary-exact-ish
-# weights interpolated via CAST to pin the arithmetic type).
-_ORACLES["q129_rerank"] = f"""
-    WITH q(query_id, term) AS (
-      VALUES (1, 'hash'), (1, 'join'), (2, 'vector'), (2, 'stream'),
-             (3, 'filter'), (3, 'scan')
-    ), tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS term FROM documents
-    ), tf AS (
-      SELECT doc_id, term, COUNT(*) AS tf FROM tok
-      WHERE term IN (SELECT DISTINCT term FROM q)
-      GROUP BY doc_id, term
-    ), dl AS (
-      SELECT doc_id, len({_TOKS}) AS dl FROM documents
-    ), corpus AS (
-      SELECT COUNT(*) AS n_docs, AVG(dl) AS avgdl FROM dl
-    ), dfreq AS (
-      SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-    ), scored AS (
-      SELECT query_id, tf.doc_id,
-             CAST(SUM(CAST(round(
-               ln(CAST('1.0' AS DOUBLE)
-                  + (n_docs - df + CAST('0.5' AS DOUBLE)) / (df + CAST('0.5' AS DOUBLE)))
-               * ((tf * CAST('2.2' AS DOUBLE))
-                  / (tf + CAST('1.2' AS DOUBLE)
-                          * (CAST('0.25' AS DOUBLE)
-                             + (CAST('0.75' AS DOUBLE) * dl) / avgdl)))
-             , 6) AS DECIMAL(14,6))) AS DECIMAL(18,6)) AS bm25
-      FROM tf JOIN dfreq USING (term) JOIN q USING (term)
-              JOIN dl USING (doc_id) CROSS JOIN corpus
-      GROUP BY query_id, tf.doc_id
-    ), qmax AS (
-      SELECT query_id, MAX(bm25) AS qmax FROM scored GROUP BY query_id
-    ), feat AS (
-      SELECT doc_id,
-             round(least(len(toks) / 100.0, 1.0) * 0.4
-                   + least((CASE WHEN len(toks) > 0
-                            THEN CAST(len(list_filter(toks, t -> t IN {_in_list(_MARKERS["en"])})) AS DOUBLE) / len(toks)
-                            ELSE 0.0 END) * 5.0, 1.0) * 0.4
-                   + (1.0 - least((CASE WHEN length(text) > 0
-                            THEN CAST(length(text) - length(regexp_replace(text, '{_PUNCT_RE}', '', 'g')) AS DOUBLE) / length(text)
-                            ELSE 0.0 END) * 10.0, 1.0)) * 0.2, 6) AS quality,
-             CAST(len(toks) AS DOUBLE) AS ntok
-      FROM (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
-    ), rer AS (
-      SELECT query_id, doc_id, bm25,
-             round(CAST(bm25 AS DOUBLE) / CAST(qmax AS DOUBLE) * CAST('0.6' AS DOUBLE)
-                   + quality * CAST('0.3' AS DOUBLE)
-                   + least(ntok / 200.0, 1.0) * CAST('0.1' AS DOUBLE), 6) AS rerank
-      FROM scored JOIN qmax USING (query_id) JOIN feat USING (doc_id)
-    )
-    SELECT query_id, doc_id, bm25, rerank,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY rerank DESC, doc_id ASC) AS INT) AS rk
-    FROM rer QUALIFY rk <= 10
-"""
-
-# q130: batch twin of the streaming minhash-group dedup (signature
-# arithmetic identical to the q25 oracle fragments).
-_ORACLES["q130_streaming_minhash_dedup"] = f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), dsh AS (
-      SELECT doc_id, list_distinct({_SHINGLES3}) AS dsh FROM tok
-    ), sig AS (
-      SELECT doc_id,
-             array_to_string((list_sort(list_transform(dsh, s -> md5(s))))[1:8], '|') AS sig
-      FROM dsh
-    )
-    SELECT sig, COUNT(*) AS n_docs, MIN(doc_id) AS canonical_id
-    FROM sig GROUP BY sig
-"""
-
-# q131: unigram-LM scoring; per-token logprobs round to 6 then sum as
-# DECIMAL; the scaled-integer average divides positives only (Spark DIV
-# truncates toward zero, DuckDB // floors — equal only for >= 0).
-_ORACLES["q131_unigram_logprob"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS term FROM documents
-    ), vocab AS (
-      SELECT term, COUNT(*) AS cnt FROM tok GROUP BY term
-    ), total AS (
-      SELECT SUM(cnt) AS total FROM vocab
-    ), lp AS (
-      SELECT doc_id,
-             CAST(round(ln(CAST(cnt AS DOUBLE) / total), 6) AS DECIMAL(14,6)) AS lp
-      FROM tok JOIN vocab USING (term) CROSS JOIN total
-    ), agg AS (
-      SELECT doc_id, COUNT(*) AS n_toks,
-             CAST(SUM(lp) AS DECIMAL(18,6)) AS sum_logprob
-      FROM lp GROUP BY doc_id
-    )
-    SELECT doc_id, n_toks, sum_logprob,
-           -(CAST(sum_logprob * -1000000 AS BIGINT) // n_toks) AS avg_lp_micros
-    FROM agg
-"""
-
-
-# q132: mirrors functions/dedup.py::span_dedup — 20-token spans, first
-# corpus-wide occurrence wins (owner = min doc_id*1e6 + pos), surviving
-# spans string-agg'd back in position order.
-_ORACLES["q132_span_dedup"] = f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), sp AS (
-      SELECT doc_id,
-             list_transform(range(0, CAST(floor((len(toks) + 19) / 20.0) AS INT)),
-                            i -> array_to_string(toks[i*20+1 : i*20+20], ' ')) AS spans
-      FROM tok
-    ), ex0 AS (
-      SELECT doc_id, unnest(range(1, len(spans) + 1)) AS i, spans FROM sp
-    ), ex AS (
-      SELECT doc_id, i - 1 AS pos, spans[i] AS span, md5(spans[i]) AS skey FROM ex0
-    ), own AS (
-      SELECT skey, MIN(doc_id * 1000000 + pos) AS owner FROM ex GROUP BY skey
-    ), k AS (
-      SELECT ex.*, (doc_id * 1000000 + pos) = owner AS kept
-      FROM ex JOIN own USING (skey)
-    )
-    SELECT doc_id, COUNT(*) AS n_spans,
-           -- BIGINT cast: DuckDB SUM(INT) is HUGEINT (decimal128(38,0)),
-           -- Spark's conditional count is integral — the q22 type seam
-           CAST(SUM(CASE WHEN kept THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-           COALESCE(string_agg(CASE WHEN kept THEN span END, ' ' ORDER BY pos), '') AS cleaned_text
-    FROM k GROUP BY doc_id
-"""
-
-# q133: composes the q28 (exact) and q29 (LSH) oracles and measures
-# their per-query overlap; recall emitted as scaled BIGINT via //.
-_ORACLES["q133_ann_recall"] = f"""
-    WITH bf AS (
-      SELECT query_id, neighbor_id FROM ({_ORACLES["q28_cosine_topk"]})
-    ), lsh AS (
-      SELECT query_id, neighbor_id FROM ({_ORACLES["q29_lsh_topk"]})
-    ), ov AS (
-      SELECT query_id, COUNT(*) AS n_overlap
-      FROM bf JOIN lsh USING (query_id, neighbor_id) GROUP BY query_id
-    ), base AS (
-      SELECT query_id, COUNT(*) AS n_exact FROM bf GROUP BY query_id
-    )
-    SELECT base.query_id, n_exact, COALESCE(n_overlap, 0) AS n_overlap,
-           (COALESCE(n_overlap, 0) * 1000000) // n_exact AS recall_micros
-    FROM base LEFT JOIN ov USING (query_id)
-"""
-
-
-# q134: positive = q129's rerank winner; negatives = per-query anti-join
-# pool ordered by md5(query:doc) — fully deterministic, no seeds.
-_ORACLES["q134_training_pairs"] = f"""
-    WITH q(query_id, term) AS (
-      VALUES (1, 'hash'), (1, 'join'), (2, 'vector'), (2, 'stream'),
-             (3, 'filter'), (3, 'scan')
-    ), pos AS (
-      SELECT query_id, doc_id AS pos_id FROM ({_ORACLES["q129_rerank"]}) WHERE rk = 1
-    ), tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS term FROM documents
-    ), cands AS (
-      SELECT DISTINCT query_id, doc_id FROM tok JOIN q USING (term)
-    ), pool AS (
-      SELECT qd.query_id, qd.doc_id
-      FROM (SELECT query_id, doc_id
-            FROM (SELECT DISTINCT query_id FROM q) CROSS JOIN
-                 (SELECT doc_id FROM documents)) qd
-      ANTI JOIN cands ON cands.query_id = qd.query_id AND cands.doc_id = qd.doc_id
-    ), negs AS (
-      SELECT query_id, doc_id AS neg_id,
-             CAST(row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY md5(CAST(query_id AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)) ASC,
-                        doc_id ASC) AS INT) AS neg_rank
-      FROM pool QUALIFY neg_rank <= 3
-    )
-    SELECT pos.query_id, pos_id, neg_id, neg_rank
-    FROM pos JOIN negs ON pos.query_id = negs.query_id
-"""
-
-# q135: schema-evolution union — BY NAME with null fill on both engines.
-_ORACLES["q135_schema_union"] = """
-    SELECT doc_id, source, n_chars, lang FROM documents WHERE doc_id % 2 = 0
-    UNION ALL BY NAME
-    SELECT doc_id, source, n_chars, CAST(length(text) AS BIGINT) AS quality
-    FROM documents WHERE doc_id % 2 = 1
-"""
-
-# q136: SCD2 validity intervals; bounds as epoch-micros BIGINT.
-_ORACLES["q136_scd2"] = """
-    SELECT user_id, event_id, value,
-           epoch_us(ts) AS effective_from_us,
-           epoch_us(LEAD(ts) OVER w) AS effective_to_us,
-           (LEAD(ts) OVER w IS NULL) AS is_current
-    FROM events WHERE event_type = 'purchase'
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-"""
-
-
-# q137: mirrors similarity.py::ivf_topk with pinned centroids — nearest
-# list per vector = argmin of -dot (ties on centroid_id), queries probe
-# 2 lists, candidates score with the shared cosine fragment.
-_ORACLES["q137_ivf_pretrained"] = f"""
-    WITH cent AS (
-      SELECT CAST(vec_id AS INT) AS centroid_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM embeddings WHERE vec_id < 16
-    ), c_assigned AS (
-      SELECT neighbor_id, cv, centroid_id FROM (
-        SELECT e.vec_id AS neighbor_id, e.embedding AS cv, cent.centroid_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY -({_DOT.format(a="e.embedding", b="cent.cvec")}) ASC,
-                          cent.centroid_id ASC) AS rn
-        FROM embeddings e CROSS JOIN cent
-      ) WHERE rn = 1
-    ), q_assigned AS (
-      SELECT query_id, qv, centroid_id FROM (
-        SELECT e.vec_id AS query_id, e.embedding AS qv, cent.centroid_id,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY -({_DOT.format(a="e.embedding", b="cent.cvec")}) ASC,
-                          cent.centroid_id ASC) AS rn
-        FROM embeddings e CROSS JOIN cent
-        WHERE e.vec_id < 20
-      ) WHERE rn <= 2
-    ), s AS (
-      SELECT query_id, neighbor_id, {_cosine_sql("cv", "qv")} AS cosine
-      FROM c_assigned JOIN q_assigned USING (centroid_id)
-      WHERE neighbor_id != query_id
-    )
-    SELECT query_id, neighbor_id, cosine,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY cosine DESC, neighbor_id) AS INT) AS rk
-    FROM s QUALIFY rk <= 5
-"""
-
-
-# q138: mirrors functions/text.py::clean_text over the same injected
-# dirt; every regex is RE2-safe so Java and RE2 agree byte for byte.
-_Q138_DIRTY = (
-    "chr(1) || '  ' || text || "
-    "CASE WHEN doc_id % 3 = 0 THEN ' !!!  wow,,,  ' ELSE ' .....  end;;; ' END"
-)
-_Q138_CLEAN = (
-    "trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-    "regexp_replace(regexp_replace(regexp_replace(" + _Q138_DIRTY + ", "
-    r"'[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]', '', 'g'), "
-    "'!{2,}', '!', 'g'), "
-    r"'\?{2,}', '?', 'g'), "
-    "',{2,}', ',', 'g'), "
-    "';{2,}', ';', 'g'), "
-    r"'\.{4,}', '...', 'g'), "
-    r"'\s+', ' ', 'g'))"
-)
-_ORACLES["q138_text_clean"] = f"""
-    SELECT doc_id,
-           {_Q138_CLEAN} AS clean_text,
-           length({_Q138_DIRTY}) - length({_Q138_CLEAN}) AS n_removed_chars
-    FROM documents
-"""
-
-
-# q139: batch twin of the streaming quality gate — the q128 oracle
-# joined back to documents for the source column, grouped.
-_ORACLES["q139_streaming_quality_gate"] = f"""
-    SELECT d.source, v.verdict, COUNT(*) AS n_docs
-    FROM ({_ORACLES["q128_quality_classifier"]}) v
-    JOIN documents d USING (doc_id)
-    GROUP BY d.source, v.verdict
-"""
-
-# q140: LOCF gap fill; same injected nulls, IGNORE NULLS window.
-_ORACLES["q140_locf"] = """
-    SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END AS value_gapped,
-           last_value(CASE WHEN event_id % 7 = 0 THEN NULL ELSE value END IGNORE NULLS)
-             OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS UNBOUNDED PRECEDING) AS value_filled
-    FROM events
-"""
-
-
-# q143: the oracle aggregates raw events DIRECTLY to hours — matching
-# proves the minute→hour tier composition is lossless.
-_ORACLES["q143_hypertable_rollup"] = """
-    SELECT epoch_us(date_trunc('hour', ts)) AS hour_us, event_type,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS sum_value
-    FROM events GROUP BY 1, 2
-"""
-
-# q141: snapshot diff via FULL OUTER + classification.
-_ORACLES["q141_snapshot_diff"] = """
-    WITH v1 AS (
-      SELECT doc_id, n_chars AS v_old FROM documents WHERE doc_id % 5 != 0
-    ), v2 AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 3 = 0 THEN n_chars + 1 ELSE n_chars END AS v_new
-      FROM documents WHERE doc_id % 7 != 0
-    )
-    SELECT COALESCE(v1.doc_id, v2.doc_id) AS doc_id, v_old, v_new,
-           CASE WHEN v_old IS NULL THEN 'added'
-                WHEN v_new IS NULL THEN 'removed'
-                WHEN v_old != v_new THEN 'changed'
-                ELSE 'unchanged' END AS status
-    FROM v1 FULL OUTER JOIN v2 ON v1.doc_id = v2.doc_id
-"""
-
-# q142: PSI drift; probabilities are exact-count ratios in double, terms
-# round to 6 and sum as DECIMAL.
-_ORACLES["q142_psi_drift"] = """
-    WITH buck AS (
-      SELECT source, CAST(floor(n_chars / 100.0) AS BIGINT) AS bucket
-      FROM documents WHERE source IN ('src0', 'src1')
-    ), counts AS (
-      SELECT source, bucket, COUNT(*) AS n FROM buck GROUP BY source, bucket
-    ), totals AS (
-      SELECT source, SUM(n) AS tot FROM counts GROUP BY source
-    ), dist AS (
-      SELECT counts.source, bucket, CAST(n AS DOUBLE) / tot AS p
-      FROM counts JOIN totals USING (source)
-    ), a AS (SELECT bucket, p AS p_a FROM dist WHERE source = 'src0'),
-       b AS (SELECT bucket, p AS p_b FROM dist WHERE source = 'src1')
-    SELECT 'src0' AS src_a, 'src1' AS src_b,
-           COUNT(*) AS n_shared_buckets,
-           CAST(SUM(CAST(round((p_a - p_b) * ln(p_a / p_b), 6) AS DECIMAL(14,6))) AS DECIMAL(18,6)) AS psi
-    FROM a JOIN b USING (bucket)
-"""
-
-
-# q144: q63's recursive-CTE clusters + per-cluster argmax on the shared
-# quality fragment (max q, ties -> min doc_id, mirroring the struct max).
-_ORACLES["q144_quality_rep_dedup"] = f"""
-    WITH RECURSIVE prs AS (
-      {_Q25_BODY}
-    ), edges AS (
-      SELECT id_a AS s, id_b AS d FROM prs
-      UNION
-      SELECT id_b, id_a FROM prs
-    ), nodes AS (
-      SELECT DISTINCT s AS n FROM edges
-    ), walk(n, l) AS (
-      SELECT n, n FROM nodes
-      UNION
-      SELECT e.d, walk.l FROM walk JOIN edges e ON walk.n = e.s
-    ), clusters AS (
-      SELECT n AS doc_id, MIN(l) AS cluster_id FROM walk GROUP BY n
-    ), qual AS (
-      SELECT doc_id,
-             round(least(len(toks) / 100.0, 1.0) * 0.4
-                   + least((CASE WHEN len(toks) > 0
-                            THEN CAST(len(list_filter(toks, t -> t IN {_in_list(_MARKERS["en"])})) AS DOUBLE) / len(toks)
-                            ELSE 0.0 END) * 5.0, 1.0) * 0.4
-                   + (1.0 - least((CASE WHEN length(text) > 0
-                            THEN CAST(length(text) - length(regexp_replace(text, '{_PUNCT_RE}', '', 'g')) AS DOUBLE) / length(text)
-                            ELSE 0.0 END) * 10.0, 1.0)) * 0.2, 6) AS q
-      FROM (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
-    ), ranked AS (
-      SELECT cluster_id, c.doc_id, q,
-             row_number() OVER (PARTITION BY cluster_id
-                                ORDER BY q DESC, c.doc_id ASC) AS rn
-      FROM clusters c JOIN qual ON qual.doc_id = c.doc_id
-    )
-    SELECT cluster_id,
-           MAX(CASE WHEN rn = 1 THEN doc_id END) AS rep_id,
-           MAX(CASE WHEN rn = 1 THEN q END) AS rep_quality,
-           COUNT(*) AS n_members
-    FROM ranked GROUP BY cluster_id
-"""
-
-# q145: OHLC bars; open/close via row_number over the same
-# (ts, event_id) order the struct min/max encodes.
-_ORACLES["q145_ohlc_bars"] = """
-    WITH r AS (
-      SELECT date_trunc('hour', ts) AS h, event_type, value,
-             row_number() OVER (PARTITION BY date_trunc('hour', ts), event_type
-                                ORDER BY ts ASC, event_id ASC) AS ra,
-             row_number() OVER (PARTITION BY date_trunc('hour', ts), event_type
-                                ORDER BY ts DESC, event_id DESC) AS rd
-      FROM events
-    )
-    SELECT epoch_us(h) AS hour_us, event_type,
-           MAX(CASE WHEN ra = 1 THEN value END) AS open,
-           MAX(value) AS high, MIN(value) AS low,
-           MAX(CASE WHEN rd = 1 THEN value END) AS close,
-           COUNT(*) AS n_events
-    FROM r GROUP BY h, event_type
-"""
-
-
-# q149: the whitened covariance of a correct ZCA projection is the
-# identity by construction, so the oracle asserts the 8×8 identity
-# matrix over the same valid-vector count; the LAPACK eigenvectors
-# themselves stay engine-side (no DuckDB eigh).
-_ORACLES["q149_pca_whiten"] = """
-    SELECT CAST(ii.i AS INT) AS i, CAST(jj.j AS INT) AS j,
-           CAST(CASE WHEN ii.i = jj.j THEN 1.0 ELSE 0.0 END AS DOUBLE) AS cov,
-           (SELECT COUNT(*) FROM embeddings
-             WHERE embedding IS NOT NULL AND len(embedding) >= 8) AS n_vecs
-    FROM (SELECT unnest(range(8)) AS i) ii,
-         (SELECT unnest(range(8)) AS j) jj
-"""
-
-
-# q235: ground-truth oracle for the REAL decode path — width/height/luma
-# derived in closed form from the analytic payload construction, never by
-# re-implementing the decoder. Integer luma numerator, one double
-# division, so the doubles are bit-identical across engines.
-_ORACLES["q235_image_decode"] = """
-    WITH p AS (
-      SELECT doc_id,
-             4 + doc_id % 13 AS w,
-             3 + doc_id % 7 AS h,
-             (doc_id * 7) % 256 AS r,
-             (doc_id * 13) % 256 AS g,
-             (doc_id * 29) % 256 AS b
-      FROM documents
-    )
-    SELECT doc_id,
-           CASE WHEN doc_id % 2 = 0 THEN 'image/bmp'
-                ELSE 'image/x-portable-pixmap' END AS mime,
-           CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-           CAST(3 AS INT) AS n_channels,
-           ROUND(CAST((299*r + 587*g + 114*b) * (w*h - 1) AS DOUBLE)
-                 / (255000.0 * w * h), 6) AS mean_luma
-    FROM p
-"""
-
-
-# q150: funnel counts — quality keeps via the q128 oracle, exact-dedup
-# survivors via the q24 fingerprint, decontamination via q80's gram
-# split, each stage strictly nested in the previous.
-_ORACLES["q150_corpus_funnel"] = f"""
-    WITH kept AS (
-      SELECT d.doc_id, d.text
-      FROM documents d JOIN ({_ORACLES["q128_quality_classifier"]}) v USING (doc_id)
-      WHERE v.verdict = 'keep'
-    ), tg AS (
-      SELECT doc_id, {_TOKS} AS ws FROM kept WHERE doc_id % 197 <> 0
-    ), bg AS (
-      SELECT doc_id, {_TOKS} AS ws FROM documents WHERE doc_id % 197 = 0
-    ), tgrams AS (
-      SELECT DISTINCT doc_id,
-             CASE WHEN len(ws) <= 3 THEN array_to_string(ws, ' ')
-                  ELSE ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] END AS gram
-      FROM tg, unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS t(i)
-    ), bgrams AS (
-      SELECT DISTINCT doc_id,
-             CASE WHEN len(ws) <= 3 THEN array_to_string(ws, ' ')
-                  ELSE ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] END AS gram
-      FROM bg, unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS t(i)
-    ), contaminated AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT t.doc_id, b.doc_id AS bench_id
-        FROM tgrams t JOIN bgrams b ON t.gram = b.gram
-        GROUP BY t.doc_id, b.doc_id
-        HAVING COUNT(*) >= 2
-      )
-    )
-    SELECT '1_input' AS stage, COUNT(*) AS n_docs FROM documents
-    UNION ALL
-    SELECT '2_quality_keep', COUNT(*) FROM kept
-    UNION ALL
-    SELECT '3_exact_distinct', COUNT(DISTINCT md5({_NORM})) FROM kept
-    UNION ALL
-    SELECT '4_decontaminated', COUNT(*) FROM kept
-    WHERE doc_id % 197 <> 0
-      AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-"""
-
-# q148: frame dedup over the q64 fake-frame oracle; canonical owner via
-# packed positive integer min (DIV/// agree on non-negatives).
-_ORACLES["q148_frame_dedup"] = f"""
-    WITH fr AS ({_ORACLES["q64_frame_sampling"]})
-    SELECT frame_hash, COUNT(*) AS n_copies,
-           MIN(doc_id * 1000 + frame_idx) // 1000 AS canonical_doc,
-           CAST(MIN(doc_id * 1000 + frame_idx) % 1000 AS INT) AS canonical_idx
-    FROM fr GROUP BY frame_hash
-"""
-
-# q146: sliding-window chunks — same count formula and 1-based slices.
-_ORACLES["q146_rag_chunks"] = f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), sp AS (
-      SELECT doc_id,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(1 + floor((greatest(len(toks) - 20, 0) + 9) / 10.0) AS INT)
-                  ELSE 0 END AS n_chunks,
-             toks
-      FROM tok
-    ), ex AS (
-      SELECT doc_id, unnest(range(0, n_chunks)) AS chunk_idx, toks FROM sp
-    )
-    SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-           len(toks[chunk_idx*10+1 : chunk_idx*10+20]) AS n_chunk_tokens,
-           array_to_string(toks[chunk_idx*10+1 : chunk_idx*10+20], ' ') AS chunk_text
-    FROM ex
-"""
-
-# q147: exact regression moments; slope via sign-split positive DIV.
-_ORACLES["q147_group_trend"] = """
-    WITH daily AS (
-      SELECT event_type,
-             date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS x,
-             SUM(CAST(value AS DECIMAL(18,2))) AS y
-      FROM events GROUP BY 1, 2
-    ), m AS (
-      SELECT event_type, COUNT(*) AS n, SUM(x) AS sx,
-             SUM(CAST(x AS BIGINT) * x) AS sxx,
-             CAST(SUM(y) AS DECIMAL(28,2)) AS sy,
-             CAST(SUM(x * y) AS DECIMAL(28,2)) AS sxy
-      FROM daily GROUP BY event_type
-    )
-    -- den/slope through HUGEINT: DuckDB SUM(BIGINT) and bigint arithmetic
-    -- promote to HUGEINT (decimal128(38,0)) — cast back to BIGINT so the
-    -- physical type matches Spark's LONG. The slope leaves as the SAME
-    -- (units, micros-remainder) radix pair Spark emits (a single micros
-    -- BIGINT wraps past |slope| 9.2e12 units/day), with all the big
-    -- intermediates in HUGEINT — exact, never a lossy BIGINT/double.
-    , s AS (
-      SELECT event_type, n,
-             CAST(n * sxy - sx * sy AS DECIMAL(38,2)) AS num,
-             CAST(n * sxx - sx * sx AS BIGINT) AS den,
-             CAST(abs(CAST(n * sxy - sx * sy AS DECIMAL(38,2))) * 1000000
-                  AS HUGEINT) AS m_abs,
-             CAST(n * sxx - sx * sx AS HUGEINT) * 1000000 AS denbig
-      FROM m
-      WHERE n >= 2 AND (n * sxx - sx * sx) > 0
-    )
-    SELECT event_type, n, num, den,
-           CASE WHEN num >= 0 THEN CAST(m_abs // denbig AS BIGINT)
-                ELSE -CAST(m_abs // denbig AS BIGINT) END AS slope_units,
-           CASE WHEN num >= 0 THEN CAST((m_abs % denbig) // den AS BIGINT)
-                ELSE -CAST((m_abs % denbig) // den AS BIGINT)
-           END AS slope_micros_rem
-    FROM s
-"""
-
-
-# q151: novelty via the shared shingle fragment; df counts distinct
-# (doc, gram) pairs so df = 1 means corpus-unique.
-_ORACLES["q151_ngram_novelty"] = f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), g AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES3})) AS gram FROM tok
-    ), counts AS (
-      SELECT gram, COUNT(*) AS df FROM g GROUP BY gram
-    ), per AS (
-      -- BIGINT casts: DuckDB SUM(INT) and HUGEINT `//` results are
-      -- decimal128(38,0) while Spark emits integrals — the q22 type seam
-      SELECT doc_id, COUNT(*) AS n_grams,
-             CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique
-      FROM g JOIN counts USING (gram) GROUP BY doc_id
-    )
-    SELECT doc_id, n_grams, n_unique,
-           CAST((n_unique * 1000000) // n_grams AS BIGINT) AS novelty_micros
-    FROM per
-"""
-
-# q152: cohort matrix; both engines truncate weeks to Monday 00:00.
-_ORACLES["q152_retention_cohorts"] = """
-    WITH uw AS (
-      SELECT DISTINCT user_id, date_trunc('week', ts) AS w FROM events
-    ), first AS (
-      SELECT user_id, MIN(w) AS cohort FROM uw GROUP BY user_id
-    )
-    SELECT epoch_us(cohort) AS cohort_us,
-           date_diff('day', CAST(cohort AS DATE), CAST(w AS DATE)) // 7 AS week_offset,
-           COUNT(*) AS n_active
-    FROM uw JOIN first USING (user_id)
-    GROUP BY 1, 2
-"""
-
-
-# q153: packing boundaries — bins cut on the running-token line, offset
-# within bin = prec % bin_tokens; every integer step casts HUGEINT->BIGINT
-# so physical types match Spark's LONG (the q22 lesson).
-_ORACLES["q153_pack_attention"] = f"""
-    WITH tok AS (
-      SELECT doc_id, source, {_TOKS} AS toks FROM documents
-    ), t AS (
-      SELECT doc_id, source, len(toks) AS ntok FROM tok
-    ), p AS (
-      SELECT source, doc_id, ntok,
-             COALESCE(SUM(ntok) OVER (PARTITION BY source ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS prec
-      FROM t
-    )
-    SELECT source,
-           CAST(prec // 2048 AS BIGINT) AS bin_id,
-           COUNT(*) AS n_docs,
-           CAST(SUM(ntok) AS BIGINT) AS total_tokens,
-           list_sort(list(CAST(prec % 2048 AS BIGINT))) AS boundaries
-    FROM p
-    GROUP BY source, CAST(prec // 2048 AS BIGINT)
-"""
-
-# q154: nearest-centroid assignment mirrors q137's (same _DOT fold, same
-# centroid_id tiebreak); the existing/new split and per-list occupancy
-# are pure counting.
-_ORACLES["q154_ivf_incremental"] = f"""
-    WITH cent AS (
-      SELECT CAST(vec_id AS INT) AS centroid_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-      FROM embeddings WHERE vec_id < 16
-    ), assign AS (
-      SELECT vec_id, centroid_id, grp FROM (
-        SELECT e.vec_id, cent.centroid_id, (e.vec_id % 5 = 0) AS grp,
-               row_number() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY -({_DOT.format(a="e.embedding", b="cent.cvec")}) ASC,
-                          cent.centroid_id ASC) AS rn
-        FROM embeddings e CROSS JOIN cent
-      ) WHERE rn = 1
-    )
-    SELECT cent.centroid_id,
-           CAST(COALESCE(SUM(CASE WHEN NOT grp THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_existing,
-           CAST(COALESCE(SUM(CASE WHEN grp THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_new,
-           COUNT(a.vec_id) AS n_total
-    FROM cent LEFT JOIN assign a USING (centroid_id)
-    GROUP BY cent.centroid_id
-"""
-
-# q155: q80's contamination rule + q151's novelty, rolled up per source;
-# scaled divisions stay in BIGINT (operands bounded far under int64).
-_ORACLES["q155_corpus_health"] = f"""
-    WITH tok AS (
-      SELECT doc_id, source, {_TOKS} AS toks FROM documents
-    ), base AS (
-      SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source
-    ), bg AS (
-      SELECT doc_id AS bench_id, unnest(list_distinct({_SHINGLES3})) AS gram
-      FROM tok WHERE doc_id % 197 = 0
-    ), tg AS (
-      SELECT doc_id, unnest(list_distinct({_SHINGLES3})) AS gram
-      FROM tok WHERE doc_id % 197 != 0
-    ), contam AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT tg.doc_id, bg.bench_id, COUNT(*) AS n_shared
-        FROM tg JOIN bg USING (gram) GROUP BY 1, 2
-      ) WHERE n_shared >= 2
-    ), csrc AS (
-      SELECT source, COUNT(*) AS n_contaminated
-      FROM contam JOIN documents USING (doc_id) GROUP BY source
-    ), g AS (
-      SELECT source, doc_id, unnest(list_distinct({_SHINGLES3})) AS gram FROM tok
-    ), counts AS (
-      SELECT gram, COUNT(*) AS df FROM g GROUP BY gram
-    ), nov AS (
-      SELECT source, COUNT(*) AS n_grams,
-             CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique_grams
-      FROM g JOIN counts USING (gram) GROUP BY source
-    )
-    SELECT base.source, base.n_docs,
-           COALESCE(csrc.n_contaminated, 0) AS n_contaminated,
-           (COALESCE(csrc.n_contaminated, 0) * 1000000) // base.n_docs AS contaminated_micros,
-           nov.n_grams, nov.n_unique_grams,
-           (nov.n_unique_grams * 1000000) // nov.n_grams AS novelty_micros
-    FROM base
-    LEFT JOIN csrc USING (source)
-    LEFT JOIN nov ON nov.source = base.source
-"""
-
-
-# q156: pair list per word via range(1, len) (empty for 1-char words, so
-# no CASE needed — unnest of [] drops the row, matching Spark's IF guard).
-_ORACLES["q156_bpe_pairs"] = f"""
-    WITH words AS (
-      SELECT unnest({_TOKS}) AS w FROM documents
-    ), pairs AS (
-      SELECT unnest(list_transform(range(1, length(w)),
-                                   i -> substring(w, CAST(i AS INT), 2))) AS pair
-      FROM words
-    )
-    SELECT pair, COUNT(*) AS n FROM pairs
-    GROUP BY pair ORDER BY n DESC, pair ASC LIMIT 50
-"""
-
-# q157: sqrt(n*1e10) floored — IEEE sqrt is correctly rounded so both
-# engines floor the same double; everything after is integer. DuckDB's
-# windowed SUM(BIGINT) is HUGEINT → cast the divisions back (q22 lesson).
-_ORACLES["q157_temperature_mixture"] = """
-    WITH counts AS (
-      SELECT source, COUNT(*) AS n_rows,
-             CAST(FLOOR(SQRT(CAST(COUNT(*) AS DOUBLE) * 1e10)) AS BIGINT) AS sqrt_e5
-      FROM documents GROUP BY source
-    )
-    SELECT source, n_rows, sqrt_e5,
-           CAST((sqrt_e5 * 1000000) // SUM(sqrt_e5) OVER () AS BIGINT) AS weight_ppm,
-           CAST((sqrt_e5 * 100000) // SUM(sqrt_e5) OVER () AS BIGINT) AS target_rows
-    FROM counts
-"""
-
-# q158: same md5(norm) fingerprint as q23/q24; min-id-first within the
-# batch, index membership wins over within-batch order.
-_ORACLES["q158_incremental_dedup"] = f"""
-    WITH b AS (
-      SELECT doc_id, md5({_NORM}) AS fingerprint
-      FROM documents WHERE doc_id % 7 = 3
-      UNION ALL
-      SELECT doc_id + 1000000, md5({_NORM})
-      FROM documents WHERE doc_id % 11 = 0
-    ), idx AS (
-      SELECT DISTINCT md5({_NORM}) AS fingerprint
-      FROM documents WHERE doc_id % 7 != 3
-    ), first AS (
-      SELECT fingerprint, MIN(doc_id) AS first_id FROM b GROUP BY fingerprint
-    ), tagged AS (
-      SELECT b.doc_id,
-             CASE WHEN idx.fingerprint IS NOT NULL THEN 'dup_of_index'
-                  WHEN b.doc_id = first.first_id THEN 'new_unique'
-                  ELSE 'dup_within_batch' END AS dedup_status
-      FROM b
-      JOIN first USING (fingerprint)
-      LEFT JOIN idx USING (fingerprint)
-    )
-    SELECT dedup_status, COUNT(*) AS n_docs,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM tagged GROUP BY dedup_status
-"""
-
-# q159: conditional-min pivot + left-to-right ordered-reach fold; NULL
-# comparisons fall out of the CASE the same way Spark's when() does.
-_ORACLES["q159_funnel"] = """
-    WITH mins AS (
-      SELECT user_id,
-             MIN(CASE WHEN event_type = 'view' THEN ts END) AS t0,
-             MIN(CASE WHEN event_type = 'click' THEN ts END) AS t1,
-             MIN(CASE WHEN event_type = 'purchase' THEN ts END) AS t2
-      FROM events GROUP BY user_id
-    ), reach AS (
-      SELECT (t0 IS NOT NULL) AS r0,
-             (t0 IS NOT NULL AND t1 >= t0) AS r1,
-             (t0 IS NOT NULL AND t1 >= t0 AND t2 >= t1) AS r2
-      FROM mins
-    ), totals AS (
-      SELECT CAST(SUM(CASE WHEN r0 THEN 1 ELSE 0 END) AS BIGINT) AS n0,
-             CAST(SUM(CASE WHEN r1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-             CAST(SUM(CASE WHEN r2 THEN 1 ELSE 0 END) AS BIGINT) AS n2
-      FROM reach
-    )
-    SELECT CAST(0 AS BIGINT) AS stage_idx, 'view' AS stage, n0 AS n_converted FROM totals
-    UNION ALL
-    SELECT CAST(1 AS BIGINT), 'click', n1 FROM totals
-    UNION ALL
-    SELECT CAST(2 AS BIGINT), 'purchase', n2 FROM totals
-"""
-
-# q160: same-definition levenshtein on both engines; candidate count is
-# the closed form n(n-1)/2, matches the blocked equi-join pair space.
-_ORACLES["q160_fuzzy_join"] = """
-    WITH c AS (
-      SELECT c_custkey, c_name, CAST(c_nationkey AS BIGINT) AS nation FROM customer
-    ), base AS (
-      SELECT nation, COUNT(*) AS n_customers,
-             CAST((COUNT(*) * (COUNT(*) - 1)) // 2 AS BIGINT) AS n_candidate_pairs
-      FROM c GROUP BY nation
-    ), m AS (
-      SELECT l.nation, COUNT(*) AS n_matched
-      FROM c l JOIN c r ON l.nation = r.nation AND l.c_name < r.c_name
-      WHERE levenshtein(l.c_name, r.c_name) <= 1
-      GROUP BY l.nation
-    )
-    SELECT base.nation, base.n_customers, base.n_candidate_pairs,
-           COALESCE(m.n_matched, 0) AS n_matched
-    FROM base LEFT JOIN m USING (nation)
-"""
-
-# q161: bins the q23-proven rounded quality double; SUM(len) is HUGEINT
-# in DuckDB → cast (q22 lesson).
-_ORACLES["q161_quality_bins"] = f"""
-    WITH tok AS (
-      SELECT doc_id, text, {{toks}} AS toks FROM documents
-    ), feat AS (
-      SELECT len(toks) AS n_tokens,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(len(list_filter(toks, t -> t IN {{sw}})) AS DOUBLE) / len(toks)
-                  ELSE 0.0 END AS sr,
-             CASE WHEN length(text) > 0
-                  THEN CAST(length(text) - length(regexp_replace(text, '{{punct}}', '', 'g')) AS DOUBLE) / length(text)
-                  ELSE 0.0 END AS pr
-      FROM tok
-    ), scored AS (
-      SELECT n_tokens,
-             round(least(n_tokens / 100.0, 1.0) * 0.4
-                   + least(sr * 5.0, 1.0) * 0.4
-                   + (1.0 - least(pr * 10.0, 1.0)) * 0.2, 6) AS q
-      FROM feat
-    )
-    SELECT LEAST(CAST(FLOOR(q * 10) AS BIGINT), 9) AS bin_id,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-    FROM scored GROUP BY bin_id
-"""
-_ORACLES["q161_quality_bins"] = _ORACLES["q161_quality_bins"].format(
-    toks=_TOKS, sw=_in_list(_MARKERS["en"]), punct=_PUNCT_RE
-)
-
-
-# q162: same shingle fragment as q25, positions via generate_subscripts
-# (base offset cancels in the ROWS window), same 8-nibble md5 arithmetic
-# as the Spark _md5_int32 fold.
-_ORACLES["q162_winnow_fingerprints"] = f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), sh AS (
-      SELECT doc_id, {_SHINGLES3} AS sh FROM tok
-    ), grams AS (
-      SELECT doc_id, generate_subscripts(sh, 1) AS pos, unnest(sh) AS gram FROM sh
-    ), hashed AS (
-      SELECT doc_id, pos, (strpos('0123456789abcdef', substr(md5(gram), 1, 1)) - 1) * 268435456 + (strpos('0123456789abcdef', substr(md5(gram), 2, 1)) - 1) * 16777216 + (strpos('0123456789abcdef', substr(md5(gram), 3, 1)) - 1) * 1048576 + (strpos('0123456789abcdef', substr(md5(gram), 4, 1)) - 1) * 65536 + (strpos('0123456789abcdef', substr(md5(gram), 5, 1)) - 1) * 4096 + (strpos('0123456789abcdef', substr(md5(gram), 6, 1)) - 1) * 256 + (strpos('0123456789abcdef', substr(md5(gram), 7, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5(gram), 8, 1)) - 1) * 1 AS h FROM grams
-    ), fp AS (
-      SELECT DISTINCT doc_id,
-             MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fingerprint
-      FROM hashed
-    )
-    SELECT doc_id, COUNT(*) AS n_fp,
-           MIN(fingerprint) AS min_fp, MAX(fingerprint) AS max_fp
-    FROM fp GROUP BY doc_id
-"""
-
-# q163: vocab = top-500 by (freq desc, token asc) — total order, so the
-# LIMIT boundary is deterministic; HUGEINT sums/divisions cast back.
-_ORACLES["q163_oov_rate"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS token FROM documents
-    ), vocab AS (
-      SELECT token FROM (
-        SELECT token, COUNT(*) AS c FROM tok GROUP BY token
-        ORDER BY c DESC, token ASC LIMIT 500
-      )
-    ), per AS (
-      SELECT t.doc_id, COUNT(*) AS n_tokens,
-             CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-      FROM tok t LEFT JOIN vocab v USING (token) GROUP BY t.doc_id
-    )
-    SELECT d.doc_id, COALESCE(per.n_tokens, 0) AS n_tokens,
-           COALESCE(per.n_oov, 0) AS n_oov,
-           CAST(CASE WHEN COALESCE(per.n_tokens, 0) > 0
-                THEN (COALESCE(per.n_oov, 0) * 1000000) // per.n_tokens
-                ELSE 0 END AS BIGINT) AS oov_micros
-    FROM documents d LEFT JOIN per USING (doc_id)
-"""
-
-# q164: quantize (round half-away-from-zero — identical both engines),
-# BIGINT sums, sign-aware integer mean, dots over quant-bounded
-# centroids (double-exact at any scale), floored micro-cosine.
-_ORACLES["q164_centroid_similarity"] = """
-    WITH j AS (
-      SELECT d.source AS g, e.embedding AS v
-      FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
-    ), comp AS (
-      SELECT g, pos,
-             CAST(SUM(CAST(ROUND(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS BIGINT) AS s,
-             COUNT(*) AS n
-      FROM (SELECT g, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM j)
-      GROUP BY g, pos
-    ), cent AS (
-      SELECT g, MAX(n) AS n_vecs,
-             list(CAST(sign(s) AS BIGINT) * CAST((abs(s) // n) AS BIGINT)
-                  ORDER BY pos) AS cvec
-      FROM comp GROUP BY g
-    ), pairs AS (
-      SELECT a.g AS group_a, b.g AS group_b, a.n_vecs AS n_a, b.n_vecs AS n_b,
-             CAST(list_sum(list_transform(range(1, len(a.cvec) + 1),
-                  i -> a.cvec[CAST(i AS INT)] * b.cvec[CAST(i AS INT)])) AS BIGINT) AS dot,
-             CAST(list_sum(list_transform(range(1, len(a.cvec) + 1),
-                  i -> a.cvec[CAST(i AS INT)] * a.cvec[CAST(i AS INT)])) AS BIGINT) AS na,
-             CAST(list_sum(list_transform(range(1, len(b.cvec) + 1),
-                  i -> b.cvec[CAST(i AS INT)] * b.cvec[CAST(i AS INT)])) AS BIGINT) AS nb
-      FROM cent a JOIN cent b ON a.g < b.g
-    )
-    SELECT group_a, group_b, n_a, n_b, dot,
-           CASE WHEN na > 0 AND nb > 0
-                THEN CAST(FLOOR(CAST(dot AS DOUBLE) * 1000000.0
-                     / (SQRT(CAST(na AS DOUBLE)) * SQRT(CAST(nb AS DOUBLE)))) AS BIGINT)
-                ELSE NULL END AS cos_micros
-    FROM pairs
-"""
-
-
-# q165: result is an order statistic — algorithm-independent; the
-# oracle looks it up from a sorted row_number (ties map to the same
-# VALUE, so tie order is irrelevant).
-_ORACLES["q165_exact_quantiles"] = """
-    WITH v AS (
-      SELECT l_extendedprice AS x FROM lineitem WHERE l_extendedprice IS NOT NULL
-    ), r AS (
-      SELECT x, row_number() OVER (ORDER BY x) - 1 AS rk FROM v
-    ), n AS (SELECT COUNT(*) AS n FROM v)
-    SELECT q_ppm, rk AS rank, x AS value
-    FROM (
-      SELECT CAST(250000 AS BIGINT) AS q_ppm,
-             CAST(FLOOR((n.n - 1) * 0.25) AS BIGINT) AS want FROM n
-      UNION ALL
-      SELECT CAST(500000 AS BIGINT), CAST(FLOOR((n.n - 1) * 0.5) AS BIGINT) FROM n
-      UNION ALL
-      SELECT CAST(750000 AS BIGINT), CAST(FLOOR((n.n - 1) * 0.75) AS BIGINT) FROM n
-    ) targets
-    JOIN r ON r.rk = targets.want
-"""
-
-# q166: batch twin of the stream-static enrichment.
-_ORACLES["q166_stream_enrich"] = """
-    WITH dim AS (
-      SELECT c_custkey AS user_id,
-             CASE WHEN c_acctbal < 0 THEN 'debt'
-                  WHEN c_acctbal < 5000 THEN 'mid'
-                  ELSE 'high' END AS segment
-      FROM customer
-    )
-    SELECT COALESCE(segment, 'none') AS segment,
-           COUNT(*) AS n_events,
-           CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events LEFT JOIN dim USING (user_id)
-    GROUP BY 1
-"""
-
-
-# q167: the hash-invariant booleans are engine-computable facts about
-# ANY total deterministic collision-free hash — the oracle asserts them
-# over the same row count.
-_ORACLES["q167_lineage_hash_props"] = """
-    SELECT COUNT(*) AS n_rows, TRUE AS hash_total,
-           TRUE AS deterministic, TRUE AS collision_free
-    FROM supplier
-"""
-
-
-# q168: codebooks computed from the same pinned rows (vec_id < 16) the
-# Spark side collects; encode argmin via dist-ordered row_number (ties
-# to lowest codeword = Spark's first-min array_position); ADC folds
-# subspaces and components left-to-right exactly like the Spark chain
-# (list_sum starts at 0; 0+x = x, so the fold orders agree).
-_ORACLES["q168_pq_topk"] = """
-    WITH cb AS (
-      SELECT CAST(vec_id AS INT) AS j, CAST(ss.s AS INT) AS s,
-             list_transform(embedding[(ss.s*8+1):(ss.s*8+8)],
-                            x -> CAST(x AS DOUBLE)) AS cw
-      FROM embeddings, (SELECT unnest(range(8)) AS s) ss
-      WHERE vec_id < 16
-    ), corp AS (
-      SELECT vec_id AS neighbor_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ), enc AS (
-      SELECT neighbor_id, s, j AS code FROM (
-        SELECT c.neighbor_id, cb.s, cb.j,
-               row_number() OVER (
-                 PARTITION BY c.neighbor_id, cb.s
-                 ORDER BY list_sum(list_transform(range(1, 9), i ->
-                   (c.v[CAST(cb.s*8+i AS INT)] - cb.cw[CAST(i AS INT)])
-                   * (c.v[CAST(cb.s*8+i AS INT)] - cb.cw[CAST(i AS INT)]))) ASC,
-                 cb.j ASC) AS rn
-        FROM corp c CROSS JOIN cb
-      ) WHERE rn = 1
-    ), enc2 AS (
-      SELECT neighbor_id, list(code ORDER BY s) AS code FROM enc GROUP BY neighbor_id
-    ), cbl AS (
-      SELECT list(cw ORDER BY s * 16 + j) AS flat FROM cb
-    ), q AS (
-      SELECT vec_id AS query_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-      FROM embeddings WHERE vec_id >= 16 AND vec_id < 20
-    ), scored AS (
-      SELECT q.query_id, e.neighbor_id,
-             ROUND(list_sum(list_transform(range(8), s ->
-               list_sum(list_transform(range(1, 9), i ->
-                 (q.qv[CAST(s*8+i AS INT)]
-                  - cbl.flat[CAST(s*16 + e.code[CAST(s+1 AS INT)] + 1 AS INT)][CAST(i AS INT)])
-                 * (q.qv[CAST(s*8+i AS INT)]
-                  - cbl.flat[CAST(s*16 + e.code[CAST(s+1 AS INT)] + 1 AS INT)][CAST(i AS INT)])
-               ))
-             )), 9) AS adc_dist
-      FROM enc2 e CROSS JOIN q CROSS JOIN cbl
-    )
-    SELECT query_id, neighbor_id, adc_dist, rk FROM (
-      SELECT query_id, neighbor_id, adc_dist,
-             CAST(row_number() OVER (
-               PARTITION BY query_id
-               ORDER BY adc_dist ASC, neighbor_id ASC) AS INT) AS rk
-      FROM scored
-    ) WHERE rk <= 5
-"""
-
-
-# q169: first BPE merge = argmax weighted char pair (total tie order);
-# the loop's monotonicity property asserts as a literal.
-_ORACLES["q169_bpe_train"] = f"""
-    WITH words AS (
-      SELECT unnest({_TOKS}) AS w FROM documents
-    ), wf AS (
-      SELECT w, COUNT(*) AS freq FROM words GROUP BY w
-    ), pairs AS (
-      SELECT substring(w, CAST(i AS INT), 1) AS l,
-             substring(w, CAST(i + 1 AS INT), 1) AS r,
-             CAST(SUM(freq) AS BIGINT) AS cnt
-      FROM (SELECT w, freq, unnest(range(1, length(w))) AS i FROM wf)
-      GROUP BY 1, 2
-    )
-    SELECT l AS first_left, r AS first_right, cnt AS first_count,
-           CAST(8 AS BIGINT) AS n_merges, TRUE AS counts_nonincreasing
-    FROM pairs ORDER BY cnt DESC, l ASC, r ASC LIMIT 1
-"""
-
-
-# q170: thresholds are order statistics (rank lookup); band aggregate
-# in exact integer cents; HUGEINT sums/divisions cast back.
-_ORACLES["q170_trimmed_mean"] = """
-    WITH v AS (
-      SELECT l_extendedprice AS x FROM lineitem WHERE l_extendedprice IS NOT NULL
-    ), r AS (
-      SELECT x, row_number() OVER (ORDER BY x) - 1 AS rk FROM v
-    ), n AS (SELECT COUNT(*) AS n FROM v
-    ), th AS (
-      SELECT
-        (SELECT x FROM r, n WHERE rk = CAST(FLOOR((n.n - 1) * 0.05) AS BIGINT)) AS lo,
-        (SELECT x FROM r, n WHERE rk = CAST(FLOOR((n.n - 1) * 0.95) AS BIGINT)) AS hi
-    )
-    SELECT CAST(ROUND(th.lo * 100) AS BIGINT) AS lo_cents,
-           CAST(ROUND(th.hi * 100) AS BIGINT) AS hi_cents,
-           COUNT(*) AS n_kept,
-           CAST(SUM(CAST(ROUND(x * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
-           CAST((CAST(SUM(CAST(ROUND(x * 100) AS BIGINT)) AS BIGINT) * 10) // COUNT(*) AS BIGINT) AS mean_milli
-    FROM v, th WHERE x >= th.lo AND x <= th.hi
-    GROUP BY th.lo, th.hi
-"""
-
-
-# q171: smallest-boundary bucket via CASE chain; overlong docs truncate
-# to the top boundary. HUGEINT sums cast back.
-_ORACLES["q171_padding_waste"] = f"""
-    WITH t AS (
-      SELECT len({_TOKS}) AS ntok FROM documents
-    ), b AS (
-      SELECT CASE WHEN ntok <= 32 THEN 32 WHEN ntok <= 64 THEN 64
-                  WHEN ntok <= 128 THEN 128 WHEN ntok <= 256 THEN 256
-                  ELSE 512 END AS bucket,
-             LEAST(ntok, 512) AS eff
-      FROM t
-    )
-    SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n_docs,
-           CAST(SUM(eff) AS BIGINT) AS sum_tokens,
-           CAST(COUNT(*) * bucket AS BIGINT) AS capacity,
-           CAST(COUNT(*) * bucket - SUM(eff) AS BIGINT) AS padding_waste
-    FROM b GROUP BY bucket
-"""
-
-# q172: q157's sqrt source weights × q161's bin shares, pure integer
-# division; windowed SUM is HUGEINT -> cast (q22 lesson).
-_ORACLES["q172_mixing_schedule"] = f"""
-    WITH tok AS (
-      SELECT source, {_TOKS} AS toks, text FROM documents
-    ), feat AS (
-      SELECT source, len(toks) AS n_tokens,
-             CASE WHEN len(toks) > 0
-                  THEN CAST(len(list_filter(toks, t -> t IN {_in_list(_MARKERS["en"])})) AS DOUBLE) / len(toks)
-                  ELSE 0.0 END AS sr,
-             CASE WHEN length(text) > 0
-                  THEN CAST(length(text) - length(regexp_replace(text, '{_PUNCT_RE}', '', 'g')) AS DOUBLE) / length(text)
-                  ELSE 0.0 END AS pr
-      FROM tok
-    ), scored AS (
-      SELECT source,
-             LEAST(CAST(FLOOR(round(least(n_tokens / 100.0, 1.0) * 0.4
-                   + least(sr * 5.0, 1.0) * 0.4
-                   + (1.0 - least(pr * 10.0, 1.0)) * 0.2, 6) * 10) AS BIGINT), 9) AS bin_id
-      FROM feat
-    ), per AS (
-      SELECT source, bin_id, COUNT(*) AS n_docs FROM scored GROUP BY source, bin_id
-    ), src AS (
-      SELECT source, CAST(SUM(n_docs) AS BIGINT) AS n_src,
-             CAST(FLOOR(SQRT(CAST(SUM(n_docs) AS DOUBLE) * 1e10)) AS BIGINT) AS sqrt_e5
-      FROM per GROUP BY source
-    ), srcw AS (
-      SELECT source, n_src,
-             CAST((sqrt_e5 * 1000000) // SUM(sqrt_e5) OVER () AS BIGINT) AS src_rows
-      FROM src
-    )
-    SELECT per.source, per.bin_id, per.n_docs, srcw.n_src,
-           CAST((srcw.src_rows * per.n_docs) // srcw.n_src AS BIGINT) AS target_rows
-    FROM per JOIN srcw USING (source)
-"""
-
-
-# q173: relevance = doc holds ALL query terms; metrics by integer
-# division over the q129 ranking CTE. HUGEINT sums/divs cast back.
-_ORACLES["q173_retrieval_eval"] = f"""
-    WITH q(query_id, term) AS (
-      VALUES (1, 'hash'), (1, 'join'), (2, 'vector'), (2, 'stream'),
-             (3, 'filter'), (3, 'scan')
-    ), topk AS (
-      SELECT query_id, doc_id, rk FROM ({_ORACLES["q129_rerank"]})
-    ), tok AS (
-      SELECT doc_id, unnest(list_distinct({_TOKS})) AS term FROM documents
-    ), nt AS (
-      SELECT query_id, COUNT(DISTINCT term) AS n_terms FROM q GROUP BY query_id
-    ), rel AS (
-      SELECT t.query_id, t.doc_id FROM (
-        SELECT q.query_id, tok.doc_id, COUNT(DISTINCT tok.term) AS n_hit
-        FROM tok JOIN q USING (term) GROUP BY 1, 2
-      ) t JOIN nt ON nt.query_id = t.query_id AND t.n_hit = nt.n_terms
-    ), rel_total AS (
-      SELECT query_id, COUNT(*) AS n_relevant FROM rel GROUP BY query_id
-    ), per AS (
-      SELECT topk.query_id,
-             CAST(SUM(CASE WHEN rel.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_rel_topk,
-             CAST(MIN(CASE WHEN rel.doc_id IS NOT NULL THEN topk.rk END) AS BIGINT) AS first_rel_rank
-      FROM topk LEFT JOIN rel
-        ON rel.query_id = topk.query_id AND rel.doc_id = topk.doc_id
-      GROUP BY topk.query_id
-    )
-    SELECT per.query_id,
-           COALESCE(rel_total.n_relevant, 0) AS n_relevant,
-           per.n_rel_topk, per.first_rel_rank,
-           CAST(COALESCE(1000000 // per.first_rel_rank, 0) AS BIGINT) AS mrr_micros,
-           CAST(CASE WHEN COALESCE(rel_total.n_relevant, 0) > 0
-                THEN (per.n_rel_topk * 1000000) // rel_total.n_relevant
-                ELSE 0 END AS BIGINT) AS recall_micros
-    FROM per LEFT JOIN rel_total USING (query_id)
-"""
-
-
-# q174: same fixed-width score rules; epoch-micros integer recency
-# (the q22 lesson: never raw timestamps through the hash gate when a
-# derived integer works); HUGEINT sums/divs cast back.
-_ORACLES["q174_rfm_scores"] = """
-    WITH p AS (
-      SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
-    ), per AS (
-      SELECT user_id, MAX(ts) AS last_ts, COUNT(*) AS frequency,
-             CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS monetary_cents
-      FROM p GROUP BY user_id
-    ), c AS (SELECT MAX(ts) AS now_ts FROM p
-    ), s AS (
-      SELECT user_id,
-             CAST((epoch_us(c.now_ts) - epoch_us(last_ts)) // 3600000000 AS BIGINT) AS recency_hours,
-             frequency, monetary_cents
-      FROM per, c
-    )
-    SELECT user_id, recency_hours, frequency, monetary_cents,
-           CAST((CASE WHEN recency_hours < 24 THEN 4 WHEN recency_hours < 72 THEN 3
-                      WHEN recency_hours < 168 THEN 2 ELSE 1 END) * 100
-              + (CASE WHEN frequency >= 8 THEN 4 WHEN frequency >= 4 THEN 3
-                      WHEN frequency >= 2 THEN 2 ELSE 1 END) * 10
-              + (CASE WHEN monetary_cents >= 200000 THEN 4 WHEN monetary_cents >= 50000 THEN 3
-                      WHEN monetary_cents >= 10000 THEN 2 ELSE 1 END) AS BIGINT) AS rfm_code
-    FROM s
-"""
-
-
-# q175: q63's recursive-CTE clusters + q53's md5-bucket split keyed on
-# cluster id; the leak count is computed, not asserted as a literal.
-_ORACLES["q175_cluster_split"] = f"""
-    WITH RECURSIVE prs AS (
-      {_Q25_BODY}
-    ), edges AS (
-      SELECT id_a AS s, id_b AS d FROM prs
-      UNION
-      SELECT id_b, id_a FROM prs
-    ), nodes AS (
-      SELECT DISTINCT s AS n FROM edges
-    ), walk(n, l) AS (
-      SELECT n, n FROM nodes
-      UNION
-      SELECT e.d, walk.l FROM walk JOIN edges e ON walk.n = e.s
-    ), clusters AS (
-      SELECT n AS doc_id, MIN(l) AS cluster_id FROM walk GROUP BY n
-    ), tagged AS (
-      SELECT d.doc_id, COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-             CASE WHEN {_md5_bucket_sql("CAST(COALESCE(c.cluster_id, d.doc_id) AS VARCHAR)", 100)} < 10
-                  THEN 'test' ELSE 'train' END AS split
-      FROM documents d LEFT JOIN clusters c USING (doc_id)
-    ), leak AS (
-      SELECT COUNT(*) AS n_leaky_clusters FROM (
-        SELECT cluster_id FROM tagged GROUP BY cluster_id
-        HAVING COUNT(DISTINCT split) > 1
-      )
-    )
-    SELECT split, COUNT(*) AS n_docs,
-           CAST(COUNT(DISTINCT cluster_id) AS BIGINT) AS n_clusters,
-           CAST(leak.n_leaky_clusters AS BIGINT) AS n_leaky_clusters
-    FROM tagged, leak GROUP BY split, leak.n_leaky_clusters
-"""
-
-# q176: q28's cosine/rank fragment + label join + (votes desc, label
-# asc) majority — the same total orders as the Spark windows.
-_ORACLES["q176_knn_classify"] = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 5 = 0
-    ), c AS (
-      SELECT vec_id AS neighbor_id, embedding AS cv, label
-      FROM embeddings WHERE vec_id % 5 != 0
-    ), s AS (
-      SELECT query_id, neighbor_id, label,
-             {_cosine_sql("cv", "qv")} AS cosine
-      FROM c CROSS JOIN q WHERE neighbor_id != query_id
-    ), nn AS (
-      SELECT query_id, label FROM (
-        SELECT query_id, label,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY cosine DESC, neighbor_id) AS rk
-        FROM s
-      ) WHERE rk <= 5
-    ), votes AS (
-      SELECT query_id, label, COUNT(*) AS votes FROM nn GROUP BY query_id, label
-    )
-    SELECT query_id, label AS pred_label, votes FROM (
-      SELECT query_id, label, votes,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY votes DESC, label ASC) AS vr
-      FROM votes
-    ) WHERE vr = 1
-"""
-
-
-# q177: lead-window intervals, cents×micros exact integer weighting.
-_ORACLES["q177_twap"] = """
-    WITH p AS (
-      SELECT user_id, event_id, ts,
-             CAST(ROUND(value * 100) AS BIGINT) AS cents
-      FROM events WHERE event_type = 'purchase'
-    ), iv AS (
-      SELECT user_id, cents,
-             epoch_us(LEAD(ts) OVER w) - epoch_us(ts) AS dur_us
-      FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT user_id, COUNT(*) AS n_intervals,
-           CAST(SUM(dur_us) AS BIGINT) AS total_us,
-           CAST(SUM(CAST(cents AS HUGEINT) * dur_us) // SUM(dur_us) AS BIGINT) AS twap_cents
-    FROM iv WHERE dur_us IS NOT NULL GROUP BY user_id
-"""
-
-# q178: n_sessions(g) = n_users + n_gaps>g — one lag-window pass prices
-# all thresholds.
-_ORACLES["q178_session_sensitivity"] = """
-    WITH g AS (
-      SELECT user_id,
-             epoch_us(ts) - epoch_us(LAG(ts) OVER (PARTITION BY user_id
-                                                   ORDER BY ts, event_id)) AS gap_us
-      FROM events
-    ), u AS (SELECT COUNT(DISTINCT user_id) AS n_users FROM g)
-    SELECT CAST(t.s AS BIGINT) AS gap_seconds,
-           CAST(u.n_users + (SELECT COUNT(*) FROM g
-                             WHERE gap_us IS NOT NULL AND gap_us > CAST(t.s AS BIGINT) * 1000000)
-                AS BIGINT) AS n_sessions
-    FROM (VALUES (900), (1800), (3600), (7200)) t(s), u
-"""
-
-
-# q179: margin from the sorted 4-score list (integer-exact); prediction
-# reuses the q128 argmax fragment (same de→en→es→fr tie order as
-# Spark's left-fold). HUGEINT sums/divs cast back.
-_ORACLES["q179_langid_calibration"] = f"""
-    WITH tok AS (
-      SELECT doc_id, lang, {_TOKS} AS toks FROM documents
-    ), feat AS (
-      SELECT doc_id, lang,
-             {_lang_score("de")} AS s_de, {_lang_score("en")} AS s_en,
-             {_lang_score("es")} AS s_es, {_lang_score("fr")} AS s_fr
-      FROM tok
-    ), scored AS (
-      SELECT LEAST(l[4] - l[3], 5) AS conf_bin,
-             ({_LANG_PRED}) = lang AS ok
-      FROM (SELECT lang, s_de, s_en, s_es, s_fr,
-                   list_sort([s_de, s_en, s_es, s_fr]) AS l FROM feat)
-    )
-    SELECT CAST(conf_bin AS BIGINT) AS conf_bin, COUNT(*) AS n_docs,
-           CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-           CAST((SUM(CASE WHEN ok THEN 1 ELSE 0 END) * 1000000) // COUNT(*) AS BIGINT) AS accuracy_micros
-    FROM scored GROUP BY conf_bin
-"""
-
-
-# q180: file counts are arithmetic — ceil(n/100) small files per
-# source, and the testdata partitions compact to ONE ~1 GB-target file
-# each (they are far below the target size).
-_ORACLES["q180_compaction_report"] = """
-    SELECT source, COUNT(*) AS n_rows,
-           CAST(CEIL(COUNT(*) / 100.0) AS BIGINT) AS n_files_before,
-           CAST(1 AS BIGINT) AS n_files_after
-    FROM documents GROUP BY source
-"""
-
-
-# q181: composes the q28/q29/q137/q168 oracle bodies verbatim — the
-# methods' parameters match their oracle-checked originals by
-# construction; recall by integer division.
-_ORACLES["q181_ann_dashboard"] = f"""
-    WITH exact AS (
-      SELECT query_id, neighbor_id FROM ({_ORACLES["q28_cosine_topk"]})
-      WHERE query_id >= 16 AND query_id < 20 AND neighbor_id != query_id
-    ), m_ivf AS (
-      SELECT query_id, neighbor_id FROM ({_ORACLES["q137_ivf_pretrained"]})
-      WHERE query_id >= 16 AND query_id < 20 AND neighbor_id != query_id
-    ), m_lsh AS (
-      SELECT query_id, neighbor_id FROM ({_ORACLES["q29_lsh_topk"]})
-      WHERE query_id >= 16 AND query_id < 20 AND neighbor_id != query_id
-    ), m_pq AS (
-      SELECT query_id, neighbor_id FROM ({_ORACLES["q168_pq_topk"]})
-      WHERE query_id >= 16 AND query_id < 20 AND neighbor_id != query_id
-    ), en AS (SELECT COUNT(*) AS n_exact FROM exact
-    ), hits AS (
-      SELECT 'ivf' AS method, COUNT(*) AS n_hits
-      FROM m_ivf JOIN exact USING (query_id, neighbor_id)
-      UNION ALL
-      SELECT 'lsh', COUNT(*) FROM m_lsh JOIN exact USING (query_id, neighbor_id)
-      UNION ALL
-      SELECT 'pq', COUNT(*) FROM m_pq JOIN exact USING (query_id, neighbor_id)
-    )
-    SELECT method, hits.n_hits, en.n_exact,
-           CAST((hits.n_hits * 1000000) // en.n_exact AS BIGINT) AS recall_micros
-    FROM hits, en
-"""
-
-
-# q182: canonical = min doc_id per md5(norm) fingerprint (the q24
-# rule); savings by integer division.
-_ORACLES["q182_dedup_savings"] = f"""
-    WITH fp AS (
-      SELECT source, doc_id, n_chars, md5({_NORM}) AS fingerprint FROM documents
-    ), canon AS (
-      SELECT fingerprint, MIN(doc_id) AS canonical_id FROM fp GROUP BY fingerprint
-    )
-    SELECT source, COUNT(*) AS n_docs,
-           CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-           CAST(SUM(CASE WHEN fp.doc_id != canon.canonical_id
-                    THEN n_chars ELSE 0 END) AS BIGINT) AS reclaimable_chars,
-           CAST((SUM(CASE WHEN fp.doc_id != canon.canonical_id
-                     THEN n_chars ELSE 0 END) * 1000000) // SUM(n_chars)
-                AS BIGINT) AS savings_micros
-    FROM fp JOIN canon USING (fingerprint)
-    GROUP BY source
-"""
-
-
-# q183: classification from the corpus-wide q25 pairs (id_a < id_b)
-# restricted to batch-involved rows — banding batch∪index equals
-# banding the corpus, so the candidate sets coincide.
-_ORACLES["q183_incremental_neardup"] = f"""
-    WITH prs AS (
-      SELECT * FROM ({_Q25_INNER_NOCAP}) WHERE jaccard >= 0.2
-    ), stat AS (
-      SELECT b.doc_id,
-             CASE WHEN EXISTS (
-                    SELECT 1 FROM prs p
-                    WHERE (p.id_a = b.doc_id AND p.id_b % 7 != 3)
-                       OR (p.id_b = b.doc_id AND p.id_a % 7 != 3))
-                  THEN 'dup_of_index'
-                  WHEN EXISTS (
-                    SELECT 1 FROM prs p
-                    WHERE p.id_b = b.doc_id AND p.id_a % 7 = 3)
-                  THEN 'dup_within_batch'
-                  ELSE 'novel' END AS neardup_status
-      FROM (SELECT doc_id FROM documents WHERE doc_id % 7 = 3) b
-    )
-    SELECT neardup_status, COUNT(*) AS n_docs,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM stat GROUP BY neardup_status
-"""
-
-
-# q184: q168's encode CTEs verbatim, one row per vector with its code
-# list — the streaming projection must equal the batch encode exactly.
-_ORACLES["q184_streaming_pq_encode"] = """
-    WITH cb AS (
-      SELECT CAST(vec_id AS INT) AS j, CAST(ss.s AS INT) AS s,
-             list_transform(embedding[(ss.s*8+1):(ss.s*8+8)],
-                            x -> CAST(x AS DOUBLE)) AS cw
-      FROM embeddings, (SELECT unnest(range(8)) AS s) ss
-      WHERE vec_id < 16
-    ), corp AS (
-      SELECT vec_id AS neighbor_id,
-             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      FROM embeddings
-    ), enc AS (
-      SELECT neighbor_id, s, j AS code FROM (
-        SELECT c.neighbor_id, cb.s, cb.j,
-               row_number() OVER (
-                 PARTITION BY c.neighbor_id, cb.s
-                 ORDER BY list_sum(list_transform(range(1, 9), i ->
-                   (c.v[CAST(cb.s*8+i AS INT)] - cb.cw[CAST(i AS INT)])
-                   * (c.v[CAST(cb.s*8+i AS INT)] - cb.cw[CAST(i AS INT)]))) ASC,
-                 cb.j ASC) AS rn
-        FROM corp c CROSS JOIN cb
-      ) WHERE rn = 1
-    )
-    SELECT neighbor_id AS vec_id, list(code ORDER BY s) AS pq_code
-    FROM enc GROUP BY neighbor_id
-"""
-
-
-# q185: snapshot-conditional counts from one explode; top-20 by the
-# (total desc, token asc) total order; HUGEINT arithmetic cast back.
-_ORACLES["q185_token_drift"] = f"""
-    WITH tok AS (
-      SELECT doc_id % 2 = 0 AS snap_a, unnest({_TOKS}) AS token FROM documents
-    ), counts AS (
-      SELECT token,
-             CAST(SUM(CASE WHEN snap_a THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
-             CAST(SUM(CASE WHEN NOT snap_a THEN 1 ELSE 0 END) AS BIGINT) AS c_b
-      FROM tok GROUP BY token
-    ), top AS (
-      SELECT token, c_a, c_b, c_a + c_b AS c_total FROM counts
-      ORDER BY c_total DESC, token ASC LIMIT 20
-    )
-    SELECT token, c_a, c_b, c_total,
-           CAST(((c_a - c_b) * (c_a - c_b) * 1000000) // c_total AS BIGINT) AS drift_micros
-    FROM top
-"""
-
-
-# q186: quantile_disc == percentile_disc (actual elements, no
-# interpolation — the q90 parity rule).
-_ORACLES["q186_grouped_quartiles"] = """
-    SELECT source, COUNT(*) AS n_docs,
-           CAST(quantile_disc(n_chars, 0.25) AS BIGINT) AS p25,
-           CAST(quantile_disc(n_chars, 0.5) AS BIGINT) AS p50,
-           CAST(quantile_disc(n_chars, 0.75) AS BIGINT) AS p75
-    FROM documents GROUP BY source
-"""
-
-# q187: vocab-bounded per-doc pair fan-out; top-20 under a total order.
-_ORACLES["q187_cooccurrence_pairs"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest(list_distinct({_TOKS})) AS token FROM documents
-    ), vocab AS (
-      SELECT token FROM (
-        SELECT token, COUNT(*) AS c FROM tok GROUP BY token
-        ORDER BY c DESC, token ASC LIMIT 30
-      )
-    ), vt AS (
-      SELECT doc_id, token FROM tok JOIN vocab USING (token)
-    )
-    SELECT a.token AS t_a, b.token AS t_b, COUNT(*) AS n_docs
-    FROM vt a JOIN vt b ON a.doc_id = b.doc_id AND a.token < b.token
-    GROUP BY 1, 2
-    ORDER BY n_docs DESC, t_a ASC, t_b ASC LIMIT 20
-"""
-
-
-# q188: one aggregate per table; column counts are schema literals on
-# both sides (the card's schema facts, not data).
-_ORACLES["q188_dataset_card"] = """
-    SELECT 'documents' AS table_name, COUNT(*) AS n_rows,
-           CAST(5 AS BIGINT) AS n_cols,
-           CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_probe
-    FROM documents
-    UNION ALL
-    SELECT 'events', COUNT(*), CAST(6 AS BIGINT),
-           CAST(SUM(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM events
-    UNION ALL
-    SELECT 'lineitem', COUNT(*), CAST(11 AS BIGINT),
-           CAST(SUM(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM lineitem
-    UNION ALL
-    SELECT 'customer', COUNT(*), CAST(5 AS BIGINT),
-           CAST(SUM(CASE WHEN c_acctbal IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM customer
-"""
-
-# q189: orphan counts via NOT EXISTS — the anti-join twin.
-_ORACLES["q189_referential_integrity"] = """
-    SELECT 'lineitem->orders' AS relationship,
-           CAST(COUNT(*) AS BIGINT) AS n_orphans
-    FROM lineitem l WHERE NOT EXISTS (
-      SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
-    UNION ALL
-    SELECT 'orders->customer', CAST(COUNT(*) AS BIGINT)
-    FROM orders o WHERE NOT EXISTS (
-      SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-    UNION ALL
-    SELECT 'customer->nation', CAST(COUNT(*) AS BIGINT)
-    FROM customer c WHERE NOT EXISTS (
-      SELECT 1 FROM nation n WHERE n.n_nationkey = c.c_nationkey)
-"""
-
-
-def _hex_int_sql(expr: str, n_digits: int) -> str:
-    """DuckDB twin of Spark's ``conv(substring(md5(x),1,n),16,10)``:
-    nibble-position arithmetic, portable to any engine with strpos."""
-    val = "CAST(0 AS BIGINT)"
-    for i in range(1, n_digits + 1):
-        nib = f"(strpos('0123456789abcdef', substr({expr}, {i}, 1)) - 1)"
-        val = f"({val} * 16 + {nib})"
-    return val
-
-
-def _checksum_sql(table: str, cols: list[str]) -> str:
-    rendered = ", ".join(f"COALESCE(CAST({c} AS VARCHAR), chr(0))" for c in cols)
-    return f"""
-    SELECT '{table}' AS table_name, COUNT(*) AS n_rows,
-           CAST(SUM(CAST({_hex_int_sql("h", 12)} AS HUGEINT))
-                % 4611686018427387904 AS BIGINT) AS checksum
-    FROM (SELECT md5(concat_ws('|', {rendered})) AS h FROM {table})
-    """
-
-
-_ORACLES["q190_table_checksum"] = " UNION ALL ".join(
-    [
-        _checksum_sql("documents", ["doc_id", "source", "lang"]),
-        _checksum_sql("orders", ["o_orderkey", "o_orderstatus", "o_orderpriority"]),
-        _checksum_sql("lineitem", ["l_orderkey", "l_linenumber", "l_returnflag"]),
-    ]
-)
-
-_BUCKET100 = (
-    "((((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16"
-    " + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)) * 16"
-    " + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1)) * 16"
-    " + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)) % 100"
-)
-
-_ORACLES["q191_split_leakage"] = f"""
-    WITH lab AS (
-      SELECT md5(substr({_NORM}, 1, 80)) AS fp,
-             CASE WHEN {_BUCKET100} < 10 THEN 'test'
-                  WHEN {_BUCKET100} < 20 THEN 'val'
-                  ELSE 'train' END AS split
-      FROM documents
-    ), per AS (
-      SELECT fp, split, COUNT(*) AS n_docs FROM lab GROUP BY 1, 2
-    ), pairs AS (
-      SELECT a.split AS split_a, b.split AS split_b,
-             a.n_docs AS docs_a, b.n_docs AS docs_b
-      FROM per a JOIN per b USING (fp) WHERE a.split < b.split
-    )
-    SELECT split_a, split_b, COUNT(*) AS n_shared_fingerprints,
-           CAST(SUM(docs_a + docs_b) AS BIGINT) AS n_leaked_docs
-    FROM pairs GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-_ORACLES["q192_byte_encoding_audit"] = """
-    SELECT doc_id,
-           length(text) AS n_chars_raw,
-           strlen(text) AS n_bytes,
-           strlen(text) - length(text) AS n_multibyte_extra,
-           strlen(text) = length(text) AS is_ascii,
-           length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digits,
-           length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS n_upper
-    FROM documents
-"""
-
-_ORACLES["q193_heavy_hitters"] = f"""
-    WITH tok AS (SELECT unnest({_TOKS}) AS token FROM documents),
-    counts AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token),
-    tot AS (SELECT COUNT(*) AS total FROM tok)
-    SELECT token, cnt, total FROM counts CROSS JOIN tot
-    WHERE 1000000 * cnt > 1000 * total
-"""
-
-_ORACLES["q194_bigram_transitions"] = f"""
-    WITH tok AS (SELECT {_TOKS} AS t FROM documents),
-    big AS (
-      SELECT unnest(t[1:len(t)-1]) AS lead, unnest(t[2:len(t)]) AS next
-      FROM tok WHERE len(t) >= 2
-    ), cnt AS (
-      SELECT lead, next, COUNT(*) AS n_pair FROM big GROUP BY 1, 2
-    ), leads AS (
-      SELECT lead, CAST(SUM(n_pair) AS BIGINT) AS n_lead
-      FROM cnt GROUP BY 1 ORDER BY n_lead DESC, lead LIMIT 20
-    )
-    SELECT c.lead, c.next, c.n_pair, l.n_lead,
-           CAST(row_number() OVER (PARTITION BY c.lead
-                                   ORDER BY c.n_pair DESC, c.next) AS INT) AS rk
-    FROM cnt c JOIN leads l USING (lead) QUALIFY rk <= 3
-"""
-
-_ORACLES["q195_matryoshka_recall"] = f"""
-    WITH qf AS (
-      SELECT vec_id AS query_id, embedding AS qv, embedding[1:8] AS qv8
-      FROM embeddings WHERE vec_id < 20
-    ), cf AS (
-      SELECT vec_id AS neighbor_id, embedding AS cv, embedding[1:8] AS cv8
-      FROM embeddings
-    ), sfull AS (
-      SELECT query_id, neighbor_id,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY {_cosine_sql("cv", "qv")} DESC, neighbor_id) AS INT) AS rk
-      FROM cf CROSS JOIN qf WHERE neighbor_id != query_id QUALIFY rk <= 5
-    ), tr AS (
-      SELECT query_id, neighbor_id,
-             CAST(row_number() OVER (PARTITION BY query_id
-                  ORDER BY {_cosine_sql("cv8", "qv8")} DESC, neighbor_id) AS INT) AS rk
-      FROM cf CROSS JOIN qf WHERE neighbor_id != query_id QUALIFY rk <= 5
-    ), hits AS (
-      SELECT t.query_id, COUNT(*) AS n
-      FROM tr t JOIN sfull f ON t.query_id = f.query_id AND t.neighbor_id = f.neighbor_id
-      GROUP BY t.query_id
-    )
-    SELECT q.query_id, CAST(COALESCE(h.n, 0) AS BIGINT) AS n_overlap
-    FROM (SELECT DISTINCT query_id FROM qf) q LEFT JOIN hits h USING (query_id)
-"""
-
-
-_SHINGLES5 = (
-    "CASE WHEN len(toks) <= 5 THEN [array_to_string(toks, ' ')] "
-    "ELSE list_transform(range(1, len(toks) - 3), i -> array_to_string(toks[i:i+4], ' ')) END"
-)
-
-_ORACLES["q196_containment_neardup"] = f"""
-    WITH tok AS (SELECT doc_id AS id, source, {_TOKS} AS toks FROM documents),
-    g AS (
-      SELECT id, source,
-             list_sort(list_transform(
-               list_distinct({_SHINGLES5}),
-               s -> CAST({_hex_int_sql("md5(s)", 12)} AS BIGINT))) AS grams
-      FROM tok
-    ), gg AS (SELECT id, source, grams, len(grams) AS ng FROM g),
-    ex AS (SELECT id, source, ng, unnest(grams) AS gram FROM gg),
-    dfreq AS (SELECT gram, COUNT(*) AS gdf FROM ex GROUP BY gram),
-    ranked AS (
-      SELECT e.id, e.source, e.gram,
-             row_number() OVER (PARTITION BY e.id
-                                ORDER BY d.gdf ASC, e.gram ASC) AS rnk, e.ng
-      FROM ex e JOIN dfreq d USING (gram)
-    ),
-    prefix AS (SELECT id, source, gram FROM ranked WHERE rnk <= ng // 5 + 1),
-    cands AS (
-      SELECT DISTINCT least(a.id, b.id) AS id_a, greatest(a.id, b.id) AS id_b
-      FROM prefix a JOIN ex b
-        ON a.gram = b.gram AND a.source = b.source AND a.id != b.id
-    ), verify AS (
-      SELECT c.id_a, c.id_b,
-             len(list_filter(ga.grams, x -> list_contains(gb.grams, x))) AS n_inter,
-             least(ga.ng, gb.ng) AS mn
-      FROM cands c
-      JOIN gg ga ON ga.id = c.id_a
-      JOIN gg gb ON gb.id = c.id_b
-    )
-    SELECT id_a, id_b, n_inter, round(CAST(n_inter AS DOUBLE) / mn, 6) AS containment
-    FROM verify WHERE 5 * n_inter >= 4 * mn
-"""
-
-
-def _cos_safe_sql(a: str, b: str) -> str:
-    na = _NORM_V.format(a=a)
-    nb = _NORM_V.format(a=b)
-    return (
-        f"(CASE WHEN {na} * {nb} > 0 THEN {_DOT.format(a=a, b=b)} / ({na} * {nb})"
-        " ELSE 0.0 END)"
-    )
-
-
-_MAXSIM = " + ".join(
-    "greatest(" + ", ".join(_cos_safe_sql(f"q{j}", f"c{k}") for k in range(1, 5)) + ")"
-    for j in range(1, 5)
-)
-
-_ORACLES["q197_maxsim_late_interaction"] = f"""
-    WITH q AS (
-      SELECT vec_id AS query_id, embedding[1:4] AS q1, embedding[5:8] AS q2,
-             embedding[9:12] AS q3, embedding[13:16] AS q4
-      FROM embeddings WHERE vec_id < 10
-    ), c AS (
-      SELECT vec_id AS doc_id, embedding[1:4] AS c1, embedding[5:8] AS c2,
-             embedding[9:12] AS c3, embedding[13:16] AS c4
-      FROM embeddings
-    ), s AS (
-      SELECT query_id, doc_id, round({_MAXSIM}, 6) AS maxsim
-      FROM c CROSS JOIN q WHERE doc_id != query_id
-    )
-    SELECT query_id, doc_id, maxsim,
-           CAST(row_number() OVER (PARTITION BY query_id
-                                   ORDER BY maxsim DESC, doc_id) AS INT) AS rk
-    FROM s QUALIFY rk <= 3
-"""
-
-_EWMA_NUM = " + ".join(
-    f"(CASE WHEN x{lag} IS NOT NULL THEN x{lag} * {0.75 ** lag!r} ELSE 0.0 END)"
-    for lag in range(8)
-)
-_EWMA_DEN = " + ".join(
-    f"(CASE WHEN x{lag} IS NOT NULL THEN {0.75 ** lag!r} ELSE 0.0 END)"
-    for lag in range(8)
-)
-_EWMA_LAGS = ", ".join(f"lag(value, {lag}) OVER w AS x{lag}" for lag in range(8))
-
-_ORACLES["q198_ewma_smoothing"] = f"""
-    WITH l AS (
-      SELECT event_id, user_id, {_EWMA_LAGS}
-      FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ), s AS (
-      SELECT event_id, user_id, {_EWMA_NUM} AS num, {_EWMA_DEN} AS den FROM l
-    )
-    SELECT event_id, user_id,
-           CASE WHEN den > 0 THEN round(num / den, 6) END AS ewma
-    FROM s
-"""
-
-_ORACLES["q199_inverted_index"] = f"""
-    WITH post AS (
-      SELECT doc_id, unnest(list_distinct({_TOKS})) AS token FROM documents
-    ), agg AS (
-      SELECT token, COUNT(*) AS df,
-             list_sort(list(doc_id))[1:10] AS posting_sample
-      FROM post GROUP BY token
-    )
-    SELECT token, df, posting_sample
-    FROM agg ORDER BY df DESC, token LIMIT 50
-"""
-
-_ORACLES["q200_event_path_trigrams"] = """
-    WITH tri AS (
-      SELECT event_type AS e1,
-             lead(event_type, 1) OVER w AS e2,
-             lead(event_type, 2) OVER w AS e3
-      FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT e1, e2, e3, COUNT(*) AS n
-    FROM tri WHERE e3 IS NOT NULL GROUP BY 1, 2, 3
-    ORDER BY n DESC, e1, e2, e3 LIMIT 20
-"""
-
-
-# q201: the unfiltered q25 candidate body aggregated into precision
-_ORACLES["q201_lsh_precision"] = f"""
-    WITH scored AS ({_Q25_INNER})
-    SELECT COUNT(*) AS n_candidates,
-           CAST(SUM(CASE WHEN jaccard >= 0.2 THEN 1 ELSE 0 END) AS BIGINT) AS n_true,
-           round(CAST(SUM(CASE WHEN jaccard >= 0.2 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*), 6) AS precision
-    FROM scored
-"""
-
-_ORACLES["q202_langid_confusion"] = f"""
-    WITH tok AS (
-      SELECT lang, {_TOKS} AS toks FROM documents
-    ), feat AS (
-      SELECT lang, {_lang_score("de")} AS s_de, {_lang_score("en")} AS s_en,
-             {_lang_score("es")} AS s_es, {_lang_score("fr")} AS s_fr
-      FROM tok
-    )
-    SELECT lang AS lang_true, ({_LANG_PRED}) AS lang_pred, COUNT(*) AS n
-    FROM feat GROUP BY 1, 2 ORDER BY 1, 2
-"""
-
-# q203: the streaming complete-mode final state must equal the batch
-# heavy-hitters answer exactly
-_ORACLES["q203_streaming_heavy_hitters"] = _ORACLES["q193_heavy_hitters"]
-
-# q204: the oracle computes the SAME md5-bucket membership as an
-# IN-subquery — the bloom set semantics without the array mechanics —
-# plus the exact join counts the filter must never undercut
-_ORACLES["q204_bloom_prune_join"] = f"""
-    WITH rich AS (SELECT c_custkey FROM customer WHERE c_acctbal > 7500),
-    bl AS (SELECT DISTINCT
-             ({_hex_int_sql("md5(CAST(c_custkey AS VARCHAR))", 12)} % 4096) AS b
-           FROM rich),
-    cand AS (
-      SELECT o_orderpriority FROM orders
-      WHERE ({_hex_int_sql("md5(CAST(o_custkey AS VARCHAR))", 12)} % 4096)
-            IN (SELECT b FROM bl)
-    ),
-    cc AS (SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_candidates
-           FROM cand GROUP BY 1),
-    mm AS (SELECT o.o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n_matched
-           FROM orders o JOIN rich r ON o.o_custkey = r.c_custkey GROUP BY 1)
-    SELECT cc.o_orderpriority, cc.n_candidates,
-           CAST(COALESCE(mm.n_matched, 0) AS BIGINT) AS n_matched
-    FROM cc LEFT JOIN mm ON cc.o_orderpriority = mm.o_orderpriority
-"""
-
-_ORACLES["q221_ab_test"] = f"""
-    WITH u AS (
-      SELECT user_id,
-             CASE WHEN SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                       >= 15 THEN 1 ELSE 0 END AS conv,
-             ({_hex_int_sql("md5(CAST(user_id AS VARCHAR))", 12)} % 2) AS variant
-      FROM events GROUP BY user_id
-    ),
-    s AS (
-      SELECT CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-             CAST(SUM(CASE WHEN variant = 0 THEN conv ELSE 0 END) AS BIGINT) AS conv_a,
-             CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-             CAST(SUM(CASE WHEN variant = 1 THEN conv ELSE 0 END) AS BIGINT) AS conv_b
-      FROM u
-    )
-    SELECT n_a, conv_a, n_b, conv_b,
-           CAST((conv_a * 1000000) // n_a AS BIGINT) AS cr_a_ppm,
-           CAST((conv_b * 1000000) // n_b AS BIGINT) AS cr_b_ppm,
-           ROUND((CAST(conv_a AS DOUBLE) / n_a - CAST(conv_b AS DOUBLE) / n_b)
-                 / NULLIF(SQRT((CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                        * (1.0 - CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b))
-                        * (1.0 / n_a + 1.0 / n_b)), 0.0), 6) AS z_score
-    FROM s
-"""
-
-# q205: ground-truth oracle — the expected canonical URL is written
-# analytically from the construction, not by re-implementing the
-# normaliser (params a=1 < b=2 < ref=* after utm_* drops; host
-# lowercased, www./:443 stripped)
-_ORACLES["q205_url_normalize"] = """
-    WITH u AS (
-      SELECT 'https://' || lower(source) || '.example'
-             || CAST(doc_id % 3 AS VARCHAR) || '.com/p/'
-             || CAST(doc_id AS VARCHAR) || '?a=1&b=2&ref=' || lang AS norm_url,
-             'example' || CAST(doc_id % 3 AS VARCHAR) || '.com' AS domain
-      FROM documents
-    )
-    SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_urls,
-           CAST(COUNT(DISTINCT norm_url) AS BIGINT) AS n_distinct,
-           MIN(norm_url) AS first_url
-    FROM u GROUP BY domain
-"""
-
-# q206: HUGEINT-exact moments, double math only in the final fixed-order
-# divisions — mirrors grouped_ols' decimal(38,0) path term for term
-_ORACLES["q206_group_ols"] = """
-    WITH per_cust AS (
-      SELECT o_custkey,
-             SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS y_cents
-      FROM orders GROUP BY o_custkey
-    ),
-    j AS (
-      SELECT c.c_nationkey,
-             CAST(ROUND(c.c_acctbal * 100) AS BIGINT) AS x,
-             p.y_cents AS y
-      FROM customer c JOIN per_cust p ON c.c_custkey = p.o_custkey
-    ),
-    m AS (
-      SELECT c_nationkey,
-             CAST(COUNT(*) AS HUGEINT) AS n,
-             CAST(SUM(x) AS HUGEINT) AS sx, CAST(SUM(y) AS HUGEINT) AS sy,
-             SUM(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy,
-             SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-             SUM(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy
-      FROM j GROUP BY c_nationkey
-    )
-    SELECT CAST(c_nationkey AS BIGINT) AS c_nationkey,
-           CAST(n AS BIGINT) AS n,
-           ROUND(CASE WHEN CAST(n*sxx - sx*sx AS DOUBLE) <> 0 THEN
-             CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE)
-           END, 6) AS slope,
-           ROUND(CASE WHEN CAST(n*sxx - sx*sx AS DOUBLE) <> 0 THEN
-             (CAST(sy AS DOUBLE)
-              - (CAST(n*sxy - sx*sy AS DOUBLE) / CAST(n*sxx - sx*sx AS DOUBLE))
-                * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)
-           END, 6) AS intercept,
-           ROUND(CASE WHEN CAST(n*sxx - sx*sx AS DOUBLE) <> 0
-                 AND CAST(n*syy - sy*sy AS DOUBLE) <> 0 THEN
-             CAST(n*sxy - sx*sy AS DOUBLE)
-             / (sqrt(CAST(n*sxx - sx*sx AS DOUBLE))
-                * sqrt(CAST(n*syy - sy*sy AS DOUBLE)))
-           END, 6) AS corr_r
-    FROM m
-"""
-
-# q208: thresholds re-derived as sorted row_number lookups — the oracle
-# is independent of the histogram-narrowing algorithm
-_ORACLES["q208_range_partition_audit"] = """
-    WITH v AS (
-      SELECT CAST(ROUND(o_totalprice * 100) AS BIGINT) AS c
-      FROM orders WHERE o_totalprice IS NOT NULL
-    ),
-    s AS (SELECT c, ROW_NUMBER() OVER (ORDER BY c) AS r FROM v),
-    cnt AS (SELECT COUNT(*) AS n FROM v),
-    th AS (
-      SELECT
-        (SELECT c FROM s WHERE r =
-           (SELECT CAST(FLOOR((n - 1) * 0.25) AS BIGINT) + 1 FROM cnt)) AS t25,
-        (SELECT c FROM s WHERE r =
-           (SELECT CAST(FLOOR((n - 1) * 0.5) AS BIGINT) + 1 FROM cnt)) AS t50,
-        (SELECT c FROM s WHERE r =
-           (SELECT CAST(FLOOR((n - 1) * 0.75) AS BIGINT) + 1 FROM cnt)) AS t75
-    )
-    SELECT CAST((CASE WHEN c > t25 THEN 1 ELSE 0 END
-               + CASE WHEN c > t50 THEN 1 ELSE 0 END
-               + CASE WHEN c > t75 THEN 1 ELSE 0 END) AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           MIN(c) AS min_cents, MAX(c) AS max_cents
-    FROM v, th GROUP BY 1
-"""
-
-# q210: the oracle is the naive row_number window the salted two-level
-# selection must exactly reproduce
-_ORACLES["q210_domain_caps"] = """
-    WITH k AS (
-      SELECT source, doc_id, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents
-    ),
-    r AS (
-      SELECT source, doc_id,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY h, doc_id) AS rank,
-             COUNT(*) OVER (PARTITION BY source) AS n_docs
-      FROM k
-    )
-    SELECT source, CAST(rank AS BIGINT) AS rank, doc_id,
-           CAST(n_docs AS BIGINT) AS n_docs
-    FROM r WHERE rank <= 20
-"""
-
-# q209: the merged-read outcome stated analytically from the base table
-_ORACLES["q209_schema_evolution_read"] = """
-    WITH u AS (
-      SELECT n_nationkey, CAST(NULL AS INTEGER) AS n_regionkey FROM nation
-      UNION ALL
-      SELECT n_nationkey, n_regionkey FROM nation
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(COUNT(n_regionkey) AS BIGINT) AS n_with_region,
-           CAST(SUM(CASE WHEN n_regionkey IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_without_region,
-           CAST(COUNT(DISTINCT n_nationkey) AS BIGINT) AS distinct_keys
-    FROM u
-"""
-
-_ORACLES["q207_k_anonymity"] = """
-    WITH cls AS (
-      SELECT c_nationkey, c_mktsegment, COUNT(*) AS sz,
-             COUNT(DISTINCT CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS l
-      FROM customer GROUP BY 1, 2
-    )
-    SELECT CAST(SUM(sz) AS BIGINT) AS n_rows,
-           CAST(COUNT(*) AS BIGINT) AS n_classes,
-           CAST(MIN(sz) AS BIGINT) AS min_class_size,
-           CAST(SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS BIGINT)
-             AS rows_below_k,
-           CAST(MIN(l) AS BIGINT) AS min_l,
-           CAST((SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) * 1000000)
-                // SUM(sz) AS BIGINT) AS below_k_ppm
-    FROM cls
-"""
-
-
-# q234: clusters re-derived with q63's recursive CTE, survivor rule on top
-_ORACLES["q234_dedup_survivorship"] = f"""
-    WITH cl AS ({_ORACLES["q63_dedup_clusters"]}),
-    sized AS (
-      SELECT cl.doc_id, cl.cluster_id, d.n_chars
-      FROM cl JOIN documents d ON cl.doc_id = d.doc_id
-    ),
-    rk AS (
-      SELECT *, row_number() OVER (PARTITION BY cluster_id
-                                   ORDER BY n_chars DESC, doc_id ASC) AS r
-      FROM sized
-    )
-    SELECT CAST(COUNT(DISTINCT cluster_id) AS BIGINT) AS n_clusters,
-           CAST(COUNT(*) AS BIGINT) AS n_docs_in_clusters,
-           CAST(SUM(CASE WHEN r = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_survivors,
-           CAST(SUM(CASE WHEN r > 1 THEN n_chars ELSE 0 END) AS BIGINT)
-             AS chars_reclaimed
-    FROM rk
-"""
-
-
-# q236: SemDeDup ledger re-derived in SQL — quantized integer-L2
-# assignment to the pinned first-4 centroids (ties to lowest cid),
-# the q34 hyperplane bucket, within-(cluster,bucket) cosine pairs,
-# keep-min-id survivor rule.
-_ORACLES["q236_semantic_dedup"] = f"""
-    WITH cm AS (
-      SELECT vec_id AS cid,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS c
-      FROM embeddings WHERE vec_id < 4
-    ), v AS (
-      SELECT vec_id AS id, embedding AS v,
-             list_transform(embedding,
-               x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS vm,
-             {_bucket_sql("embedding", 8)} AS bucket
-      FROM embeddings WHERE len(embedding) >= 64
-    ), asg AS (
-      SELECT id, v, bucket, CAST(cid AS BIGINT) AS cluster_id FROM (
-        SELECT vv.id, vv.v, vv.bucket, cm.cid,
-               row_number() OVER (PARTITION BY vv.id ORDER BY
-                 list_sum(list_transform(range(1, 65), i ->
-                   (vv.vm[CAST(i AS INT)] - cm.c[CAST(i AS INT)])
-                   * (vv.vm[CAST(i AS INT)] - cm.c[CAST(i AS INT)]))) ASC,
-                 cm.cid ASC) AS rn
-        FROM v vv, cm
-      ) WHERE rn = 1
-    ), dropped AS (
-      SELECT DISTINCT b.id AS id
-      FROM asg a JOIN asg b
-        ON a.cluster_id = b.cluster_id AND a.bucket = b.bucket AND a.id < b.id
-      WHERE {_cosine_sql("a.v", "b.v")} >= 0.4
-    )
-    SELECT asg.cluster_id,
-           CAST(COUNT(*) AS BIGINT) AS n_members,
-           CAST(COUNT(d.id) AS BIGINT) AS n_dropped,
-           CAST(COUNT(*) - COUNT(d.id) AS BIGINT) AS n_survivors
-    FROM asg LEFT JOIN dropped d ON asg.id = d.id
-    GROUP BY asg.cluster_id
-"""
-
-
-# q237: full BPE train+encode re-derived in SQL. Words are held as
-# double-separator strings (each symbol wrapped chr(31)·sym·chr(31), so
-# adjacent symbols carry TWO separators) — string replace() is then
-# exactly the leftmost-non-overlapping adjacent-pair merge the Spark
-# array fold performs ('aaaa' + merge(a,a) → [aa, aa], shared-boundary
-# cases included). 8 mechanical CTE rounds: count weighted adjacent
-# pairs, pick (cnt DESC, l, r) argmax, apply. Encode = symbol count of
-# the final string per distinct word, joined to (doc, word) occurrences.
-def _bpe_oracle_sql(n_merges: int = 8) -> str:
-    s = "chr(31)"
-    ss = f"{s}||{s}"
-
-    def sym_split(d: str) -> str:
-        return f"str_split(trim({d}, {s}), {ss})"
-
-    parts = [
-        f"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_TOKS}) AS w FROM documents
-    ), wf AS (
-      SELECT w, COUNT(*) AS freq FROM toks GROUP BY w
-    ), r0 AS (
-      SELECT w, freq,
-             regexp_replace(w, '(.)', {s} || '\\1' || {s}, 'g') AS d
-      FROM wf
-    )"""
-    ]
-    for i in range(1, n_merges + 1):
-        p = i - 1
-        parts.append(
-            f""", p{i} AS (
-      SELECT syms[CAST(j AS INT)] AS l, syms[CAST(j+1 AS INT)] AS r,
-             SUM(freq) AS cnt
-      FROM (SELECT freq, {sym_split("d")} AS syms,
-                   unnest(range(1, len({sym_split("d")}))) AS j FROM r{p})
-      GROUP BY 1, 2
-    ), b{i} AS (SELECT l, r FROM p{i} ORDER BY cnt DESC, l, r LIMIT 1),
-    r{i} AS (
-      SELECT w, freq,
-             replace(d, {s}||l||{s}||{s}||r||{s}, {s}||l||r||{s}) AS d
-      FROM r{p}, b{i}
-    )"""
-        )
-    parts.append(
-        f""", enc AS (
-      SELECT w, len({sym_split("d")}) AS n_sym FROM r{n_merges}
-    ), per AS (
-      SELECT doc_id, w, COUNT(*) AS occ FROM toks GROUP BY 1, 2
-    )
-    SELECT per.doc_id,
-           CAST(SUM(occ) AS BIGINT) AS n_words,
-           CAST(SUM(length(per.w) * occ) AS BIGINT) AS n_chars,
-           CAST(SUM(enc.n_sym * occ) AS BIGINT) AS n_bpe_symbols
-    FROM per JOIN enc ON per.w = enc.w
-    GROUP BY per.doc_id"""
-    )
-    return "".join(parts)
-
-
-_ORACLES["q237_bpe_encode"] = _bpe_oracle_sql(8)
-
-
-# q238: Hamilton apportionment mirrored with HUGEINT-exact quotas; the
-# leftover-seat rule ranks remainders (desc, source asc).
-_ORACLES["q238_eval_allocation"] = """
-    WITH c AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents
-      GROUP BY source
-    ), t AS (SELECT SUM(n_docs) AS total FROM c),
-    st AS (
-      SELECT source, n_docs,
-             CAST((10000 * n_docs) // total AS BIGINT) AS base,
-             CAST((10000 * n_docs) % total AS BIGINT) AS rem_num
-      FROM c, t
-    ), lk AS (
-      SELECT *,
-             10000 - SUM(base) OVER () AS leftover,
-             row_number() OVER (ORDER BY rem_num DESC, source ASC) AS rk
-      FROM st
-    )
-    SELECT source, n_docs, base,
-           CAST(base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT)
-             AS alloc
-    FROM lk
-"""
-
-
-# q239: KS re-derived with ONE flat cumulative window (the oracle checks
-# SEMANTICS; the hierarchical prefix-sum is the Spark-side scale
-# strategy, not part of the definition). Integer numerator throughout.
-_ORACLES["q239_ks_drift"] = """
-    WITH e AS (
-      SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS c
-      FROM events WHERE event_type IN ('purchase', 'click')
-    ), g AS (
-      SELECT c,
-             SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n1,
-             SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS n2
-      FROM e GROUP BY c
-    ), cum AS (
-      SELECT c,
-             SUM(n1) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS c1,
-             SUM(n2) OVER (ORDER BY c ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW) AS c2
-      FROM g
-    ), t AS (SELECT SUM(n1) AS na, SUM(n2) AS nb FROM g)
-    SELECT CAST(t.na AS BIGINT) AS n_a, CAST(t.nb AS BIGINT) AS n_b,
-           CAST(MAX(ABS(c1 * t.nb - c2 * t.na)) AS BIGINT) AS ks_num,
-           ROUND(CAST(MAX(ABS(c1 * t.nb - c2 * t.na)) AS DOUBLE)
-                 / (t.na * t.nb), 6) AS ks
-    FROM cum, t GROUP BY t.na, t.nb
-"""
-
-
-# q240: per-group HUGEINT moments, milli-floored s²/n terms (// mirrors
-# DIV on non-negatives — squares are non-negative), final F from two
-# double divisions on identical operands.
-_ORACLES["q240_anova"] = """
-    WITH g AS (
-      SELECT event_type, CAST(COUNT(*) AS HUGEINT) AS n,
-             CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS HUGEINT) AS s,
-             CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)
-                      * CAST(ROUND(value * 100) AS BIGINT)) AS HUGEINT) AS ssq
-      FROM events GROUP BY event_type
-    ), t AS (
-      SELECT COUNT(*) AS k, SUM(n) AS n_total, SUM(s) AS s_total,
-             SUM(ssq * 1000 - (s * s * 1000) // n) AS ssw_milli,
-             SUM((s * s * 1000) // n) AS sq_sum_milli
-      FROM g
-    )
-    SELECT CAST(k AS BIGINT) AS k,
-           CAST(n_total AS BIGINT) AS n_total,
-           CAST(sq_sum_milli - (s_total * s_total * 1000) // n_total
-                AS BIGINT) AS ssb_milli,
-           CAST(ssw_milli AS BIGINT) AS ssw_milli,
-           ROUND((CAST(sq_sum_milli - (s_total * s_total * 1000) // n_total
-                       AS DOUBLE) / (k - 1))
-                 / (CAST(ssw_milli AS DOUBLE) / (n_total - k)), 6) AS f_stat
-    FROM t
-"""
-
-
-# q241: triangles/triads over the SAME pair set as q63's clusters
-# (the shared _Q25_BODY fragment at threshold 0.2); oriented a<b<c join
-# counts each triangle once.
-_ORACLES["q241_dup_graph_triangles"] = f"""
-    WITH prs AS (
-      {_Q25_BODY}
-    ), e AS (SELECT id_a, id_b FROM prs),
-    tri AS (
-      SELECT COUNT(*) AS n_triangles
-      FROM e ab
-      JOIN e bc ON ab.id_b = bc.id_a
-      JOIN e ac ON ac.id_a = ab.id_a AND ac.id_b = bc.id_b
-    ), deg AS (
-      SELECT v, COUNT(*) AS d FROM (
-        SELECT id_a AS v FROM e UNION ALL SELECT id_b FROM e
-      ) GROUP BY v
-    ), st AS (
-      SELECT COUNT(*) AS n_nodes,
-             SUM((d * (d - 1)) // 2) AS n_triads
-      FROM deg
-    ), ec AS (SELECT COUNT(*) AS n_edges FROM e)
-    SELECT CAST(st.n_nodes AS BIGINT) AS n_nodes,
-           CAST(ec.n_edges AS BIGINT) AS n_edges,
-           CAST(tri.n_triangles AS BIGINT) AS n_triangles,
-           CAST(st.n_triads AS BIGINT) AS n_triads,
-           CASE WHEN st.n_triads > 0
-                THEN ROUND(CAST(tri.n_triangles * 3 AS DOUBLE) / st.n_triads, 6)
-                ELSE 0.0 END AS transitivity
-    FROM st, ec, tri
-"""
-
-
-# q242: the CMS grid and estimates re-derived in SQL — md5-hex bucket
-# hash via the q30 strpos parse, min-over-rows estimator, one-sided
-# guarantee checked per probe key.
-def _cms_hash_sql(expr: str) -> str:
-    return (
-        "("
-        + " + ".join(
-            f"(strpos('0123456789abcdef', substr(md5({expr}), {i + 1}, 1)) - 1)"
-            f" * {16 ** (7 - i)}"
-            for i in range(8)
-        )
-        + ")"
-    )
-
-
-_ORACLES["q242_countmin_sketch"] = f"""
-    WITH tok AS (
-      SELECT unnest({_TOKS}) AS token FROM documents
-    ), cells AS (
-      SELECT r.r AS row,
-             {_cms_hash_sql("CAST(r.r AS VARCHAR) || ':' || token")} % 64 AS bucket
-      FROM tok, (SELECT unnest(range(4)) AS r) r
-    ), grid AS (
-      SELECT row, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM cells GROUP BY row, bucket
-    ), probes AS (
-      SELECT unnest(['the','and','of','to','a','data','xyzzy-absent']) AS key
-    ), pc AS (
-      SELECT key, r.r AS row,
-             {_cms_hash_sql("CAST(r.r AS VARCHAR) || ':' || key")} % 64 AS bucket
-      FROM probes, (SELECT unnest(range(4)) AS r) r
-    ), est AS (
-      SELECT key, MIN(COALESCE(g.cnt, 0)) AS est
-      FROM pc LEFT JOIN grid g USING (row, bucket)
-      GROUP BY key
-    ), exact AS (
-      SELECT token AS key, CAST(COUNT(*) AS BIGINT) AS exact
-      FROM tok GROUP BY token
-    )
-    SELECT est.key,
-           CAST(COALESCE(exact.exact, 0) AS BIGINT) AS exact,
-           CAST(est.est AS BIGINT) AS est,
-           est.est >= COALESCE(exact.exact, 0) AS never_undercounts
-    FROM est LEFT JOIN exact USING (key)
-"""
-
-
-# q243: white-box HLL mirrored cell for cell — register/rank from the
-# same md5 hex parse, integer shiftleft denominator, identical double
-# formula (incl. linear-counting branch).
-_ORACLES["q243_hll_registers"] = f"""
-    WITH h AS (
-      SELECT {_cms_hash_sql("CAST(user_id AS VARCHAR)")} AS h1,
-             ({" + ".join(
-                 f"(strpos('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), {i + 9}, 1)) - 1) * {16 ** (7 - i)}"
-                 for i in range(8)
-             )}) AS h2,
-             user_id
-      FROM events
-    ), rr AS (
-      SELECT h1 % 64 AS reg,
-             CASE WHEN h2 = 0 THEN 33 ELSE 33 - length(bin(h2)) END AS rank
-      FROM h
-    ), regs AS (
-      SELECT reg, MAX(rank) AS m_r FROM rr GROUP BY reg
-    ), fr AS (
-      SELECT COALESCE(m_r, 0) AS m_r
-      FROM (SELECT unnest(range(64)) AS reg) r LEFT JOIN regs USING (reg)
-    ), s AS (
-      SELECT CAST(SUM(CAST(1 AS BIGINT) << (40 - m_r)) AS BIGINT) AS s_scaled,
-             CAST(SUM(CASE WHEN m_r = 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_zero_regs
-      FROM fr
-    ), x AS (SELECT COUNT(DISTINCT CAST(user_id AS VARCHAR)) AS n_exact
-             FROM events)
-    SELECT CAST(64 AS BIGINT) AS m,
-           CAST(x.n_exact AS BIGINT) AS n_exact,
-           s.n_zero_regs, s.s_scaled,
-           ROUND(CASE WHEN s.n_zero_regs > 0
-                      AND ((0.7213 / (1.0 + 1.079 / 64.0)) * 64.0 * 64.0
-                           * CAST(CAST(1 AS BIGINT) << 40 AS DOUBLE)
-                           / CAST(s.s_scaled AS DOUBLE)) <= 2.5 * 64.0
-                 THEN 64.0 * ln(64.0 / CAST(s.n_zero_regs AS DOUBLE))
-                 ELSE (0.7213 / (1.0 + 1.079 / 64.0)) * 64.0 * 64.0
-                      * CAST(CAST(1 AS BIGINT) << 40 AS DOUBLE)
-                      / CAST(s.s_scaled AS DOUBLE) END, 4) AS est
-    FROM s, x
-"""
-
-
-_ORACLES["q244_exact_k_sample"] = """
-    SELECT source, doc_id, CAST(rk AS BIGINT) AS rk, sample_key FROM (
-      SELECT source, doc_id,
-             row_number() OVER (PARTITION BY source
-                                ORDER BY md5(CAST(doc_id AS VARCHAR))) AS rk,
-             md5(CAST(doc_id AS VARCHAR)) AS sample_key
-      FROM documents
-    ) WHERE rk <= 5
-"""
-
-
-# q245: streaming/batch equivalence — the streaming grid must equal the
-# batch-built sketch cell for cell (reuses q242's grid derivation).
-_ORACLES["q245_streaming_cms"] = f"""
-    WITH tok AS (
-      SELECT unnest({_TOKS}) AS token FROM documents
-    ), cells AS (
-      SELECT r.r AS row,
-             {_cms_hash_sql("CAST(r.r AS VARCHAR) || ':' || token")} % 64 AS bucket
-      FROM tok, (SELECT unnest(range(4)) AS r) r
-    )
-    SELECT row, bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-    FROM cells GROUP BY row, bucket
-"""
-
-
-# q246: grouped white-box HLL — same register math as q243, keyed by
-# event_type; zero-register mass added arithmetically like the engine.
-_ORACLES["q246_grouped_hll"] = f"""
-    WITH h AS (
-      SELECT event_type,
-             {_cms_hash_sql("CAST(user_id AS VARCHAR)")} AS h1,
-             ({" + ".join(
-                 f"(strpos('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), {i + 9}, 1)) - 1) * {16 ** (7 - i)}"
-                 for i in range(8)
-             )}) AS h2,
-             user_id
-      FROM events
-    ), rr AS (
-      SELECT event_type, h1 % 64 AS reg,
-             CASE WHEN h2 = 0 THEN 33 ELSE 33 - length(bin(h2)) END AS rank,
-             user_id
-      FROM h
-    ), regs AS (
-      SELECT event_type, reg, MAX(rank) AS m_r FROM rr GROUP BY 1, 2
-    ), s AS (
-      SELECT event_type,
-             CAST(SUM(CAST(1 AS BIGINT) << (40 - m_r))
-                  + (64 - COUNT(*)) * (CAST(1 AS BIGINT) << 40) AS BIGINT)
-               AS s_scaled,
-             CAST(64 - COUNT(*) AS BIGINT) AS n_zero_regs
-      FROM regs GROUP BY event_type
-    ), x AS (
-      SELECT event_type,
-             COUNT(DISTINCT CAST(user_id AS VARCHAR)) AS n_exact
-      FROM events GROUP BY event_type
-    )
-    SELECT s.event_type, CAST(64 AS BIGINT) AS m,
-           CAST(x.n_exact AS BIGINT) AS n_exact,
-           s.n_zero_regs, s.s_scaled,
-           ROUND(CASE WHEN s.n_zero_regs > 0
-                      AND ((0.7213 / (1.0 + 1.079 / 64.0)) * 64.0 * 64.0
-                           * CAST(CAST(1 AS BIGINT) << 40 AS DOUBLE)
-                           / CAST(s.s_scaled AS DOUBLE)) <= 2.5 * 64.0
-                 THEN 64.0 * ln(64.0 / CAST(s.n_zero_regs AS DOUBLE))
-                 ELSE (0.7213 / (1.0 + 1.079 / 64.0)) * 64.0 * 64.0
-                      * CAST(CAST(1 AS BIGINT) << 40 AS DOUBLE)
-                      / CAST(s.s_scaled AS DOUBLE) END, 4) AS est
-    FROM s JOIN x USING (event_type)
-"""
-
-
-# q247: Wilson bounds recomputed with the IDENTICAL operand order —
-# fixed-order double math over exact integer (k, n).
-_ORACLES["q247_wilson_intervals"] = """
-    WITH g AS (
-      SELECT CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7
-                  AS BIGINT) AS dow,
-             CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                  AS BIGINT) AS k
-      FROM events GROUP BY 1
-    )
-    SELECT dow, n, k,
-           ROUND((CAST(k AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS p_hat,
-           ROUND((((CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                   + (1.96 * 1.96) / (2.0 * n))
-                  - (1.96 * sqrt((CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (1.0 - (CAST(k AS DOUBLE) / CAST(n AS DOUBLE))) / n
-                        + (1.96 * 1.96) / (4.0 * n * n))))
-                 / (1.0 + (1.96 * 1.96) / n), 6) AS wilson_lo,
-           ROUND((((CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                   + (1.96 * 1.96) / (2.0 * n))
-                  + (1.96 * sqrt((CAST(k AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (1.0 - (CAST(k AS DOUBLE) / CAST(n AS DOUBLE))) / n
-                        + (1.96 * 1.96) / (4.0 * n * n))))
-                 / (1.0 + (1.96 * 1.96) / n), 6) AS wilson_hi
-    FROM g
-"""
-
-
-# q248: expected quarantine split derived analytically from the staged
-# construction (doc_id % 10 == 3 lines are corrupt by design).
-_ORACLES["q248_corrupt_json_audit"] = """
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_lines,
-           CAST(SUM(CASE WHEN doc_id % 10 <> 3 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_good,
-           CAST(SUM(CASE WHEN doc_id % 10 = 3 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_corrupt,
-           CAST(SUM(CASE WHEN doc_id % 10 <> 3 THEN n_chars END) AS BIGINT)
-             AS good_chars
-    FROM documents
-"""
-
-
-# q249: HRW argmax re-derived with a rank-over-scores window per doc;
-# the stability booleans are CHECKED (computed from both assignments),
-# not asserted as literals.
-_ORACLES["q249_rendezvous_sharding"] = """
-    WITH scores AS (
-      SELECT doc_id, s.s AS shard,
-             md5(CAST(s.s AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR))
-               AS score
-      FROM documents, (SELECT unnest(range(8)) AS s) s
-    ), best_before AS (
-      SELECT doc_id, shard AS shard_before FROM (
-        SELECT doc_id, shard,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY score DESC) AS rn
-        FROM scores
-      ) WHERE rn = 1
-    ), best_after AS (
-      SELECT doc_id, shard AS shard_after FROM (
-        SELECT doc_id, shard,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY score DESC) AS rn
-        FROM scores WHERE shard <> 3
-      ) WHERE rn = 1
-    ), j AS (
-      SELECT b.doc_id, b.shard_before, a.shard_after
-      FROM best_before b JOIN best_after a USING (doc_id)
-    )
-    SELECT CAST(shard_before AS BIGINT) AS shard,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN shard_before <> shard_after THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_moved,
-           (shard_before = 3
-              AND SUM(CASE WHEN shard_before <> shard_after THEN 1 ELSE 0 END)
-                  = COUNT(*))
-           OR (shard_before <> 3
-              AND SUM(CASE WHEN shard_before <> shard_after THEN 1 ELSE 0 END)
-                  = 0) AS hrw_stable
-    FROM j GROUP BY shard_before
-"""
-
-
-# q250: the CDC boundary rule replayed in SQL list ops — same rolling
-# 3-gram md5-int, same (0 ++ bounds ++ n) chunk spans.
-_ORACLES["q250_cdc_chunking"] = f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), b AS (
-      SELECT doc_id, toks,
-             list_filter(range(1, len(toks) + 1), i ->
-               i >= 3 AND i < len(toks)
-               AND {_cms_hash_sql("array_to_string(list_slice(toks, CAST(i - 2 AS INT), CAST(i AS INT)), ' ')")} % 16 = 0
-             ) AS bounds
-      FROM t WHERE len(toks) > 0
-    ), bp AS (
-      SELECT doc_id, toks,
-             list_concat(list_concat([CAST(0 AS BIGINT)], bounds),
-                         [CAST(len(toks) AS BIGINT)]) AS bpos
-      FROM b
-    ), ch AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(bpos)), j ->
-               array_to_string(list_slice(toks,
-                 CAST(bpos[CAST(j AS INT)] + 1 AS INT),
-                 CAST(bpos[CAST(j + 1 AS INT)] AS INT)), ' '))) AS chunk
-      FROM bp
-    ), per AS (
-      SELECT chunk, COUNT(*) AS n_occ,
-             COUNT(DISTINCT doc_id) AS n_docs_with
-      FROM ch GROUP BY chunk
-    )
-    SELECT (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) FROM documents)
-             AS n_docs,
-           CAST(SUM(n_occ) AS BIGINT) AS n_chunks,
-           CAST(COUNT(*) AS BIGINT) AS n_distinct_chunks,
-           CAST(SUM(CASE WHEN n_docs_with >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_shared_chunks,
-           CAST(((SUM(n_occ) - COUNT(*)) * 1000000) // SUM(n_occ) AS BIGINT)
-             AS reuse_ppm
-    FROM per
-"""
-
-
-# q251: the oracle is the BRUTE-FORCE all-pairs hamming join over the
-# q26 signature derivation — banding is lossless at hamming ≤ 3 < 4
-# bands (pigeonhole), so the blocked set must EQUAL the exhaustive set;
-# any missing pair is a recall bug, any extra a banding bug.
-# r11 (found by the first full-registry sf0.1 oracle run — the exact
-# wrong-answer-at-scale class this rung exists for): the old oracle was
-# the brute-force all-pairs hamming join, which equals the banded result
-# ONLY while no band bucket exceeds the max_band_members=1000 cap. At
-# sf0.01 (500 docs / 16 values per 4-bit band) no bucket saturates and
-# the two coincide — the green artifact hid the divergence. At sf0.1
-# (5000 docs) the densest buckets exceed the cap, _cap_band_buckets
-# drops them (the DOCUMENTED partial-drop contract: a WARNING, recall
-# guarantee void for dropped members), and Spark correctly emits fewer
-# pairs (1.18M vs 1.57M). The oracle now replays the FULL contract in
-# SQL — banding, the per-bucket cap, candidate pairs through surviving
-# buckets only, hamming verify — so it checks what the function
-# promises at every corpus size; the brute-force equality remains true
-# (and artifact-checked) in the unsaturated sf0.01 regime, where the
-# cap filter keeps every bucket.
-_ORACLES["q251_simhash_banded"] = f"""
-    WITH sig AS ({_ORACLES["q26_simhash"]}),
-    band AS (
-      SELECT doc_id, simhash16, bn.b AS band_no,
-             (simhash16 >> (bn.b * 4)) & 15 AS band_val
-      FROM sig, LATERAL (SELECT unnest(range(0, 4)) AS b) bn
-    ),
-    keep AS (
-      SELECT band_no, band_val
-      FROM band GROUP BY band_no, band_val
-      HAVING COUNT(*) <= 1000
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.simhash16 AS sa, b.simhash16 AS sb
-      FROM band a
-      JOIN keep k ON k.band_no = a.band_no AND k.band_val = a.band_val
-      JOIN band b ON b.band_no = a.band_no AND b.band_val = a.band_val
-                 AND a.doc_id < b.doc_id
-    )
-    SELECT id_a, id_b,
-           CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
-    FROM cand
-    WHERE bit_count(xor(sa, sb)) <= 3
-"""
-
-
-# q252: the five PageRank rounds unrolled as CTEs (the q237-BPE pattern
-# for iterative algorithms) over the shared q25 pair fragment; HUGEINT
-# keeps the damped product exact.
-def _pagerank_oracle_sql(iterations: int = 5) -> str:
-    parts = [
-        f"""
-    WITH prs AS (
-      {_Q25_BODY}
-    ), e AS (
-      SELECT id_a AS s, id_b AS d FROM prs
-      UNION
-      SELECT id_b, id_a FROM prs
-    ), deg AS (
-      SELECT s, CAST(COUNT(*) AS BIGINT) AS deg FROM e GROUP BY s
-    ), r0 AS (
-      SELECT s AS node, CAST(1000000 AS BIGINT) AS rank_micro FROM deg
-    )"""
-    ]
-    for i in range(1, iterations + 1):
-        parts.append(
-            f""", r{i} AS (
-      SELECT d AS node,
-             CAST(150000 + (CAST(850000 AS HUGEINT) * SUM(share)) // 1000000
-                  AS BIGINT) AS rank_micro
-      FROM (
-        SELECT e.d, r.rank_micro // g.deg AS share
-        FROM e JOIN deg g ON e.s = g.s
-        JOIN r{i - 1} r ON r.node = e.s
-      ) GROUP BY d
-    )"""
-        )
-    parts.append(f"\n    SELECT node, rank_micro FROM r{iterations}")
-    return "".join(parts)
-
-
-_ORACLES["q252_pagerank"] = _pagerank_oracle_sql(5)
-
-
-# q253: KMV sketch mirrored — same md5-int hash, k smallest per side via
-# rank, same θ/intersection/estimator arithmetic.
-_ORACLES["q253_kmv_theta"] = f"""
-    WITH pu AS (
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-    ), cu AS (
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
-    ), ah AS (
-      SELECT h FROM (
-        SELECT {_cms_hash_sql("CAST(user_id AS VARCHAR)")} AS h,
-               row_number() OVER (ORDER BY {_cms_hash_sql("CAST(user_id AS VARCHAR)")}) AS rn
-        FROM pu
-      ) WHERE rn <= 64
-    ), bh AS (
-      SELECT h FROM (
-        SELECT {_cms_hash_sql("CAST(user_id AS VARCHAR)")} AS h,
-               row_number() OVER (ORDER BY {_cms_hash_sql("CAST(user_id AS VARCHAR)")}) AS rn
-        FROM cu
-      ) WHERE rn <= 64
-    ), ta AS (SELECT MAX(h) AS ta, COUNT(*) AS ka FROM ah),
-    tb AS (SELECT MAX(h) AS tb, COUNT(*) AS kb FROM bh),
-    inter AS (
-      SELECT COUNT(*) AS n_shared
-      FROM ah JOIN bh USING (h), ta, tb
-      WHERE h <= LEAST(ta.ta, tb.tb)
-    ), ex AS (
-      SELECT COUNT(*) AS n_exact_overlap FROM pu JOIN cu USING (user_id)
-    )
-    SELECT CAST(ka AS BIGINT) AS k_a, CAST(kb AS BIGINT) AS k_b,
-           CAST(ta AS BIGINT) AS theta_a, CAST(tb AS BIGINT) AS theta_b,
-           CAST(n_shared AS BIGINT) AS n_shared,
-           CAST(n_exact_overlap AS BIGINT) AS n_exact_overlap,
-           ROUND(CAST(ka - 1 AS DOUBLE) / (CAST(ta AS DOUBLE) / 4294967296.0), 4)
-             AS est_a,
-           ROUND(CAST(kb - 1 AS DOUBLE) / (CAST(tb AS DOUBLE) / 4294967296.0), 4)
-             AS est_b
-    FROM ta, tb, inter, ex
-"""
-
-
-# q254: phrase semantics replayed on the token lists directly (the
-# oracle checks MEANING — adjacency counts — not the index layout).
-_ORACLES["q254_phrase_search"] = f"""
-    WITH t AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), bg AS (
-      SELECT doc_id,
-             unnest(list_transform(range(1, len(toks)), i ->
-               toks[CAST(i AS INT)] || ' ' || toks[CAST(i + 1 AS INT)])) AS bg
-      FROM t WHERE len(toks) >= 2
-    ), top3 AS (
-      SELECT bg, CAST(COUNT(*) AS BIGINT) AS n_occ_bigram
-      FROM bg GROUP BY bg
-      ORDER BY n_occ_bigram DESC, bg ASC LIMIT 3
-    ), hits AS (
-      SELECT top3.bg, top3.n_occ_bigram, t.doc_id,
-             len(list_filter(range(1, len(t.toks)), i ->
-               t.toks[CAST(i AS INT)] = string_split(top3.bg, ' ')[1]
-               AND t.toks[CAST(i + 1 AS INT)] = string_split(top3.bg, ' ')[2]))
-               AS n_in_doc
-      FROM top3, t
-    )
-    SELECT bg, n_occ_bigram,
-           CAST(SUM(n_in_doc) AS BIGINT) AS n_occ_positional,
-           CAST(SUM(CASE WHEN n_in_doc > 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_docs,
-           n_occ_bigram = CAST(SUM(n_in_doc) AS BIGINT) AS agree
-    FROM hits GROUP BY bg, n_occ_bigram
-"""
-
-
-# q255: ranks replayed with one flat exclusive-cumulative window (the
-# oracle checks semantics; the hierarchical prefix sum is Spark's scale
-# strategy); identical fixed-order double z at the end.
-_ORACLES["q255_mann_whitney"] = """
-    WITH e AS (
-      SELECT event_type, CAST(ROUND(value * 100) AS BIGINT) AS c
-      FROM events WHERE event_type IN ('purchase', 'click')
-    ), g AS (
-      SELECT c,
-             SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS n1,
-             SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS n2,
-             COUNT(*) AS nt
-      FROM e GROUP BY c
-    ), rk AS (
-      SELECT c, n1, n2, nt,
-             2 * COALESCE(SUM(nt) OVER (ORDER BY c
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               + nt + 1 AS rank2
-      FROM g
-    ), a AS (
-      SELECT SUM(n1) AS na, SUM(n2) AS nb,
-             SUM(n1 * rank2) AS r1_2,
-             SUM(nt * nt * nt - nt) AS tie_cubes
-      FROM rk
-    )
-    SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-           CAST((r1_2 - na * (na + 1)) // 2 AS BIGINT) AS u_stat,
-           CAST(tie_cubes AS BIGINT) AS tie_cubes,
-           ROUND((CAST((r1_2 - na * (na + 1)) // 2 AS DOUBLE)
-                  - CAST(na * nb AS DOUBLE) / 2.0)
-                 / sqrt(CAST(na * nb AS DOUBLE) / 12.0
-                        * (CAST(na + nb + 1 AS DOUBLE)
-                           - CAST(tie_cubes AS DOUBLE)
-                             / (CAST(na + nb AS DOUBLE)
-                                * CAST(na + nb - 1 AS DOUBLE)))), 6) AS z_score
-    FROM a
-"""
-
-
-# q256: edges (cents equi-block + levenshtein verify) and the recursive
-# closure replayed in SQL; singleton records resolve to themselves.
-_ORACLES["q256_entity_resolution"] = """
-    WITH RECURSIVE recs AS (
-      SELECT c_custkey * 10 AS rec_id, lower(c_name) AS name,
-             CAST(ROUND(c_acctbal * 100) AS BIGINT) AS cents
-      FROM customer
-      UNION ALL
-      SELECT c_custkey * 10 + 1,
-             substr(lower(c_name), 1, 2) || substr(lower(c_name), 4),
-             CAST(ROUND(c_acctbal * 100) AS BIGINT)
-      FROM customer WHERE c_custkey % 7 = 0
-    ), prs AS (
-      SELECT a.rec_id AS id_a, b.rec_id AS id_b
-      FROM recs a JOIN recs b
-        ON a.cents = b.cents AND a.rec_id < b.rec_id
-      WHERE levenshtein(a.name, b.name) <= 2
-    ), edges AS (
-      SELECT id_a AS s, id_b AS d FROM prs
-      UNION
-      SELECT id_b, id_a FROM prs
-    ), nodes AS (SELECT DISTINCT s AS n FROM edges),
-    walk(n, l) AS (
-      SELECT n, n FROM nodes
-      UNION
-      SELECT e.d, walk.l FROM walk JOIN edges e ON walk.n = e.s
-    ), cl AS (
-      SELECT n AS rec_id, MIN(l) AS cluster_id FROM walk GROUP BY n
-    ), resolved AS (
-      SELECT r.rec_id, COALESCE(cl.cluster_id, r.rec_id) AS entity_id
-      FROM recs r LEFT JOIN cl USING (rec_id)
-    ), sizes AS (
-      SELECT entity_id, COUNT(*) AS sz FROM resolved GROUP BY entity_id
-    )
-    SELECT CAST(SUM(sz) AS BIGINT) AS n_records,
-           CAST(COUNT(*) AS BIGINT) AS n_entities,
-           CAST(SUM(sz) - COUNT(*) AS BIGINT) AS n_merged,
-           CAST(MAX(sz) AS BIGINT) AS max_entity_size
-    FROM sizes
-"""
-
-
-# q257: essentially its own oracle — the dialect-portable SQL text.
-_ORACLES["q257_sql_surface"] = """
-    WITH rev AS (
-      SELECT c.c_nationkey,
-             SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS rev_cents,
-             COUNT(*) AS n_orders
-      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY c.c_nationkey
-    )
-    SELECT n.n_name AS nation,
-           CAST(r.rev_cents AS BIGINT) AS rev_cents,
-           CAST(r.n_orders AS BIGINT) AS n_orders,
-           CAST(RANK() OVER (ORDER BY r.rev_cents DESC, n.n_name ASC)
-                AS BIGINT) AS rev_rank
-    FROM rev r JOIN nation n ON r.c_nationkey = n.n_nationkey
-"""
-
-
-# q258: ln(1+x) on identical doubles; per-row round-6 then exact decimal
-# sum mirrors the engine's aggregation.
-_ORACLES["q258_scalar_pandas_udf"] = """
-    SELECT event_type,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM(CAST(ROUND(ln(1.0 + value), 6) AS DECIMAL(18,6)))
-                AS DOUBLE) AS sum_log1p
-    FROM events GROUP BY event_type
-"""
-
-
-# q259: pairwise day-slopes in exact micros (sign-split DIV), lower
-# median by rank — the full estimator replayed.
-_ORACLES["q259_theil_sen"] = """
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-                  AS BIGINT) AS x,
-             SUM(CAST(ROUND(value * 100) AS BIGINT)) AS y_cents
-      FROM events GROUP BY 1, 2
-    ), pairs AS (
-      SELECT a.event_type,
-             CASE WHEN b.y_cents >= a.y_cents
-                  THEN (b.y_cents - a.y_cents) * 10000 // (b.x - a.x)
-                  ELSE -((a.y_cents - b.y_cents) * 10000 // (b.x - a.x))
-             END AS slope_micro
-      FROM daily a JOIN daily b
-        ON a.event_type = b.event_type AND b.x > a.x
-    ), ranked AS (
-      SELECT event_type, slope_micro,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY slope_micro) AS rn,
-             COUNT(*) OVER (PARTITION BY event_type) AS n_pairs
-      FROM pairs
-    )
-    SELECT event_type, CAST(n_pairs AS BIGINT) AS n_pairs,
-           CAST(slope_micro AS BIGINT) AS theilsen_slope_micro
-    FROM ranked WHERE rn = (n_pairs + 1) // 2
-"""
-
-
-# q260: identical rn-difference islands in SQL.
-_ORACLES["q260_longest_streak"] = """
-    WITH days AS (
-      SELECT DISTINCT user_id,
-             CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-                  AS BIGINT) AS day
-      FROM events
-    ), islands AS (
-      SELECT user_id, day,
-             day - row_number() OVER (PARTITION BY user_id ORDER BY day)
-               AS grp
-      FROM days
-    ), streaks AS (
-      SELECT user_id, grp, COUNT(*) AS streak_len
-      FROM islands GROUP BY user_id, grp
-    ), longest AS (
-      SELECT user_id, MAX(streak_len) AS longest FROM streaks GROUP BY user_id
-    )
-    SELECT CAST(longest AS BIGINT) AS streak_len,
-           CAST(COUNT(*) AS BIGINT) AS n_users
-    FROM longest GROUP BY longest
-"""
-
-
-# q261: ground truth from the analytic waveform — integer Σs², one
-# sqrt; duration floor-divides sample count by the rate.
-_ORACLES["q261_wav_decode"] = """
-    WITH w AS (
-      SELECT doc_id, 50 + doc_id % 20 AS n,
-             list_transform(range(0, 50 + doc_id % 20), i ->
-               (doc_id * 31 + i * 7) % 2001 - 1000) AS s
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(n AS BIGINT) AS n_samples,
-           CAST((n * 1000) // 8000 AS BIGINT) AS duration_ms,
-           ROUND(sqrt(CAST(list_sum(list_transform(s, x -> x * x))
-                           AS DOUBLE) / n), 6) AS rms
-    FROM w
-"""
-
-
-_ORACLES["q262_seasonal_backtest"] = """
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-                  AS BIGINT) AS day,
-             SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents
-      FROM events GROUP BY 1, 2
-    ), scored AS (
-      SELECT a.event_type, a.cents - f.cents AS err, a.cents
-      FROM daily a JOIN daily f
-        ON a.event_type = f.event_type AND a.day = f.day + 7
-    ), agg AS (
-      SELECT event_type, COUNT(*) AS n_days,
-             SUM(ABS(err)) AS abs_err, SUM(err) AS sum_err,
-             SUM(cents) AS sum_actual
-      FROM scored GROUP BY event_type
-      HAVING SUM(cents) > 0
-    )
-    SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
-           CAST((abs_err * 1000000) // sum_actual AS BIGINT) AS wape_ppm,
-           CAST(CASE WHEN sum_err >= 0
-                THEN (sum_err * 1000000) // sum_actual
-                ELSE -((-sum_err * 1000000) // sum_actual)
-           END AS BIGINT) AS bias_ppm
-    FROM agg
-"""
-
-
-# q263: identical source-sorted left fold in SQL (list_sort +
-# list_reduce seeded with 0.0 — 0.0 + x = x keeps the fold aligned).
-_ORACLES["q263_source_entropy"] = """
-    WITH c AS (
-      SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM documents
-      GROUP BY source
-    ), t AS (SELECT SUM(n) AS total FROM c),
-    terms AS (
-      SELECT source,
-             -(CAST(n AS DOUBLE) / total) * ln(CAST(n AS DOUBLE) / total)
-               AS term,
-             total
-      FROM c, t
-    ), folded AS (
-      SELECT total, COUNT(*) AS n_sources,
-             list_reduce(
-               list_prepend(0.0,
-                 list_transform(
-                   list_sort(list({'s': source, 't': term})), r -> r.t)),
-               (acc, x) -> acc + x) AS entropy_nats
-      FROM terms GROUP BY total
-    )
-    SELECT CAST(n_sources AS BIGINT) AS n_sources,
-           CAST(total AS BIGINT) AS n_docs,
-           ROUND(entropy_nats, 6) AS entropy_nats,
-           ROUND(exp(entropy_nats), 6) AS effective_sources,
-           ROUND(entropy_nats / ln(CAST(n_sources AS DOUBLE)), 6) AS evenness
-    FROM folded
-"""
-
-
-# q264: same micro-quantized tf-idf weights (inner round-6 first, like
-# the Spark chain), df cap, integer dots, one double norm division.
-_ORACLES["q264_sparse_cosine_topk"] = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({_TOKS}) AS token FROM documents
-    ), tf AS (
-      SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY 1, 2
-    ), dfreq AS (
-      SELECT token, COUNT(*) AS df FROM tf GROUP BY token
-    ), nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents),
-    w AS (
-      SELECT tf.token, tf.doc_id,
-             CAST(ROUND(ROUND(tf.tf * ln(CAST(nd.n_docs AS DOUBLE) / dfreq.df), 6)
-                        * 1000000) AS BIGINT) AS w_micro
-      FROM tf JOIN dfreq USING (token), nd
-      WHERE dfreq.df <= 50
-    ), norms AS (
-      SELECT doc_id, SUM(w_micro * w_micro) AS norm2 FROM w GROUP BY doc_id
-    ), pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             SUM(a.w_micro * b.w_micro) AS dot
-      FROM w a JOIN w b ON a.token = b.token AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ), scored AS (
-      SELECT p.doc_a, p.doc_b,
-             ROUND(CAST(p.dot AS DOUBLE)
-                   / sqrt(CAST(na.norm2 AS DOUBLE)
-                          * CAST(nb.norm2 AS DOUBLE)), 6) AS cosine
-      FROM pairs p
-      JOIN norms na ON na.doc_id = p.doc_a
-      JOIN norms nb ON nb.doc_id = p.doc_b
-    )
-    SELECT doc_a, doc_b, cosine, CAST(rk AS BIGINT) AS rk FROM (
-      SELECT *, row_number() OVER (PARTITION BY doc_a
-                                   ORDER BY cosine DESC, doc_b ASC) AS rk
-      FROM scored
-    ) WHERE rk <= 3
-"""
-
-
-# q265: identical blocked sort + lag + first-mismatch LCP in SQL.
-_ORACLES["q265_front_coding"] = f"""
-    WITH vocab AS (
-      SELECT DISTINCT t AS term, substr(t, 1, 1) AS blk
-      FROM (SELECT unnest({_TOKS}) AS t FROM documents)
-    ), lagged AS (
-      SELECT blk, term,
-             lag(term) OVER (PARTITION BY blk ORDER BY term) AS prev
-      FROM vocab
-    ), coded AS (
-      SELECT blk, term,
-             CASE WHEN prev IS NULL THEN 0
-                  ELSE COALESCE(
-                    list_min(list_filter(
-                      range(1, LEAST(length(term), length(prev)) + 1),
-                      i -> substr(term, CAST(i AS INT), 1)
-                           <> substr(prev, CAST(i AS INT), 1))) - 1,
-                    LEAST(length(term), length(prev)))
-             END AS lcp
-      FROM lagged
-    )
-    SELECT blk, CAST(COUNT(*) AS BIGINT) AS n_terms,
-           CAST(SUM(length(term)) AS BIGINT) AS raw_chars,
-           CAST(SUM(lcp) AS BIGINT) AS saved_chars,
-           CAST((SUM(lcp) * 1000000) // SUM(length(term)) AS BIGINT)
-             AS saving_ppm
-    FROM coded GROUP BY blk
-"""
-
-
-# q266: the count-of-counts double aggregate and exact integer ratios.
-_ORACLES["q266_good_turing"] = f"""
-    WITH counts AS (
-      SELECT t AS term, COUNT(*) AS r
-      FROM (SELECT unnest({_TOKS}) AS t FROM documents) GROUP BY t
-    ), fof AS (
-      SELECT r, COUNT(*) AS n_r FROM counts GROUP BY r
-    )
-    SELECT CAST(SUM(n_r) AS BIGINT) AS vocab,
-           CAST(SUM(r * n_r) AS BIGINT) AS n_tokens,
-           CAST(COALESCE(SUM(CASE WHEN r = 1 THEN n_r END), 0) AS BIGINT)
-             AS n_hapax,
-           CAST(COALESCE(SUM(CASE WHEN r = 2 THEN n_r END), 0) AS BIGINT)
-             AS n_dis,
-           CAST((COALESCE(SUM(CASE WHEN r = 1 THEN n_r END), 0) * 1000000)
-                // SUM(r * n_r) AS BIGINT) AS unseen_mass_ppm,
-           CAST(CASE WHEN COALESCE(SUM(CASE WHEN r = 1 THEN n_r END), 0) > 0
-                THEN (2 * COALESCE(SUM(CASE WHEN r = 2 THEN n_r END), 0)
-                      * 1000) // SUM(CASE WHEN r = 1 THEN n_r END)
-                ELSE 0 END AS BIGINT) AS r_star_1_milli
-    FROM fof
-"""
-
-
-# q267: P/R/F1 replayed over the same recursive closure; predicted
-# pairs via Σ sz·(sz−1)/2, tp via entity-of-orig = entity-of-clone.
-_ORACLES["q267_er_evaluation"] = """
-    WITH RECURSIVE recs AS (
-      SELECT c_custkey * 10 AS rec_id, lower(c_name) AS name,
-             CAST(ROUND(c_acctbal * 100) AS BIGINT) AS cents
-      FROM customer
-      UNION ALL
-      SELECT c_custkey * 10 + 1,
-             substr(lower(c_name), 1, 2) || substr(lower(c_name), 4),
-             CAST(ROUND(c_acctbal * 100) AS BIGINT)
-      FROM customer WHERE c_custkey % 7 = 0
-    ), prs AS (
-      SELECT a.rec_id AS id_a, b.rec_id AS id_b
-      FROM recs a JOIN recs b
-        ON a.cents = b.cents AND a.rec_id < b.rec_id
-      WHERE levenshtein(a.name, b.name) <= 2
-    ), edges AS (
-      SELECT id_a AS s, id_b AS d FROM prs
-      UNION SELECT id_b, id_a FROM prs
-    ), nodes AS (SELECT DISTINCT s AS n FROM edges),
-    walk(n, l) AS (
-      SELECT n, n FROM nodes
-      UNION
-      SELECT e.d, walk.l FROM walk JOIN edges e ON walk.n = e.s
-    ), cl AS (SELECT n AS rec_id, MIN(l) AS cluster_id FROM walk GROUP BY n),
-    resolved AS (
-      SELECT r.rec_id, COALESCE(cl.cluster_id, r.rec_id) AS entity_id
-      FROM recs r LEFT JOIN cl USING (rec_id)
-    ), pred AS (
-      SELECT SUM((sz * (sz - 1)) // 2) AS n_pred_pairs FROM (
-        SELECT COUNT(*) AS sz FROM resolved GROUP BY entity_id)
-    ), truth AS (
-      SELECT c_custkey * 10 AS rec_orig, c_custkey * 10 + 1 AS rec_clone
-      FROM customer WHERE c_custkey % 7 = 0
-    ), tp AS (
-      SELECT COUNT(*) AS n_true_pairs,
-             SUM(CASE WHEN ra.entity_id = rb.entity_id THEN 1 ELSE 0 END) AS tp
-      FROM truth t
-      JOIN resolved ra ON ra.rec_id = t.rec_orig
-      JOIN resolved rb ON rb.rec_id = t.rec_clone
-    )
-    SELECT CAST(n_pred_pairs AS BIGINT) AS n_pred_pairs,
-           CAST(n_true_pairs AS BIGINT) AS n_true_pairs,
-           CAST(tp AS BIGINT) AS tp,
-           CAST((tp * 1000000) // n_pred_pairs AS BIGINT) AS precision_ppm,
-           CAST((tp * 1000000) // n_true_pairs AS BIGINT) AS recall_ppm,
-           CAST(((2 * tp) * 1000000) // (n_pred_pairs + n_true_pairs)
-                AS BIGINT) AS f1_ppm
-    FROM pred, tp
-"""
-
-
-# q268: same plant rule, same RE2-safe patterns, same distinct-char
-# entropy proxy; the recall boolean is computed, not asserted.
-_ORACLES["q268_secret_scan"] = """
-    WITH planted AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 23 = 5
-                  THEN text || ' api_key=' || md5(CAST(doc_id AS VARCHAR))
-                  ELSE text END AS text2
-      FROM documents
-    ), cands AS (
-      SELECT doc_id, unnest(regexp_extract_all(text2,
-               '[A-Fa-f0-9]{32,}|[A-Za-z0-9+/]{28,}={0,2}')) AS cand
-      FROM planted
-    ), confirmed AS (
-      SELECT doc_id, cand
-      FROM cands
-      WHERE len(list_distinct(string_split(cand, ''))) >= 10
-    ), s AS (
-      SELECT COUNT(*) AS n_secrets,
-             COUNT(DISTINCT doc_id) AS n_docs_with_secrets
-      FROM confirmed
-    ), x AS (
-      SELECT SUM(CASE WHEN doc_id % 23 = 5 THEN 1 ELSE 0 END) AS n_planted
-      FROM documents
-    )
-    SELECT CAST(n_secrets AS BIGINT) AS n_secrets,
-           CAST(n_docs_with_secrets AS BIGINT) AS n_docs_with_secrets,
-           CAST(n_planted AS BIGINT) AS n_planted,
-           n_docs_with_secrets = n_planted AS all_plants_found
-    FROM s, x
-"""
-
-
-# q269: bit set, probes, and both FPRs replayed — the theoretical rate
-# uses the identical operand order (1 − e^{−k·n/m})^k.
-_ORACLES["q269_bloom_fpr"] = f"""
-    WITH members AS (
-      SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-    ), bits AS (
-      SELECT DISTINCT ({_cms_hash_sql("'0:' || CAST(user_id AS VARCHAR)")}) % 4096 AS bit,
-             0 AS r FROM members
-      UNION
-      SELECT DISTINCT ({_cms_hash_sql("'1:' || CAST(user_id AS VARCHAR)")}) % 4096, 1
-      FROM members
-      UNION
-      SELECT DISTINCT ({_cms_hash_sql("'2:' || CAST(user_id AS VARCHAR)")}) % 4096, 2
-      FROM members
-    ), bitset AS (SELECT DISTINCT bit FROM bits),
-    probes AS (SELECT user_id + 1000000 AS probe_id FROM members),
-    pb AS (
-      SELECT probe_id,
-             ({_cms_hash_sql("'0:' || CAST(probe_id AS VARCHAR)")}) % 4096 AS b0,
-             ({_cms_hash_sql("'1:' || CAST(probe_id AS VARCHAR)")}) % 4096 AS b1,
-             ({_cms_hash_sql("'2:' || CAST(probe_id AS VARCHAR)")}) % 4096 AS b2
-      FROM probes
-    ), hits AS (
-      SELECT probe_id,
-             (CASE WHEN b0 IN (SELECT bit FROM bitset) THEN 1 ELSE 0 END
-              + CASE WHEN b1 IN (SELECT bit FROM bitset) THEN 1 ELSE 0 END
-              + CASE WHEN b2 IN (SELECT bit FROM bitset) THEN 1 ELSE 0 END)
-               AS n_set
-      FROM pb
-    ), s AS (
-      SELECT COUNT(*) AS n_probes,
-             SUM(CASE WHEN n_set = 3 THEN 1 ELSE 0 END) AS n_false_pos
-      FROM hits
-    ), nb AS (SELECT COUNT(*) AS bits_set FROM bitset),
-    nm AS (SELECT COUNT(*) AS n_members FROM members)
-    SELECT CAST(n_members AS BIGINT) AS n_members,
-           CAST(bits_set AS BIGINT) AS bits_set,
-           CAST(n_probes AS BIGINT) AS n_probes,
-           CAST(n_false_pos AS BIGINT) AS n_false_pos,
-           CAST((n_false_pos * 1000000) // n_probes AS BIGINT)
-             AS measured_fpr_ppm,
-           ROUND(pow(1.0 - exp(-(3.0 * CAST(n_members AS DOUBLE)) / 4096.0),
-                     3.0), 6) AS theoretical_fpr
-    FROM s, nb, nm
-"""
-
-
-# q270: the eight IPF half-steps unrolled; HUGEINT keeps the scale
-# products exact; targets derived from the same total.
-def _ipf_oracle_sql(iterations: int = 4) -> str:
-    parts = [
-        """
-    WITH cells AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) % 7
-                  AS BIGINT) AS dow,
-             COUNT(*) AS n
-      FROM events GROUP BY 1, 2
-    ), t AS (
-      SELECT (SUM(n) // 5) * 1000000 AS t_row,
-             (SUM(n) // 7) * 1000000 AS t_col
-      FROM cells
-    ), w0 AS (
-      SELECT event_type, dow, CAST(n * 1000000 AS BIGINT) AS w FROM cells
-    )"""
-    ]
-    prev = "w0"
-    for i in range(1, iterations + 1):
-        parts.append(
-            f""", r{i} AS (
-      SELECT w.event_type, w.dow,
-             CAST((CAST(w.w AS HUGEINT) * t.t_row) // rs.rs AS BIGINT) AS w
-      FROM {prev} w
-      JOIN (SELECT event_type, SUM(w) AS rs FROM {prev} GROUP BY event_type) rs
-        USING (event_type), t
-    ), c{i} AS (
-      SELECT w.event_type, w.dow,
-             CAST((CAST(w.w AS HUGEINT) * t.t_col) // cs.cs AS BIGINT) AS w
-      FROM r{i} w
-      JOIN (SELECT dow, SUM(w) AS cs FROM r{i} GROUP BY dow) cs USING (dow), t
-    )"""
-        )
-        prev = f"c{i}"
-    parts.append(
-        f"""
-    SELECT event_type, dow, w AS weight_micro FROM {prev}"""
-    )
-    return "".join(parts)
-
-
-_ORACLES["q270_ipf_raking"] = _ipf_oracle_sql(4)
-
-
-# q271: forward-asof = min purchase ts at/after the click within the
-# tolerance, per click — correlated min via join+group in SQL.
-_ORACLES["q271_forward_asof"] = """
-    WITH clicks AS (
-      SELECT user_id, ts AS click_ts FROM events WHERE event_type = 'click'
-    ), purchases AS (
-      SELECT user_id, ts AS p_ts FROM events WHERE event_type = 'purchase'
-    ), matched AS (
-      SELECT c.user_id, c.click_ts, MIN(p.p_ts) AS p_ts
-      FROM clicks c LEFT JOIN purchases p
-        ON p.user_id = c.user_id
-       AND p.p_ts >= c.click_ts
-       AND epoch(p.p_ts) - epoch(c.click_ts) <= 7 * 86400
-      GROUP BY c.user_id, c.click_ts
-    )
-    SELECT CAST(CASE WHEN p_ts IS NOT NULL
-                THEN date_diff('day', CAST(click_ts AS DATE), CAST(p_ts AS DATE))
-           END AS BIGINT) AS lag_days,
-           CAST(COUNT(*) AS BIGINT) AS n_clicks
-    FROM matched GROUP BY 1
-"""
-
-
-# q272: both blocking strategies and the overlap classes replayed —
-# sorted-neighborhood via the same blocked lead(1..3) windows.
-_ORACLES["q272_sorted_neighborhood"] = """
-    WITH recs AS (
-      SELECT c_custkey * 10 AS rec_id, lower(c_name) AS name,
-             CAST(ROUND(c_acctbal * 100) AS BIGINT) AS cents
-      FROM customer
-      UNION ALL
-      SELECT c_custkey * 10 + 1,
-             substr(lower(c_name), 1, 2) || substr(lower(c_name), 4),
-             CAST(ROUND(c_acctbal * 100) AS BIGINT)
-      FROM customer WHERE c_custkey % 7 = 0
-    ), blk AS (
-      SELECT rec_id, name, substr(name, 1, 1) AS blk FROM recs
-    ), leads AS (
-      SELECT rec_id, name,
-             lead(rec_id, 1) OVER w AS nid1, lead(name, 1) OVER w AS nname1,
-             lead(rec_id, 2) OVER w AS nid2, lead(name, 2) OVER w AS nname2,
-             lead(rec_id, 3) OVER w AS nid3, lead(name, 3) OVER w AS nname3
-      FROM blk
-      WINDOW w AS (PARTITION BY blk ORDER BY name, rec_id)
-    ), sn_raw AS (
-      SELECT LEAST(rec_id, nid1) AS id_a, GREATEST(rec_id, nid1) AS id_b,
-             name AS na, nname1 AS nb FROM leads WHERE nid1 IS NOT NULL
-      UNION ALL
-      SELECT LEAST(rec_id, nid2), GREATEST(rec_id, nid2), name, nname2
-      FROM leads WHERE nid2 IS NOT NULL
-      UNION ALL
-      SELECT LEAST(rec_id, nid3), GREATEST(rec_id, nid3), name, nname3
-      FROM leads WHERE nid3 IS NOT NULL
-    ), sn AS (
-      SELECT DISTINCT id_a, id_b FROM sn_raw WHERE levenshtein(na, nb) <= 2
-    ), eqb AS (
-      SELECT DISTINCT a.rec_id AS id_a, b.rec_id AS id_b
-      FROM recs a JOIN recs b
-        ON a.cents = b.cents AND a.rec_id < b.rec_id
-      WHERE levenshtein(a.name, b.name) <= 2
-    ), tagged AS (
-      SELECT CASE WHEN sn.id_a IS NOT NULL AND eqb.id_a IS NOT NULL
-                  THEN 'both'
-                  WHEN sn.id_a IS NOT NULL THEN 'sorted_only'
-                  ELSE 'cents_only' END AS found_by
-      FROM sn FULL OUTER JOIN eqb USING (id_a, id_b)
-    )
-    SELECT found_by, CAST(COUNT(*) AS BIGINT) AS n_pairs
-    FROM tagged GROUP BY found_by
-"""
-
-
-# q273: weights over the same recursive-CTE clusters.
-_ORACLES["q273_soft_dedup_weights"] = f"""
-    WITH cl AS ({_ORACLES["q63_dedup_clusters"]}),
-    sized AS (
-      SELECT cluster_id, COUNT(*) AS csize FROM cl GROUP BY cluster_id
-    ), weighted AS (
-      SELECT d.doc_id,
-             COALESCE(s.csize, 1) AS cluster_size,
-             CAST(1000000 // COALESCE(s.csize, 1) AS BIGINT) AS weight_micro
-      FROM documents d
-      LEFT JOIN cl ON cl.doc_id = d.doc_id
-      LEFT JOIN sized s ON s.cluster_id = cl.cluster_id
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN cluster_size > 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_in_clusters,
-           CAST(SUM(weight_micro) AS BIGINT) AS total_weight_micro,
-           CAST(COUNT(DISTINCT CASE WHEN cluster_size > 1
-                      THEN weight_micro END) AS BIGINT) AS n_weight_levels
-    FROM weighted
-"""
-
-
-# q274: life table + KM product replayed; the survival fold runs over
-# the same week-sorted (1−h) list.
-_ORACLES["q274_survival_hazard"] = """
-    WITH span AS (SELECT MAX(ts) AS end_ts FROM events),
-    users AS (
-      SELECT user_id,
-             CAST(date_diff('day', CAST(MIN(ts) AS DATE),
-                            CAST(MAX(ts) AS DATE)) // 7 AS BIGINT) AS week,
-             (epoch(span.end_ts) - epoch(MAX(ts))) > 86400 AS churned
-      FROM events, span GROUP BY user_id, span.end_ts
-    ), hist AS (
-      SELECT week, COUNT(*) AS n_ending,
-             SUM(CASE WHEN churned THEN 1 ELSE 0 END) AS n_churned
-      FROM users GROUP BY week
-    ), staged AS (
-      SELECT week, n_ending, n_churned,
-             SUM(n_ending) OVER (ORDER BY week DESC
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS n_at_risk
-      FROM hist
-    ), hz AS (
-      SELECT week, n_at_risk, n_churned,
-             CAST((n_churned * 1000000) // n_at_risk AS BIGINT) AS hazard_ppm
-      FROM staged
-    )
-    SELECT h.week, CAST(h.n_at_risk AS BIGINT) AS n_at_risk,
-           CAST(h.n_churned AS BIGINT) AS n_churned, h.hazard_ppm,
-           ROUND(list_reduce(
-             list_prepend(1.0,
-               list_transform(
-                 list_sort(list({'w': h2.week, 'p': 1.0 - h2.hazard_ppm / 1000000.0})),
-                 r -> r.p)),
-             (acc, x) -> acc * x), 6) AS survival
-    FROM hz h
-    JOIN hz h2 ON h2.week <= h.week
-    GROUP BY h.week, h.n_at_risk, h.n_churned, h.hazard_ppm
-"""
-
-
-_ORACLES["q275_burstiness"] = """
-    WITH daily AS (
-      SELECT event_type,
-             CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-                  AS BIGINT) AS day,
-             COUNT(*) AS x
-      FROM events GROUP BY 1, 2
-    ), m AS (
-      SELECT event_type, COUNT(*) AS n, SUM(x) AS sx, SUM(x * x) AS sxx
-      FROM daily GROUP BY event_type
-    )
-    SELECT event_type, CAST(n AS BIGINT) AS n_days,
-           CAST((sx * 1000) // n AS BIGINT) AS mean_milli,
-           CAST(((n * sxx - sx * sx) * 1000) // (n * sx) AS BIGINT)
-             AS vmr_milli,
-           (n * sxx - sx * sx) > (n * sx) AS overdispersed
-    FROM m
-"""
-
-# q276: PNG is lossless, so the oracle is the closed-form construction —
-# same pixel rule, integer luma sum, ONE double division (the decoder's
-# exact arithmetic), never a second decoder.
-_ORACLES["q276_png_decode"] = """
-    WITH d AS (
-      SELECT doc_id,
-             4 + doc_id % 3 AS w,
-             3 + doc_id % 2 AS h
-      FROM documents
-    ), px AS (
-      SELECT doc_id, w, h,
-             list_sum(list_transform(range(0, w * h), i ->
-               299 * ((doc_id * 7 + i * 3) % 256)
-             + 587 * ((doc_id * 11 + i * 5) % 256)
-             + 114 * ((doc_id * 13 + i * 2) % 256))) AS lum_sum
-      FROM d
-    )
-    SELECT doc_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(3 AS INT) AS n_channels,
-           CAST(lum_sum AS DOUBLE) / (255000.0 * w * h) AS mean_luma
-    FROM px
-"""
-
-# q278: palette/gray PNG is lossless too — same closed-form oracle
-# style as q276. Grayscale luma is exactly the gray level (the 299+587+
-# 114 = 1000 weight scale cancels); palette luma walks the PLTE formula
-# at index (did+i) % 16.
-_ORACLES["q278_png_palette_gray"] = """
-    WITH d AS (
-      SELECT doc_id,
-             4 + doc_id % 3 AS w,
-             3 + doc_id % 2 AS h,
-             doc_id % 3 AS cls
-      FROM documents
-    ), px AS (
-      SELECT doc_id, w, h, cls,
-             CASE WHEN cls IN (0, 1) THEN
-               list_sum(list_transform(range(0, w * h), i ->
-                 1000 * ((doc_id * 7 + i * 3) % 256)))
-             ELSE
-               list_sum(list_transform(range(0, w * h), i ->
-                 299 * ((doc_id * 5 + 3 * ((doc_id + i) % 16)) % 256)
-               + 587 * ((doc_id * 9 + 7 * ((doc_id + i) % 16)) % 256)
-               + 114 * ((doc_id * 3 + 11 * ((doc_id + i) % 16)) % 256)))
-             END AS lum_sum
-      FROM d
-    )
-    SELECT doc_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(CASE cls WHEN 0 THEN 1 WHEN 1 THEN 2
-                ELSE CASE WHEN doc_id % 2 = 1 THEN 4 ELSE 3 END
-                END AS INT) AS n_channels,
-           CAST(lum_sum AS DOUBLE) / (255000.0 * w * h) AS mean_luma
-    FROM px
-"""
-
-# q277: solid gray, even v, quality 50 → DC quant 16 divides 8·(v−128)
-# exactly, so the decoded block is uniformly v and
-# mean_luma = (299+587+114)·v·64 / (255000·64) in closed form.
-# q280: the PNG spec-matrix twin of q278 — same closed-form style, with
-# each class's own exact integer-luma denominator (16-bit divides by
-# 65535; 4-bit gray expands ×17 = 255/15 exactly; 2-bit palette walks a
-# 4-entry PLTE).
-_ORACLES["q280_png_full_matrix"] = """
-    WITH d AS (
-      SELECT doc_id,
-             4 + doc_id % 3 AS w,
-             3 + doc_id % 2 AS h,
-             doc_id % 4 AS cls
-      FROM documents
-    ), px AS (
-      SELECT doc_id, w, h, cls,
-             CASE cls
-             WHEN 0 THEN
-               CAST(list_sum(list_transform(range(0, w * h), i ->
-                 1000 * ((doc_id * 257 + i * 1031) % 65536))) AS DOUBLE)
-               / (1000.0 * 65535 * w * h)
-             WHEN 1 THEN
-               CAST(list_sum(list_transform(range(0, w * h), i ->
-                 1000 * (17 * ((doc_id + i) % 16)))) AS DOUBLE)
-               / (1000.0 * 255 * w * h)
-             WHEN 2 THEN
-               CAST(list_sum(list_transform(range(0, w * h), i ->
-                 299 * ((doc_id * 5 + 3 * ((doc_id + i) % 4)) % 256)
-               + 587 * ((doc_id * 9 + 7 * ((doc_id + i) % 4)) % 256)
-               + 114 * ((doc_id * 3 + 11 * ((doc_id + i) % 4)) % 256))) AS DOUBLE)
-               / (1000.0 * 255 * w * h)
-             ELSE
-               CAST(list_sum(list_transform(range(0, w * h), i ->
-                 299 * ((doc_id * 7 + i * 3) % 65536)
-               + 587 * ((doc_id * 11 + i * 5) % 65536)
-               + 114 * ((doc_id * 13 + i * 2) % 65536))) AS DOUBLE)
-               / (1000.0 * 65535 * w * h)
-             END AS mean_luma
-      FROM d
-    )
-    SELECT doc_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(CASE cls WHEN 0 THEN 1 WHEN 1 THEN 1 WHEN 2 THEN 3 ELSE 3 END
-                AS INT) AS n_channels,
-           mean_luma
-    FROM px
-"""
-
-# q281: the oracle replays the PUBLISHED IMA ADPCM recurrence (step /
-# index tables, shift-form diff, int16 clamp) as a recursive CTE over
-# the analytic construction — an independent-engine decode, not a copy
-# of the Python one. ~56 iterations x |documents| rows.
-_ORACLES["q281_adpcm_decode"] = """
-    WITH RECURSIVE rec AS (
-        SELECT doc_id,
-               40 + doc_id % 16 AS n_nib,
-               CAST(0 AS BIGINT) AS i,
-               CAST((doc_id * 17) % 1024 - 512 AS BIGINT) AS pred,
-               CAST(doc_id % 40 AS BIGINT) AS idx,
-               CAST((doc_id * 17) % 1024 - 512 AS BIGINT)
-                 * ((doc_id * 17) % 1024 - 512) AS sumsq
-        FROM documents
-      UNION ALL
-        SELECT doc_id, n_nib, i + 1,
-               GREATEST(-32768, LEAST(32767, pred + sdiff)),
-               GREATEST(0, LEAST(88,
-                   idx + [-1,-1,-1,-1,2,4,6,8][CAST(nib % 8 AS INT) + 1])),
-               sumsq + GREATEST(-32768, LEAST(32767, pred + sdiff))
-                     * GREATEST(-32768, LEAST(32767, pred + sdiff))
-        FROM (
-          SELECT doc_id, n_nib, i, pred, idx, sumsq, nib,
-                 CASE WHEN nib >= 8 THEN -udiff ELSE udiff END AS sdiff
-          FROM (
-            SELECT doc_id, n_nib, i, pred, idx, sumsq, nib,
-                   step // 8
-                     + CASE WHEN nib % 2 = 1 THEN step // 4 ELSE 0 END
-                     + CASE WHEN (nib // 2) % 2 = 1 THEN step // 2 ELSE 0 END
-                     + CASE WHEN (nib // 4) % 2 = 1 THEN step ELSE 0 END
-                     AS udiff
-            FROM (
-              SELECT doc_id, n_nib, i, pred, idx, sumsq,
-                     (doc_id * 13 + i * 5) % 16 AS nib,
-                     [7,8,9,10,11,12,13,14,16,17,19,21,23,25,28,31,
-                      34,37,41,45,50,55,60,66,73,80,88,97,107,118,130,143,
-                      157,173,190,209,230,253,279,307,337,371,408,449,494,
-                      544,598,658,724,796,876,963,1060,1166,1282,1411,1552,
-                      1707,1878,2066,2272,2499,2749,3024,3327,3660,4026,4428,
-                      4871,5358,5894,6484,7132,7845,8630,9493,10442,11487,
-                      12635,13899,15289,16818,18500,20350,22385,24623,27086,
-                      29794,32767][CAST(idx AS INT) + 1] AS step
-              FROM rec WHERE i < n_nib
-            )
-          )
-        )
-    )
-    SELECT doc_id,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(n_nib + 1 AS BIGINT) AS n_samples,
-           CAST(((n_nib + 1) * 1000) // 8000 AS BIGINT) AS duration_ms,
-           ROUND(sqrt(CAST(sumsq AS DOUBLE) / (n_nib + 1)), 6) AS rms
-    FROM rec WHERE i = n_nib
-"""
-
-# q282: float32 samples are v/128 with integer v, so every partial sum
-# of s^2 is an exact integer/16384 below 2^53 — the closed integer form
-# IS the decoder's float64 cumsum, bit-for-bit.
-_ORACLES["q282_wav_float_decode"] = """
-    WITH w AS (
-      SELECT doc_id, 50 + doc_id % 20 AS n,
-             list_transform(range(0, 50 + doc_id % 20), i ->
-               (doc_id * 31 + i * 7) % 2001 - 1000) AS v
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(n AS BIGINT) AS n_samples,
-           CAST((n * 1000) // 8000 AS BIGINT) AS duration_ms,
-           ROUND(sqrt(CAST(list_sum(list_transform(v, x -> x * x))
-                           AS DOUBLE) / 16384.0 / n), 6) AS rms
-    FROM w
-"""
-
-# q283: both G.711 expansions in closed integer SQL form — ~b = 255-b
-# for the u-law complement, xor(b,85) for A-law, segment CASE, exact
-# integer sum of squares.
-_ORACLES["q283_g711_decode"] = """
-    WITH w AS (
-      SELECT doc_id, 40 + doc_id % 25 AS n,
-             list_transform(range(0, 40 + doc_id % 25), i ->
-               (doc_id * 7 + i * 3) % 256) AS bs
-      FROM documents
-    ), dec AS (
-      SELECT doc_id, n,
-             CASE WHEN doc_id % 2 = 0 THEN 'ulaw' ELSE 'alaw' END AS law,
-             list_transform(bs, b ->
-               CASE WHEN doc_id % 2 = 0 THEN
-                 CASE WHEN (255 - b) >= 128
-                      THEN 132 - ((((255 - b) % 16) * 8 + 132)
-                                  * (1 << (((255 - b) // 16) % 8)))
-                      ELSE ((((255 - b) % 16) * 8 + 132)
-                            * (1 << (((255 - b) // 16) % 8))) - 132
-                 END
-               ELSE
-                 CASE WHEN (xor(b, 85) // 128) % 2 = 1 THEN 1 ELSE -1 END *
-                 CASE ((xor(b, 85) // 16) % 8)
-                   WHEN 0 THEN (xor(b, 85) % 16) * 16 + 8
-                   WHEN 1 THEN (xor(b, 85) % 16) * 16 + 264
-                   ELSE ((xor(b, 85) % 16) * 16 + 264)
-                        * (1 << (((xor(b, 85) // 16) % 8) - 1))
-                 END
-               END) AS s
-      FROM w
-    )
-    SELECT doc_id, law,
-           CAST(8000 AS INT) AS sample_rate,
-           CAST(n AS BIGINT) AS n_samples,
-           CAST((n * 1000) // 8000 AS BIGINT) AS duration_ms,
-           ROUND(sqrt(CAST(list_sum(list_transform(s, x -> x * x))
-                           AS DOUBLE) / n), 6) AS rms
-    FROM dec
-"""
-
-# q279: the progressive (SOF2) transmission of the SAME coefficients —
-# fully-refined progressive reconstructs identically, so it shares the
-# closed form.
-_ORACLES["q279_jpeg_progressive"] = """
-    SELECT doc_id,
-           CAST(8 AS INT) AS width,
-           CAST(8 AS INT) AS height,
-           CAST(3 AS INT) AS n_channels,
-           CAST(64000 * (2 * (doc_id % 128)) AS DOUBLE) / (255000.0 * 64)
-             AS mean_luma
-    FROM documents
-"""
-_ORACLES["q277_jpeg_decode"] = """
-    SELECT doc_id,
-           CAST(8 AS INT) AS width,
-           CAST(8 AS INT) AS height,
-           CAST(3 AS INT) AS n_channels,
-           CAST(64000 * (2 * (doc_id % 128)) AS DOUBLE) / (255000.0 * 64)
-             AS mean_luma
-    FROM documents
-"""
-
-# q284: per-frame rows of the MJPEG-in-AVI decode — same even-gray
-# quality-50 bit-exact round-trip as q277, so the oracle is the closed
-# form over a generate_series frame explosion (ground truth, not a
-# second decoder).
-_ORACLES["q284_mjpeg_avi_decode"] = """
-    SELECT d.doc_id,
-           CAST(2 + d.doc_id % 3 AS INT) AS n_frames,
-           CAST(12 AS INT) AS fps,
-           CAST(f.f AS INT) AS frame_idx,
-           CAST(8 AS INT) AS width,
-           CAST(8 AS INT) AS height,
-           CAST(64000 * (2 * ((d.doc_id + 17 * f.f) % 128)) AS DOUBLE)
-             / (255000.0 * 64) AS mean_luma
-    FROM documents d,
-         LATERAL (SELECT unnest(generate_series(0, 1 + d.doc_id % 3)) AS f) f
-"""
-
-# q285: the band-cap saturation report — replays the exact minhash
-# banding (same tok/dsh/sig/bands CTEs as _q25_inner) then aggregates
-# bucket-size stats per band index at the production cap of 1000.
-_ORACLES["q285_band_cap_report"] = f"""
-    WITH tok AS (
-      SELECT doc_id, {_TOKS} AS toks FROM documents
-    ), dsh AS (
-      SELECT doc_id, list_distinct({_SHINGLES3}) AS dsh FROM tok
-    ), sig AS (
-      SELECT doc_id, (list_sort(list_transform(dsh, s -> md5(s))))[1:8] AS sig FROM dsh
-    ), bands AS (
-      SELECT DISTINCT doc_id, unnest([
-        concat_ws('|', '0', sig[1], sig[2]), concat_ws('|', '1', sig[3], sig[4]),
-        concat_ws('|', '2', sig[5], sig[6]), concat_ws('|', '3', sig[7], sig[8])
-      ]) AS band FROM sig
-    ), bc AS (
-      SELECT band, COUNT(*) AS n_members FROM bands GROUP BY band
-    )
-    SELECT CAST(string_split(band, '|')[1] AS BIGINT) AS band_idx,
-           COUNT(*) AS n_buckets,
-           CAST(SUM(CASE WHEN n_members > 1000 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_over_cap,
-           CAST(SUM(CASE WHEN n_members > 1000 THEN n_members ELSE 0 END) AS BIGINT)
-             AS rows_dropped,
-           CAST(MAX(n_members) AS BIGINT) AS max_members
-    FROM bc GROUP BY 1
-"""
+    return {k: fn for k, fn in registered().items() if fn.__module__ != _LADDER}
 
 
 def oracle_sql() -> dict[str, str]:
-    return dict(_ORACLES)
-
-
-# ===========================================================================
-# LADDER FULL-FIDELITY TPC-H (r13, verdict task 6)
-#
-# The driver's fixtures stop at l_shipdate and carry no partsupp, so five
-# TPC-H shapes in the MAIN registry (q119-q124, COVERAGE.md fidelity
-# table) run on documented stand-ins. The builder's own ladder fixtures
-# (tools/gen_testdata.py r13+) carry the real columns — partsupp,
-# l_commitdate/l_receiptdate/l_shipmode, c_phone, p_container — and this
-# SEPARATE registry holds the full-fidelity forms, oracle-checked against
-# DuckDB on those fixtures only (tools/check_oracle.py --registry ladder,
-# artifact CORRECTNESS_LADDER_r*.json). Driver rungs keep the stand-ins:
-# these queries would fail on /root/testdata by construction.
-# Reference anchor: the same 22-shape TPC-H surface as the main registry
-# (SURVEY.md §2.9); fidelity limits per query are listed in COVERAGE.md.
-# ===========================================================================
-
-
-def _l119_tpch_q2_full(spark, sf):
-    """TPC-H Q2, FULL fidelity (upgrades q119's lineitem-derived catalog
-    stand-in): minimum-supply-cost supplier per part over the REAL
-    partsupp table, European suppliers, size-15 STEEL parts. The
-    correlated min-cost subquery is a window min over ps_partkey (keyed,
-    distributed); region/nation/supplier dims broadcast onto partsupp —
-    the only shuffle is the partkey window. No LIMIT: the full qualifying
-    set with total-ordering keys is the deterministic oracle surface."""
-    part = _t(spark, sf, "part").filter(
-        (F.col("p_size") == 15) & F.col("p_type").endswith("STEEL")
-    )
-    supp = _t(spark, sf, "supplier")
-    nat = _t(spark, sf, "nation")
-    reg = _t(spark, sf, "region").filter(F.col("r_name") == "EUROPE")
-    ps = _t(spark, sf, "partsupp")
-    eu_supp = (
-        supp.join(F.broadcast(nat.join(F.broadcast(reg),
-                                       nat.n_regionkey == reg.r_regionkey)),
-                  supp.s_nationkey == F.col("n_nationkey"))
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-    )
-    cand = (
-        ps.join(F.broadcast(part.select("p_partkey")), ps.ps_partkey == F.col("p_partkey"))
-        .join(eu_supp, ps.ps_suppkey == eu_supp.s_suppkey)
-        .select("p_partkey", "s_suppkey", "s_name", "s_acctbal", "n_name",
-                "ps_supplycost")
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        cand.withColumn("min_cost", F.min("ps_supplycost").over(w))
-        .filter(F.col("ps_supplycost") == F.col("min_cost"))
-        .select(
-            "p_partkey", "s_suppkey", "s_name", "n_name", "s_acctbal",
-            F.col("ps_supplycost").alias("supplycost"),
-        )
-    )
-
-
-def _l120_tpch_q9_full(spark, sf):
-    """TPC-H Q9, FULL fidelity (upgrades q120's 20%-of-retail cost
-    proxy): product-type profit by nation and order month with the REAL
-    ps_supplycost — amount = extprice·(1−disc) − ps_supplycost·qty, all
-    decimal-exact, summed then cast to double (the q49 hashing
-    convention). partsupp joins lineitem on the composite
-    (partkey, suppkey) key — one shuffle each side; part filter
-    broadcast-semi-prunes first."""
-    li = _t_par(spark, sf, "lineitem")
-    ps = _t(spark, sf, "partsupp")
-    part = _t(spark, sf, "part").filter(F.col("p_name").contains("spark"))
-    supp = _t(spark, sf, "supplier")
-    nat = _t(spark, sf, "nation")
-    orders = _t(spark, sf, "orders")
-    amount = (
-        F.col("l_extendedprice").cast("decimal(18,2)")
-        * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))
-        - F.col("ps_supplycost").cast("decimal(18,2)")
-        * F.col("l_quantity").cast("decimal(18,2)")
-    )
-    return (
-        li.join(F.broadcast(part.select("p_partkey")),
-                li.l_partkey == F.col("p_partkey"))
-        .join(ps, (li.l_partkey == ps.ps_partkey) & (li.l_suppkey == ps.ps_suppkey))
-        .join(F.broadcast(supp.select("s_suppkey", "s_nationkey")),
-              li.l_suppkey == F.col("s_suppkey"))
-        .join(F.broadcast(nat), F.col("s_nationkey") == nat.n_nationkey)
-        .join(orders.select("o_orderkey", "o_orderdate"),
-              li.l_orderkey == F.col("o_orderkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.month("o_orderdate").cast("long").alias("o_month"),
-        )
-        .agg(F.sum(amount).cast("double").alias("sum_profit"))
-    )
-
-
-def _l121_tpch_q11_full(spark, sf):
-    """TPC-H Q11, FULL fidelity (upgrades q121's lineitem-value proxy):
-    important-stock parts — partsupp value (supplycost·availqty) per
-    part within one nation, kept when above 0.03% of that nation's
-    total. Threshold compare runs in EXACT decimals (value > total ·
-    0.0003 as decimal multiply) with the one-row total broadcast; output
-    value cast double last."""
-    ps = _t(spark, sf, "partsupp")
-    supp = _t(spark, sf, "supplier")
-    nat = _t(spark, sf, "nation").filter(F.col("n_name") == "NATION07")
-    val = (
-        F.col("ps_supplycost").cast("decimal(18,2)")
-        * F.col("ps_availqty").cast("decimal(18,0)")
-    )
-    nat_ps = ps.join(
-        F.broadcast(
-            supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-            .select("s_suppkey")
-        ),
-        ps.ps_suppkey == F.col("s_suppkey"),
-    )
-    per_part = nat_ps.groupBy("ps_partkey").agg(F.sum(val).alias("val_dec"))
-    total = nat_ps.agg(F.sum(val).alias("total_dec"))
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(
-            F.col("val_dec")
-            > F.col("total_dec") * F.lit("0.0003").cast("decimal(10,6)")
-        )
-        .select("ps_partkey", F.col("val_dec").cast("double").alias("stock_value"))
-    )
-
-
-def _l122_tpch_q20_full(spark, sf):
-    """TPC-H Q20, FULL fidelity (upgrades q122's fixed shipped-quantity
-    floor): suppliers in one nation holding availqty > 50% of the
-    quantity they themselves shipped of promo-named parts. The correlated
-    sum is a (partkey, suppkey) grouped aggregate inner-joined back to
-    partsupp (inner = the SQL scalar-subquery NULL semantics: a pair with
-    no shipments can never satisfy '> NULL'); part and nation prune
-    broadcast-side first. 0.5·sum is exact (whole-number doubles)."""
-    ps = _t(spark, sf, "partsupp")
-    li = _t_par(spark, sf, "lineitem")
-    part = _t(spark, sf, "part").filter(F.col("p_name").startswith("spark"))
-    supp = _t(spark, sf, "supplier")
-    nat = _t(spark, sf, "nation").filter(F.col("n_name") == "NATION03")
-    shipped = (
-        li.join(F.broadcast(part.select("p_partkey")), li.l_partkey == F.col("p_partkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum("l_quantity").alias("qty_shipped"))
-    )
-    qualified = (
-        ps.join(
-            shipped,
-            (ps.ps_partkey == shipped.l_partkey) & (ps.ps_suppkey == shipped.l_suppkey),
-        )
-        .filter(F.col("ps_availqty") > 0.5 * F.col("qty_shipped"))
-        .select("ps_suppkey")
-        .distinct()
-    )
-    return (
-        supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(qualified, supp.s_suppkey == qualified.ps_suppkey)
-        .select("s_suppkey", "s_name")
-    )
-
-
-def _l123_tpch_q21_full(spark, sf):
-    """TPC-H Q21, FULL fidelity (upgrades q123's returnflag lateness
-    proxy): suppliers who were the ONLY supplier late (receipt >
-    commit) on a finished multi-supplier order. The double
-    EXISTS/NOT-EXISTS is the aggregate rewrite the stand-in already
-    used — per order: n_supp = countDistinct(supplier),
-    n_late_supp = countDistinct(supplier | late) — a late line counts
-    iff n_supp > 1 AND n_late_supp = 1. One lineitem pass builds the
-    per-order profile; the late lines join it and the supplier dim."""
-    li = _t_par(spark, sf, "lineitem")
-    orders = _t(spark, sf, "orders").filter(F.col("o_orderstatus") == "F")
-    supp = _t(spark, sf, "supplier")
-    nat = _t(spark, sf, "nation").filter(F.col("n_name") == "NATION01")
-    late = F.col("l_receiptdate") > F.col("l_commitdate")
-    prof = li.groupBy("l_orderkey").agg(
-        F.countDistinct("l_suppkey").alias("n_supp"),
-        F.countDistinct(F.when(late, F.col("l_suppkey"))).alias("n_late_supp"),
-    )
-    late_lines = (
-        li.filter(late)
-        .join(orders.select("o_orderkey"), li.l_orderkey == F.col("o_orderkey"))
-        .join(prof, "l_orderkey")
-        .filter((F.col("n_supp") > 1) & (F.col("n_late_supp") == 1))
-    )
-    return (
-        late_lines.join(
-            F.broadcast(
-                supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-                .select("s_suppkey", "s_name")
-            ),
-            late_lines.l_suppkey == F.col("s_suppkey"),
-        )
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-def _l081_tpch_q4_full(spark, sf):
-    """TPC-H Q4, FULL fidelity (upgrades q81's shipped->60d lateness
-    proxy): order-priority checking with the REAL commit/receipt dates —
-    orders having at least one line received after its commitment,
-    counted by priority. EXISTS compiles to a left-semi join on the
-    pruned late-line scan (predicate pushed to parquet)."""
-    orders = _t(spark, sf, "orders")
-    late_orders = (
-        _t_par(spark, sf, "lineitem")
-        .filter(F.col("l_receiptdate") > F.col("l_commitdate"))
-        .select("l_orderkey")
-    )
-    return (
-        orders.join(late_orders, orders.o_orderkey == late_orders.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-def _l082_tpch_q12_full(spark, sf):
-    """TPC-H Q12, FULL fidelity (upgrades q82's priority-by-shipdate
-    stand-in): shipping-mode priority split over the REAL mode and date
-    columns — lines shipped before commitment and received after it, by
-    MAIL/SHIP mode, counting high- vs low-priority orders. One join, one
-    conditional agg; the three date predicates push to the lineitem scan."""
-    li = _t_par(spark, sf, "lineitem").filter(
-        F.col("l_shipmode").isin("MAIL", "SHIP")
-        & (F.col("l_commitdate") < F.col("l_receiptdate"))
-        & (F.col("l_shipdate") < F.col("l_commitdate"))
-    )
-    orders = _t(spark, sf, "orders").select("o_orderkey", "o_orderpriority")
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_shipmode")
-        .agg(
-            F.sum(hi.cast("long")).alias("high_line_count"),
-            F.sum((~hi).cast("long")).alias("low_line_count"),
-        )
-    )
-
-
-def _l100_tpch_q17_full(spark, sf):
-    """TPC-H Q17, FULL fidelity (upgrades q100's brand-only filter):
-    small-quantity-order revenue for one brand in MED BOX containers,
-    lines below 20% of the part's average quantity. The correlated AVG
-    is a per-part grouped aggregate broadcast back (exact: whole-number
-    double sums); output = decimal revenue sum cast double / 7.0 plus
-    the qualifying line count (the single-row Q17 surface)."""
-    part = _t(spark, sf, "part").filter(
-        (F.col("p_brand") == "Brand#23") & (F.col("p_container") == "MED BOX")
-    )
-    li = _t_par(spark, sf, "lineitem").join(
-        F.broadcast(part.select("p_partkey")), F.col("l_partkey") == F.col("p_partkey")
-    )
-    avg_qty = li.groupBy("l_partkey").agg(
-        (F.sum("l_quantity") / F.count(F.lit(1))).alias("avg_qty")
-    )
-    small = li.join(F.broadcast(avg_qty), "l_partkey").filter(
-        F.col("l_quantity") < 0.2 * F.col("avg_qty")
-    )
-    return small.agg(
-        (F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double") / 7.0)
-        .alias("avg_yearly"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-def _l124_tpch_q22_full(spark, sf):
-    """TPC-H Q22, FULL fidelity (upgrades q124's nationkey odd-set
-    stand-in): global-sales-opportunity over the REAL c_phone country
-    codes — customers in 7 codes with above-average positive balances
-    and no orders. The average compare is EXACT: bal·n > total (decimal
-    × bigint both sides) instead of a double AVG whose summation order
-    could flip a borderline row between engines. Anti-join prunes
-    order-holders; output sums cast double last."""
-    cust = _t(spark, sf, "customer")
-    orders = _t(spark, sf, "orders").select("o_custkey")
-    codes = ["13", "31", "23", "29", "30", "18", "17"]
-    cc = F.substring("c_phone", 1, 2)
-    pool = cust.filter(cc.isin(codes)).select(
-        "c_custkey", cc.alias("cntrycode"),
-        F.col("c_acctbal").cast("decimal(18,2)").alias("bal"),
-    )
-    stats = pool.filter(F.col("bal") > 0).agg(
-        F.sum("bal").alias("total_dec"), F.count(F.lit(1)).alias("n_pos")
-    )
-    return (
-        pool.crossJoin(F.broadcast(stats))
-        .filter(F.col("bal") * F.col("n_pos") > F.col("total_dec"))
-        .join(orders, pool.c_custkey == orders.o_custkey, "left_anti")
-        .groupBy("cntrycode")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum("bal").cast("double").alias("totacctbal"),
-        )
-    )
-
-
-_LADDER_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "l081_tpch_q4_full": _l081_tpch_q4_full,
-    "l082_tpch_q12_full": _l082_tpch_q12_full,
-    "l100_tpch_q17_full": _l100_tpch_q17_full,
-    "l119_tpch_q2_full": _l119_tpch_q2_full,
-    "l120_tpch_q9_full": _l120_tpch_q9_full,
-    "l121_tpch_q11_full": _l121_tpch_q11_full,
-    "l122_tpch_q20_full": _l122_tpch_q20_full,
-    "l123_tpch_q21_full": _l123_tpch_q21_full,
-    "l124_tpch_q22_full": _l124_tpch_q22_full,
-}
-
-_LADDER_ORACLES: dict[str, str] = {}
-
-_LADDER_ORACLES["l081_tpch_q4_full"] = """
-    SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
-    FROM orders
-    WHERE EXISTS (
-      SELECT 1 FROM lineitem
-      WHERE l_orderkey = o_orderkey AND l_receiptdate > l_commitdate
-    )
-    GROUP BY o_orderpriority
-"""
-
-_LADDER_ORACLES["l082_tpch_q12_full"] = """
-    SELECT l_shipmode,
-           CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    WHERE l_shipmode IN ('MAIL','SHIP')
-      AND l_commitdate < l_receiptdate
-      AND l_shipdate < l_commitdate
-    GROUP BY l_shipmode
-"""
-
-_LADDER_ORACLES["l100_tpch_q17_full"] = """
-    WITH boxed AS (
-      SELECT l_partkey, l_quantity, l_extendedprice
-      FROM lineitem JOIN part ON p_partkey = l_partkey
-      WHERE p_brand = 'Brand#23' AND p_container = 'MED BOX'
-    ),
-    avgs AS (
-      SELECT l_partkey, SUM(l_quantity) / COUNT(*) AS avg_qty
-      FROM boxed GROUP BY l_partkey
-    )
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
-             AS avg_yearly,
-           CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM boxed JOIN avgs USING (l_partkey)
-    WHERE l_quantity < 0.2 * avg_qty
-"""
-
-_LADDER_ORACLES["l119_tpch_q2_full"] = """
-    WITH cand AS (
-      SELECT p_partkey, s_suppkey, s_name, n_name, s_acctbal, ps_supplycost
-      FROM partsupp
-      JOIN part ON p_partkey = ps_partkey
-      JOIN supplier ON s_suppkey = ps_suppkey
-      JOIN nation ON n_nationkey = s_nationkey
-      JOIN region ON r_regionkey = n_regionkey
-      WHERE p_size = 15 AND p_type LIKE '%STEEL' AND r_name = 'EUROPE'
-    )
-    SELECT p_partkey, s_suppkey, s_name, n_name, s_acctbal,
-           ps_supplycost AS supplycost
-    FROM cand
-    WHERE ps_supplycost = (
-      SELECT MIN(ps_supplycost) FROM cand c2 WHERE c2.p_partkey = cand.p_partkey
-    )
-"""
-
-_LADDER_ORACLES["l120_tpch_q9_full"] = """
-    SELECT n_name AS nation,
-           CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS o_month,
-           CAST(SUM(
-             CAST(l_extendedprice AS DECIMAL(18,2))
-               * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4)))
-             - CAST(ps_supplycost AS DECIMAL(18,2))
-               * CAST(l_quantity AS DECIMAL(18,2))
-           ) AS DOUBLE) AS sum_profit
-    FROM lineitem
-    JOIN part ON p_partkey = l_partkey
-    JOIN partsupp ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
-    JOIN supplier ON s_suppkey = l_suppkey
-    JOIN nation ON n_nationkey = s_nationkey
-    JOIN orders ON o_orderkey = l_orderkey
-    WHERE p_name LIKE '%spark%'
-    GROUP BY 1, 2
-"""
-
-_LADDER_ORACLES["l121_tpch_q11_full"] = """
-    WITH nat_ps AS (
-      SELECT ps_partkey,
-             CAST(ps_supplycost AS DECIMAL(18,2))
-               * CAST(ps_availqty AS DECIMAL(18,0)) AS val
-      FROM partsupp
-      JOIN supplier ON s_suppkey = ps_suppkey
-      JOIN nation ON n_nationkey = s_nationkey
-      WHERE n_name = 'NATION07'
-    ),
-    tot AS (SELECT SUM(val) AS total_dec FROM nat_ps)
-    SELECT ps_partkey, CAST(SUM(val) AS DOUBLE) AS stock_value
-    FROM nat_ps CROSS JOIN tot
-    GROUP BY ps_partkey, total_dec
-    HAVING SUM(val) > total_dec * CAST('0.0003' AS DECIMAL(10,6))
-"""
-
-_LADDER_ORACLES["l122_tpch_q20_full"] = """
-    WITH shipped AS (
-      SELECT l_partkey, l_suppkey, SUM(l_quantity) AS qty_shipped
-      FROM lineitem
-      WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'spark%')
-      GROUP BY l_partkey, l_suppkey
-    ),
-    qualified AS (
-      SELECT DISTINCT ps_suppkey
-      FROM partsupp
-      JOIN shipped ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey
-      WHERE ps_availqty > 0.5 * qty_shipped
-    )
-    SELECT s_suppkey, s_name
-    FROM supplier
-    JOIN nation ON n_nationkey = s_nationkey
-    JOIN qualified ON ps_suppkey = s_suppkey
-    WHERE n_name = 'NATION03'
-"""
-
-_LADDER_ORACLES["l123_tpch_q21_full"] = """
-    WITH prof AS (
-      SELECT l_orderkey,
-             COUNT(DISTINCT l_suppkey) AS n_supp,
-             COUNT(DISTINCT CASE WHEN l_receiptdate > l_commitdate
-                                 THEN l_suppkey END) AS n_late_supp
-      FROM lineitem GROUP BY l_orderkey
-    )
-    SELECT s_name, CAST(COUNT(*) AS BIGINT) AS numwait
-    FROM lineitem l1
-    JOIN orders ON o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
-    JOIN prof ON prof.l_orderkey = l1.l_orderkey
-    JOIN supplier ON s_suppkey = l1.l_suppkey
-    JOIN nation ON n_nationkey = s_nationkey
-    WHERE l1.l_receiptdate > l1.l_commitdate
-      AND prof.n_supp > 1 AND prof.n_late_supp = 1
-      AND n_name = 'NATION01'
-    GROUP BY s_name
-"""
-
-_LADDER_ORACLES["l124_tpch_q22_full"] = """
-    WITH pool AS (
-      SELECT c_custkey, SUBSTRING(c_phone, 1, 2) AS cntrycode,
-             CAST(c_acctbal AS DECIMAL(18,2)) AS bal
-      FROM customer
-      WHERE SUBSTRING(c_phone, 1, 2) IN ('13','31','23','29','30','18','17')
-    ),
-    stats AS (
-      SELECT SUM(bal) AS total_dec, CAST(COUNT(*) AS BIGINT) AS n_pos
-      FROM pool WHERE bal > 0
-    )
-    SELECT cntrycode, CAST(COUNT(*) AS BIGINT) AS numcust,
-           CAST(SUM(bal) AS DOUBLE) AS totacctbal
-    FROM pool CROSS JOIN stats
-    WHERE bal * n_pos > total_dec
-      AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    GROUP BY cntrycode
-"""
+    return {k: fn.oracle for k, fn in queries().items()}
 
 
 def ladder_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Full-fidelity TPC-H registry — requires the r13+ ladder fixture
-    schema (partsupp, commit/receipt dates, shipmode, c_phone,
-    p_container). NOT part of queries(): driver fixtures lack these
-    columns by design."""
-    return dict(_LADDER_QUERIES)
+    """Full-fidelity TPC-H registry — requires the ladder fixture schema
+    (partsupp, commit/receipt dates, shipmode, c_phone, p_container). NOT
+    part of queries(): driver fixtures lack these columns by design."""
+    return {k: fn for k, fn in registered().items() if fn.__module__ == _LADDER}
 
 
 def ladder_oracle_sql() -> dict[str, str]:
-    return dict(_LADDER_ORACLES)
+    return {k: fn.oracle for k, fn in ladder_queries().items()}

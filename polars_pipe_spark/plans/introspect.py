@@ -17,8 +17,15 @@ from pyspark.sql import DataFrame
 
 def optimized_plan_lines(df: DataFrame) -> list[str]:
     """Catalyst optimized logical plan as text lines (the config-artifact
-    form, like the reference's ``explain().splitlines()``)."""
-    return df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    form, like the reference's ``explain().splitlines()``). Expression ids
+    (``#123``, with the long-type ``L`` after them), lambda-variable
+    suffixes (``lambda x_7``) and the plan ids of cached exchanges come
+    from JVM-wide counters, so they are stripped: one config plans to the
+    same lines whatever the process planned before."""
+    text = df._jdf.queryExecution().optimizedPlan().toString()
+    text = re.sub(r"#\d+L?\b", "", text)
+    text = re.sub(r"(lambda \w+?)_\d+\b", r"\1", text)
+    return re.sub(r",? \[plan_id=\d+\]", "", text).splitlines()
 
 
 def executed_plan(df: DataFrame) -> str:

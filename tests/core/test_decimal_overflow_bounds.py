@@ -20,18 +20,19 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 
-import __spark_entry__ as entry
+from polars_pipe_spark.registry import statistics, tpch
 
 INT64_MAX = 2**63 - 1
 
 
-def _patched_table(monkeypatch, name, df):
-    real = entry._t
+def _patched_table(monkeypatch, family, name, df):
+    # the query looks `_t` up in its family module's globals
+    real = family._t
 
     def fake(spark, sf, table):
         return df if table == name else real(spark, sf, table)
 
-    monkeypatch.setattr(entry, "_t", fake)
+    monkeypatch.setattr(family, "_t", fake)
 
 
 class TestQ13OverflowBounds:
@@ -64,8 +65,8 @@ class TestQ13OverflowBounds:
         )
 
     def test_units_micros_pair_exact_past_int64(self, spark, monkeypatch):
-        _patched_table(monkeypatch, "lineitem", self.frame(spark))
-        out = entry._q13_tpch_q1(spark, "ignored").collect()
+        _patched_table(monkeypatch, tpch, "lineitem", self.frame(spark))
+        out = tpch._q13_tpch_q1(spark, "ignored").collect()
         assert len(out) == 1
         r = out[0]
 
@@ -99,8 +100,8 @@ class TestQ13OverflowBounds:
     def test_null_free_no_silent_nulls(self, spark, monkeypatch):
         """Spark's non-ANSI overflow path nulls silently — the whole point
         of the DECIMAL(38,0) route is that no cell comes back null."""
-        _patched_table(monkeypatch, "lineitem", self.frame(spark))
-        r = entry._q13_tpch_q1(spark, "ignored").collect()[0]
+        _patched_table(monkeypatch, tpch, "lineitem", self.frame(spark))
+        r = tpch._q13_tpch_q1(spark, "ignored").collect()[0]
         assert all(v is not None for v in r.asDict().values())
 
 
@@ -130,8 +131,8 @@ class TestQ147OverflowBounds:
 
     def test_slope_exact_past_bigint_cliff(self, spark, monkeypatch):
         df, vals, base = self.frame(spark)
-        _patched_table(monkeypatch, "events", df)
-        out = {r.event_type: r for r in entry._q147_group_trend(spark, "x").collect()}
+        _patched_table(monkeypatch, statistics, "events", df)
+        out = {r.event_type: r for r in statistics._q147_group_trend(spark, "x").collect()}
         r = out["burst"]
 
         epoch = datetime.date(1970, 1, 1)
@@ -185,8 +186,8 @@ class TestQ147OverflowBounds:
         df = spark.createDataFrame(
             rows, "event_type string, ts timestamp, value double"
         )
-        _patched_table(monkeypatch, "events", df)
-        r = entry._q147_group_trend(spark, "x").collect()[0]
+        _patched_table(monkeypatch, statistics, "events", df)
+        r = statistics._q147_group_trend(spark, "x").collect()[0]
         epoch = datetime.date(1970, 1, 1)
         xs = [
             (base.date() + datetime.timedelta(days=i) - epoch).days
@@ -220,8 +221,6 @@ class TestMannWhitneyModel:
     def test_u_matches_model(self, spark, monkeypatch):
         import datetime
 
-        import __spark_entry__ as entry
-
         a = [10.0, 12.0, 12.0, 15.0, 20.0]
         b = [11.0, 12.0, 13.0, 30.0]
         rows = [
@@ -230,12 +229,12 @@ class TestMannWhitneyModel:
         df = spark.createDataFrame(
             rows, "event_type string, ts timestamp, value double"
         )
-        real = entry._t_par
+        real = statistics._t_par
 
         def fake(spark_, sf_, table):
             return df if table == "events" else real(spark_, sf_, table)
 
-        monkeypatch.setattr(entry, "_t_par", fake)
-        r = entry._q255_mann_whitney(spark, "x").collect()[0]
+        monkeypatch.setattr(statistics, "_t_par", fake)
+        r = statistics._q255_mann_whitney(spark, "x").collect()[0]
         assert r.n_a == 5 and r.n_b == 4
         assert float(r.u_stat) == self.model(a, b)

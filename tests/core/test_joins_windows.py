@@ -373,7 +373,7 @@ def test_clamped_balance_duplicate_negative_rows(spark, tmp_path):
     multiset against the sequential Lindley recurrence."""
     import datetime
 
-    from __spark_entry__ import _q224_clamped_running_balance
+    from polars_pipe_spark.registry.timeseries import _q224_clamped_running_balance
 
     d = datetime.date(1995, 1, 1)
     # suppkey 1: three FULLY identical negative rows, then a receipt.

@@ -126,6 +126,15 @@ class TestFullRun:
         assert cfg["pipeline_plan"] == parsed.pipeline_plan
         assert len(parsed.pipeline_plan) > 0
 
+    def test_plan_artifact_is_stable_across_runs(self, io):
+        """Catalyst expression ids come from a JVM-wide counter; the
+        artifact must not carry them, so two runs of one config in one
+        session record the same plan."""
+        first = run_pipeline(io, full_config()).pipeline_plan
+        second = run_pipeline(io, full_config()).pipeline_plan
+        assert first == second
+        assert not any("#" in line for line in first)
+
     def test_empty_config_all_stages_skip(self, io, employees):
         cfg = {
             "process_name": "noop",

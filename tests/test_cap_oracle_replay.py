@@ -6,7 +6,7 @@ is only valid while the Spark side's cap/fence does not bind; the first
 rung where it binds turns the oracle itself wrong.  Every capped path
 needs either (a) the oracle to replay the cap contract in SQL, or (b) a
 pin that the cap cannot bind at oracle-checked rungs.  r12 applies (a)
-to the minhash band cap (`_q25_inner` in __spark_entry__) — these tests
+to the minhash band cap (`_q25_inner` in registry/_sql.py) — these tests
 prove the SQL replay IS the contract by making the cap BIND on a
 synthetic corpus and checking Spark == DuckDB-with-cap != DuckDB-naive.
 """
@@ -43,7 +43,7 @@ class TestMinhashCapOracleReplay:
         ]
 
     def _duck_pairs(self, rows, cap):
-        from __spark_entry__ import _q25_inner
+        from polars_pipe_spark.registry._sql import _q25_inner
 
         con = duckdb.connect()
         con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")

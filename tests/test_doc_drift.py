@@ -4,6 +4,7 @@ the reference lacks — drift fails the suite instead of lingering)."""
 
 from __future__ import annotations
 
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -49,3 +50,17 @@ def test_stage_list_matches_chain():
     docs = ur.stage_docs(names)
     assert all(f"`{n}`" in docs for n in names)
     assert "—" in docs and "— \n" not in docs  # every stage has a doc line
+
+
+def test_coverage_line_citations_lie_within_their_files():
+    """COVERAGE.md cites query code as ``file.py:N``; each N must be a line
+    of that file, so a move that leaves a citation behind fails here."""
+    cites = re.findall(
+        r"\b(__spark_entry__\.py|registry/\w+\.py):(\d+)",
+        (REPO / "COVERAGE.md").read_text(),
+    )
+    assert cites
+    for path, n in cites:
+        f = REPO / path if path == "__spark_entry__.py" else REPO / "polars_pipe_spark" / path
+        assert f.is_file(), path
+        assert 1 <= int(n) <= len(f.read_text().splitlines()), f"{path}:{n}"

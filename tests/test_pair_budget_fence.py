@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entry
+from polars_pipe_spark.registry.dedup import (
+    _q27_ngram_jaccard,
+    _q211_dedup_explain,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -15,17 +18,17 @@ class TestPairBudgetFence:
     def test_over_budget_raises_with_estimate(self, spark):
         # sf0.001 has 20 sources x 25 docs -> 6,000 candidate pairs
         with pytest.raises(ValueError, match="pair budget"):
-            entry._q27_ngram_jaccard(spark, SF, max_pairs=10)
+            _q27_ngram_jaccard(spark, SF, max_pairs=10)
 
     def test_q211_shares_the_fence(self, spark):
         with pytest.raises(ValueError, match="pair budget"):
-            entry._q211_dedup_explain(spark, SF, max_pairs=10)
+            _q211_dedup_explain(spark, SF, max_pairs=10)
 
     def test_sample_blocks_escape_hatch(self, spark):
         """sample_blocks=k keeps the k smallest (count, source) blocks —
         exact within them, so the result equals the full run filtered to
         those sources."""
-        full = entry._q27_ngram_jaccard(spark, SF)
+        full = _q27_ngram_jaccard(spark, SF)
         # all 20 blocks are 25 docs here: the smallest 3 by (count,
         # source) are the 3 lexicographically-first sources
         import duckdb
@@ -51,7 +54,7 @@ class TestPairBudgetFence:
         )
         got = sorted(
             (r.id_a, r.id_b, r.jaccard)
-            for r in entry._q27_ngram_jaccard(
+            for r in _q27_ngram_jaccard(
                 spark, SF, max_pairs=2_000, sample_blocks=3
             ).collect()
         )
@@ -59,9 +62,9 @@ class TestPairBudgetFence:
 
     def test_sampled_blocks_still_over_budget_raise(self, spark):
         with pytest.raises(ValueError, match="pair budget"):
-            entry._q27_ngram_jaccard(spark, SF, max_pairs=100, sample_blocks=3)
+            _q27_ngram_jaccard(spark, SF, max_pairs=100, sample_blocks=3)
 
     def test_default_budget_admits_gate_scale(self, spark):
         # the registry-default call (no kwargs) must stay green at gate
         # scale — the fence only fires past ~100M candidate pairs
-        assert entry._q27_ngram_jaccard(spark, SF).count() > 0
+        assert _q27_ngram_jaccard(spark, SF).count() > 0

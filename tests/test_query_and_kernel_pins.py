@@ -14,9 +14,9 @@ cheapening (r10 verdict task 5).
 - q283 no longer threads a dead 'law' column through the mapInPandas
   schema (it is a pure function of doc_id, re-derived in the final
   select).
-- `_t_par`'s under-parallelism gate uses file-split arithmetic over
-  ``inputFiles()`` instead of ``df.rdd.getNumPartitions()`` (which
-  built the Java RDD graph for every table read).
+- `_t_par`'s under-parallelism gate sums the parquet footers' row-group
+  counts over ``inputFiles()`` instead of ``df.rdd.getNumPartitions()``
+  (which built the Java RDD graph for every table read).
 """
 
 from __future__ import annotations
@@ -90,52 +90,73 @@ class TestQ283SchemaHasNoDeadColumn:
     def test_law_not_in_mapinpandas_schema(self):
         import inspect
 
-        import __spark_entry__ as entry
+        from polars_pipe_spark.registry.multimodal import _q283_g711_decode
 
-        src = inspect.getsource(entry._q283_g711_decode)
+        src = inspect.getsource(_q283_g711_decode)
         assert "doc_id long, payload binary, law string" not in src
         # the output still carries law, derived from doc_id
         assert '"law"' in src or "'law'" in src
 
 
+def _repartitioned(df) -> bool:
+    return "Repartition" in df._jdf.queryExecution().logical().toString()
+
+
 class TestTParProbe:
-    def test_no_rdd_probe_in_entry(self):
+    def test_no_rdd_probe_in_t_par(self):
         import ast
         import inspect
         import textwrap
 
-        import __spark_entry__ as entry
+        from polars_pipe_spark.registry._helpers import _t_par
 
-        for fn in (entry._t_par, entry._estimated_scan_splits):
-            tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
-            rdd_attrs = [
-                n for n in ast.walk(tree)
-                if isinstance(n, ast.Attribute) and n.attr == "rdd"
-            ]
-            assert not rdd_attrs, f"{fn.__name__} still touches .rdd"
+        tree = ast.parse(textwrap.dedent(inspect.getsource(_t_par)))
+        rdd_attrs = [
+            n for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr == "rdd"
+        ]
+        assert not rdd_attrs, "_t_par still touches .rdd"
 
     def test_small_table_still_repartitions(self, spark):
-        import __spark_entry__ as entry
+        from polars_pipe_spark.registry._helpers import _t_par
 
-        df = entry._t_par(spark, "/root/testdata/sf0.001", "nation")
+        df = _t_par(spark, "/root/testdata/sf0.001", "nation")
         par = spark.sparkContext.defaultParallelism
         # the gate must classify a one-file 25-row table as
         # under-parallel and round-robin it to full parallelism
         assert df.rdd.getNumPartitions() == par
 
-    def test_estimate_matches_gate_semantics(self, spark):
-        import __spark_entry__ as entry
+    def test_one_large_row_group_repartitions(self, spark, tmp_path):
+        """A row group is the unit a parquet scan cannot split: a file of
+        one row group scans as one busy task however many byte ranges its
+        size spans, so it is repartitioned. The file is larger than
+        defaultParallelism x the 4 MiB open cost, where byte-split
+        arithmetic counts it as full parallelism."""
+        import os
 
-        df = entry._t(spark, "/root/testdata/sf0.001", "lineitem")
-        est = entry._estimated_scan_splits(spark, df)
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from polars_pipe_spark.registry._helpers import _t_par
+
         par = spark.sparkContext.defaultParallelism
-        assert 1 <= est < par  # tiny file: both old and new gates fire
+        blobs = [os.urandom(1 << 20) for _ in range(4 * par + 1)]
+        pq.write_table(pa.table({"b": blobs}), tmp_path / "big.parquet",
+                       row_group_size=len(blobs), compression="none")
+        assert pq.read_metadata(tmp_path / "big.parquet").num_row_groups == 1
+        assert _repartitioned(_t_par(spark, str(tmp_path), "big"))
 
-    def test_estimate_zero_on_unreadable_files(self, spark):
-        import __spark_entry__ as entry
+    def test_enough_row_groups_pass_through(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-        df = spark.range(4)  # no input files at all
-        assert entry._estimated_scan_splits(spark, df) == 0
+        from polars_pipe_spark.registry._helpers import _t_par
+
+        par = spark.sparkContext.defaultParallelism
+        pq.write_table(pa.table({"x": list(range(10 * par))}),
+                       tmp_path / "grouped.parquet", row_group_size=10)
+        assert pq.read_metadata(tmp_path / "grouped.parquet").num_row_groups == par
+        assert not _repartitioned(_t_par(spark, str(tmp_path), "grouped"))
 
 
 class TestQ59MicroRounding:

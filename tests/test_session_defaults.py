@@ -19,7 +19,7 @@ def test_driver_heap_is_capped_at_32g():
 
 
 def test_table_read_keeps_shuffle_partitions_and_pins_utc(spark, tmp_path):
-    import __spark_entry__ as entry
+    from polars_pipe_spark.registry._helpers import _t
 
     spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
     saved = {k: spark.conf.get(k) for k in (
@@ -27,7 +27,7 @@ def test_table_read_keeps_shuffle_partitions_and_pins_utc(spark, tmp_path):
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        assert entry._t(spark, str(tmp_path), "t").count() == 3
+        assert _t(spark, str(tmp_path), "t").count() == 3
         assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:

@@ -85,7 +85,7 @@ class TestUniformFastCrossing:
     in a uniformly FAST run (median ratio « 1 — e.g. a broad genuine
     speedup) a single regressed query must still read its ABSOLUTE
     ratio and fire the hard-crossing branch — the mirror image of the
-    uniform-slow downgrade cases in test_round12_hardening."""
+    uniform-slow downgrade cases in test_cap_oracle_replay."""
 
     BASELINE = {"queries": {f"q{i}": 1.0 for i in range(6)} | {"q_bad": 1.0}}
 

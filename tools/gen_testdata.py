@@ -50,7 +50,7 @@ forced regenerating all rungs of a ladder together.  The r14 stream
 split is itself one final value migration: r14-generated fixtures
 differ value-wise from r13-era files (same distributions); after it,
 ``include_extensions=False`` provably yields byte-identical base
-columns (tests/test_round14_hardening.py pins this).  Still never mix
+columns (tests/test_worker_memory_and_fixture_streams.py pins this).  Still never mix
 generator eras inside one exponent comparison.
 
 Usage: python tools/gen_testdata.py --sf 0.001 --out /root/testdata/sf0.001
