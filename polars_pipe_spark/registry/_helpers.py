@@ -4,7 +4,9 @@ char-gram pair queries (q27, q211) share, and q217's Benford table."""
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,30 +22,37 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _t_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan + round-robin repartition to full parallelism, GATED on the
-    scan actually being under-parallel.  Small testdata tables arrive as
-    ONE file -> one scan partition; compute-heavy expression work
-    (shingling, md5, per-pair set ops) would serialize on that single
-    task, so a cheap repartition of the raw rows (a few MB) parallelises
-    everything downstream.  At 100 TB the scan already has thousands of
-    splits — an UNconditional round-robin repartition there is a full
-    extra shuffle of the raw rows, not a no-op — so when the scan reaches
-    default parallelism the frame passes through untouched.
+    table being small.  Small testdata tables arrive as ONE file -> one
+    scan partition; compute-heavy expression work (shingling, md5,
+    per-pair set ops) would serialize on that single task, so a cheap
+    repartition of the raw rows (a few MB) parallelises everything
+    downstream.  At 100 TB the scan already has thousands of splits — an
+    UNconditional round-robin repartition there is a full extra shuffle
+    of the raw rows, not a no-op — so a large table passes through
+    untouched.
 
-    A parquet row group is the unit a scan cannot split, so the gate sums
-    the footers' row-group counts over ``inputFiles()`` until the sum
-    reaches default parallelism: driver-side metadata reads, no ``.rdd``,
-    no job.  A file whose footer cannot be read stops the count short,
-    which errs toward the cheap repartition."""
+    The gate is Spark's split arithmetic in closed form: with every file
+    padded by ``openCostInBytes``, Spark sizes splits at no less than one
+    open cost, so the frame passes through once the padded total exceeds
+    ``defaultParallelism - 1`` open costs (12 MiB at 4 cores).  That
+    counts byte ranges, not row groups: a large file of one row group
+    still scans as one busy task and passes.  Repartitioning sf0.1
+    lineitem (10.8 MB, one row group) measured slower for its scan- and
+    join-bound callers (ROADMAP), so that case is left alone.  Driver-side
+    file sizes only (no ``.rdd``, no job); a file whose size cannot be
+    read errs toward the cheap repartition."""
     df = _t(spark, sf_dir, name)
     par = spark.sparkContext.defaultParallelism
-    row_groups = 0
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
     try:
-        for f in df.inputFiles():
-            row_groups += pq.read_metadata(f).num_row_groups
-            if row_groups >= par:
-                return df
-    except (OSError, ValueError):
-        pass
+        padded = sum(
+            os.path.getsize(unquote(urlparse(f).path)) + open_cost
+            for f in df.inputFiles()
+        )
+    except OSError:
+        padded = 0
+    if padded > (par - 1) * open_cost:
+        return df
     return df.repartition(par)
 
 

@@ -52,15 +52,16 @@ def test_stage_list_matches_chain():
     assert "—" in docs and "— \n" not in docs  # every stage has a doc line
 
 
-def test_coverage_line_citations_lie_within_their_files():
-    """COVERAGE.md cites query code as ``file.py:N``; each N must be a line
-    of that file, so a move that leaves a citation behind fails here."""
-    cites = re.findall(
-        r"\b(__spark_entry__\.py|registry/\w+\.py):(\d+)",
-        (REPO / "COVERAGE.md").read_text(),
-    )
+def test_coverage_query_citations_name_defs_in_their_files():
+    """COVERAGE.md cites query code by name, ``registry/<family>.py::<def>``;
+    each named def must exist in that family module, so a query that moves
+    or is renamed fails here. Line-number citations of the registry are not
+    used: they drift with every edit above them."""
+    text = (REPO / "COVERAGE.md").read_text()
+    assert not re.findall(r"\b(?:__spark_entry__\.py|registry/\w+\.py):\d+", text)
+    cites = re.findall(r"\b(registry/\w+\.py)::(\w+)", text)
     assert cites
-    for path, n in cites:
-        f = REPO / path if path == "__spark_entry__.py" else REPO / "polars_pipe_spark" / path
+    for path, name in cites:
+        f = REPO / "polars_pipe_spark" / path
         assert f.is_file(), path
-        assert 1 <= int(n) <= len(f.read_text().splitlines()), f"{path}:{n}"
+        assert re.search(rf"^def {name}\(", f.read_text(), re.M), f"{path}::{name}"

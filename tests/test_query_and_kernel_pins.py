@@ -126,37 +126,45 @@ class TestTParProbe:
         # under-parallel and round-robin it to full parallelism
         assert df.rdd.getNumPartitions() == par
 
-    def test_one_large_row_group_repartitions(self, spark, tmp_path):
-        """A row group is the unit a parquet scan cannot split: a file of
-        one row group scans as one busy task however many byte ranges its
-        size spans, so it is repartitioned. The file is larger than
-        defaultParallelism x the 4 MiB open cost, where byte-split
-        arithmetic counts it as full parallelism."""
+    @staticmethod
+    def _past_the_gate(spark, tmp_path):
+        """One file of one row group, larger than defaultParallelism - 2
+        open costs: Spark's split arithmetic gives it full parallelism."""
         import os
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from polars_pipe_spark.registry._helpers import _t_par
-
         par = spark.sparkContext.defaultParallelism
-        blobs = [os.urandom(1 << 20) for _ in range(4 * par + 1)]
-        pq.write_table(pa.table({"b": blobs}), tmp_path / "big.parquet",
-                       row_group_size=len(blobs), compression="none")
+        open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+        blob = os.urandom(max(par - 2, 0) * open_cost + (1 << 20))
+        pq.write_table(pa.table({"b": [blob]}), tmp_path / "big.parquet",
+                       compression="none")
         assert pq.read_metadata(tmp_path / "big.parquet").num_row_groups == 1
-        assert _repartitioned(_t_par(spark, str(tmp_path), "big"))
+        return str(tmp_path)
 
-    def test_enough_row_groups_pass_through(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def test_table_past_the_size_gate_passes_through(self, spark, tmp_path):
+        """The sf0.1 lineitem case: measured faster without the
+        repartition, so it passes through."""
+        from polars_pipe_spark.registry._helpers import _t_par
+
+        sf = self._past_the_gate(spark, tmp_path)
+        assert not _repartitioned(_t_par(spark, sf, "big"))
+
+    def test_unsized_files_repartition(self, spark, tmp_path, monkeypatch):
+        """A file whose size cannot be read makes the gate assume the
+        small case: the cheap repartition, never a silent pass."""
+        import os
 
         from polars_pipe_spark.registry._helpers import _t_par
 
-        par = spark.sparkContext.defaultParallelism
-        pq.write_table(pa.table({"x": list(range(10 * par))}),
-                       tmp_path / "grouped.parquet", row_group_size=10)
-        assert pq.read_metadata(tmp_path / "grouped.parquet").num_row_groups == par
-        assert not _repartitioned(_t_par(spark, str(tmp_path), "grouped"))
+        sf = self._past_the_gate(spark, tmp_path)
+
+        def unreadable(path):
+            raise OSError(path)
+
+        monkeypatch.setattr(os.path, "getsize", unreadable)
+        assert _repartitioned(_t_par(spark, sf, "big"))
 
 
 class TestQ59MicroRounding:
